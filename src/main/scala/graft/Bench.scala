@@ -75,9 +75,10 @@ object Bench {
     val artBase = graft.queries.IndexCache.buildSeconds
 
     // Streaming-ingest throughput leg: wire-format JSONL -> lenient
-    // normalize -> three-rule alert derivation -> day-partitioned parquet
-    // (the reference's E1 path; its producer design point is ~10 rows/s,
-    // BASELINE.md:12). Measured through a bounded availableNow run.
+    // normalize -> two-rule (speed, battery) alert derivation ->
+    // day-partitioned parquet (the reference's E1 path; its producer
+    // design point is ~10 rows/s, BASELINE.md:12). Measured through a
+    // bounded availableNow run.
     // ISOLATED WINDOW (r10 gate swung 25,090 -> 7,419 rows/s on identical
     // work): it runs HERE — after warmup, before the query sweeps — so
     // the 163-query × 3-sweep heap/page-cache churn can't land on it,

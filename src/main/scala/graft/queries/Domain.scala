@@ -15,11 +15,10 @@ import graft.sources.Tables
   */
 object Domain {
 
-  /** Q28 — three-rule alert union over `events` via [[RuleEngine]] — the
+  /** Q28 — three-rule alert table over `events` via [[RuleEngine]] — the
     * exact shape of the reference's alert chain (filter → typed alert →
-    * formatted message → union into one alerts table), evaluated
-    * set-oriented. Each rule is a scan-local filter+project; the union
-    * introduces no shuffle.
+    * formatted message → one alerts table), evaluated set-oriented. All
+    * three rules are evaluated in one scan-local projection; no shuffle.
     *
     * Messages avoid %-formatting: printf rounds half-even in C engines but
     * half-up on the JVM, while `round()` rounds half-away-from-zero on

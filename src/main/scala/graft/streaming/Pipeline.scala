@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 import graft.model.{Schemas, Telemetry, Thresholds}
@@ -29,16 +30,36 @@ object Pipeline {
 
   /** File-based telemetry stream: JSONL landing directory → lenient wire
     * normalization (the streaming twin of [[FileReplay.readTelemetryJsonl]]).
-    * `maxFilesPerTrigger` is the backpressure knob (reference's
-    * BATCH_SIZE/sleep pacing, consumer.py:33, producer.py:181).
+    * Backpressure (the reference's BATCH_SIZE/sleep pacing, consumer.py:33,
+    * producer.py:181) is [[telemetryWireStream]]'s trigger cap: one
+    * byte-sized wave of files per trigger, unless the caller pins
+    * `maxFilesPerTrigger`.
     */
   def telemetryFileStream(s: SparkSession, dir: String,
-      maxFilesPerTrigger: Int = 10): DataFrame =
-    FileReplay.normalize(
-      s.readStream
-        .schema(Schemas.telemetryWire)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .json(dir))
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    FileReplay.normalize(telemetryWireStream(s, dir, maxFilesPerTrigger))
+
+  /** The raw JSONL wire stream of `dir`, with a cap on how much of the
+    * backlog one trigger admits: the pinned file count if given, otherwise
+    * `maxBytesPerTrigger` at one wave of full splits —
+    * `defaultParallelism × spark.sql.files.maxPartitionBytes`, read from
+    * the session, so every core gets a full split and no trigger is cut
+    * short by a file count. Each trigger pays a fixed cost (offset log,
+    * planning, batch persist, sink job commits) whatever its size; sizing
+    * by bytes pays it once per wave, not once per N files however small
+    * they are.
+    */
+  private def telemetryWireStream(s: SparkSession, dir: String,
+      maxFilesPerTrigger: Option[Int]): DataFrame = {
+    val r = s.readStream.schema(Schemas.telemetryWire)
+    val capped = maxFilesPerTrigger match {
+      case Some(n) => r.option("maxFilesPerTrigger", n)
+      case None =>
+        val split = JavaUtils.byteStringAsBytes(s.conf.get("spark.sql.files.maxPartitionBytes"))
+        r.option("maxBytesPerTrigger", s.sparkContext.defaultParallelism * split)
+    }
+    capped.json(dir)
+  }
 
   /** Unified streaming ingest: any number of telemetry-schema STREAMING
     * legs (file wire, OpenSky poll/replay, simulation — each a different
@@ -89,11 +110,6 @@ object Pipeline {
       .option("checkpointLocation", checkpoint)
       .start()
 
-  /** The E1 pipeline, bounded: drain whatever is in `inDir`, derive alerts
-    * with the reference's three-rule chain, write both raw telemetry and
-    * alerts as day-partitioned parquet, stop at the end of available data.
-    * Checkpointing makes re-runs incremental (only new files process).
-    */
   /** The telemetry+alerts sink body shared by [[runAlertPipeline]] and
     * [[runDedupedAlertPipeline]] — one copy, so persist handling, sink
     * layout and alert derivation cannot drift between the two. */
@@ -106,6 +122,13 @@ object Pipeline {
     } finally { b.unpersist(); () }
   }
 
+  /** The E1 pipeline, bounded: drain whatever is in `inDir`, derive alerts
+    * with the reference's telemetry rules (speed and battery), write both
+    * raw telemetry and alerts as day-partitioned parquet, stop at the end
+    * of available data. Each trigger admits one byte-sized wave of files
+    * ([[telemetryFileStream]]). Checkpointing makes re-runs incremental
+    * (only new files process).
+    */
   def runAlertPipeline(s: SparkSession, inDir: String, outDir: String,
       checkpointDir: String, t: Thresholds = Thresholds()): StreamingQuery = {
     val stream = telemetryFileStream(s, inDir)
@@ -151,15 +174,13 @@ object Pipeline {
     * time-keyed dedup would collapse distinct malformed records in one
     * micro-batch (data loss) while missing crash-replayed malformed
     * records (whose fallback time changed). Content identity is computed
-    * on the wire bytes, before any lossy normalization.
+    * on the wire bytes, before any lossy normalization. Triggers are
+    * capped as in [[telemetryFileStream]].
     */
   def dedupedTelemetryStream(s: SparkSession, dir: String,
       watermark: String = "10 minutes",
-      maxFilesPerTrigger: Int = 10): DataFrame = {
-    val wire = s.readStream
-      .schema(Schemas.telemetryWire)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dir)
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val wire = telemetryWireStream(s, dir, maxFilesPerTrigger)
     val wireCols = Schemas.telemetryWire.fieldNames.toSeq.map(col)
     FileReplay.normalize(
         wire.withColumn("wire_hash", xxhash64(wireCols: _*)),
@@ -1816,7 +1837,7 @@ object Pipeline {
 
   def runUpsertMetricsPipeline(s: SparkSession, inDir: String, outDir: String,
       checkpointDir: String, maxFilesPerTrigger: Int = 10): StreamingQuery =
-    speedMetricsByWindow(telemetryFileStream(s, inDir, maxFilesPerTrigger))
+    speedMetricsByWindow(telemetryFileStream(s, inDir, Some(maxFilesPerTrigger)))
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         Sinks.upsertPartitioned(s, batch, s"$outDir/speed_metrics_store",

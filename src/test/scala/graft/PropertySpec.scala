@@ -54,21 +54,38 @@ class PropertySpec extends SparkSpec {
 
   test("property: alert union count == sum of per-rule match counts") {
     import graft.rules.{Rule, RuleEngine}
+    // NULL condition inputs must match nothing, as in a filter
     val eventGen = for {
-      v <- Gen.choose(-50.0, 250.0)
-      t <- Gen.oneOf("click", "view", "error")
+      v <- Gen.frequency(1 -> Gen.const(None), 6 -> Gen.choose(-50.0, 250.0).map(Some(_)))
+      t <- Gen.frequency(1 -> Gen.const(None),
+        6 -> Gen.oneOf("click", "view", "error").map(Some(_)))
     } yield (v, t)
+    var bothRules, nullInputs = 0
     forAll(Gen.listOfN(30, eventGen)) { evs =>
       import spark.implicits._
       val df = evs.zipWithIndex.map { case ((v, t), i) => (i.toLong, v, t) }
         .toDF("id", "value", "event_type")
       val rules = Seq(
         Rule("high", col("value") > 150.0, concat(lit("h"), col("id"))),
-        Rule("err", col("event_type") === "error", concat(lit("e"), col("id"))))
-      val alerts = RuleEngine.alerts(df, rules, col("id").cast("timestamp"), col("id"), "id")
-      val expected = evs.count(_._1 > 150.0) + evs.count(_._2 == "error")
-      assert(alerts.count() == expected)
+        // the message is NULL when value is: the alert must still be emitted
+        Rule("err", col("event_type") === "error", concat(lit("e"), col("value"))))
+      val time = col("id").cast("timestamp")
+      val alerts = RuleEngine.alerts(df, rules, time, col("id"), "id")
+      // reference: one filtered projection per rule, unioned
+      val reference = rules.map { r =>
+        df.filter(r.condition).select(time.as("time"), col("id"),
+          lit(r.alertType).as("alert_type"), r.message.as("alert_message"))
+      }.reduce(_ unionAll _)
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
+      assert(alerts.columns.toSeq == reference.columns.toSeq)
+      assert(rows(alerts) == rows(reference))
+      val high = evs.count(_._1.exists(_ > 150.0))
+      val err = evs.count(_._2.contains("error"))
+      assert(alerts.count() == high + err)
+      bothRules += evs.count(e => e._1.exists(_ > 150.0) && e._2.contains("error"))
+      nullInputs += evs.count(e => e._1.isEmpty || e._2.isEmpty)
     }
+    assert(bothRules > 0 && nullInputs > 0, "generated rows hit both rules and NULL inputs")
   }
 
   test("property: quantized_cosine is symmetric, bounded, 1 on itself") {

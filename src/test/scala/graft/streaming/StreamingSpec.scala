@@ -44,6 +44,45 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/alerts").count() == 2, "benign row adds no alert")
   }
 
+  test("byte-sized triggers: a small-file backlog drains in one micro-batch, == batch rules") {
+    def committed(ckpt: String): Int =
+      new java.io.File(s"$ckpt/commits").listFiles().count(_.getName.forall(_.isDigit))
+    val in = tmpDir("bt_in")
+    // 12 files: more than a 10-file cap admits, far below one wave of
+    // full splits in bytes
+    (0 until 12).foreach { f =>
+      writeJsonl(in, f"f$f%02d.jsonl", (0 until 3).map { i =>
+        val v = f * 3 + i
+        s"""{"vehicle_id":"$v","timestamp":"2026-03-01 08:00:${f"$v%02d"}",""" +
+          s""""current_speed_kmh":"${40 + v}","speed_limit_violation":"${v % 4 == 0}",""" +
+          s""""battery_level_pct":"${(v * 7) % 100}"}"""
+      }: _*)
+    }
+    val out = tmpDir("bt_out")
+    val ckpt = tmpDir("bt_ckpt")
+    Pipeline.runAlertPipeline(spark, in, out, ckpt).awaitTermination()
+    assert(committed(ckpt) == 1, "the whole backlog fits one trigger")
+
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    val batch = graft.sources.FileReplay.readTelemetryJsonl(spark, in)
+    val alerts = graft.rules.FleetRules.telemetryAlerts(batch)
+    assert(rows(spark.read.parquet(s"$out/vehicle_telemetry").select(batch.columns.map(col): _*))
+      == rows(batch))
+    assert(rows(spark.read.parquet(s"$out/alerts").select(alerts.columns.map(col): _*))
+      == rows(alerts))
+    assert(alerts.count() > 0 && alerts.select("alert_type").distinct().count() == 2,
+      "both telemetry rules fire on the backlog")
+
+    // a pinned file-count cap still wins over the byte default
+    val pinned = tmpDir("bt_ckpt1")
+    Pipeline.telemetryFileStream(spark, in, maxFilesPerTrigger = Some(1))
+      .writeStream.format("noop").option("checkpointLocation", pinned)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    assert(committed(pinned) == 12, "one micro-batch per file")
+  }
+
   test("watermarked windowed metrics finalize through availableNow") {
     val in = tmpDir("met_in")
     val out = tmpDir("met_out")
@@ -1098,7 +1137,7 @@ class StreamingSpec extends SparkSpec {
          (stem, i) <- stems.zipWithIndex)
       Files.setLastModifiedTime(Paths.get(dir, s"$stem.jsonl"),
         java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
-    val tel = Pipeline.telemetryFileStream(spark, telIn, maxFilesPerTrigger = 1)
+    val tel = Pipeline.telemetryFileStream(spark, telIn, maxFilesPerTrigger = Some(1))
     val per = spark.readStream.schema(graft.model.Schemas.perception)
       .option("maxFilesPerTrigger", 1).json(perIn)
     Pipeline.perceptionTelemetryJoin(tel, per, joinType = "leftOuter")
