@@ -169,6 +169,85 @@ class StreamingSpec extends SparkSpec {
       "replayed micro-batch must leave the store row-identical to a single clean run")
   }
 
+  test("shared batch sink: torn-commit replay rewrites every batch=* output row-identically") {
+    import org.apache.spark.sql.functions.{lit, struct, to_json}
+    import org.apache.spark.sql.streaming.StreamingQuery
+    import spark.implicits._
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    def jsonl(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(to_json(struct(lit("2026-03-01 08:00:00").as("ts"), $"*")))
+        .collect().map(_.getString(0)).toSeq
+    val texts = jsonl(docs.filter($"doc_id" % 10 >= 8).orderBy($"doc_id")
+      .select($"doc_id", $"text"))
+    val queries = jsonl(docs.filter($"doc_id" % 37 === 0).orderBy($"doc_id")
+      .select($"doc_id".as("query_id"), $"text"))
+    val bad = """{"vehicle_id":"x1","timestamp":"2026-03-01 08:00:03","current_speed_kmh":"50","speed_limit_violation":"false"}"""
+
+    // (gate, input files, runner(in, out, ckpt), batch=* output dirs):
+    // a single-output gate, the conditional bm25 lookup and the
+    // three-output expectation gate — one file per micro-batch
+    val cases: Seq[(String, Seq[Seq[String]], (String, String, String) => StreamingQuery,
+        Seq[String])] = Seq(
+      ("langid", Seq(texts.take(texts.length / 2), texts.drop(texts.length / 2)),
+        (in, out, ck) => Pipeline.runLangIdGateStream(spark, sf0001, in, out, ck,
+          maxFilesPerTrigger = 1), Seq("langid")),
+      ("bm25", Seq(queries.take(1), queries.drop(1)),
+        (in, out, ck) => Pipeline.runBm25LookupStream(spark, sf0001, in, out, ck,
+          maxFilesPerTrigger = 1), Seq("bm25_lookup")),
+      ("expectation", Seq(Seq(row1, bad), Seq(row2, row3)),
+        (in, out, ck) => Pipeline.runExpectationGateStream(spark, in, out, ck,
+          maxFilesPerTrigger = 1), Seq("admitted", "quarantine", "audit")))
+
+    cases.foreach { case (gate, files, run, outputs) =>
+      val in = tmpDir(s"torn_${gate}_in")
+      files.zipWithIndex.foreach { case (ls, i) => writeJsonl(in, s"b$i.jsonl", ls: _*) }
+      def runToCompletion(out: String, ckpt: String): Unit = {
+        val q = run(in, out, ckpt)
+        q.awaitTermination()
+        q.stop() // release the checkpoint before any same-path restart
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (spark.streams.active.exists(_.id == q.id) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      }
+      // every row with its batch=<id> partition value
+      def written(out: String): Seq[(String, Seq[String])] = outputs.map(o =>
+        o -> spark.read.parquet(s"$out/$o").collect().map(_.toString).sorted.toSeq)
+      def commits(ckpt: String): Seq[java.io.File] =
+        new java.io.File(s"$ckpt/commits").listFiles()
+          .filter(_.getName.forall(_.isDigit)).sortBy(_.getName.toInt).toSeq
+
+      val outA = tmpDir(s"torn_${gate}_outA")
+      runToCompletion(outA, tmpDir(s"torn_${gate}_ckptA"))
+      val clean = written(outA)
+      assert(clean.forall(_._2.nonEmpty), s"$gate: empty clean output")
+
+      val outB = tmpDir(s"torn_${gate}_outB")
+      val ckptB = tmpDir(s"torn_${gate}_ckptB")
+      runToCompletion(outB, ckptB)
+      val done = commits(ckptB)
+      assert(done.length == files.length, s"$gate: one micro-batch per file")
+      // the state after a crash between the sink write and the commit
+      assert(done.last.delete())
+      new java.io.File(s"$ckptB/commits/.${done.last.getName}.crc").delete()
+      runToCompletion(outB, ckptB)
+      assert(commits(ckptB).map(_.getName) == done.map(_.getName),
+        s"$gate: the torn batch was replayed and committed")
+      assert(written(outB) == clean,
+        s"$gate: replayed batch must leave batch=* row-identical to a clean run")
+    }
+  }
+
+  test("runner scaffold lives once in Pipeline.scala") {
+    val src = Paths.get("src/main/scala/graft/streaming/Pipeline.scala")
+    assert(Files.exists(src), s"run from the repository root: $src")
+    val text = Files.readString(src)
+    Seq("Trigger.AvailableNow()", "RocksDBStateStoreProvider", "batch=$batchId")
+      .foreach { s =>
+        assert(text.split(java.util.regex.Pattern.quote(s), -1).length - 1 == 1,
+          s"`$s` must occur exactly once — new runners go through the shared helpers")
+      }
+  }
+
   test("streaming drift monitor: flooded token alerts in its window only, rates exact") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
