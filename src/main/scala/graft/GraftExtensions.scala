@@ -2,184 +2,135 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 import graft.functions.expressions._
 
-/** Session-extensions entry point: wires the engine's native function
-  * kernels into ANY Spark session at construction time —
+/** Session-extensions entry point and the ONLY static registration path
+  * of the engine's native function kernels:
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *   // or: SparkSession.builder().withExtensions(new GraftExtensions)
   *
-  * so SQL users on a stock cluster get the full kernel surface —
-  * `minhash_signature`, `quantized_cosine`, `winnow_fingerprint`,
-  * `word_shingles`, `char_grams`, `simhash64`, `hyperplane_sigs`,
-  * `shingle_hashes`, `quantize_vec`, `sorted_intersect_count`,
-  * `sorted_intersect`, `dtw_dist`, `word_stats`, `sq_dist`,
-  * `bigram_hashes`, `bigram_spans`, `ppjoin_pairs`,
-  * `simhash_bucket_pairs`, `pq_adc`, `bpe_encode`, the `freq_sketch` /
-  * `freq_sketch_long` heavy-hitter aggregates,
-  * and the `bloom_agg`/`bloom_might_contain` build/probe pair — without
-  * any driver-side registration call. (`Sessions.local` additionally
-  * registers them imperatively for programmatic sessions; ExtensionsSpec
-  * exercises this injection path on a stock session. `bloom_probe_bc`
-  * and `pq_scan_topk` carry per-call broadcast state and are registered
-  * by their owning operators instead.)
+  * `Sessions.builder` adds it, so every engine session and a stock
+  * cluster get the same SQL surface: one row of
+  * [[GraftExtensions.kernels]] per function. Kernels that capture
+  * per-call broadcast state (`pq_scan_topk`, `bloom_probe_broadcast`, …)
+  * are not SQL surface; their Column wrappers register a broadcast-keyed
+  * builder at call time.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExtensions.kernels.foreach { k =>
+      e.injectFunction((FunctionIdentifier(k.name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, k.name, k.usage,
+          "", "", "", "", "", "", "scala_udf"),
+        k.builder))
+    }
+}
 
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
-      "", "", "", "", "", "", "scala_udf")
+object GraftExtensions {
 
-  private def one(name: String)(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) = {
-    require(exprs.length == 1, s"$name requires exactly 1 argument")
-    exprs.head
+  /** A kernel's call arguments, arity already checked. [[int]] /
+    * [[double]] / [[literal]] read an argument that must be a literal
+    * (a build-time parameter of the expression, not a column). */
+  final class Args private[GraftExtensions] (k: Kernel, exprs: Seq[Expression]) {
+    def apply(i: Int): Expression = exprs(i)
+    def literal(i: Int): Expression = {
+      require(exprs(i).foldable,
+        s"${k.name} argument ${i + 1} must be a literal: ${k.signature}")
+      exprs(i)
+    }
+    def int(i: Int): Int = literal(i).eval().toString.toInt
+    def double(i: Int): Double = literal(i).eval().toString.toDouble
   }
 
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("minhash_signature"),
-      info("minhash_signature", "_FUNC_(shingles) - 64-permutation MinHash signature"),
-      exprs => MinHashSignature(one("minhash_signature")(exprs), 64)))
-    e.injectFunction((FunctionIdentifier("quantized_cosine"),
-      info("quantized_cosine", "_FUNC_(a, b) - exact 2^20-quantized cosine"),
-      exprs => {
-        require(exprs.length == 2, "quantized_cosine requires exactly 2 arguments")
-        QuantizedCosine(exprs(0), exprs(1))
-      }))
-    e.injectFunction((FunctionIdentifier("winnow_fingerprint"),
-      info("winnow_fingerprint", "_FUNC_(text) - winnowing fingerprint set (k=8, w=4)"),
-      exprs => WinnowFingerprint(one("winnow_fingerprint")(exprs), 8, 4)))
-    e.injectFunction((FunctionIdentifier("word_shingles"),
-      info("word_shingles", "_FUNC_(text) - distinct word 3-gram shingles"),
-      exprs => WordShingles(one("word_shingles")(exprs), 3)))
-    e.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "_FUNC_(shingles) - 64-bit SimHash over shingle features"),
-      exprs => SimHash64(one("simhash64")(exprs))))
-    e.injectFunction((FunctionIdentifier("hyperplane_sigs"),
-      info("hyperplane_sigs",
-        "_FUNC_(embedding) - 8 random-hyperplane LSH signatures of 6 sign bits"),
-      exprs => HyperplaneSigs(one("hyperplane_sigs")(exprs), 8, 6, 64)))
-    e.injectFunction((FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes",
-        "_FUNC_(text) - sorted xxhash64 values of distinct word 3-gram shingles"),
-      exprs => ShingleHashes(one("shingle_hashes")(exprs), 3)))
-    e.injectFunction((FunctionIdentifier("quantize_vec"),
-      info("quantize_vec", "_FUNC_(v) - exact 2^20 floor quantization of a float vector"),
-      exprs => QuantizeVec(one("quantize_vec")(exprs), 1048576.0)))
-    e.injectFunction((FunctionIdentifier("sorted_intersect_count"),
-      info("sorted_intersect_count",
-        "_FUNC_(a, b) - distinct common values of two sorted long arrays"),
-      exprs => {
-        require(exprs.length == 2, "sorted_intersect_count requires exactly 2 arguments")
-        SortedIntersectCount(exprs(0), exprs(1))
-      }))
-    e.injectFunction((FunctionIdentifier("word_stats"),
-      info("word_stats",
-        "_FUNC_(text) - struct(n_words, n_distinct, top_c, total2, d2) in one pass"),
-      exprs => WordStats(one("word_stats")(exprs))))
-    e.injectFunction((FunctionIdentifier("sq_dist"),
-      info("sq_dist", "_FUNC_(a, b) - sum of squared differences of two long arrays"),
-      exprs => {
-        require(exprs.length == 2, "sq_dist requires exactly 2 arguments")
-        SqDistLong(exprs(0), exprs(1))
-      }))
-    e.injectFunction((FunctionIdentifier("freq_sketch"),
-      info("freq_sketch",
-        "_FUNC_(token) - Misra-Gries top-256 heavy-hitter sketch: array<struct(token, est)>"),
-      exprs => FreqSketch(one("freq_sketch")(exprs), 256)))
-    e.injectFunction((FunctionIdentifier("bloom_agg"),
-      info("bloom_agg", "_FUNC_(xxhash64_value, est_items) - serialized bloom filter"),
-      exprs => {
-        require(exprs.length == 2, "bloom_agg requires exactly 2 arguments")
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1))
-      }))
-    e.injectFunction((FunctionIdentifier("bloom_might_contain"),
-      info("bloom_might_contain", "_FUNC_(bloom, xxhash64_value) - bloom membership probe"),
-      exprs => {
-        require(exprs.length == 2, "bloom_might_contain requires exactly 2 arguments")
-        // graft's own probe: Spark's internal BloomFilterMightContain
-        // fails codegen on a scalar-subquery bloom argument
-        graft.functions.expressions.BloomProbe(exprs(0), exprs(1))
-      }))
-    e.injectFunction((FunctionIdentifier("ppjoin_pairs"),
-      info("ppjoin_pairs",
-        "_FUNC_(bucket, t, max_bucket) - PPJoin candidate pairs from one prefix bucket"),
-      exprs => {
-        require(exprs.length == 3,
-          "ppjoin_pairs requires exactly 3 arguments (bucket, t, maxBucket)")
-        require(exprs(1).foldable && exprs(2).foldable,
-          "ppjoin_pairs t/maxBucket must be literals")
-        PPJoinPairs(exprs(0),
-          exprs(1).eval().toString.toDouble,
-          exprs(2).eval().toString.toInt)
-      }))
-    e.injectFunction((FunctionIdentifier("pq_adc"),
-      info("pq_adc",
-        "_FUNC_(codes, dtable, k) - PQ asymmetric distance: sum of per-subspace table lookups"),
-      exprs => {
-        require(exprs.length == 3, "pq_adc requires exactly 3 arguments (codes, dtable, k)")
-        require(exprs(2).foldable, "pq_adc k must be a literal")
-        PqAdcDist(exprs(0), exprs(1), exprs(2).eval().toString.toInt)
-      }))
-    e.injectFunction((FunctionIdentifier("bpe_encode"),
-      info("bpe_encode",
-        "_FUNC_(text, merges) - greedy BPE subword apply over a literal merges table"),
-      exprs => {
-        require(exprs.length == 2,
-          "bpe_encode requires exactly 2 arguments (text, merges)")
-        BpeEncode(exprs(0), parseMergesLiteral(exprs(1)))
-      }))
-    e.injectFunction((FunctionIdentifier("char_grams"),
-      info("char_grams", "_FUNC_(text) - occurrence-level character 3-grams"),
-      exprs => CharGrams(one("char_grams")(exprs), 3)))
-    e.injectFunction((FunctionIdentifier("bigram_hashes"),
-      info("bigram_hashes", "_FUNC_(words) - xxhash64 of each adjacent word pair"),
-      exprs => BigramHashes(one("bigram_hashes")(exprs))))
-    e.injectFunction((FunctionIdentifier("bigram_spans"),
-      info("bigram_spans", "_FUNC_(words) - struct(hash, pos) per adjacent word pair"),
-      exprs => BigramSpans(one("bigram_spans")(exprs))))
-    e.injectFunction((FunctionIdentifier("sorted_intersect"),
-      info("sorted_intersect",
-        "_FUNC_(a, b) - distinct common values of two sorted long arrays, ascending"),
-      exprs => {
-        require(exprs.length == 2, "sorted_intersect requires exactly 2 arguments")
-        SortedIntersect(exprs(0), exprs(1))
-      }))
-    e.injectFunction((FunctionIdentifier("dtw_dist"),
-      info("dtw_dist",
-        "_FUNC_(a, b) - integer Dynamic Time Warping distance of two long series"),
-      exprs => {
-        require(exprs.length == 2, "dtw_dist requires exactly 2 arguments")
-        DtwDist(exprs(0), exprs(1))
-      }))
-    e.injectFunction((FunctionIdentifier("freq_sketch_long"),
-      info("freq_sketch_long",
-        "_FUNC_(hash, k) - Misra-Gries top-k sketch over long keys: array<struct(key, est)>"),
-      exprs => {
-        require(exprs.length == 2,
-          "freq_sketch_long requires exactly 2 arguments (hash, k)")
-        require(exprs(1).foldable, "freq_sketch_long k must be a literal")
-        FreqSketchLong(exprs(0), exprs(1).eval().toString.toInt)
-      }))
-    e.injectFunction((FunctionIdentifier("simhash_bucket_pairs"),
-      info("simhash_bucket_pairs",
-        "_FUNC_(bucket, max_ham, max_bucket) - in-bucket SimHash pairs within Hamming bound"),
-      exprs => {
-        require(exprs.length == 3,
-          "simhash_bucket_pairs requires exactly 3 arguments (bucket, maxHam, maxBucket)")
-        require(exprs(1).foldable && exprs(2).foldable,
-          "simhash_bucket_pairs maxHam/maxBucket must be literals")
-        SimHashBucketPairs(exprs(0),
-          exprs(1).eval().toString.toInt,
-          exprs(2).eval().toString.toInt)
-      }))
-    // NOT injected: bloom_probe_bc and pq_scan_topk carry per-call
-    // broadcast state (see BloomProbeBroadcast / PqScanTopK scaladoc) —
-    // they are registered at call time by their owning operators, not as
-    // stateless SQL surface.
+  /** One SQL function: its name, `_FUNC_(params) - description` usage,
+    * argument count, and the expression it builds. */
+  final case class Kernel(name: String, usage: String, arity: Int, build: Args => Expression) {
+    def signature: String = usage.take(usage.indexOf(')') + 1).replace("_FUNC_", name)
+    def builder(exprs: Seq[Expression]): Expression = {
+      require(exprs.length == arity,
+        s"$name requires exactly $arity argument${if (arity == 1) "" else "s"}, " +
+          s"got ${exprs.length}: $signature")
+      build(new Args(this, exprs))
+    }
   }
+
+  val kernels: Seq[Kernel] = Seq(
+    Kernel("minhash_signature", "_FUNC_(shingles) - 64-permutation MinHash signature", 1,
+      a => MinHashSignature(a(0), 64)),
+    Kernel("quantized_cosine", "_FUNC_(a, b) - exact 2^20-quantized cosine", 2,
+      a => QuantizedCosine(a(0), a(1))),
+    Kernel("long_cosine", "_FUNC_(a, b) - cosine of two already-quantized long vectors", 2,
+      a => LongCosine(a(0), a(1))),
+    Kernel("jl_project",
+      "_FUNC_(embedding) - 16 Johnson-Lindenstrauss ±1 projections of a 64-dim vector", 1,
+      a => JlProjectExpr(a(0), 16, 64, 1L << 20)),
+    Kernel("winnow_fingerprint", "_FUNC_(text) - winnowing fingerprint set (k=8, w=4)", 1,
+      a => WinnowFingerprint(a(0), 8, 4)),
+    Kernel("word_shingles", "_FUNC_(text) - distinct word 3-gram shingles", 1,
+      a => WordShingles(a(0), 3)),
+    Kernel("char_grams", "_FUNC_(text) - occurrence-level character 3-grams", 1,
+      a => CharGrams(a(0), 3)),
+    Kernel("char_gram_counts",
+      "_FUNC_(text) - distinct character 3-grams with their occurrence counts", 1,
+      a => CharGramCounts(a(0), 3)),
+    Kernel("simhash64", "_FUNC_(shingles) - 64-bit SimHash over shingle features", 1,
+      a => SimHash64(a(0))),
+    Kernel("hyperplane_sigs",
+      "_FUNC_(embedding) - 8 random-hyperplane LSH signatures of 6 sign bits", 1,
+      a => HyperplaneSigs(a(0), 8, 6, 64)),
+    Kernel("shingle_hashes",
+      "_FUNC_(text) - sorted xxhash64 values of distinct word 3-gram shingles", 1,
+      a => ShingleHashes(a(0), 3)),
+    Kernel("quantize_vec", "_FUNC_(v) - exact 2^20 floor quantization of a float vector", 1,
+      a => QuantizeVec(a(0), 1048576.0)),
+    Kernel("sorted_intersect_count",
+      "_FUNC_(a, b) - distinct common values of two sorted long arrays", 2,
+      a => SortedIntersectCount(a(0), a(1))),
+    Kernel("sorted_intersect",
+      "_FUNC_(a, b) - distinct common values of two sorted long arrays, ascending", 2,
+      a => SortedIntersect(a(0), a(1))),
+    Kernel("dtw_dist",
+      "_FUNC_(a, b) - integer Dynamic Time Warping distance of two long series", 2,
+      a => DtwDist(a(0), a(1))),
+    Kernel("word_stats",
+      "_FUNC_(text) - struct(n_words, n_distinct, top_c, total2, d2) in one pass", 1,
+      a => WordStats(a(0))),
+    Kernel("sq_dist", "_FUNC_(a, b) - sum of squared differences of two long arrays", 2,
+      a => SqDistLong(a(0), a(1))),
+    Kernel("dhash64", "_FUNC_(frame) - 64-bit difference hash of a binary frame", 1,
+      a => DHash64(a(0))),
+    Kernel("bigram_hashes", "_FUNC_(words) - xxhash64 of each adjacent word pair", 1,
+      a => BigramHashes(a(0))),
+    Kernel("bigram_spans", "_FUNC_(words) - struct(hash, pos) per adjacent word pair", 1,
+      a => BigramSpans(a(0))),
+    Kernel("freq_sketch",
+      "_FUNC_(token) - Misra-Gries top-256 heavy-hitter sketch: array<struct(token, est)>", 1,
+      a => FreqSketch(a(0), 256)),
+    Kernel("freq_sketch_long",
+      "_FUNC_(hash, k) - Misra-Gries top-k sketch over long keys: array<struct(key, est)>", 2,
+      a => FreqSketchLong(a(0), a.int(1))),
+    Kernel("pq_adc",
+      "_FUNC_(codes, dtable, k) - PQ asymmetric distance: sum of per-subspace table lookups", 3,
+      a => PqAdcDist(a(0), a(1), a.int(2))),
+    Kernel("bpe_encode",
+      "_FUNC_(text, merges) - greedy BPE subword apply over a literal merges table", 2,
+      a => BpeEncode(a(0), parseMergesLiteral(a.literal(1)))),
+    Kernel("ppjoin_pairs",
+      "_FUNC_(bucket, t, max_bucket) - PPJoin candidate pairs from one prefix bucket", 3,
+      a => PPJoinPairs(a(0), a.double(1), a.int(2))),
+    Kernel("simhash_bucket_pairs",
+      "_FUNC_(bucket, max_ham, max_bucket) - in-bucket SimHash pairs within Hamming bound", 3,
+      a => SimHashBucketPairs(a(0), a.int(1), a.int(2))),
+    // Spark's runtime-filter bloom aggregate plus graft's own probe (the
+    // internal BloomFilterMightContain fails codegen on a scalar-subquery
+    // bloom argument — see BloomProbe): the semi-join pre-filter of q68
+    Kernel("bloom_agg", "_FUNC_(xxhash64_value, est_items) - serialized bloom filter", 2,
+      a => new BloomFilterAggregate(a(0), a(1))),
+    Kernel("bloom_might_contain",
+      "_FUNC_(bloom, xxhash64_value) - bloom membership probe", 2,
+      a => BloomProbe(a(0), a(1))))
 }

@@ -12,12 +12,15 @@ import org.apache.spark.sql.SparkSession
   * - `nanosAsLong`: the driver testdata's `events.ts` is parquet
   *   TIMESTAMP(NANOS), which Spark's vectorized reader rejects outright
   *   ([PARQUET_TYPE_ILLEGAL]); reading it as a long and converting in
-  *   [[graft.sources.Tables.events]] keeps the scan vectorized.
+  *   [[graft.sources.Tables.events]] keeps the scan vectorized;
+  * - the native kernels as SQL functions, from [[GraftExtensions]] — the
+  *   same injection a stock cluster gets from `spark.sql.extensions`.
   */
 object Sessions {
   def builder(master: String, cores: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       // Scale-adaptive shuffle width (guide §2.2/§5): START every shuffle
@@ -45,7 +48,6 @@ object Sessions {
       .getOrElse(Runtime.getRuntime.availableProcessors())): SparkSession = {
     val spark = builder(s"local[$cores]", cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.expressions.register(spark)
     checkDecSumContract(spark)
     spark
   }

@@ -1254,31 +1254,16 @@ object expressions {
     * pattern. */
   def cell_argmax(spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[CellCents],
-      embedding: Column): Column = {
-    val name = s"cell_argmax_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => {
-        require(exprs.length == 1,
-          s"$name requires exactly 1 argument (embedding)")
-        CellArgmax(exprs.head, bc)
-      }, "scala_udf")
-    call_function(name, embedding)
-  }
+      embedding: Column): Column =
+    perCall(spark, "cell_argmax", bc, embedding)(exprs => CellArgmax(exprs.head, bc))
 
   /** [[CentroidArgmin]] as a Column — per-call unique registration
     * keyed by the broadcast id (nb_score's pattern; a Lloyd fit
     * registers one per round, all dropped with the session). */
   def centroid_argmin(spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Long]]],
-      xq: Column): Column = {
-    val name = s"centroid_argmin_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => {
-        require(exprs.length == 1, s"$name requires exactly 1 argument (xq)")
-        CentroidArgmin(exprs.head, bc)
-      }, "scala_udf")
-    call_function(name, xq)
-  }
+      xq: Column): Column =
+    perCall(spark, "centroid_argmin", bc, xq)(exprs => CentroidArgmin(exprs.head, bc))
 
   /** Misra–Gries heavy-hitter sketch over a string column: at most `k`
     * (token, est) counters in O(k) space, one stream pass, mergeable
@@ -1948,29 +1933,20 @@ object expressions {
       s"pq_scan_topk(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
-  /** [[PqScanTopK]] as a Column — per-call registration capturing the
-    * query broadcast. The registered name is UNIQUE per broadcast
-    * (`pq_scan_topk_b<id>`), so two concurrent callers on the same
-    * session (two streaming lookups, a streaming batch overlapping a
-    * batch q78) can never interleave register/analyze and bind each
-    * other's broadcast; callers drop the entry with [[dropTempFunction]]
-    * once their plan is analyzed. */
+  /** [[PqScanTopK]] as a Column — a [[perCall]] registration capturing
+    * the query broadcast (`pq_scan_topk_b<id>`); callers drop the entry
+    * with [[dropTempFunction]] once their plan is analyzed. */
   def pq_scan_topk(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Long], Array[Int])]],
-      k: Int, subK: Int, cols: Column*): Column = {
-    val name = s"pq_scan_topk_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => PqScanTopK(exprs, bc, k, subK), "scala_udf")
-    call_function(name, cols: _*)
-  }
+      k: Int, subK: Int, cols: Column*): Column =
+    perCall(spark, "pq_scan_topk", bc, cols: _*)(exprs => PqScanTopK(exprs, bc, k, subK))
 
   /** Name of the temp function [[pq_scan_topk]] registers for `bc` —
     * for [[dropTempFunction]] once the caller's plan is analyzed. */
   def pqScanTopKName(
       bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"pq_scan_topk_b${bc.id}"
+    perCallName("pq_scan_topk", bc)
 
   /** The broadcast operand of [[Bm25ScanTopK]]: the QUERY SET as an
     * inverted term index — `qids` (sorted query ids), `termHash` (sorted
@@ -2144,18 +2120,13 @@ object expressions {
   def bm25_scan_topk(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Bm25QueryIndex],
-      k: Int, cols: Column*): Column = {
-    val name = s"bm25_scan_topk_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => Bm25ScanTopK(exprs, bc, k), "scala_udf")
-    call_function(name, cols: _*)
-  }
+      k: Int, cols: Column*): Column =
+    perCall(spark, "bm25_scan_topk", bc, cols: _*)(exprs => Bm25ScanTopK(exprs, bc, k))
 
   /** Name of the temp function [[bm25_scan_topk]] registers for `bc`. */
   def bm25ScanTopKName(
       bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"bm25_scan_topk_b${bc.id}"
+    perCallName("bm25_scan_topk", bc)
 
   /** The broadcast operand of [[Bm25RawScanTopK]]: [[Bm25QueryIndex]]
     * plus the QUERY-TIME scoring model — `idfFp(i)` is the fixed-point
@@ -2321,18 +2292,35 @@ object expressions {
   def bm25_raw_scan_topk(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Bm25RawQueryIndex],
-      k: Int, cols: Column*): Column = {
-    val name = s"bm25_raw_scan_topk_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => Bm25RawScanTopK(exprs, bc, k), "scala_udf")
-    call_function(name, cols: _*)
-  }
+      k: Int, cols: Column*): Column =
+    perCall(spark, "bm25_raw_scan_topk", bc, cols: _*)(exprs => Bm25RawScanTopK(exprs, bc, k))
 
   /** Name of the temp function [[bm25_raw_scan_topk]] registers. */
   def bm25RawScanTopKName(
       bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"bm25_raw_scan_topk_b${bc.id}"
+    perCallName("bm25_raw_scan_topk", bc)
+
+  /** Register `build` as a temp function named `<prefix>_b<bc.id>` and
+    * call it on `cols` (Expression→Column constructors are sql-private in
+    * Spark 4, so the registry + `call_function` is the supported wiring).
+    * The name is UNIQUE per broadcast, so two concurrent callers on one
+    * session (two streaming lookups, a streaming batch overlapping a
+    * batch q78) can never interleave register/analyze and bind each
+    * other's broadcast state. */
+  private def perCall(spark: SparkSession, prefix: String,
+      bc: org.apache.spark.broadcast.Broadcast[_], cols: Column*)(
+      build: Seq[Expression] => Expression): Column = {
+    val name = perCallName(prefix, bc)
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, exprs => {
+      require(exprs.length == cols.length,
+        s"$name requires exactly ${cols.length} argument(s), got ${exprs.length}")
+      build(exprs)
+    }, "scala_udf")
+    call_function(name, cols: _*)
+  }
+
+  private def perCallName(prefix: String,
+      bc: org.apache.spark.broadcast.Broadcast[_]): String = s"${prefix}_b${bc.id}"
 
   /** Drop a per-call temp function (see [[pq_scan_topk]] /
     * [[bloom_probe_broadcast]]): after the caller forces analysis the
@@ -2602,18 +2590,13 @@ object expressions {
   def lsh_scan_topk(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[LshQuerySet],
-      k: Int, nPlanes: Int, cols: Column*): Column = {
-    val name = s"lsh_scan_topk_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => LshScanTopK(exprs, bc, k, nPlanes), "scala_udf")
-    call_function(name, cols: _*)
-  }
+      k: Int, nPlanes: Int, cols: Column*): Column =
+    perCall(spark, "lsh_scan_topk", bc, cols: _*)(exprs => LshScanTopK(exprs, bc, k, nPlanes))
 
   /** Name of the temp function [[lsh_scan_topk]] registers. */
   def lshScanTopKName(
       bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"lsh_scan_topk_b${bc.id}"
+    perCallName("lsh_scan_topk", bc)
 
   /** The broadcast operand of [[MihMatchScan]]: the arriving batch's
     * DISTINCT frame hashes (slot-indexed), bounded by the serving-batch
@@ -2763,18 +2746,13 @@ object expressions {
   def mih_match_scan(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[MihQuerySet],
-      maxHam: Int, cols: Column*): Column = {
-    val name = s"mih_match_scan_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => MihMatchScan(exprs, bc, maxHam), "scala_udf")
-    call_function(name, cols: _*)
-  }
+      maxHam: Int, cols: Column*): Column =
+    perCall(spark, "mih_match_scan", bc, cols: _*)(exprs => MihMatchScan(exprs, bc, maxHam))
 
   /** Name of the temp function [[mih_match_scan]] registers. */
   def mihMatchScanName(
       bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"mih_match_scan_b${bc.id}"
+    perCallName("mih_match_scan", bc)
 
   /** The broadcast operand of [[CosineScanTopK]]: one entry per query —
     * (query_id, quantized components floor(x·2²⁰), ‖q‖² in the
@@ -2921,18 +2899,13 @@ object expressions {
   def cosine_scan_topk(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[CosineQuerySet],
-      k: Int, cols: Column*): Column = {
-    val name = s"cosine_scan_topk_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => CosineScanTopK(exprs, bc, k), "scala_udf")
-    call_function(name, cols: _*)
-  }
+      k: Int, cols: Column*): Column =
+    perCall(spark, "cosine_scan_topk", bc, cols: _*)(exprs => CosineScanTopK(exprs, bc, k))
 
   /** Name of the temp function [[cosine_scan_topk]] registers. */
   def cosineScanTopKName(
       bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"cosine_scan_topk_b${bc.id}"
+    perCallName("cosine_scan_topk", bc)
 
   /** The broadcast operand of [[IvfScanTopK]]: one entry per query —
     * (query_id, quantized components floor(x·2²⁰), ‖q‖² in the quantized
@@ -3112,18 +3085,13 @@ object expressions {
   def ivf_scan_topk(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[IvfQuerySet],
-      k: Int, cols: Column*): Column = {
-    val name = s"ivf_scan_topk_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => IvfScanTopK(exprs, bc, k), "scala_udf")
-    call_function(name, cols: _*)
-  }
+      k: Int, cols: Column*): Column =
+    perCall(spark, "ivf_scan_topk", bc, cols: _*)(exprs => IvfScanTopK(exprs, bc, k))
 
   /** Name of the temp function [[ivf_scan_topk]] registers. */
   def ivfScanTopKName(
       bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"ivf_scan_topk_b${bc.id}"
+    perCallName("ivf_scan_topk", bc)
 
   /** Compiled Naive-Bayes trigram model for [[NbScore]] — the
     * vocabulary-bounded (lang, gram, w_fp) / (lang, prior_fp, unseen_fp)
@@ -3251,15 +3219,8 @@ object expressions {
     * must stay live for lazily-analyzed consumer plans. */
   def nb_score(spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[NbCompiled],
-      text: Column): Column = {
-    val name = s"nb_score_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => {
-        require(exprs.length == 1, s"$name requires exactly 1 argument (text)")
-        NbScore(exprs.head, bc)
-      }, "scala_udf")
-    call_function(name, text)
-  }
+      text: Column): Column =
+    perCall(spark, "nb_score", bc, text)(exprs => NbScore(exprs.head, bc))
 
   /** PPJoin in-bucket pair generation: array<struct<doc_id:long, n:int,
     * rk:int>> (one bucket's prefix entries) → array<struct<a:long,
@@ -3592,7 +3553,6 @@ object expressions {
   /** Parse a foldable array<struct<l,r>> merges literal (the shape
     * `typedlit(Seq[(String, String)])` produces) at function-build time. */
   private[graft] def parseMergesLiteral(e: Expression): Seq[(String, String)] = {
-    require(e.foldable, "bpe_encode merges must be a literal")
     val arr = e.eval().asInstanceOf[ArrayData]
     (0 until arr.numElements()).map { i =>
       val row = arr.getStruct(i, 2)
@@ -3600,138 +3560,8 @@ object expressions {
     }
   }
 
-  /** Register the kernels in the session's function registry (idempotent;
-    * also makes them usable from SQL as e.g. `minhash_signature(sh)`).
-    * Expression→Column constructors are sql-private in Spark 4, so the
-    * registry + `call_function` is the supported wiring.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def one(name: String)(exprs: Seq[Expression]): Expression = {
-      require(exprs.length == 1, s"$name requires exactly 1 argument")
-      exprs.head
-    }
-    reg.createOrReplaceTempFunction("minhash_signature",
-      exprs => MinHashSignature(one("minhash_signature")(exprs), 64), "scala_udf")
-    reg.createOrReplaceTempFunction("quantized_cosine",
-      exprs => {
-        require(exprs.length == 2, "quantized_cosine requires exactly 2 arguments")
-        QuantizedCosine(exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("jl_project",
-      exprs => JlProjectExpr(one("jl_project")(exprs), 16, 64, 1L << 20), "scala_udf")
-    reg.createOrReplaceTempFunction("long_cosine",
-      exprs => {
-        require(exprs.length == 2, "long_cosine requires exactly 2 arguments")
-        LongCosine(exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("winnow_fingerprint",
-      exprs => WinnowFingerprint(one("winnow_fingerprint")(exprs), 8, 4), "scala_udf")
-    reg.createOrReplaceTempFunction("word_shingles",
-      exprs => WordShingles(one("word_shingles")(exprs), 3), "scala_udf")
-    reg.createOrReplaceTempFunction("char_grams",
-      exprs => CharGrams(one("char_grams")(exprs), 3), "scala_udf")
-    reg.createOrReplaceTempFunction("char_gram_counts",
-      exprs => CharGramCounts(one("char_gram_counts")(exprs), 3), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(one("simhash64")(exprs)), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_intersect_count",
-      exprs => {
-        require(exprs.length == 2, "sorted_intersect_count requires exactly 2 arguments")
-        SortedIntersectCount(exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_intersect",
-      exprs => {
-        require(exprs.length == 2, "sorted_intersect requires exactly 2 arguments")
-        SortedIntersect(exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("dtw_dist",
-      exprs => {
-        require(exprs.length == 2, "dtw_dist requires exactly 2 arguments")
-        DtwDist(exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("hyperplane_sigs",
-      exprs => HyperplaneSigs(one("hyperplane_sigs")(exprs), 8, 6, 64), "scala_udf")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      exprs => ShingleHashes(one("shingle_hashes")(exprs), 3), "scala_udf")
-    reg.createOrReplaceTempFunction("quantize_vec",
-      exprs => QuantizeVec(one("quantize_vec")(exprs), 1048576.0), "scala_udf")
-    reg.createOrReplaceTempFunction("word_stats",
-      exprs => WordStats(one("word_stats")(exprs)), "scala_udf")
-    reg.createOrReplaceTempFunction("sq_dist",
-      exprs => {
-        require(exprs.length == 2, "sq_dist requires exactly 2 arguments")
-        SqDistLong(exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("freq_sketch",
-      exprs => FreqSketch(one("freq_sketch")(exprs), 256), "scala_udf")
-    reg.createOrReplaceTempFunction("dhash64",
-      exprs => DHash64(one("dhash64")(exprs)), "scala_udf")
-    reg.createOrReplaceTempFunction("bigram_hashes",
-      exprs => BigramHashes(one("bigram_hashes")(exprs)), "scala_udf")
-    reg.createOrReplaceTempFunction("bigram_spans",
-      exprs => BigramSpans(one("bigram_spans")(exprs)), "scala_udf")
-    reg.createOrReplaceTempFunction("freq_sketch_long",
-      exprs => {
-        require(exprs.length == 2,
-          "freq_sketch_long requires exactly 2 arguments (hash, k)")
-        require(exprs(1).foldable, "freq_sketch_long k must be a literal")
-        FreqSketchLong(exprs(0), exprs(1).eval().toString.toInt)
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("pq_adc",
-      exprs => {
-        require(exprs.length == 3, "pq_adc requires exactly 3 arguments (codes, dtable, k)")
-        require(exprs(2).foldable, "pq_adc k must be a literal")
-        PqAdcDist(exprs(0), exprs(1), exprs(2).eval().toString.toInt)
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("bpe_encode",
-      exprs => {
-        require(exprs.length == 2,
-          "bpe_encode requires exactly 2 arguments (text, merges)")
-        BpeEncode(exprs(0), parseMergesLiteral(exprs(1)))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("ppjoin_pairs",
-      exprs => {
-        require(exprs.length == 3,
-          "ppjoin_pairs requires exactly 3 arguments (bucket, t, maxBucket)")
-        require(exprs(1).foldable && exprs(2).foldable,
-          "ppjoin_pairs t/maxBucket must be literals")
-        PPJoinPairs(exprs(0),
-          exprs(1).eval().toString.toDouble,
-          exprs(2).eval().toString.toInt)
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("simhash_bucket_pairs",
-      exprs => {
-        require(exprs.length == 3,
-          "simhash_bucket_pairs requires exactly 3 arguments (bucket, maxHam, maxBucket)")
-        require(exprs(1).foldable && exprs(2).foldable,
-          "simhash_bucket_pairs maxHam/maxBucket must be literals")
-        SimHashBucketPairs(exprs(0),
-          exprs(1).eval().toString.toInt,
-          exprs(2).eval().toString.toInt)
-      }, "scala_udf")
-    // Spark's own runtime-filter bloom pair (catalyst aggregate +
-    // scalar probe, a matched serialization), surfaced as callable
-    // functions: build once over the small side, probe as a broadcast
-    // literal — the engine's semi-join pre-filter at 100 TB (q68)
-    reg.createOrReplaceTempFunction("bloom_agg",
-      exprs => {
-        require(exprs.length == 2, "bloom_agg requires exactly 2 arguments (xxhash64 value, est items)")
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1))
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("bloom_might_contain",
-      exprs => {
-        require(exprs.length == 2, "bloom_might_contain requires exactly 2 arguments (bloom, xxhash64 value)")
-        // graft's own probe, not Spark's BloomFilterMightContain: the
-        // internal expression's codegen breaks on a non-foldable (scalar
-        // subquery) bloom argument — see [[BloomProbe]]'s scaladoc
-        BloomProbe(exprs(0), exprs(1))
-      }, "scala_udf")
-  }
-
-  // Column-API wrappers (session must have passed through register —
-  // graft.Sessions.local does)
+  // Column-API wrappers: the functions resolve in any session built by
+  // `Sessions` or with `GraftExtensions` (its table registers them)
   def minhash_signature(shingles: Column): Column =
     call_function("minhash_signature", shingles)
   def quantized_cosine(a: Column, b: Column): Column =
@@ -3796,32 +3626,21 @@ object expressions {
   def bloom_might_contain(bloom: Column, hashed: Column): Column =
     call_function("bloom_might_contain", bloom, hashed)
 
-  /** [[BloomProbeBroadcast]] as a Column. Expression→Column constructors
-    * are sql-private in Spark 4, so this routes through the function
-    * registry like everything else — but the broadcast is per-call state,
-    * so the builder is registered under a name UNIQUE to `bc`
-    * (`bloom_probe_bc_b<id>`): concurrent callers on one session can
-    * never bind each other's filter, whatever order their plans analyze
-    * in. Callers should still force analysis (e.g.
+  /** [[BloomProbeBroadcast]] as a Column — a [[perCall]] registration
+    * (`bloom_probe_bc_b<id>`), so concurrent callers on one session never
+    * bind each other's filter, whatever order their plans analyze in.
+    * Callers should still force analysis (e.g.
     * `df.queryExecution.analyzed`, as q68 does) and then release the
     * entry with [[dropTempFunction]]([[bloomProbeName]]).
     */
   def bloom_probe_broadcast(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Array[Byte]],
-      hashed: Column): Column = {
-    val name = bloomProbeName(bc)
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => {
-        require(exprs.length == 1, "bloom_probe_bc requires exactly 1 argument")
-        BloomProbeBroadcast(bc, exprs.head)
-      }, "scala_udf")
-    call_function(name, hashed)
-  }
+      hashed: Column): Column =
+    perCall(spark, "bloom_probe_bc", bc, hashed)(exprs => BloomProbeBroadcast(bc, exprs.head))
 
   /** Name of the temp function [[bloom_probe_broadcast]] registers for
     * `bc` — for [[dropTempFunction]] once the caller's plan is analyzed. */
   def bloomProbeName(bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    s"bloom_probe_bc_b${bc.id}"
+    perCallName("bloom_probe_bc", bc)
 }

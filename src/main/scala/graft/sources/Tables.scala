@@ -62,7 +62,8 @@ object Tables {
     * go through the same typed loaders (so `events.ts` nanos handling
     * applies), are lazy (no scan until queried), and compose with the
     * kernel functions GraftExtensions injects — a SQL user gets
-    * `SELECT word_stats(text) FROM documents` on a stock session.
+    * `SELECT word_stats(text) FROM documents` on a stock session started
+    * with `spark.sql.extensions=graft.GraftExtensions`.
     *
     * Stock sessions lack `spark.sql.legacy.parquet.nanosAsLong`, without
     * which the `events.parquet` TIMESTAMP(NANOS) footer is rejected at

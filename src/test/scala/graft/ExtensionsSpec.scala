@@ -3,12 +3,16 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The stock-cluster path: a session built through [[GraftExtensions]]
-  * (as `spark-submit --conf spark.sql.extensions=graft.GraftExtensions`
-  * would), with NO imperative `expressions.register` call, must resolve
-  * every injected kernel from SQL. Every other suite goes through
-  * `Sessions.local`, which registers imperatively — a broken injection
-  * would stay green there.
+import scala.jdk.CollectionConverters._
+
+/** The reflective `spark.sql.extensions` loading contract: a fresh
+  * session built the way `spark-submit --conf
+  * spark.sql.extensions=graft.GraftExtensions` builds one (no-arg
+  * construction by class name, no `Sessions` call) resolves every kernel
+  * of the [[GraftExtensions]] table from SQL. `Sessions.builder` adds the
+  * same extension, so the other suites run on this injection path too;
+  * this spec pins that it works with nothing but the class name, and that
+  * the table stays the only static registration path.
   */
 class ExtensionsSpec extends AnyFunSuite {
 
@@ -65,7 +69,11 @@ class ExtensionsSpec extends AnyFunSuite {
         "SELECT dtw_dist(array(1L, 2L), array(1L, 3L))",
         "SELECT freq_sketch_long(h, 16) FROM (SELECT xxhash64('a') AS h)",
         "SELECT simhash_bucket_pairs(array(named_struct('doc_id', 1L, 'simhash', 1L), " +
-          "named_struct('doc_id', 2L, 'simhash', 3L)), 7, 4096)")
+          "named_struct('doc_id', 2L, 'simhash', 3L)), 7, 4096)",
+        "SELECT char_gram_counts('abcd')",
+        "SELECT dhash64(encode('abcdefgh', 'UTF-8'))",
+        "SELECT jl_project(array_repeat(1.0F, 64))",
+        "SELECT long_cosine(array(1L, 2L), array(2L, 3L))")
       resolveOnly.foreach(q => assert(s.sql(q).count() == 1, q))
       // aggregates inject too: MG sketch end-to-end, bloom build+probe
       // round-trip (build over xxhash64'd values, probe one present and
@@ -115,6 +123,40 @@ class ExtensionsSpec extends AnyFunSuite {
       }
       assert(codegenErrors.isEmpty,
         s"bloom probe fell out of whole-stage codegen: ${codegenErrors}")
+    }
+  }
+
+  test("the kernel table: 28 distinct names, each resolvable in an extension-only session") {
+    val names = GraftExtensions.kernels.map(_.name)
+    assert(names.size == 28 && names.distinct.size == 28, names)
+    withExtensionSession { s =>
+      names.foreach(n => assert(s.catalog.functionExists(n), n))
+    }
+  }
+
+  test("a wrong-arity call names the function and its expected arity") {
+    withExtensionSession { s =>
+      val e = intercept[Exception](s.sql("SELECT quantized_cosine(array(1.0F))").collect())
+      def causes(t: Throwable): Seq[Throwable] =
+        Option(t).toSeq.flatMap(x => x +: causes(x.getCause))
+      assert(causes(e).exists(c => Option(c.getMessage).exists(m =>
+        m.contains("quantized_cosine requires exactly 2 arguments, got 1"))),
+        s"expected the arity error, got: $e")
+    }
+  }
+
+  test("one registration site: injectFunction and createOrReplaceTempFunction occur once in src/main") {
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repository root: $root")
+    val files = java.nio.file.Files.walk(root)
+    val text = try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(java.nio.file.Files.readString).mkString("\n")
+    finally files.close()
+    Seq("injectFunction", "createOrReplaceTempFunction").foreach { s =>
+      assert(text.split(java.util.regex.Pattern.quote(s), -1).length - 1 == 1,
+        s"`$s` must occur exactly once — kernels go in the GraftExtensions table, " +
+          "per-call broadcast kernels through expressions.perCall")
     }
   }
 
