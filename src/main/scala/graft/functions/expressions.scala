@@ -1258,8 +1258,8 @@ object expressions {
     perCall(spark, "cell_argmax", bc, embedding)(exprs => CellArgmax(exprs.head, bc))
 
   /** [[CentroidArgmin]] as a Column — per-call unique registration
-    * keyed by the broadcast id (nb_score's pattern; a Lloyd fit
-    * registers one per round, all dropped with the session). */
+    * keyed by the broadcast id (a Lloyd fit registers one per round and
+    * releases it with [[dropPerCall]] once the round's action ran). */
   def centroid_argmin(spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Long]]],
       xq: Column): Column =
@@ -1708,10 +1708,11 @@ object expressions {
         l: Expression, r: Expression): PqAdcDist = copy(left = l, right = r)
   }
 
-  /** The per-query bounded top-k state of [[PqScanTopK]]: for each query,
-    * a k-entry binary max-heap ordered by (dist, id) — the root is the
-    * WORST kept pair, so a better candidate evicts in O(log k). */
-  private[functions] final class PqTopKState(val nq: Int, val k: Int) {
+  /** The per-query bounded top-k state of every [[ScanTopK]] kernel: for
+    * each query, a k-entry binary max-heap ordered by (dist, id) — the
+    * root is the WORST kept pair, so a better candidate evicts in
+    * O(log k). */
+  private[graft] final class PqTopKState(val nq: Int, val k: Int) {
     val dist = Array.ofDim[Long](nq, k)
     val id = Array.ofDim[Long](nq, k)
     val size = new Array[Int](nq)
@@ -1746,8 +1747,7 @@ object expressions {
       }
     }
 
-    // merge + wire format shared by every TypedImperativeAggregate over
-    // this state (PqScanTopK, Bm25ScanTopK) — one copy to keep in sync
+    // merge + wire format of [[ScanTopK]] — one copy to keep in sync
     def mergeFrom(other: PqTopKState): this.type = {
       var qi = 0
       while (qi < nq) {
@@ -1780,7 +1780,7 @@ object expressions {
     }
   }
 
-  private[functions] object PqTopKState {
+  private[graft] object PqTopKState {
     def readFrom(bytes: Array[Byte]): PqTopKState = {
       val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
       val nq = in.readInt(); val kk = in.readInt()
@@ -1798,6 +1798,106 @@ object expressions {
       }
       buf
     }
+  }
+
+  /** The aggregate every broadcast top-k scan kernel shares. A kernel
+    * supplies only its `update` loop, which scores one input row against
+    * the broadcast query set and pushes (query slot, key, id) into the
+    * per-query heaps of a [[PqTopKState]]; the heaps keep the k smallest
+    * (key, id), so a kernel ranking by score DESC pushes an
+    * order-reversing key (negation, [[DescDouble]]) and `decode`s it back
+    * here. Partials merge heap-to-heap (the only exchange carries one
+    * ≤ nq·k partial per task) and the final value explodes to
+    * (query_id, `idName`, rank, `scoreName`) rows in (key, id) order —
+    * the join + window form's exact ranking.
+    *
+    * `args` are the (name, type) of the children; the last `nOptional`
+    * may be omitted. Serializable because the constructor's fields live
+    * here, above the case classes that make expressions serializable. */
+  private[functions] abstract class ScanTopK(
+      fnName: String,
+      args: Seq[(String, DataType)],
+      idName: String,
+      scoreName: String,
+      scoreType: DataType,
+      nOptional: Int = 0)
+      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState]
+      with Serializable {
+
+    def bc: org.apache.spark.broadcast.Broadcast[_]
+    def k: Int
+    /** Number of queries in the broadcast. */
+    protected def nq: Int
+    protected def queryId(qi: Int): Long
+    /** Heap key → output score. */
+    protected def decode(key: Long): Any
+
+    override def dataType: DataType = ArrayType(
+      StructType(Seq(
+        StructField("query_id", LongType, nullable = false),
+        StructField(idName, LongType, nullable = false),
+        StructField("rank", IntegerType, nullable = false),
+        StructField(scoreName, scoreType, nullable = false))),
+      containsNull = false)
+    override def nullable: Boolean = false
+    override def checkInputDataTypes(): TypeCheckResult =
+      if (children.length > args.length || children.length < args.length - nOptional) {
+        val (required, optional) = args.map(_._1).splitAt(args.length - nOptional)
+        TypeCheckResult.TypeCheckFailure(s"$fnName takes (${required.mkString(", ")}" +
+          s"${optional.map(a => s"[, $a]").mkString})")
+      } else children.zip(args).iterator
+        .map { case (c, (what, t)) => requireType(c, t, s"$fnName $what") }
+        .find(_ != TypeCheckResult.TypeCheckSuccess)
+        .getOrElse(TypeCheckResult.TypeCheckSuccess)
+
+    override def createAggregationBuffer(): PqTopKState = new PqTopKState(nq, k)
+
+    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState =
+      buf.mergeFrom(other)
+
+    override def eval(buf: PqTopKState): Any = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+      var qi = 0
+      while (qi < buf.nq) {
+        val n = buf.size(qi)
+        val pairs = Array.tabulate(n)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
+          .sortBy { case (d, v) => (d, v) }
+        val qid = queryId(qi)
+        var i = 0
+        while (i < n) {
+          out += org.apache.spark.sql.catalyst.InternalRow(
+            qid, pairs(i)._2, i + 1, decode(pairs(i)._1))
+          i += 1
+        }
+        qi += 1
+      }
+      new GenericArrayData(out.toArray)
+    }
+
+    override def serialize(buf: PqTopKState): Array[Byte] = buf.writeTo
+
+    override def deserialize(bytes: Array[Byte]): PqTopKState =
+      PqTopKState.readFrom(bytes)
+
+    override def toString: String =
+      s"$fnName(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
+  }
+
+  /** key → the slots (in ascending order) whose `keys` contain it: the
+    * per-task probe index of the candidacy kernels, built once per
+    * deserialized expression copy. */
+  private def slotIndex[K](nSlots: Int)(
+      keys: Int => IterableOnce[K]): java.util.HashMap[K, Array[Int]] = {
+    val m = new java.util.HashMap[K, scala.collection.mutable.ArrayBuffer[Int]]()
+    var slot = 0
+    while (slot < nSlots) {
+      keys(slot).iterator.foreach(key =>
+        m.computeIfAbsent(key, _ => scala.collection.mutable.ArrayBuffer.empty[Int]) += slot)
+      slot += 1
+    }
+    val out = new java.util.HashMap[K, Array[Int]](m.size() * 2)
+    m.forEach((key, buf) => out.put(key, buf.toArray))
+    out
   }
 
   /** PQ ADC scoring + top-k as ONE scan-local aggregate — the FAISS-shaped
@@ -1831,32 +1931,14 @@ object expressions {
       subK: Int,
       override val mutableAggBufferOffset: Int = 0,
       override val inputAggBufferOffset: Int = 0)
-      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState] {
+      extends ScanTopK("pq_scan_topk",
+        Seq("vec_id" -> LongType, "codes" -> ArrayType(IntegerType), "cell" -> IntegerType),
+        "neighbor_id", "adc_dist", LongType, nOptional = 1) {
 
     private def cellFiltered = children.length == 3
-
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("neighbor_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("adc_dist", LongType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = false
-    override def checkInputDataTypes(): TypeCheckResult = {
-      if (children.length != 2 && children.length != 3)
-        return TypeCheckResult.TypeCheckFailure(
-          "pq_scan_topk takes (vec_id, codes[, cell])")
-      val a = requireType(children(0), LongType, "pq_scan_topk vec_id")
-      if (a != TypeCheckResult.TypeCheckSuccess) return a
-      val b = requireType(children(1), ArrayType(IntegerType), "pq_scan_topk codes")
-      if (b != TypeCheckResult.TypeCheckSuccess) return b
-      if (cellFiltered) requireType(children(2), IntegerType, "pq_scan_topk cell")
-      else TypeCheckResult.TypeCheckSuccess
-    }
-
-    override def createAggregationBuffer(): PqTopKState =
-      new PqTopKState(bc.value.length, k)
+    override protected def nq: Int = bc.value.length
+    override protected def queryId(qi: Int): Long = bc.value(qi)._1
+    override protected def decode(key: Long): Any = key
 
     override def update(buf: PqTopKState, row: org.apache.spark.sql.catalyst.InternalRow): PqTopKState = {
       val vid = children(0).eval(row)
@@ -1895,33 +1977,6 @@ object expressions {
       buf
     }
 
-    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState =
-      buf.mergeFrom(other)
-
-    override def eval(buf: PqTopKState): Any = {
-      val qs = bc.value
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var qi = 0
-      while (qi < buf.nq) {
-        val n = buf.size(qi)
-        val pairs = Array.tabulate(n)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
-          .sortBy { case (d, v) => (d, v) }
-        var i = 0
-        while (i < n) {
-          out += org.apache.spark.sql.catalyst.InternalRow(
-            qs(qi)._1, pairs(i)._2, i + 1, pairs(i)._1)
-          i += 1
-        }
-        qi += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-
-    override def serialize(buf: PqTopKState): Array[Byte] = buf.writeTo
-
-    override def deserialize(bytes: Array[Byte]): PqTopKState =
-      PqTopKState.readFrom(bytes)
-
     override def withNewMutableAggBufferOffset(offset: Int): PqScanTopK =
       copy(mutableAggBufferOffset = offset)
     override def withNewInputAggBufferOffset(offset: Int): PqScanTopK =
@@ -1929,24 +1984,16 @@ object expressions {
     override protected def withNewChildrenInternal(
         newChildren: IndexedSeq[Expression]): PqScanTopK =
       copy(children = newChildren)
-    override def toString: String =
-      s"pq_scan_topk(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
   /** [[PqScanTopK]] as a Column — a [[perCall]] registration capturing
-    * the query broadcast (`pq_scan_topk_b<id>`); callers drop the entry
-    * with [[dropTempFunction]] once their plan is analyzed. */
+    * the query broadcast (`pq_scan_topk_b<id>`); callers release it with
+    * [[dropPerCall]] once their result is materialized. */
   def pq_scan_topk(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Long], Array[Int])]],
       k: Int, subK: Int, cols: Column*): Column =
     perCall(spark, "pq_scan_topk", bc, cols: _*)(exprs => PqScanTopK(exprs, bc, k, subK))
-
-  /** Name of the temp function [[pq_scan_topk]] registers for `bc` —
-    * for [[dropTempFunction]] once the caller's plan is analyzed. */
-  def pqScanTopKName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    perCallName("pq_scan_topk", bc)
 
   /** The broadcast operand of [[Bm25ScanTopK]]: the QUERY SET as an
     * inverted term index — `qids` (sorted query ids), `termHash` (sorted
@@ -1997,32 +2044,17 @@ object expressions {
       k: Int,
       override val mutableAggBufferOffset: Int = 0,
       override val inputAggBufferOffset: Int = 0)
-      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState] {
+      extends ScanTopK("bm25_scan_topk",
+        Seq("doc_id" -> LongType, "term_hashes" -> ArrayType(LongType),
+          "weights" -> ArrayType(LongType)),
+        "doc_id", "score_fp", LongType) {
 
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("doc_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("score_fp", LongType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = false
-    override def checkInputDataTypes(): TypeCheckResult = {
-      if (children.length != 3)
-        return TypeCheckResult.TypeCheckFailure(
-          "bm25_scan_topk takes (doc_id, term_hashes, weights)")
-      val a = requireType(children(0), LongType, "bm25_scan_topk doc_id")
-      if (a != TypeCheckResult.TypeCheckSuccess) return a
-      val b = requireType(children(1), ArrayType(LongType), "bm25_scan_topk term_hashes")
-      if (b != TypeCheckResult.TypeCheckSuccess) return b
-      requireType(children(2), ArrayType(LongType), "bm25_scan_topk weights")
-    }
+    override protected def nq: Int = bc.value._1.length
+    override protected def queryId(qi: Int): Long = bc.value._1(qi)
+    override protected def decode(key: Long): Any = -key
 
     @transient private lazy val scratch =
-      ThreadLocal.withInitial[Bm25Scratch](() => new Bm25Scratch(bc.value._1.length))
-
-    override def createAggregationBuffer(): PqTopKState =
-      new PqTopKState(bc.value._1.length, k)
+      ThreadLocal.withInitial[Bm25Scratch](() => new Bm25Scratch(nq))
 
     override def update(buf: PqTopKState, row: org.apache.spark.sql.catalyst.InternalRow): PqTopKState = {
       val did = children(0).eval(row)
@@ -2040,7 +2072,7 @@ object expressions {
       val nTerms = hs.numElements()
       // fail loudly on a malformed weight store (PqAdcDist's contract for
       // misaligned operands) instead of reading past the array's end
-      if (ws.numElements() < nTerms)
+      if (ws.numElements() != nTerms)
         throw new IllegalArgumentException(
           s"bm25_scan_topk: weights has ${ws.numElements()} entries but " +
             s"term_hashes has $nTerms — the store's arrays must align")
@@ -2076,33 +2108,6 @@ object expressions {
       buf
     }
 
-    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState =
-      buf.mergeFrom(other)
-
-    override def eval(buf: PqTopKState): Any = {
-      val qids = bc.value._1
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var qi = 0
-      while (qi < buf.nq) {
-        val n = buf.size(qi)
-        val pairs = Array.tabulate(n)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
-          .sortBy { case (d, v) => (d, v) }
-        var i = 0
-        while (i < n) {
-          out += org.apache.spark.sql.catalyst.InternalRow(
-            qids(qi), pairs(i)._2, i + 1, -pairs(i)._1)
-          i += 1
-        }
-        qi += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-
-    override def serialize(buf: PqTopKState): Array[Byte] = buf.writeTo
-
-    override def deserialize(bytes: Array[Byte]): PqTopKState =
-      PqTopKState.readFrom(bytes)
-
     override def withNewMutableAggBufferOffset(offset: Int): Bm25ScanTopK =
       copy(mutableAggBufferOffset = offset)
     override def withNewInputAggBufferOffset(offset: Int): Bm25ScanTopK =
@@ -2110,23 +2115,16 @@ object expressions {
     override protected def withNewChildrenInternal(
         newChildren: IndexedSeq[Expression]): Bm25ScanTopK =
       copy(children = newChildren)
-    override def toString: String =
-      s"bm25_scan_topk(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
   /** [[Bm25ScanTopK]] as a Column — [[pq_scan_topk]]'s per-call unique
-    * registration pattern (name `bm25_scan_topk_b<id>`; drop with
-    * [[dropTempFunction]]([[bm25ScanTopKName]]) after analysis). */
+    * registration pattern (name `bm25_scan_topk_b<id>`; release with
+    * [[dropPerCall]]). */
   def bm25_scan_topk(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Bm25QueryIndex],
       k: Int, cols: Column*): Column =
     perCall(spark, "bm25_scan_topk", bc, cols: _*)(exprs => Bm25ScanTopK(exprs, bc, k))
-
-  /** Name of the temp function [[bm25_scan_topk]] registers for `bc`. */
-  def bm25ScanTopKName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    perCallName("bm25_scan_topk", bc)
 
   /** The broadcast operand of [[Bm25RawScanTopK]]: [[Bm25QueryIndex]]
     * plus the QUERY-TIME scoring model — `idfFp(i)` is the fixed-point
@@ -2161,36 +2159,17 @@ object expressions {
       k: Int,
       override val mutableAggBufferOffset: Int = 0,
       override val inputAggBufferOffset: Int = 0)
-      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState] {
+      extends ScanTopK("bm25_raw_scan_topk",
+        Seq("doc_id" -> LongType, "term_hashes" -> ArrayType(LongType),
+          "tfs" -> ArrayType(LongType), "len" -> LongType),
+        "doc_id", "score_fp", LongType) {
 
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("doc_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("score_fp", LongType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = false
-    override def checkInputDataTypes(): TypeCheckResult = {
-      if (children.length != 4)
-        return TypeCheckResult.TypeCheckFailure(
-          "bm25_raw_scan_topk takes (doc_id, term_hashes, tfs, len)")
-      val a = requireType(children(0), LongType, "bm25_raw_scan_topk doc_id")
-      if (a != TypeCheckResult.TypeCheckSuccess) return a
-      val b = requireType(children(1), ArrayType(LongType),
-        "bm25_raw_scan_topk term_hashes")
-      if (b != TypeCheckResult.TypeCheckSuccess) return b
-      val c = requireType(children(2), ArrayType(LongType),
-        "bm25_raw_scan_topk tfs")
-      if (c != TypeCheckResult.TypeCheckSuccess) return c
-      requireType(children(3), LongType, "bm25_raw_scan_topk len")
-    }
+    override protected def nq: Int = bc.value._1.length
+    override protected def queryId(qi: Int): Long = bc.value._1(qi)
+    override protected def decode(key: Long): Any = -key
 
     @transient private lazy val scratch =
-      ThreadLocal.withInitial[Bm25Scratch](() => new Bm25Scratch(bc.value._1.length))
-
-    override def createAggregationBuffer(): PqTopKState =
-      new PqTopKState(bc.value._1.length, k)
+      ThreadLocal.withInitial[Bm25Scratch](() => new Bm25Scratch(nq))
 
     override def update(buf: PqTopKState, row: org.apache.spark.sql.catalyst.InternalRow): PqTopKState = {
       val did = children(0).eval(row)
@@ -2248,33 +2227,6 @@ object expressions {
       buf
     }
 
-    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState =
-      buf.mergeFrom(other)
-
-    override def eval(buf: PqTopKState): Any = {
-      val qids = bc.value._1
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var qi = 0
-      while (qi < buf.nq) {
-        val n = buf.size(qi)
-        val pairs = Array.tabulate(n)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
-          .sortBy { case (d, v) => (d, v) }
-        var i = 0
-        while (i < n) {
-          out += org.apache.spark.sql.catalyst.InternalRow(
-            qids(qi), pairs(i)._2, i + 1, -pairs(i)._1)
-          i += 1
-        }
-        qi += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-
-    override def serialize(buf: PqTopKState): Array[Byte] = buf.writeTo
-
-    override def deserialize(bytes: Array[Byte]): PqTopKState =
-      PqTopKState.readFrom(bytes)
-
     override def withNewMutableAggBufferOffset(offset: Int): Bm25RawScanTopK =
       copy(mutableAggBufferOffset = offset)
     override def withNewInputAggBufferOffset(offset: Int): Bm25RawScanTopK =
@@ -2282,23 +2234,15 @@ object expressions {
     override protected def withNewChildrenInternal(
         newChildren: IndexedSeq[Expression]): Bm25RawScanTopK =
       copy(children = newChildren)
-    override def toString: String =
-      s"bm25_raw_scan_topk(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
   /** [[Bm25RawScanTopK]] as a Column — per-call unique registration
-    * (name `bm25_raw_scan_topk_b<id>`; drop with [[dropTempFunction]]
-    * ([[bm25RawScanTopKName]]) after analysis). */
+    * (name `bm25_raw_scan_topk_b<id>`; release with [[dropPerCall]]). */
   def bm25_raw_scan_topk(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Bm25RawQueryIndex],
       k: Int, cols: Column*): Column =
     perCall(spark, "bm25_raw_scan_topk", bc, cols: _*)(exprs => Bm25RawScanTopK(exprs, bc, k))
-
-  /** Name of the temp function [[bm25_raw_scan_topk]] registers. */
-  def bm25RawScanTopKName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    perCallName("bm25_raw_scan_topk", bc)
 
   /** Register `build` as a temp function named `<prefix>_b<bc.id>` and
     * call it on `cols` (Expression→Column constructors are sql-private in
@@ -2310,7 +2254,7 @@ object expressions {
   private def perCall(spark: SparkSession, prefix: String,
       bc: org.apache.spark.broadcast.Broadcast[_], cols: Column*)(
       build: Seq[Expression] => Expression): Column = {
-    val name = perCallName(prefix, bc)
+    val name = s"${prefix}_b${bc.id}"
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, exprs => {
       require(exprs.length == cols.length,
         s"$name requires exactly ${cols.length} argument(s), got ${exprs.length}")
@@ -2319,25 +2263,28 @@ object expressions {
     call_function(name, cols: _*)
   }
 
-  private def perCallName(prefix: String,
-      bc: org.apache.spark.broadcast.Broadcast[_]): String = s"${prefix}_b${bc.id}"
-
-  /** Drop a per-call temp function (see [[pq_scan_topk]] /
-    * [[bloom_probe_broadcast]]): after the caller forces analysis the
-    * registry entry's only effect is pinning the captured broadcast —
-    * dropping it lets a long-running serving session reclaim one entry
-    * (and one broadcast reference) per call instead of accumulating. */
-  def dropTempFunction(spark: SparkSession, name: String): Unit =
-    spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+  /** Drop every temp function [[perCall]] registered for `bc` (the names
+    * ending in `_b<bc.id>`). Once the caller's plan is analyzed — in
+    * practice, once its result is materialized — an entry's only effect
+    * is pinning the captured broadcast, so dropping it lets a
+    * long-running serving session reclaim one entry (and one broadcast
+    * reference) per call instead of accumulating them. */
+  def dropPerCall(spark: SparkSession,
+      bc: org.apache.spark.broadcast.Broadcast[_]): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    val suffix = s"_b${bc.id}"
+    registry.listFunction()
+      .filter(f => f.database.isEmpty && f.funcName.endsWith(suffix))
+      .foreach(registry.dropFunction)
+  }
 
   /** Order-preserving double ↔ long bijection for heap keys, flipped so
     * score DESC == encoded ASC (the PqTopKState natural order): the
     * ascending map flips the 63 value bits iff the sign bit is set
     * (negatives reverse), leaves the sign bit — an involution under
     * which signed-long order == IEEE double order (non-NaN) — then ~
-    * for DESC. Shared by [[LshScanTopK]] and [[CosineScanTopK]];
-    * decode inverts exactly. */
+    * for DESC. Shared by the cosine kernels ([[LshScanTopK]],
+    * [[CosineScanTopK]], [[IvfScanTopK]]); decode inverts exactly. */
   private[functions] object DescDouble {
     @inline def encode(score: Double): Long = {
       val bits = java.lang.Double.doubleToLongBits(score)
@@ -2402,70 +2349,27 @@ object expressions {
       nPlanes: Int,
       override val mutableAggBufferOffset: Int = 0,
       override val inputAggBufferOffset: Int = 0)
-      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState] {
+      extends ScanTopK("lsh_scan_topk",
+        Seq("vec_id" -> LongType, "embedding" -> ArrayType(FloatType),
+          "sigs" -> ArrayType(IntegerType)),
+        "neighbor_id", "score", DoubleType) {
 
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("neighbor_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("score", DoubleType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = false
-    override def checkInputDataTypes(): TypeCheckResult = {
-      if (children.length != 3)
-        return TypeCheckResult.TypeCheckFailure(
-          "lsh_scan_topk takes (vec_id, embedding, sigs)")
-      val a = requireType(children(0), LongType, "lsh_scan_topk vec_id")
-      if (a != TypeCheckResult.TypeCheckSuccess) return a
-      val b = requireType(children(1), ArrayType(FloatType),
-        "lsh_scan_topk embedding")
-      if (b != TypeCheckResult.TypeCheckSuccess) return b
-      requireType(children(2), ArrayType(IntegerType), "lsh_scan_topk sigs")
-    }
+    override protected def nq: Int = bc.value.length
+    override protected def queryId(qi: Int): Long = bc.value(qi)._1
+    override protected def decode(key: Long): Any = DescDouble.decode(key)
 
-    // order-preserving double -> long bijection (IEEE total order over
-    // the non-NaN doubles this kernel produces), flipped so score DESC
-    // == encoded ASC — the heap's natural order. decode inverts exactly.
-    @inline private def encodeDesc(score: Double): Long =
-      DescDouble.encode(score)
-    @inline private def decodeDesc(enc: Long): Double =
-      DescDouble.decode(enc)
-
-    /** (table, probe-signature) → query slots, open-addressed; built
-      * once per deserialized expression copy (per task). Key packs
-      * (table, sig); buckets hold query-slot arrays. */
-    @transient private lazy val probeIndex: java.util.HashMap[Long, Array[Int]] = {
-      val qs = bc.value
-      val m = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Int]]()
-      var qi = 0
-      while (qi < qs.length) {
-        val sigs = qs(qi)._4
-        var t = 0
-        while (t < sigs.length) {
-          var p = -1
-          while (p < nPlanes) {
-            val probe = if (p < 0) sigs(t) else sigs(t) ^ (1 << p)
-            val key = (t.toLong << 32) | (probe.toLong & 0xffffffffL)
-            var buf = m.get(key)
-            if (buf == null) {
-              buf = scala.collection.mutable.ArrayBuffer.empty[Int]
-              m.put(key, buf)
-            }
-            // the probe set {qsig} ∪ {qsig⊕2^p} is duplicate-free per
-            // query (xor with a nonzero bit never equals the base), so
-            // no within-bucket dedup is needed here
-            buf += qi
-            p += 1
-          }
-          t += 1
+    /** (table, probe-signature) → query slots. Key packs (table, sig).
+      * The probe set {qsig} ∪ {qsig⊕2^p} is duplicate-free per query
+      * (xor with a nonzero bit never equals the base), so no
+      * within-bucket dedup is needed. */
+    @transient private lazy val probeIndex: java.util.HashMap[Long, Array[Int]] =
+      slotIndex[Long](bc.value.length) { qi =>
+        val sigs = bc.value(qi)._4
+        for (t <- sigs.indices; p <- -1 until nPlanes) yield {
+          val probe = if (p < 0) sigs(t) else sigs(t) ^ (1 << p)
+          (t.toLong << 32) | (probe.toLong & 0xffffffffL)
         }
-        qi += 1
       }
-      val out = new java.util.HashMap[Long, Array[Int]](m.size() * 2)
-      m.forEach((key, buf) => out.put(key, buf.toArray))
-      out
-    }
 
     @transient private lazy val scratch =
       ThreadLocal.withInitial[LshScratch](() => {
@@ -2477,9 +2381,6 @@ object expressions {
         new LshScratch(qs.length,
           if (qs.isEmpty) 0 else qs.iterator.map(_._2.length).max)
       })
-
-    override def createAggregationBuffer(): PqTopKState =
-      new PqTopKState(bc.value.length, k)
 
     override def update(buf: PqTopKState, row: org.apache.spark.sql.catalyst.InternalRow): PqTopKState = {
       val vid = children(0).eval(row)
@@ -2532,7 +2433,7 @@ object expressions {
                   var dab = 0L
                   var i = 0
                   while (i < n) { dab += qv(i) * st.qv(i); i += 1 }
-                  buf.push(qi, encodeDesc(
+                  buf.push(qi, DescDouble.encode(
                     dab.toDouble / (math.sqrt(qq.toDouble) * math.sqrt(dbb.toDouble))),
                     vecId)
                 }
@@ -2546,33 +2447,6 @@ object expressions {
       buf
     }
 
-    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState =
-      buf.mergeFrom(other)
-
-    override def eval(buf: PqTopKState): Any = {
-      val qs = bc.value
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var qi = 0
-      while (qi < buf.nq) {
-        val m = buf.size(qi)
-        val pairs = Array.tabulate(m)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
-          .sortBy { case (d, v) => (d, v) }
-        var i = 0
-        while (i < m) {
-          out += org.apache.spark.sql.catalyst.InternalRow(
-            qs(qi)._1, pairs(i)._2, i + 1, decodeDesc(pairs(i)._1))
-          i += 1
-        }
-        qi += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-
-    override def serialize(buf: PqTopKState): Array[Byte] = buf.writeTo
-
-    override def deserialize(bytes: Array[Byte]): PqTopKState =
-      PqTopKState.readFrom(bytes)
-
     override def withNewMutableAggBufferOffset(offset: Int): LshScanTopK =
       copy(mutableAggBufferOffset = offset)
     override def withNewInputAggBufferOffset(offset: Int): LshScanTopK =
@@ -2580,23 +2454,15 @@ object expressions {
     override protected def withNewChildrenInternal(
         newChildren: IndexedSeq[Expression]): LshScanTopK =
       copy(children = newChildren)
-    override def toString: String =
-      s"lsh_scan_topk(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
   /** [[LshScanTopK]] as a Column — per-call unique registration
-    * (name `lsh_scan_topk_b<id>`; drop with [[dropTempFunction]]
-    * ([[lshScanTopKName]]) after analysis). */
+    * (name `lsh_scan_topk_b<id>`; release with [[dropPerCall]]). */
   def lsh_scan_topk(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[LshQuerySet],
       k: Int, nPlanes: Int, cols: Column*): Column =
     perCall(spark, "lsh_scan_topk", bc, cols: _*)(exprs => LshScanTopK(exprs, bc, k, nPlanes))
-
-  /** Name of the temp function [[lsh_scan_topk]] registers. */
-  def lshScanTopKName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    perCallName("lsh_scan_topk", bc)
 
   /** The broadcast operand of [[MihMatchScan]]: the arriving batch's
     * DISTINCT frame hashes (slot-indexed), bounded by the serving-batch
@@ -2646,29 +2512,11 @@ object expressions {
       requireType(children(2), LongType, "mih_match_scan h")
     }
 
-    /** (band << 16 | chunk) → arriving slots, built once per task. */
-    @transient private lazy val probeIndex: java.util.HashMap[Integer, Array[Int]] = {
-      val qs = bc.value
-      val m = new java.util.HashMap[Integer, scala.collection.mutable.ArrayBuffer[Int]]()
-      var i = 0
-      while (i < qs.length) {
-        var b = 0
-        while (b < 4) {
-          val key = (b << 16) | (((qs(i) >>> (b * 16)) & 0xffffL).toInt)
-          var buf = m.get(key)
-          if (buf == null) {
-            buf = scala.collection.mutable.ArrayBuffer.empty[Int]
-            m.put(key, buf)
-          }
-          buf += i
-          b += 1
-        }
-        i += 1
+    /** (band << 16 | chunk) → arriving slots. */
+    @transient private lazy val probeIndex: java.util.HashMap[Int, Array[Int]] =
+      slotIndex[Int](bc.value.length) { i =>
+        (0 until 4).map(b => (b << 16) | (((bc.value(i) >>> (b * 16)) & 0xffffL).toInt))
       }
-      val out = new java.util.HashMap[Integer, Array[Int]](m.size() * 2)
-      m.forEach((key, buf) => out.put(key, buf.toArray))
-      out
-    }
 
     override def createAggregationBuffer(): Array[Long] =
       new Array[Long]((bc.value.length + 63) / 64)
@@ -2741,18 +2589,12 @@ object expressions {
   }
 
   /** [[MihMatchScan]] as a Column — per-call unique registration
-    * (name `mih_match_scan_b<id>`; drop with [[dropTempFunction]]
-    * ([[mihMatchScanName]]) after analysis). */
+    * (name `mih_match_scan_b<id>`; release with [[dropPerCall]]). */
   def mih_match_scan(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[MihQuerySet],
       maxHam: Int, cols: Column*): Column =
     perCall(spark, "mih_match_scan", bc, cols: _*)(exprs => MihMatchScan(exprs, bc, maxHam))
-
-  /** Name of the temp function [[mih_match_scan]] registers. */
-  def mihMatchScanName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    perCallName("mih_match_scan", bc)
 
   /** The broadcast operand of [[CosineScanTopK]]: one entry per query —
     * (query_id, quantized components floor(x·2²⁰), ‖q‖² in the
@@ -2781,25 +2623,13 @@ object expressions {
       k: Int,
       override val mutableAggBufferOffset: Int = 0,
       override val inputAggBufferOffset: Int = 0)
-      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState] {
+      extends ScanTopK("cosine_scan_topk",
+        Seq("vec_id" -> LongType, "embedding" -> ArrayType(FloatType)),
+        "neighbor_id", "score", DoubleType) {
 
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("neighbor_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("score", DoubleType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = false
-    override def checkInputDataTypes(): TypeCheckResult = {
-      if (children.length != 2)
-        return TypeCheckResult.TypeCheckFailure(
-          "cosine_scan_topk takes (vec_id, embedding)")
-      val a = requireType(children(0), LongType, "cosine_scan_topk vec_id")
-      if (a != TypeCheckResult.TypeCheckSuccess) return a
-      requireType(children(1), ArrayType(FloatType),
-        "cosine_scan_topk embedding")
-    }
+    override protected def nq: Int = bc.value.length
+    override protected def queryId(qi: Int): Long = bc.value(qi)._1
+    override protected def decode(key: Long): Any = DescDouble.decode(key)
 
     @transient private lazy val scratch =
       ThreadLocal.withInitial[LshScratch](() => {
@@ -2811,9 +2641,6 @@ object expressions {
         new LshScratch(qs.length,
           if (qs.isEmpty) 0 else qs.iterator.map(_._2.length).max)
       })
-
-    override def createAggregationBuffer(): PqTopKState =
-      new PqTopKState(bc.value.length, k)
 
     override def update(buf: PqTopKState, row: org.apache.spark.sql.catalyst.InternalRow): PqTopKState = {
       val vid = children(0).eval(row)
@@ -2855,33 +2682,6 @@ object expressions {
       buf
     }
 
-    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState =
-      buf.mergeFrom(other)
-
-    override def eval(buf: PqTopKState): Any = {
-      val qs = bc.value
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var qi = 0
-      while (qi < buf.nq) {
-        val m = buf.size(qi)
-        val pairs = Array.tabulate(m)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
-          .sortBy { case (d, v) => (d, v) }
-        var i = 0
-        while (i < m) {
-          out += org.apache.spark.sql.catalyst.InternalRow(
-            qs(qi)._1, pairs(i)._2, i + 1, DescDouble.decode(pairs(i)._1))
-          i += 1
-        }
-        qi += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-
-    override def serialize(buf: PqTopKState): Array[Byte] = buf.writeTo
-
-    override def deserialize(bytes: Array[Byte]): PqTopKState =
-      PqTopKState.readFrom(bytes)
-
     override def withNewMutableAggBufferOffset(offset: Int): CosineScanTopK =
       copy(mutableAggBufferOffset = offset)
     override def withNewInputAggBufferOffset(offset: Int): CosineScanTopK =
@@ -2889,23 +2689,15 @@ object expressions {
     override protected def withNewChildrenInternal(
         newChildren: IndexedSeq[Expression]): CosineScanTopK =
       copy(children = newChildren)
-    override def toString: String =
-      s"cosine_scan_topk(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
   /** [[CosineScanTopK]] as a Column — per-call unique registration
-    * (name `cosine_scan_topk_b<id>`; drop with [[dropTempFunction]]
-    * ([[cosineScanTopKName]]) after analysis). */
+    * (name `cosine_scan_topk_b<id>`; release with [[dropPerCall]]). */
   def cosine_scan_topk(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[CosineQuerySet],
       k: Int, cols: Column*): Column =
     perCall(spark, "cosine_scan_topk", bc, cols: _*)(exprs => CosineScanTopK(exprs, bc, k))
-
-  /** Name of the temp function [[cosine_scan_topk]] registers. */
-  def cosineScanTopKName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    perCallName("cosine_scan_topk", bc)
 
   /** The broadcast operand of [[IvfScanTopK]]: one entry per query —
     * (query_id, quantized components floor(x·2²⁰), ‖q‖² in the quantized
@@ -2943,50 +2735,18 @@ object expressions {
       k: Int,
       override val mutableAggBufferOffset: Int = 0,
       override val inputAggBufferOffset: Int = 0)
-      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[PqTopKState] {
+      extends ScanTopK("ivf_scan_topk",
+        Seq("vec_id" -> LongType, "label" -> IntegerType,
+          "embedding" -> ArrayType(FloatType)),
+        "neighbor_id", "score", DoubleType) {
 
-    override def dataType: DataType = ArrayType(
-      StructType(Seq(
-        StructField("query_id", LongType, nullable = false),
-        StructField("neighbor_id", LongType, nullable = false),
-        StructField("rank", IntegerType, nullable = false),
-        StructField("score", DoubleType, nullable = false))),
-      containsNull = false)
-    override def nullable: Boolean = false
-    override def checkInputDataTypes(): TypeCheckResult = {
-      if (children.length != 3)
-        return TypeCheckResult.TypeCheckFailure(
-          "ivf_scan_topk takes (vec_id, label, embedding)")
-      val a = requireType(children(0), LongType, "ivf_scan_topk vec_id")
-      if (a != TypeCheckResult.TypeCheckSuccess) return a
-      val b = requireType(children(1), IntegerType, "ivf_scan_topk label")
-      if (b != TypeCheckResult.TypeCheckSuccess) return b
-      requireType(children(2), ArrayType(FloatType), "ivf_scan_topk embedding")
-    }
+    override protected def nq: Int = bc.value.length
+    override protected def queryId(qi: Int): Long = bc.value(qi)._1
+    override protected def decode(key: Long): Any = DescDouble.decode(key)
 
-    /** cell label → query slots probing it, built once per task. */
-    @transient private lazy val probeIndex: java.util.HashMap[Integer, Array[Int]] = {
-      val qs = bc.value
-      val m = new java.util.HashMap[Integer, scala.collection.mutable.ArrayBuffer[Int]]()
-      var qi = 0
-      while (qi < qs.length) {
-        val cells = qs(qi)._4
-        var ci = 0
-        while (ci < cells.length) {
-          var buf = m.get(cells(ci))
-          if (buf == null) {
-            buf = scala.collection.mutable.ArrayBuffer.empty[Int]
-            m.put(cells(ci), buf)
-          }
-          buf += qi
-          ci += 1
-        }
-        qi += 1
-      }
-      val out = new java.util.HashMap[Integer, Array[Int]](m.size() * 2)
-      m.forEach((key, buf) => out.put(key, buf.toArray))
-      out
-    }
+    /** cell label → query slots probing it. */
+    @transient private lazy val probeIndex: java.util.HashMap[Int, Array[Int]] =
+      slotIndex[Int](bc.value.length)(qi => bc.value(qi)._4)
 
     @transient private lazy val scratch =
       ThreadLocal.withInitial[LshScratch](() => {
@@ -2995,9 +2755,6 @@ object expressions {
         new LshScratch(qs.length,
           if (qs.isEmpty) 0 else qs.iterator.map(_._2.length).max)
       })
-
-    override def createAggregationBuffer(): PqTopKState =
-      new PqTopKState(bc.value.length, k)
 
     override def update(buf: PqTopKState, row: org.apache.spark.sql.catalyst.InternalRow): PqTopKState = {
       val vid = children(0).eval(row)
@@ -3041,33 +2798,6 @@ object expressions {
       buf
     }
 
-    override def merge(buf: PqTopKState, other: PqTopKState): PqTopKState =
-      buf.mergeFrom(other)
-
-    override def eval(buf: PqTopKState): Any = {
-      val qs = bc.value
-      val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-      var qi = 0
-      while (qi < buf.nq) {
-        val m = buf.size(qi)
-        val pairs = Array.tabulate(m)(i => (buf.dist(qi)(i), buf.id(qi)(i)))
-          .sortBy { case (d, v) => (d, v) }
-        var i = 0
-        while (i < m) {
-          out += org.apache.spark.sql.catalyst.InternalRow(
-            qs(qi)._1, pairs(i)._2, i + 1, DescDouble.decode(pairs(i)._1))
-          i += 1
-        }
-        qi += 1
-      }
-      new GenericArrayData(out.toArray)
-    }
-
-    override def serialize(buf: PqTopKState): Array[Byte] = buf.writeTo
-
-    override def deserialize(bytes: Array[Byte]): PqTopKState =
-      PqTopKState.readFrom(bytes)
-
     override def withNewMutableAggBufferOffset(offset: Int): IvfScanTopK =
       copy(mutableAggBufferOffset = offset)
     override def withNewInputAggBufferOffset(offset: Int): IvfScanTopK =
@@ -3075,23 +2805,15 @@ object expressions {
     override protected def withNewChildrenInternal(
         newChildren: IndexedSeq[Expression]): IvfScanTopK =
       copy(children = newChildren)
-    override def toString: String =
-      s"ivf_scan_topk(broadcast#${bc.id}, k=$k, ${children.mkString(", ")})"
   }
 
   /** [[IvfScanTopK]] as a Column — per-call unique registration
-    * (name `ivf_scan_topk_b<id>`; drop with [[dropTempFunction]]
-    * ([[ivfScanTopKName]]) after analysis). */
+    * (name `ivf_scan_topk_b<id>`; release with [[dropPerCall]]). */
   def ivf_scan_topk(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[IvfQuerySet],
       k: Int, cols: Column*): Column =
     perCall(spark, "ivf_scan_topk", bc, cols: _*)(exprs => IvfScanTopK(exprs, bc, k))
-
-  /** Name of the temp function [[ivf_scan_topk]] registers. */
-  def ivfScanTopKName(
-      bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    perCallName("ivf_scan_topk", bc)
 
   /** Compiled Naive-Bayes trigram model for [[NbScore]] — the
     * vocabulary-bounded (lang, gram, w_fp) / (lang, prior_fp, unseen_fp)
@@ -3631,16 +3353,11 @@ object expressions {
     * bind each other's filter, whatever order their plans analyze in.
     * Callers should still force analysis (e.g.
     * `df.queryExecution.analyzed`, as q68 does) and then release the
-    * entry with [[dropTempFunction]]([[bloomProbeName]]).
+    * entry with [[dropPerCall]].
     */
   def bloom_probe_broadcast(
       spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Array[Byte]],
       hashed: Column): Column =
     perCall(spark, "bloom_probe_bc", bc, hashed)(exprs => BloomProbeBroadcast(bc, exprs.head))
-
-  /** Name of the temp function [[bloom_probe_broadcast]] registers for
-    * `bc` — for [[dropTempFunction]] once the caller's plan is analyzed. */
-  def bloomProbeName(bc: org.apache.spark.broadcast.Broadcast[_]): String =
-    perCallName("bloom_probe_bc", bc)
 }

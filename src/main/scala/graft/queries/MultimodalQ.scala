@@ -520,8 +520,7 @@ object MultimodalQ {
             // broadcast reclaims now (pqAdcTopK's cleanup rule)
             .localCheckpoint()
         } finally {
-          graft.functions.expressions.dropTempFunction(sIdx,
-            graft.functions.expressions.mihMatchScanName(bc))
+          graft.functions.expressions.dropPerCall(sIdx, bc)
           bc.destroy()
         }
       val matched = fresh.join(matchedH, Seq("h"), "left_semi")

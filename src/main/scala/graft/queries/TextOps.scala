@@ -3775,7 +3775,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
               // the filter broadcast instead of leaving it to driver GC
               .localCheckpoint()
           } finally {
-            E.dropTempFunction(s, E.bloomProbeName(bc))
+            E.dropPerCall(s, bc)
             bc.destroy()
           }
         }
@@ -4283,8 +4283,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
         // materialize (nq·k rows) so the broadcast can be destroyed now
         .localCheckpoint()
     } finally {
-      graft.functions.expressions.dropTempFunction(
-        s, graft.functions.expressions.bm25ScanTopKName(bc))
+      graft.functions.expressions.dropPerCall(s, bc)
       bc.destroy()
     }
   }
@@ -6258,8 +6257,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
         .orderBy($"query_id", $"rank")
         .localCheckpoint()
     } finally {
-      graft.functions.expressions.dropTempFunction(
-        s, graft.functions.expressions.bm25RawScanTopKName(bc))
+      graft.functions.expressions.dropPerCall(s, bc)
       bc.destroy()
     }
   }
@@ -6823,7 +6821,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
             val filtered = grams.filter(E.bloom_probe_broadcast(s, bc, $"key"))
             filtered.queryExecution.analyzed // bind the probe before the drop
             filtered
-          } finally E.dropTempFunction(s, E.bloomProbeName(bc))
+          } finally E.dropPerCall(s, bc)
         }
         val flagged = pre.join(dupKeys, Seq("key"), "left_semi")
           .groupBy($"doc_id").agg(sort_array(collect_list($"s")).as("starts"))

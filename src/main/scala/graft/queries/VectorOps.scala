@@ -121,8 +121,7 @@ object VectorOps {
         .orderBy($"query_id", $"rank")
         .localCheckpoint()
     } finally {
-      graft.functions.expressions.dropTempFunction(s,
-        graft.functions.expressions.cosineScanTopKName(bc))
+      graft.functions.expressions.dropPerCall(s, bc)
       bc.destroy()
     }
   }
@@ -239,8 +238,7 @@ object VectorOps {
           // (pqAdcTopK's cleanup rule)
           .localCheckpoint()
       } finally {
-        graft.functions.expressions.dropTempFunction(s,
-          graft.functions.expressions.lshScanTopKName(bc))
+        graft.functions.expressions.dropPerCall(s, bc)
         bc.destroy()
       }
     },
@@ -830,8 +828,7 @@ object VectorOps {
           // (pqAdcTopK's cleanup rule)
           .localCheckpoint()
       } finally {
-        graft.functions.expressions.dropTempFunction(s,
-          graft.functions.expressions.ivfScanTopKName(bc))
+        graft.functions.expressions.dropPerCall(s, bc)
         bc.destroy()
       }
     },
@@ -1269,24 +1266,31 @@ object VectorOps {
       var cents: Seq[Array[Long]] = emb.orderBy($"vec_id").limit(k)
         .select($"xq").collect().toSeq
         .map(_.getSeq[Long](0).toArray)
-      def assigned: org.apache.spark.sql.DataFrame = {
+      // `act` runs an action over the assignment to the current
+      // centroids; the round's broadcast and its registry entry are
+      // released once it returns
+      def withAssigned[T](act: DataFrame => T): T = {
         // one broadcast + one scan-local k·d loop per row (CentroidArgmin)
         // instead of a k-branch least(struct(sq_dist, cid)) fold — the
         // fold's PLAN grew with k, which is what capped the scaled-k rule
         // at 512 cells (and with it the whole blocked family) until r14;
         // bit-identical output (tie → smallest cid, null → (null, 0))
         val bc = s.sparkContext.broadcast(cents.map(_.clone()).toArray)
-        emb.withColumn("a",
+        try act(emb.withColumn("a",
             graft.functions.expressions.centroid_argmin(s, bc, $"xq"))
           .select($"vec_id", $"xq",
-            $"a.cid".cast("long").as("cluster"), $"a.dist".as("dist"))
+            $"a.cid".cast("long").as("cluster"), $"a.dist".as("dist")))
+        finally {
+          graft.functions.expressions.dropPerCall(s, bc)
+          bc.destroy()
+        }
       }
       for (_ <- 1 to rounds) {
-        val sums = assigned
+        val sums = withAssigned(_
           .select($"cluster", posexplode($"xq").as(Seq("pos", "qx")))
           .groupBy($"cluster", $"pos")
           .agg(sum($"qx").as("s"), count(lit(1)).as("n"))
-          .collect()
+          .collect())
         val byCluster = sums.groupBy(_.getLong(0).toInt)
         cents = cents.zipWithIndex.map { case (old, i) =>
           byCluster.get(i).fold(old) { rows =>
@@ -1298,7 +1302,7 @@ object VectorOps {
           }
         }
       }
-      (assigned.select($"vec_id", $"cluster", $"dist").localCheckpoint(), cents)
+      (withAssigned(_.select($"vec_id", $"cluster", $"dist").localCheckpoint()), cents)
     } finally emb.unpersist()
   }
 
@@ -1666,8 +1670,7 @@ object VectorOps {
       // executor blocks for the life of the stream
       out.localCheckpoint()
     } finally {
-      graft.functions.expressions.dropTempFunction(
-        s, graft.functions.expressions.pqScanTopKName(bc))
+      graft.functions.expressions.dropPerCall(s, bc)
       bc.destroy()
     }
   }
@@ -1935,8 +1938,7 @@ object VectorOps {
           .orderBy($"query_id", $"rank")
           .localCheckpoint() // materialized → broadcast reclaimable now
       } finally {
-        graft.functions.expressions.dropTempFunction(
-          s, graft.functions.expressions.pqScanTopKName(bc))
+        graft.functions.expressions.dropPerCall(s, bc)
         bc.destroy()
       }
     },
@@ -2131,7 +2133,7 @@ object VectorOps {
         // sort_array(struct(sq_dist, cid))(0..1) fields, without the
         // k-branch plan (see kmeansFit's assigned)
         val bc = s.sparkContext.broadcast(cents.map(_.clone()).toArray)
-        Tables.embeddings(s, d)
+        try Tables.embeddings(s, d)
           .select($"vec_id", quantize($"embedding").cast("array<bigint>").as("xq"))
           .withColumn("a",
             graft.functions.expressions.centroid_argmin(s, bc, $"xq"))
@@ -2140,6 +2142,10 @@ object VectorOps {
             $"a.dist".as("a2"),
             $"a.dist2".as("b2"))
           .write.mode("overwrite").parquet(p)
+        finally {
+          graft.functions.expressions.dropPerCall(s, bc)
+          bc.destroy()
+        }
       })
       val sa = sqrt($"a2".cast("double"))
       val sb = sqrt($"b2".cast("double"))

@@ -365,4 +365,34 @@ class PropertySpec extends SparkSpec {
       assert(ab.toSet == (a.toSet & b.toSet), "set semantics")
     }
   }
+
+  test("property: PqTopKState partials round-tripped through writeTo/readFrom and merged == one state fed everything") {
+    import graft.functions.expressions.PqTopKState
+    val nq = 3
+    val nParts = 4
+    // (query slot, key, id, partial that receives the push)
+    val pushGen = Gen.listOf(for {
+      qi <- Gen.choose(0, nq - 1)
+      key <- Gen.choose(-4L, 4L)
+      id <- Gen.choose(0L, 15L)
+      part <- Gen.choose(0, nParts - 1)
+    } yield (qi, key, id, part))
+    forAll2(pushGen, Gen.choose(1, 6)) { (pushes, k) =>
+      def fed(ps: Seq[(Int, Long, Long, Int)]): PqTopKState = {
+        val st = new PqTopKState(nq, k)
+        ps.foreach { case (qi, key, id, _) => st.push(qi, key, id) }
+        st
+      }
+      def contents(st: PqTopKState): Seq[Seq[(Long, Long)]] = (0 until nq).map(qi =>
+        (0 until st.size(qi)).map(i => (st.dist(qi)(i), st.id(qi)(i))).sorted)
+      val whole = fed(pushes)
+      val partials = (0 until nParts).map(p =>
+        PqTopKState.readFrom(fed(pushes.filter(_._4 == p)).writeTo))
+      val merged = partials.reduce((a, b) => a.mergeFrom(b))
+      assert(contents(merged) == contents(whole))
+      // and both keep each query's k smallest (key, id)
+      assert(contents(whole) == (0 until nq).map(qi =>
+        pushes.filter(_._1 == qi).map(p => (p._2, p._3)).sorted.take(k)))
+    }
+  }
 }

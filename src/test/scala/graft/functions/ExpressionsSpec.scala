@@ -434,12 +434,12 @@ class ExpressionsSpec extends SparkSpec {
     assert((0L to 9L by 2).forall(hitsEven), s"even probe lost members: $hitsEven")
     assert((1L to 9L by 2).forall(hitsOdd), s"odd probe lost members: $hitsOdd")
     // the per-broadcast entry can be dropped and re-registered cleanly
-    expressions.dropTempFunction(spark, expressions.bloomProbeName(bcEven))
+    expressions.dropPerCall(spark, bcEven)
     val again = probe.filter(expressions.bloom_probe_broadcast(spark, bcEven, $"h"))
       .collect().map(_.getLong(0)).toSet
     assert(again == hitsEven)
-    expressions.dropTempFunction(spark, expressions.bloomProbeName(bcEven))
-    expressions.dropTempFunction(spark, expressions.bloomProbeName(bcOdd))
+    expressions.dropPerCall(spark, bcEven)
+    expressions.dropPerCall(spark, bcOdd)
     bcEven.destroy(); bcOdd.destroy()
   }
 
@@ -539,8 +539,18 @@ class ExpressionsSpec extends SparkSpec {
       assert(got.toSeq == Seq(
         (1L, 2L, 1, 7L), (1L, 5L, 2, 7L),
         (3L, 4L, 1, 9L), (3L, 2L, 2, 1L)))
+      // misaligned store: weights one entry LONGER than hs must fail
+      // loudly too, not score the leading entries silently
+      val bad = Seq((1L, Seq(10L, 20L), Seq(5L, 3L, 2L))).toDF("doc_id", "hs", "ws")
+      val e = intercept[Exception] {
+        bad.agg(expressions.bm25_scan_topk(spark, bc, 2,
+          $"doc_id", $"hs", $"ws").as("t")).collect()
+      }
+      def msgs(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
+      assert(msgs(e).exists(m => m != null && m.contains("must align")))
     } finally {
-      expressions.dropTempFunction(spark, expressions.bm25ScanTopKName(bc))
+      expressions.dropPerCall(spark, bc)
       bc.destroy()
     }
   }
@@ -571,7 +581,7 @@ class ExpressionsSpec extends SparkSpec {
         (7L, 2L, 1, 2L * 1571428L), (7L, 1L, 2, 2L * 1000000L),
         (8L, 1L, 1, 3L * 1375000L), (8L, 3L, 2, 3L * 1000000L)))
     } finally {
-      expressions.dropTempFunction(spark, expressions.bm25RawScanTopKName(bc))
+      expressions.dropPerCall(spark, bc)
       bc.destroy()
     }
     // misaligned store: tfs shorter than hs must fail loudly
@@ -587,7 +597,7 @@ class ExpressionsSpec extends SparkSpec {
         Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
       assert(msgs(e).exists(m => m != null && m.contains("must align")))
     } finally {
-      expressions.dropTempFunction(spark, expressions.bm25RawScanTopKName(bc2))
+      expressions.dropPerCall(spark, bc2)
       bc2.destroy()
     }
   }
@@ -653,7 +663,7 @@ class ExpressionsSpec extends SparkSpec {
         .orderBy($"query_id", $"rank")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
       finally {
-        expressions.dropTempFunction(spark, expressions.ivfScanTopKName(bc))
+        expressions.dropPerCall(spark, bc)
         bc.destroy()
       }
     // declarative reference: probe equi-join + exact kernel + window
@@ -698,12 +708,165 @@ class ExpressionsSpec extends SparkSpec {
         .orderBy($"query_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       finally {
-        expressions.dropTempFunction(spark, expressions.cosineScanTopKName(bc))
+        expressions.dropPerCall(spark, bc)
         bc.destroy()
       }
     // per-pair n == qv.length is the only dim gate: the longer-dim query
     // (after a shorter first query) still scores its matching row
     assert(got.map(t => (t._1, t._2)).toSeq == Seq((100L, 1L), (200L, 2L)))
     assert(got.forall(_._3 > 0.999)) // parallel vectors, cosine ≈ 1
+  }
+
+  test("top-k scan kernels == driver-side brute force over 4 tasks: ties by id, k > candidates") {
+    import spark.implicits._
+    import org.apache.spark.sql.Column
+    import Ordering.Double.TotalOrdering
+    type Doc = (Long, Seq[Float], Seq[Int], Int, Seq[Int], Seq[Long], Seq[Long], Seq[Long], Long)
+    val bases = Seq(Seq(1f, 0f, .5f, -.25f), Seq(0f, 1f, 1f, 0f),
+      Seq(.5f, .5f, 0f, 1f), Seq(-1f, .25f, 0f, .5f), Seq(0f, 0f, 0f, 0f))
+    // 30 docs over 5 embeddings (one all-zero, skipped as degenerate),
+    // 3 PQ subspaces of 4 codes, 3 cells, two 3-bit LSH tables and
+    // 2-term BM25 postings: every kernel meets exact score ties
+    val corpus = (0L until 30L).map { i =>
+      (i, bases((i % 5).toInt),
+        Seq((i % 4).toInt, (i / 2 % 4).toInt, (i / 3 % 4).toInt), (i % 3).toInt,
+        Seq((i % 8).toInt, (i * 3 % 8).toInt),
+        Seq(10L + i % 4, 20L + i % 3), Seq(1L + i % 5, 2L + i % 2),
+        Seq(1L + i % 3, 1L + i % 2), 2L + i % 4)
+    }
+    val df = corpus.toDF("vec_id", "embedding", "codes", "cell", "sigs",
+      "hs", "ws", "tfs", "len").repartition(4)
+    val byId = corpus.map(d => d._1 -> d).toMap
+
+    // four queries; id 100 is outside the corpus, the others self-exclude
+    val qids = Seq(0L, 7L, 13L, 100L)
+    def quant(e: Seq[Float]): Array[Long] =
+      e.map(x => math.floor(x.toDouble * 1048576.0).toLong).toArray
+    val qv = qids.map(q => quant(if (q == 100L) bases(1) else byId(q)._2))
+    val qq = qv.map(_.map(x => x * x).sum)
+    val qsigs = qids.map(q => (if (q == 100L) Seq(5, 2) else byId(q)._5).toArray)
+    val cells = Seq(Array(0), Array(1, 2), Array(0, 1, 2), Array(2))
+    val dts = qids.map(q => Array.tabulate(12)(j => (j * 7 + q * 3) % 5))
+    val terms = Seq(Seq(10L, 20L), Seq(11L), Seq(12L, 21L, 22L), Seq(13L, 30L))
+    val termHash = terms.flatten.distinct.sorted.toArray
+    val slots = termHash.map(t => terms.indices.filter(terms(_).contains(t)).toArray)
+    val offsets = slots.scanLeft(0)(_ + _.length)
+    val idfFp = termHash.map(t => 1L + t % 3)
+    val avgdl = 3.0
+    val nPlanes = 3
+
+    val pqBc = spark.sparkContext.broadcast(
+      qids.indices.map(i => (qids(i), dts(i), cells(i))).toArray)
+    val bm25Bc = spark.sparkContext.broadcast(
+      (qids.toArray, termHash, offsets, slots.flatten): expressions.Bm25QueryIndex)
+    val rawBc = spark.sparkContext.broadcast((qids.toArray, termHash, offsets,
+      slots.flatten, idfFp, avgdl): expressions.Bm25RawQueryIndex)
+    val lshBc = spark.sparkContext.broadcast(
+      qids.indices.map(i => (qids(i), qv(i), qq(i), qsigs(i))).toArray: expressions.LshQuerySet)
+    val cosBc = spark.sparkContext.broadcast(
+      qids.indices.map(i => (qids(i), qv(i), qq(i))).toArray: expressions.CosineQuerySet)
+    val ivfBc = spark.sparkContext.broadcast(
+      qids.indices.map(i => (qids(i), qv(i), qq(i), cells(i))).toArray: expressions.IvfQuerySet)
+
+    // QuantizedCosine's arithmetic; None where it is SQL-null or a self-pair
+    def cosine(i: Int, d: Doc): Option[Double] = {
+      val b = quant(d._2)
+      val dbb = b.map(x => x * x).sum
+      if (d._1 == qids(i) || dbb == 0L || qq(i) == 0L || b.length != qv(i).length) None
+      else Some(b.indices.map(j => qv(i)(j) * b(j)).sum.toDouble /
+        (math.sqrt(qq(i).toDouble) * math.sqrt(dbb.toDouble)))
+    }
+    def pq(cellFiltered: Boolean)(i: Int, d: Doc): Option[Double] =
+      if (d._1 == qids(i) || (cellFiltered && !cells(i).contains(d._4))) None
+      else Some(d._3.indices.map(j => dts(i)(j * 4 + d._3(j))).sum.toDouble)
+    // sum of `weight(term position)` over the doc terms the query has
+    def bm25(weight: (Doc, Int) => Long)(i: Int, d: Doc): Option[Double] = {
+      val hit = d._6.indices.filter(t => terms(i).contains(d._6(t)))
+      if (d._1 == qids(i) || hit.isEmpty) None
+      else Some(hit.map(t => weight(d, t)).sum.toDouble)
+    }
+    def rawWeight(d: Doc, t: Int): Long = {
+      val tf = d._8(t)
+      val lenTerm = 1.2 * (0.25 + (0.75 * d._9) / avgdl)
+      idfFp(termHash.indexOf(d._6(t))) * math.floor((tf * 2.2) / (tf + lenTerm) * 1e6).toLong
+    }
+    def lshCandidate(i: Int, d: Doc): Boolean = d._5.indices.exists { t =>
+      val x = d._5(t) ^ qsigs(i)(t)
+      x == 0 || (Integer.bitCount(x) == 1 && Integer.numberOfTrailingZeros(x) < nPlanes)
+    }
+    // per query: the k best candidates, score DESC (ASC for a distance),
+    // ties broken by id — rows (query_id, id, rank, score)
+    def brute(k: Int, asc: Boolean, longScore: Boolean)(
+        score: (Int, Doc) => Option[Double]): Seq[(Long, Long, Int, Any)] =
+      qids.indices.flatMap { i =>
+        corpus.flatMap(d => score(i, d).map(d._1 -> _))
+          .sortBy { case (id, sc) => (if (asc) sc else -sc, id) }
+          .take(k).zipWithIndex
+          .map { case ((id, sc), r) =>
+            (qids(i), id, r + 1, if (longScore) (sc.toLong: Any) else (sc: Any)) }
+      }
+
+    val kernels: Seq[(String, Int => Column, Int => Seq[(Long, Long, Int, Any)])] = Seq(
+      ("pq_scan_topk", k => expressions.pq_scan_topk(spark, pqBc, k, 4, $"vec_id", $"codes"),
+        k => brute(k, asc = true, longScore = true)(pq(cellFiltered = false))),
+      ("pq_scan_topk with cell", k => expressions.pq_scan_topk(spark, pqBc, k, 4,
+          $"vec_id", $"codes", $"cell"),
+        k => brute(k, asc = true, longScore = true)(pq(cellFiltered = true))),
+      ("bm25_scan_topk", k => expressions.bm25_scan_topk(spark, bm25Bc, k,
+          $"vec_id", $"hs", $"ws"),
+        k => brute(k, asc = false, longScore = true)(bm25((d, t) => d._7(t)))),
+      ("bm25_raw_scan_topk", k => expressions.bm25_raw_scan_topk(spark, rawBc, k,
+          $"vec_id", $"hs", $"tfs", $"len"),
+        k => brute(k, asc = false, longScore = true)(bm25(rawWeight))),
+      ("lsh_scan_topk", k => expressions.lsh_scan_topk(spark, lshBc, k, nPlanes,
+          $"vec_id", $"embedding", $"sigs"),
+        k => brute(k, asc = false, longScore = false)((i, d) =>
+          if (lshCandidate(i, d)) cosine(i, d) else None)),
+      ("cosine_scan_topk", k => expressions.cosine_scan_topk(spark, cosBc, k,
+          $"vec_id", $"embedding"),
+        k => brute(k, asc = false, longScore = false)(cosine)),
+      ("ivf_scan_topk", k => expressions.ivf_scan_topk(spark, ivfBc, k,
+          $"vec_id", $"cell", $"embedding"),
+        k => brute(k, asc = false, longScore = false)((i, d) =>
+          if (cells(i).contains(d._4)) cosine(i, d) else None)))
+    try {
+      // k = 3 cuts through tied scores; k = 50 exceeds every candidate count
+      for ((name, kernel, want) <- kernels; k <- Seq(3, 50)) {
+        val got = df.agg(kernel(k).as("t"))
+          .select(explode($"t").as("e")).select("e.*")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.get(3))).toSeq
+        val expected = want(k)
+        assert(expected.map(_._1).distinct.size >= 3, s"$name: fixture too sparse")
+        assert(got == expected, s"$name, k = $k")
+      }
+    } finally Seq(pqBc, bm25Bc, rawBc, lshBc, cosBc, ivfBc).foreach { bc =>
+      expressions.dropPerCall(spark, bc)
+      bc.destroy()
+    }
+  }
+
+  test("one top-k scan aggregate: its scaffold and the per-call release live once") {
+    import scala.jdk.CollectionConverters._
+    def source(dir: String): String = {
+      val root = java.nio.file.Paths.get(dir)
+      assert(java.nio.file.Files.isDirectory(root), s"run from the repository root: $root")
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .map(java.nio.file.Files.readString).mkString("\n")
+      finally files.close()
+    }
+    def occurrences(text: String, s: String): Int =
+      text.split(java.util.regex.Pattern.quote(s), -1).length - 1
+    val main = source("src/main")
+    assert(occurrences(main, "TypedImperativeAggregate[PqTopKState]") == 1,
+      "a top-k scan kernel extends expressions.ScanTopK")
+    assert(occurrences(main, "PqTopKState.readFrom") == 1,
+      "PqTopKState partials deserialize in ScanTopK only")
+    val all = main + source("src/test")
+    Seq("ScanTopK", "MatchScan", "bloomProbe").map(_ + "Name").foreach { helper =>
+      assert(!all.contains(helper),
+        s"`$helper` is gone: release per-call entries with expressions.dropPerCall")
+    }
   }
 }

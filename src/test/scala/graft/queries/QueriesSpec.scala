@@ -3094,4 +3094,14 @@ class QueriesSpec extends SparkSpec {
     // neighbor either (the kernel's per-row null skip)
     assert(got == Seq((2L, 1L)))
   }
+
+  test("kmeansFit releases every round's centroid_argmin registration") {
+    def registered: Int = spark.sessionState.functionRegistry.listFunction()
+      .count(_.funcName.startsWith("centroid_argmin_b"))
+    val before = registered
+    val (assign, cents) = VectorOps.kmeansFit(
+      graft.sources.Tables.embeddings(spark, sf0001), k = 4, rounds = 2)
+    assert(assign.count() > 0 && cents.length == 4)
+    assert(registered == before)
+  }
 }
