@@ -17,8 +17,8 @@ import graft.functions.expressions._
   * cluster get the same SQL surface: one row of
   * [[GraftExtensions.kernels]] per function. Kernels that capture
   * per-call broadcast state (`pq_scan_topk`, `bloom_probe_broadcast`, …)
-  * are not SQL surface; their Column wrappers register a broadcast-keyed
-  * builder at call time.
+  * are not SQL surface; their Column wrappers carry the expression
+  * itself.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =

@@ -1,8 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.KernelColumns.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
@@ -1250,20 +1252,15 @@ object expressions {
       s"cell_argmax(broadcast#${bc.id}, $child)"
   }
 
-  /** [[CellArgmax]] as a Column — nb_score's per-broadcast registration
-    * pattern. */
-  def cell_argmax(spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[CellCents],
+  /** [[CellArgmax]] as a Column. */
+  def cell_argmax(bc: org.apache.spark.broadcast.Broadcast[CellCents],
       embedding: Column): Column =
-    perCall(spark, "cell_argmax", bc, embedding)(exprs => CellArgmax(exprs.head, bc))
+    column(CellArgmax(expression(embedding), bc))
 
-  /** [[CentroidArgmin]] as a Column — per-call unique registration
-    * keyed by the broadcast id (a Lloyd fit registers one per round and
-    * releases it with [[dropPerCall]] once the round's action ran). */
-  def centroid_argmin(spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[Array[Array[Long]]],
+  /** [[CentroidArgmin]] as a Column. */
+  def centroid_argmin(bc: org.apache.spark.broadcast.Broadcast[Array[Array[Long]]],
       xq: Column): Column =
-    perCall(spark, "centroid_argmin", bc, xq)(exprs => CentroidArgmin(exprs.head, bc))
+    column(CentroidArgmin(expression(xq), bc))
 
   /** Misra–Gries heavy-hitter sketch over a string column: at most `k`
     * (token, est) counters in O(k) space, one stream pass, mergeable
@@ -1986,14 +1983,11 @@ object expressions {
       copy(children = newChildren)
   }
 
-  /** [[PqScanTopK]] as a Column — a [[perCall]] registration capturing
-    * the query broadcast (`pq_scan_topk_b<id>`); callers release it with
-    * [[dropPerCall]] once their result is materialized. */
+  /** [[PqScanTopK]] as an aggregate Column over the query broadcast. */
   def pq_scan_topk(
-      spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Long], Array[Int])]],
       k: Int, subK: Int, cols: Column*): Column =
-    perCall(spark, "pq_scan_topk", bc, cols: _*)(exprs => PqScanTopK(exprs, bc, k, subK))
+    aggColumn(PqScanTopK(cols.map(expression), bc, k, subK))
 
   /** The broadcast operand of [[Bm25ScanTopK]]: the QUERY SET as an
     * inverted term index — `qids` (sorted query ids), `termHash` (sorted
@@ -2117,14 +2111,11 @@ object expressions {
       copy(children = newChildren)
   }
 
-  /** [[Bm25ScanTopK]] as a Column — [[pq_scan_topk]]'s per-call unique
-    * registration pattern (name `bm25_scan_topk_b<id>`; release with
-    * [[dropPerCall]]). */
+  /** [[Bm25ScanTopK]] as an aggregate Column. */
   def bm25_scan_topk(
-      spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Bm25QueryIndex],
       k: Int, cols: Column*): Column =
-    perCall(spark, "bm25_scan_topk", bc, cols: _*)(exprs => Bm25ScanTopK(exprs, bc, k))
+    aggColumn(Bm25ScanTopK(cols.map(expression), bc, k))
 
   /** The broadcast operand of [[Bm25RawScanTopK]]: [[Bm25QueryIndex]]
     * plus the QUERY-TIME scoring model — `idfFp(i)` is the fixed-point
@@ -2236,47 +2227,18 @@ object expressions {
       copy(children = newChildren)
   }
 
-  /** [[Bm25RawScanTopK]] as a Column — per-call unique registration
-    * (name `bm25_raw_scan_topk_b<id>`; release with [[dropPerCall]]). */
+  /** [[Bm25RawScanTopK]] as an aggregate Column. */
   def bm25_raw_scan_topk(
-      spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[Bm25RawQueryIndex],
       k: Int, cols: Column*): Column =
-    perCall(spark, "bm25_raw_scan_topk", bc, cols: _*)(exprs => Bm25RawScanTopK(exprs, bc, k))
+    aggColumn(Bm25RawScanTopK(cols.map(expression), bc, k))
 
-  /** Register `build` as a temp function named `<prefix>_b<bc.id>` and
-    * call it on `cols` (Expression→Column constructors are sql-private in
-    * Spark 4, so the registry + `call_function` is the supported wiring).
-    * The name is UNIQUE per broadcast, so two concurrent callers on one
-    * session (two streaming lookups, a streaming batch overlapping a
-    * batch q78) can never interleave register/analyze and bind each
-    * other's broadcast state. */
-  private def perCall(spark: SparkSession, prefix: String,
-      bc: org.apache.spark.broadcast.Broadcast[_], cols: Column*)(
-      build: Seq[Expression] => Expression): Column = {
-    val name = s"${prefix}_b${bc.id}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, exprs => {
-      require(exprs.length == cols.length,
-        s"$name requires exactly ${cols.length} argument(s), got ${exprs.length}")
-      build(exprs)
-    }, "scala_udf")
-    call_function(name, cols: _*)
-  }
-
-  /** Drop every temp function [[perCall]] registered for `bc` (the names
-    * ending in `_b<bc.id>`). Once the caller's plan is analyzed — in
-    * practice, once its result is materialized — an entry's only effect
-    * is pinning the captured broadcast, so dropping it lets a
-    * long-running serving session reclaim one entry (and one broadcast
-    * reference) per call instead of accumulating them. */
-  def dropPerCall(spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[_]): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val suffix = s"_b${bc.id}"
-    registry.listFunction()
-      .filter(f => f.database.isEmpty && f.funcName.endsWith(suffix))
-      .foreach(registry.dropFunction)
-  }
+  /** A broadcast-capturing aggregate as a Column. The Column carries the
+    * expression itself, so each call binds its own broadcast and leaves
+    * nothing in the session: callers only `destroy()` the broadcast once
+    * their result is materialized. */
+  private def aggColumn(f: AggregateFunction): Column =
+    column(f.toAggregateExpression())
 
   /** Order-preserving double ↔ long bijection for heap keys, flipped so
     * score DESC == encoded ASC (the PqTopKState natural order): the
@@ -2456,13 +2418,11 @@ object expressions {
       copy(children = newChildren)
   }
 
-  /** [[LshScanTopK]] as a Column — per-call unique registration
-    * (name `lsh_scan_topk_b<id>`; release with [[dropPerCall]]). */
+  /** [[LshScanTopK]] as an aggregate Column. */
   def lsh_scan_topk(
-      spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[LshQuerySet],
       k: Int, nPlanes: Int, cols: Column*): Column =
-    perCall(spark, "lsh_scan_topk", bc, cols: _*)(exprs => LshScanTopK(exprs, bc, k, nPlanes))
+    aggColumn(LshScanTopK(cols.map(expression), bc, k, nPlanes))
 
   /** The broadcast operand of [[MihMatchScan]]: the arriving batch's
     * DISTINCT frame hashes (slot-indexed), bounded by the serving-batch
@@ -2588,13 +2548,11 @@ object expressions {
       s"mih_match_scan(broadcast#${bc.id}, maxHam=$maxHam, ${children.mkString(", ")})"
   }
 
-  /** [[MihMatchScan]] as a Column — per-call unique registration
-    * (name `mih_match_scan_b<id>`; release with [[dropPerCall]]). */
+  /** [[MihMatchScan]] as an aggregate Column. */
   def mih_match_scan(
-      spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[MihQuerySet],
       maxHam: Int, cols: Column*): Column =
-    perCall(spark, "mih_match_scan", bc, cols: _*)(exprs => MihMatchScan(exprs, bc, maxHam))
+    aggColumn(MihMatchScan(cols.map(expression), bc, maxHam))
 
   /** The broadcast operand of [[CosineScanTopK]]: one entry per query —
     * (query_id, quantized components floor(x·2²⁰), ‖q‖² in the
@@ -2691,13 +2649,11 @@ object expressions {
       copy(children = newChildren)
   }
 
-  /** [[CosineScanTopK]] as a Column — per-call unique registration
-    * (name `cosine_scan_topk_b<id>`; release with [[dropPerCall]]). */
+  /** [[CosineScanTopK]] as an aggregate Column. */
   def cosine_scan_topk(
-      spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[CosineQuerySet],
       k: Int, cols: Column*): Column =
-    perCall(spark, "cosine_scan_topk", bc, cols: _*)(exprs => CosineScanTopK(exprs, bc, k))
+    aggColumn(CosineScanTopK(cols.map(expression), bc, k))
 
   /** The broadcast operand of [[IvfScanTopK]]: one entry per query —
     * (query_id, quantized components floor(x·2²⁰), ‖q‖² in the quantized
@@ -2807,13 +2763,11 @@ object expressions {
       copy(children = newChildren)
   }
 
-  /** [[IvfScanTopK]] as a Column — per-call unique registration
-    * (name `ivf_scan_topk_b<id>`; release with [[dropPerCall]]). */
+  /** [[IvfScanTopK]] as an aggregate Column. */
   def ivf_scan_topk(
-      spark: SparkSession,
       bc: org.apache.spark.broadcast.Broadcast[IvfQuerySet],
       k: Int, cols: Column*): Column =
-    perCall(spark, "ivf_scan_topk", bc, cols: _*)(exprs => IvfScanTopK(exprs, bc, k))
+    aggColumn(IvfScanTopK(cols.map(expression), bc, k))
 
   /** Compiled Naive-Bayes trigram model for [[NbScore]] — the
     * vocabulary-bounded (lang, gram, w_fp) / (lang, prior_fp, unseen_fp)
@@ -2934,15 +2888,10 @@ object expressions {
     override def toString: String = s"nb_score(broadcast#${bc.id}, $child)"
   }
 
-  /** [[NbScore]] as a Column — the per-broadcast unique registration
-    * pattern ([[pq_scan_topk]]). The entry is NOT dropped after use:
-    * compiled models are memoized per artifact (LangId.langIdModelCached),
-    * so a JVM holds a bounded handful of registrations whose broadcasts
-    * must stay live for lazily-analyzed consumer plans. */
-  def nb_score(spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[NbCompiled],
+  /** [[NbScore]] as a Column. */
+  def nb_score(bc: org.apache.spark.broadcast.Broadcast[NbCompiled],
       text: Column): Column =
-    perCall(spark, "nb_score", bc, text)(exprs => NbScore(exprs.head, bc))
+    column(NbScore(expression(text), bc))
 
   /** PPJoin in-bucket pair generation: array<struct<doc_id:long, n:int,
     * rk:int>> (one bucket's prefix entries) → array<struct<a:long,
@@ -3348,16 +3297,9 @@ object expressions {
   def bloom_might_contain(bloom: Column, hashed: Column): Column =
     call_function("bloom_might_contain", bloom, hashed)
 
-  /** [[BloomProbeBroadcast]] as a Column — a [[perCall]] registration
-    * (`bloom_probe_bc_b<id>`), so concurrent callers on one session never
-    * bind each other's filter, whatever order their plans analyze in.
-    * Callers should still force analysis (e.g.
-    * `df.queryExecution.analyzed`, as q68 does) and then release the
-    * entry with [[dropPerCall]].
-    */
-  def bloom_probe_broadcast(
-      spark: SparkSession,
-      bc: org.apache.spark.broadcast.Broadcast[Array[Byte]],
+  /** [[BloomProbeBroadcast]] as a Column. It carries its own filter, so
+    * concurrent callers on one session never bind each other's. */
+  def bloom_probe_broadcast(bc: org.apache.spark.broadcast.Broadcast[Array[Byte]],
       hashed: Column): Column =
-    perCall(spark, "bloom_probe_bc", bc, hashed)(exprs => BloomProbeBroadcast(bc, exprs.head))
+    column(BloomProbeBroadcast(bc, expression(hashed)))
 }

@@ -321,7 +321,7 @@ object LangId {
     // the kernel's null-in/null-out would posexplode to ZERO rows and the
     // doc would silently vanish from every gate verdict
     docs.select($"doc_id",
-        graft.functions.expressions.nb_score(s, bc,
+        graft.functions.expressions.nb_score(bc,
           coalesce($"text", lit(""))).as("sc"))
       .select($"doc_id", posexplode($"sc").as(Seq("li", "score_fp")))
       .select($"doc_id",
@@ -346,7 +346,7 @@ object LangId {
     // coalesce(text, ""): the langIdScoresAll null rule — a null text
     // must score prior-only, not vanish
     docs.select($"doc_id",
-        graft.functions.expressions.nb_score(s, bc,
+        graft.functions.expressions.nb_score(bc,
           coalesce($"text", lit(""))).as("sc"))
       .select($"doc_id",
         element_at(typedlit(langs.toSeq),

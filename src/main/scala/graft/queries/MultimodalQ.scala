@@ -504,25 +504,17 @@ object MultimodalQ {
       // per task, and the matched-hash set is identical.
       val newHashes: graft.functions.expressions.MihQuerySet =
         fresh.select($"h").distinct().as[Long].collect().sorted
-      // register on the INDEX frame's session: the aggregate resolves
-      // under idxBands' registry, and inside foreachBatch the arriving
-      // frame rides an ISOLATED micro-batch session clone whose
-      // registry the outer index frame never consults
-      val sIdx = idxBands.sparkSession
-      val bc = sIdx.sparkContext.broadcast(newHashes)
+      val bc = idxBands.sparkSession.sparkContext.broadcast(newHashes)
       val matchedH =
         try {
           idxBands
-            .agg(graft.functions.expressions.mih_match_scan(sIdx, bc, maxHam,
+            .agg(graft.functions.expressions.mih_match_scan(bc, maxHam,
               $"band".cast("int"), $"bv".cast("int"), $"h").as("t"))
             .select(explode($"t").as("h"))
             // bounded (≤ arriving distinct hashes); materialize so the
             // broadcast reclaims now (pqAdcTopK's cleanup rule)
             .localCheckpoint()
-        } finally {
-          graft.functions.expressions.dropPerCall(sIdx, bc)
-          bc.destroy()
-        }
+        } finally bc.destroy()
       val matched = fresh.join(matchedH, Seq("h"), "left_semi")
         .select(expr("fid div 4096").as("doc_id"))
         .groupBy($"doc_id").agg(count(lit(1)).as("n_matched_frames"))

@@ -3601,7 +3601,9 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
   }
 
   /** [[dupFraction]] with caller-supplied per-doc totals — see the
-    * single-argument overload's r15 note for the exactness contract. */
+    * single-argument overload's r15 note for the exactness contract. A
+    * doc whose total is below its count of df == 1 occurrences fails
+    * the query with an error naming the doc_id. */
   private[graft] def dupFraction(occ: DataFrame, totals: DataFrame): DataFrame = {
     val s = occ.sparkSession
     import s.implicits._
@@ -3613,9 +3615,15 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       .filter($"d0" === $"d1")
       .groupBy($"d0").agg(sum($"c").as("n_uniq"))
       .select($"d0".as("doc_id"), $"n_uniq")
+    // totals short of occ's rows would give a negative duplicate count
+    // and a dup_frac < 0: fail the contract loudly instead
+    val nUniq = coalesce($"n_uniq", lit(0L))
     totals.join(uniq, Seq("doc_id"), "left")
       .select($"doc_id", $"n_spans",
-        ($"n_spans" - coalesce($"n_uniq", lit(0L))).as("n_dup_spans"))
+        when(nUniq > $"n_spans", raise_error(concat(
+          lit("dupFraction: totals hold fewer spans than occ for doc_id "),
+          $"doc_id".cast("string"))))
+          .otherwise($"n_spans" - nUniq).as("n_dup_spans"))
       .withColumn("dup_frac",
         $"n_dup_spans".cast("double") / $"n_spans".cast("double"))
       .orderBy($"doc_id")
@@ -3760,7 +3768,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
           try {
             val candidates = docs.filter($"split" === "train")
               .withColumn("n_hit",
-                size(filter($"hs", h => E.bloom_probe_broadcast(s, bc, h)))
+                size(filter($"hs", h => E.bloom_probe_broadcast(bc, h)))
                   .cast("long"))
               .filter($"n_hit" >= 8)
             candidates.select($"doc_id", explode($"hs").as("h"))
@@ -3774,10 +3782,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
               // construction) while `docs` is still persisted, then release
               // the filter broadcast instead of leaving it to driver GC
               .localCheckpoint()
-          } finally {
-            E.dropPerCall(s, bc)
-            bc.destroy()
-          }
+          } finally bc.destroy()
         }
       } finally docs.unpersist()
     },
@@ -4263,8 +4268,6 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * results on the same rows by construction. */
   private[graft] def bm25TopK(store: DataFrame,
       qrows: Array[(Long, Array[Long])], k: Int): DataFrame = {
-    // register on the STORE's session — a streaming foreachBatch hands
-    // per-batch cloned sessions whose registry the store plan never sees
     val s = store.sparkSession
     import s.implicits._
     val byTerm = qrows.zipWithIndex
@@ -4275,17 +4278,14 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       offsets, byTerm.flatMap(_._2.map(_._2))))
     try {
       store.agg(graft.functions.expressions
-          .bm25_scan_topk(s, bc, k, $"doc_id", $"hs", $"ws").as("t"))
+          .bm25_scan_topk(bc, k, $"doc_id", $"hs", $"ws").as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.doc_id", $"e.score_fp",
           $"e.rank".cast("long").as("rank"))
         .orderBy($"query_id", $"rank")
         // materialize (nq·k rows) so the broadcast can be destroyed now
         .localCheckpoint()
-    } finally {
-      graft.functions.expressions.dropPerCall(s, bc)
-      bc.destroy()
-    }
+    } finally bc.destroy()
   }
 
   /** Absolute cap on the bench request-set fixture: `doc_id % 37 = 0 AND
@@ -6220,8 +6220,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * the CURRENT df table + totals, broadcast them with the inverted
     * query index, run ONE [[graft.functions.expressions
     * .Bm25RawScanTopK]] scan over the postings. [[bm25TopK]]'s serving
-    * hygiene (unique registration, materialize nq·k rows, destroy the
-    * broadcast). */
+    * hygiene (materialize nq·k rows, destroy the broadcast). */
   private[graft] def bm25RawTopK(raw: Bm25Raw,
       qrows: Array[(Long, Array[Long])], k: Int): DataFrame = {
     val s = raw.postings.sparkSession
@@ -6249,17 +6248,14 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       offsets, byTerm.flatMap(_._2.map(_._2)), idfFp, avgdl))
     try {
       raw.postings.agg(graft.functions.expressions
-          .bm25_raw_scan_topk(s, bc, k, $"doc_id", $"hs", $"tfs", $"len")
+          .bm25_raw_scan_topk(bc, k, $"doc_id", $"hs", $"tfs", $"len")
           .as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.doc_id", $"e.score_fp",
           $"e.rank".cast("long").as("rank"))
         .orderBy($"query_id", $"rank")
         .localCheckpoint()
-    } finally {
-      graft.functions.expressions.dropPerCall(s, bc)
-      bc.destroy()
-    }
+    } finally bc.destroy()
   }
 
   /** Remove documents from the raw BM25 artifact — the deletion half of
@@ -6816,12 +6812,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
         val pre = if (nDup == 0) grams else {
           val bloom = dupKeys.agg(E.bloom_agg($"key", lit(nDup)).as("bf"))
             .collect()(0).getAs[Array[Byte]](0)
-          val bc = s.sparkContext.broadcast(bloom)
-          try {
-            val filtered = grams.filter(E.bloom_probe_broadcast(s, bc, $"key"))
-            filtered.queryExecution.analyzed // bind the probe before the drop
-            filtered
-          } finally E.dropPerCall(s, bc)
+          grams.filter(E.bloom_probe_broadcast(s.sparkContext.broadcast(bloom), $"key"))
         }
         val flagged = pre.join(dupKeys, Seq("key"), "left_semi")
           .groupBy($"doc_id").agg(sort_array(collect_list($"s")).as("starts"))

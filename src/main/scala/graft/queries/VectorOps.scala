@@ -86,10 +86,9 @@ object VectorOps {
     * window materialized nq·n scored rows — 77–134 s per consumer
     * (q25/q104/q156) at the x100 replay; the kernel is the same exact
     * arithmetic and (score desc, neighbor_id) selection with one
-    * ≤ nq·k partial per task through the exchange. Registered on the
-    * CORPUS frame's session (the q136 micro-batch clone-registry rule);
-    * the bounded result materializes so the broadcast reclaims
-    * immediately (pqAdcTopK's cleanup rule). */
+    * ≤ nq·k partial per task through the exchange. The bounded result
+    * materializes so the broadcast reclaims immediately (pqAdcTopK's
+    * cleanup rule). */
   private[graft] def cosineServe(emb: DataFrame, queries: DataFrame,
       k: Int): DataFrame = {
     val s = emb.sparkSession
@@ -115,15 +114,12 @@ object VectorOps {
     val bc = s.sparkContext.broadcast(qrows)
     try {
       emb.agg(graft.functions.expressions
-          .cosine_scan_topk(s, bc, k, $"vec_id", $"embedding").as("t"))
+          .cosine_scan_topk(bc, k, $"vec_id", $"embedding").as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.neighbor_id", $"e.rank", $"e.score")
         .orderBy($"query_id", $"rank")
         .localCheckpoint()
-    } finally {
-      graft.functions.expressions.dropPerCall(s, bc)
-      bc.destroy()
-    }
+    } finally bc.destroy()
   }
 
   /** Q25 — brute-force cosine top-5 (brief's similarity-search baseline).
@@ -229,7 +225,7 @@ object VectorOps {
         .sortBy(_._1)
       val bc = s.sparkContext.broadcast(qrows)
       try {
-        emb.agg(graft.functions.expressions.lsh_scan_topk(s, bc, 5, nPlanes,
+        emb.agg(graft.functions.expressions.lsh_scan_topk(bc, 5, nPlanes,
             $"vec_id", $"embedding", $"sigs").as("t"))
           .select(explode($"t").as("e"))
           .select($"e.query_id", $"e.neighbor_id", $"e.rank", $"e.score")
@@ -237,10 +233,7 @@ object VectorOps {
           // materialize (nq·k rows) so the broadcast reclaims NOW
           // (pqAdcTopK's cleanup rule)
           .localCheckpoint()
-      } finally {
-        graft.functions.expressions.dropPerCall(s, bc)
-        bc.destroy()
-      }
+      } finally bc.destroy()
     },
     oracle = Some(s"""
       WITH q AS (
@@ -374,7 +367,7 @@ object VectorOps {
       new graft.functions.expressions.CellCents(
         kept.map(_._1), kept.map(_._2), dbb))
     emb.withColumn("cell",
-      graft.functions.expressions.cell_argmax(s, bc, $"embedding")
+      graft.functions.expressions.cell_argmax(bc, $"embedding")
         .cast(labelType))
       .select($"vec_id", $"embedding", $"cell")
   }
@@ -820,17 +813,14 @@ object VectorOps {
       val bc = s.sparkContext.broadcast(qrows)
       try {
         emb.agg(graft.functions.expressions
-            .ivf_scan_topk(s, bc, 5, $"vec_id", $"label", $"embedding").as("t"))
+            .ivf_scan_topk(bc, 5, $"vec_id", $"label", $"embedding").as("t"))
           .select(explode($"t").as("e"))
           .select($"e.query_id", $"e.neighbor_id", $"e.rank", $"e.score")
           .orderBy($"query_id", $"rank")
           // materialize (nq·k rows) so the broadcast reclaims NOW
           // (pqAdcTopK's cleanup rule)
           .localCheckpoint()
-      } finally {
-        graft.functions.expressions.dropPerCall(s, bc)
-        bc.destroy()
-      }
+      } finally bc.destroy()
     },
     oracle = Some("""
       WITH qv AS (
@@ -1267,8 +1257,7 @@ object VectorOps {
         .select($"xq").collect().toSeq
         .map(_.getSeq[Long](0).toArray)
       // `act` runs an action over the assignment to the current
-      // centroids; the round's broadcast and its registry entry are
-      // released once it returns
+      // centroids; the round's broadcast is released once it returns
       def withAssigned[T](act: DataFrame => T): T = {
         // one broadcast + one scan-local k·d loop per row (CentroidArgmin)
         // instead of a k-branch least(struct(sq_dist, cid)) fold — the
@@ -1277,13 +1266,10 @@ object VectorOps {
         // bit-identical output (tie → smallest cid, null → (null, 0))
         val bc = s.sparkContext.broadcast(cents.map(_.clone()).toArray)
         try act(emb.withColumn("a",
-            graft.functions.expressions.centroid_argmin(s, bc, $"xq"))
+            graft.functions.expressions.centroid_argmin(bc, $"xq"))
           .select($"vec_id", $"xq",
             $"a.cid".cast("long").as("cluster"), $"a.dist".as("dist")))
-        finally {
-          graft.functions.expressions.dropPerCall(s, bc)
-          bc.destroy()
-        }
+        finally bc.destroy()
       }
       for (_ <- 1 to rounds) {
         val sums = withAssigned(_
@@ -1650,16 +1636,11 @@ object VectorOps {
     */
   private[graft] def pqAdcTopK(queries: DataFrame, idx: PqIndex, k: Int): DataFrame = {
     import queries.sparkSession.implicits._
-    // the aggregate plan is rooted at idx.codes — register the scan
-    // function on ITS session (a streaming foreachBatch hands `queries`
-    // from a cloned per-batch session whose registry the codes plan
-    // never consults)
-    val s = idx.codes.sparkSession
-    val bc = s.sparkContext.broadcast(collectDistTables(queries, idx))
+    val bc = queries.sparkSession.sparkContext.broadcast(collectDistTables(queries, idx))
     try {
       val out = idx.codes
         .agg(graft.functions.expressions
-          .pq_scan_topk(s, bc, k, pqK, $"vec_id", $"codes").as("t"))
+          .pq_scan_topk(bc, k, pqK, $"vec_id", $"codes").as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.neighbor_id", $"e.rank", $"e.adc_dist")
         .orderBy($"query_id", $"rank")
@@ -1669,10 +1650,7 @@ object VectorOps {
       // leaving reclamation to driver GC + ContextCleaner accumulates
       // executor blocks for the life of the stream
       out.localCheckpoint()
-    } finally {
-      graft.functions.expressions.dropPerCall(s, bc)
-      bc.destroy()
-    }
+    } finally bc.destroy()
   }
 
   private val q78 = Q(
@@ -1932,15 +1910,12 @@ object VectorOps {
           emb.select($"vec_id", $"label".cast("int").as("cell")), Seq("vec_id"))
         withCell
           .agg(graft.functions.expressions
-            .pq_scan_topk(s, bc, 5, pqK, $"vec_id", $"codes", $"cell").as("t"))
+            .pq_scan_topk(bc, 5, pqK, $"vec_id", $"codes", $"cell").as("t"))
           .select(explode($"t").as("e"))
           .select($"e.query_id", $"e.neighbor_id", $"e.rank", $"e.adc_dist")
           .orderBy($"query_id", $"rank")
           .localCheckpoint() // materialized → broadcast reclaimable now
-      } finally {
-        graft.functions.expressions.dropPerCall(s, bc)
-        bc.destroy()
-      }
+      } finally bc.destroy()
     },
     oracle = Some("""
       WITH qv AS (
@@ -2136,16 +2111,13 @@ object VectorOps {
         try Tables.embeddings(s, d)
           .select($"vec_id", quantize($"embedding").cast("array<bigint>").as("xq"))
           .withColumn("a",
-            graft.functions.expressions.centroid_argmin(s, bc, $"xq"))
+            graft.functions.expressions.centroid_argmin(bc, $"xq"))
           .select($"vec_id",
             $"a.cid".cast("long").as("cluster"),
             $"a.dist".as("a2"),
             $"a.dist2".as("b2"))
           .write.mode("overwrite").parquet(p)
-        finally {
-          graft.functions.expressions.dropPerCall(s, bc)
-          bc.destroy()
-        }
+        finally bc.destroy()
       })
       val sa = sqrt($"a2".cast("double"))
       val sb = sqrt($"b2".cast("double"))

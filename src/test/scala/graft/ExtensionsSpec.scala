@@ -145,19 +145,95 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("one registration site: injectFunction and createOrReplaceTempFunction occur once in src/main") {
+  /** Every `.scala` file under src/main except `skip`, concatenated. */
+  private def mainSource(skip: Option[String] = None): String = {
     val root = java.nio.file.Paths.get("src/main")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repository root: $root")
     val files = java.nio.file.Files.walk(root)
-    val text = try files.iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
+    try files.iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !skip.exists(p.endsWith))
       .map(java.nio.file.Files.readString).mkString("\n")
     finally files.close()
-    Seq("injectFunction", "createOrReplaceTempFunction").foreach { s =>
-      assert(text.split(java.util.regex.Pattern.quote(s), -1).length - 1 == 1,
-        s"`$s` must occur exactly once — kernels go in the GraftExtensions table, " +
-          "per-call broadcast kernels through expressions.perCall")
+  }
+  private def occurrences(text: String, s: String): Int =
+    text.split(java.util.regex.Pattern.quote(s), -1).length - 1
+
+  test("one registration site: injectFunction once and createOrReplaceTempFunction nowhere in src/main") {
+    val text = mainSource()
+    assert(occurrences(text, "injectFunction") == 1,
+      "kernels go in the GraftExtensions table")
+    assert(occurrences(text, "createOrReplaceTempFunction") == 0,
+      "a broadcast kernel's Column wrapper builds its expression through KernelColumns")
+  }
+
+  test("broadcast kernels have no registry lifecycle: one file reaches the sql-private converters") {
+    val shim = "org/apache/spark/sql/KernelColumns.scala"
+    val rest = mainSource(skip = Some(shim))
+    Seq("perCall(", "dropPerCall", "classic.ExpressionUtils").foreach { s =>
+      assert(occurrences(rest, s) == 0, s"`$s` outside $shim")
     }
+  }
+
+  test("KernelColumns: aggregate, scalar and lambda kernels match brute force and leave the registry unchanged") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.expressions
+    val s = Sessions.local(4)
+    import s.implicits._
+    val registry = s.sessionState.functionRegistry
+    val before = registry.listFunction().toSet
+
+    // aggregate: cosine top-2 of two corpus queries (self excluded),
+    // score DESC then neighbor id
+    val vecs = Seq(1L -> Seq(1f, 0f, 0f), 2L -> Seq(1f, 1f, 0f), 3L -> Seq(0f, 1f, .5f),
+      4L -> Seq(.5f, .5f, .5f), 5L -> Seq(-1f, 0f, 1f))
+    def quant(v: Seq[Float]): Array[Long] = v.map(x => math.floor(x * 1048576.0).toLong).toArray
+    def norm2(v: Array[Long]): Long = v.map(x => x * x).sum
+    val qs = Seq(1L, 4L).map { id => val qv = quant(vecs.toMap.apply(id)); (id, qv, norm2(qv)) }
+    val cosBc = s.sparkContext.broadcast(qs.toArray: expressions.CosineQuerySet)
+    val emb = vecs.toDF("vec_id", "embedding").repartition(2)
+    val gotTopK = emb.agg(expressions.cosine_scan_topk(cosBc, 2, $"vec_id", $"embedding").as("t"))
+      .select(explode($"t").as("e"))
+      .select($"e.query_id", $"e.neighbor_id", $"e.score", $"e.rank")
+      .orderBy($"query_id", $"rank")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val wantTopK = qs.flatMap { case (qid, qv, qq) =>
+      vecs.filter(_._1 != qid).map { case (id, v) =>
+        val b = quant(v)
+        (qid, id, b.indices.map(j => qv(j) * b(j)).sum.toDouble /
+          (math.sqrt(qq.toDouble) * math.sqrt(norm2(b).toDouble)))
+      }.sortBy(t => (-t._3, t._2)).take(2)
+    }
+    assert(gotTopK == wantTopK)
+
+    // scalar: nearest centroid (smallest cid on a distance tie) per row
+    val cents = Array(Array(0L, 0L), Array(10L, 0L), Array(0L, 10L))
+    val centBc = s.sparkContext.broadcast(cents)
+    val xs = Seq(1L -> Seq(1L, 1L), 2L -> Seq(9L, 2L), 3L -> Seq(5L, 5L), 4L -> Seq(2L, 9L))
+    val gotArgmin = xs.toDF("id", "xq")
+      .select($"id", expressions.centroid_argmin(centBc, $"xq").as("a"))
+      .orderBy($"id").collect().map(r => r.getLong(0) -> r.getStruct(1).getInt(1)).toSeq
+    val wantArgmin = xs.map { case (id, x) =>
+      id -> cents.indices.minBy(c => (cents(c).indices.map(j => (x(j) - cents(c)(j)) *
+        (x(j) - cents(c)(j))).sum, c))
+    }
+    assert(gotArgmin == wantArgmin)
+
+    // lambda: the probe inside filter keeps what the filter's own
+    // mightContain says, members and non-members alike
+    val bf = (1L to 200L).toDF("h").agg(expressions.bloom_agg($"h", lit(200L)))
+      .collect()(0).getAs[Array[Byte]](0)
+    val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
+      new java.io.ByteArrayInputStream(bf))
+    val bloomBc = s.sparkContext.broadcast(bf)
+    val hs = Seq(1L, 50L, 200L, 201L, 5000L, 123456789L)
+    val gotKept = Seq(hs).toDF("hs")
+      .select(filter($"hs", h => expressions.bloom_probe_broadcast(bloomBc, h)))
+      .head().getSeq[Long](0)
+    assert(gotKept == hs.filter(bloom.mightContainLong))
+    assert(Seq(1L, 50L, 200L).forall(gotKept.contains))
+
+    Seq(cosBc, centBc, bloomBc).foreach(_.destroy())
+    assert(registry.listFunction().toSet == before)
   }
 
   test("registerViews is self-sufficient on a session missing the nanos conf") {

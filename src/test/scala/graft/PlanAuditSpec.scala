@@ -55,19 +55,24 @@ class PlanAuditSpec extends SparkSpec {
     "q177_vocab_coverage" ->
       "row_number over a limit(24) frame — TakeOrderedAndProject feeds <=24 rows")
 
-  /** One executedPlan per query, built ON FIRST USE and shared by both
-    * audits below. Constructing a plan runs the query's eager segments
+  /** One executedPlan per query, built ON FIRST USE and shared by the
+    * audits below, with the function-registry entries its construction
+    * added. Constructing a plan runs the query's eager segments
     * (localCheckpoints, driver collects, index builds) — for the
     * lifecycle compositions (q180-style two-batch stacks) that is the
     * full query cost, so paying it once per suite instead of once per
     * test keeps the audit's cost linear in the catalog (ADVICE r12). */
-  private lazy val plans: Seq[(String, SparkPlan)] =
+  private lazy val plans: Seq[(String, SparkPlan, Set[String])] = {
+    val registry = spark.sessionState.functionRegistry
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> fn(spark, sf0001).queryExecution.executedPlan
+      val before = registry.listFunction().toSet
+      val plan = fn(spark, sf0001).queryExecution.executedPlan
+      (name, plan, (registry.listFunction().toSet -- before).map(_.unquotedString))
     }
+  }
 
   test("every unpartitioned WindowExec input is in the bounded whitelist") {
-    val offenders = plans.flatMap { case (name, plan) =>
+    val offenders = plans.flatMap { case (name, plan, _) =>
       val unpart = collectAll(plan).collect {
         case w: org.apache.spark.sql.execution.window.WindowExec
             if w.partitionSpec.isEmpty => w
@@ -81,8 +86,18 @@ class PlanAuditSpec extends SparkSpec {
         offenders.mkString(", "))
   }
 
+  test("no declared query leaves an entry in the session function registry") {
+    // A kernel that captured a broadcast through a registry entry would
+    // pin that broadcast for the life of a serving session.
+    val offenders = plans.collect {
+      case (name, _, added) if added.nonEmpty => s"$name (${added.toSeq.sorted.mkString(", ")})"
+    }
+    assert(offenders.isEmpty,
+      s"function registry entries added by: ${offenders.mkString("; ")}")
+  }
+
   test("no declared query plans a cartesian product at sf0.001") {
-    val offenders = plans.flatMap { case (name, plan) =>
+    val offenders = plans.flatMap { case (name, plan, _) =>
       val cart = collectAll(plan).collect { case c: CartesianProductExec => c }
       if (cart.nonEmpty) Some(name) else None
     }

@@ -248,6 +248,17 @@ class PropertySpec extends SparkSpec {
           totals.toDF("doc_id", "n_spans"))
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(got2 == exp)
+      // totals short of occ's rows break the contract: the query fails
+      // naming a doc_id rather than reporting dup_frac < 0
+      val short = totals.map { case (doc, n) => (doc, n - occ.size) }
+      val e = intercept[Exception] {
+        graft.queries.TextOps.dupFraction(occ.toDF("doc_id", "key"),
+          short.toDF("doc_id", "n_spans")).collect()
+      }
+      def msgs(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
+      assert(msgs(e).exists(m => m != null &&
+        m.contains("dupFraction: totals hold fewer spans than occ for doc_id")), e)
     }
   }
 

@@ -380,7 +380,7 @@ class ExpressionsSpec extends SparkSpec {
     val probeRange = (4000L to 6000L).toDF("h")
     // bit-identical verdicts vs the literal form on hits AND misses
     val viaBc = probeRange
-      .filter(expressions.bloom_probe_broadcast(spark, bc, $"h"))
+      .filter(expressions.bloom_probe_broadcast(bc, $"h"))
       .collect().map(_.getLong(0)).toSeq
     val viaLit = probeRange
       .filter(expressions.bloom_might_contain(lit(bf), $"h"))
@@ -388,7 +388,7 @@ class ExpressionsSpec extends SparkSpec {
     assert(viaBc == viaLit)
     // plan representations carry the broadcast handle, not the payload:
     // the filter is ~KBs, every plan string must stay far below it
-    val planned = probeRange.filter(expressions.bloom_probe_broadcast(spark, bc, $"h"))
+    val planned = probeRange.filter(expressions.bloom_probe_broadcast(bc, $"h"))
     val qe = planned.queryExecution
     assert(bf.length > 4000, s"test filter unexpectedly small: ${bf.length}")
     for (p <- Seq(qe.analyzed.toString, qe.optimizedPlan.toString, qe.executedPlan.toString))
@@ -396,9 +396,28 @@ class ExpressionsSpec extends SparkSpec {
     // and the lambda path (how q68 uses it) agrees with the scalar path
     val arr = Seq((1L, Seq(1L, 2L, 9999999L))).toDF("id", "hs")
       .select($"id", size(filter($"hs",
-        h => expressions.bloom_probe_broadcast(spark, bc, h))).as("n_hit"))
+        h => expressions.bloom_probe_broadcast(bc, h))).as("n_hit"))
       .head().getInt(1)
     assert(arr == 2)
+  }
+
+  test("bloom_agg clamps its filter to the runtime maxNumBits conf whatever estItems says") {
+    import spark.implicits._
+    val key = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
+    val clamp = 4096L
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, clamp.toString)
+    try {
+      val bf = (1L to 1000L).toDF("h")
+        .agg(expressions.bloom_agg($"h", lit(1000000000000L)))
+        .collect()(0).getAs[Array[Byte]](0)
+      val filter = org.apache.spark.util.sketch.BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(bf))
+      assert(filter.bitSize() > 0 && filter.bitSize() <= clamp,
+        s"filter of ${filter.bitSize()} bits above the $clamp-bit clamp")
+      // saturated past its design load, but still no false negatives
+      assert((1L to 1000L).forall(filter.mightContainLong))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("trainBpeMerges: deterministic greedy merges on a hand-computed sample") {
@@ -422,24 +441,21 @@ class ExpressionsSpec extends SparkSpec {
       .collect()(0).getAs[Array[Byte]](0)
     val bcEven = spark.sparkContext.broadcast(bloomOf(0L to 100L by 2))
     val bcOdd = spark.sparkContext.broadcast(bloomOf(1L to 101L by 2))
-    // build BOTH columns before analyzing either: a session-global temp
-    // function name would make the second registration clobber the first
-    // and colEven would silently bind the odd filter (ADVICE r6)
-    val colEven = expressions.bloom_probe_broadcast(spark, bcEven, $"h")
-    val colOdd = expressions.bloom_probe_broadcast(spark, bcOdd, $"h")
+    // build BOTH columns before analyzing either: a column resolved by a
+    // session-global name would let the second call clobber the first,
+    // and colEven would silently bind the odd filter
+    val colEven = expressions.bloom_probe_broadcast(bcEven, $"h")
+    val colOdd = expressions.bloom_probe_broadcast(bcOdd, $"h")
     val probe = (0L to 9L).toDF("h")
     val hitsEven = probe.filter(colEven).collect().map(_.getLong(0)).toSet
     val hitsOdd = probe.filter(colOdd).collect().map(_.getLong(0)).toSet
     // no false negatives: each probe must keep ALL of its own set
     assert((0L to 9L by 2).forall(hitsEven), s"even probe lost members: $hitsEven")
     assert((1L to 9L by 2).forall(hitsOdd), s"odd probe lost members: $hitsOdd")
-    // the per-broadcast entry can be dropped and re-registered cleanly
-    expressions.dropPerCall(spark, bcEven)
-    val again = probe.filter(expressions.bloom_probe_broadcast(spark, bcEven, $"h"))
+    // a rebuilt column gives the same hits
+    val again = probe.filter(expressions.bloom_probe_broadcast(bcEven, $"h"))
       .collect().map(_.getLong(0)).toSet
     assert(again == hitsEven)
-    expressions.dropPerCall(spark, bcEven)
-    expressions.dropPerCall(spark, bcOdd)
     bcEven.destroy(); bcOdd.destroy()
   }
 
@@ -528,7 +544,7 @@ class ExpressionsSpec extends SparkSpec {
         Array(0, 1, 2, 3, 4), Array(0, 0, 1, 1)))
     try {
       val got = docs
-        .agg(expressions.bm25_scan_topk(spark, bc, 2,
+        .agg(expressions.bm25_scan_topk(bc, 2,
           $"doc_id", $"hs", $"ws").as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.doc_id", $"e.rank", $"e.score_fp")
@@ -543,16 +559,13 @@ class ExpressionsSpec extends SparkSpec {
       // loudly too, not score the leading entries silently
       val bad = Seq((1L, Seq(10L, 20L), Seq(5L, 3L, 2L))).toDF("doc_id", "hs", "ws")
       val e = intercept[Exception] {
-        bad.agg(expressions.bm25_scan_topk(spark, bc, 2,
+        bad.agg(expressions.bm25_scan_topk(bc, 2,
           $"doc_id", $"hs", $"ws").as("t")).collect()
       }
       def msgs(t: Throwable): Seq[String] =
         Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
       assert(msgs(e).exists(m => m != null && m.contains("must align")))
-    } finally {
-      expressions.dropPerCall(spark, bc)
-      bc.destroy()
-    }
+    } finally bc.destroy()
   }
 
   test("bm25_raw_scan_topk: in-scan weights match the builder formula; alignment guard") {
@@ -571,7 +584,7 @@ class ExpressionsSpec extends SparkSpec {
         Array(2L, 3L), 4.0))
     try {
       val got = docs
-        .agg(expressions.bm25_raw_scan_topk(spark, bc, 5,
+        .agg(expressions.bm25_raw_scan_topk(bc, 5,
           $"doc_id", $"hs", $"tfs", $"len").as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.doc_id", $"e.rank", $"e.score_fp")
@@ -580,26 +593,20 @@ class ExpressionsSpec extends SparkSpec {
       assert(got.toSeq == Seq(
         (7L, 2L, 1, 2L * 1571428L), (7L, 1L, 2, 2L * 1000000L),
         (8L, 1L, 1, 3L * 1375000L), (8L, 3L, 2, 3L * 1000000L)))
-    } finally {
-      expressions.dropPerCall(spark, bc)
-      bc.destroy()
-    }
+    } finally bc.destroy()
     // misaligned store: tfs shorter than hs must fail loudly
     val bad = Seq((1L, Seq(10L, 20L), Seq(1L), 4L)).toDF("doc_id", "hs", "tfs", "len")
     val bc2 = spark.sparkContext.broadcast(
       (Array(7L), Array(10L), Array(0, 1), Array(0), Array(2L), 4.0))
     try {
       val e = intercept[Exception] {
-        bad.agg(expressions.bm25_raw_scan_topk(spark, bc2, 5,
+        bad.agg(expressions.bm25_raw_scan_topk(bc2, 5,
           $"doc_id", $"hs", $"tfs", $"len").as("t")).collect()
       }
       def msgs(t: Throwable): Seq[String] =
         Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
       assert(msgs(e).exists(m => m != null && m.contains("must align")))
-    } finally {
-      expressions.dropPerCall(spark, bc2)
-      bc2.destroy()
-    }
+    } finally bc2.destroy()
   }
 
   test("kernels are callable from SQL") {
@@ -656,16 +663,13 @@ class ExpressionsSpec extends SparkSpec {
       }.sortBy(_._1).toArray
     val bc = spark.sparkContext.broadcast(qrows)
     val got =
-      try emb.agg(expressions.ivf_scan_topk(spark, bc, 3,
+      try emb.agg(expressions.ivf_scan_topk(bc, 3,
           $"vec_id", $"label", $"embedding").as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.neighbor_id", $"e.rank", $"e.score")
         .orderBy($"query_id", $"rank")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-      finally {
-        expressions.dropPerCall(spark, bc)
-        bc.destroy()
-      }
+      finally bc.destroy()
     // declarative reference: probe equi-join + exact kernel + window
     val probes = probeSets.toSeq
       .flatMap { case (q, cells) => cells.map(c => (q, c)) }
@@ -701,16 +705,13 @@ class ExpressionsSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
       .select($"vec_id", transform($"embedding", _.cast("float")).as("embedding"))
     val got =
-      try emb.agg(expressions.cosine_scan_topk(spark, bc, 5,
+      try emb.agg(expressions.cosine_scan_topk(bc, 5,
           $"vec_id", $"embedding").as("t"))
         .select(explode($"t").as("e"))
         .select($"e.query_id", $"e.neighbor_id", $"e.score")
         .orderBy($"query_id")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      finally {
-        expressions.dropPerCall(spark, bc)
-        bc.destroy()
-      }
+      finally bc.destroy()
     // per-pair n == qv.length is the only dim gate: the longer-dim query
     // (after a shorter first query) still scores its matching row
     assert(got.map(t => (t._1, t._2)).toSeq == Seq((100L, 1L), (200L, 2L)))
@@ -807,25 +808,25 @@ class ExpressionsSpec extends SparkSpec {
       }
 
     val kernels: Seq[(String, Int => Column, Int => Seq[(Long, Long, Int, Any)])] = Seq(
-      ("pq_scan_topk", k => expressions.pq_scan_topk(spark, pqBc, k, 4, $"vec_id", $"codes"),
+      ("pq_scan_topk", k => expressions.pq_scan_topk(pqBc, k, 4, $"vec_id", $"codes"),
         k => brute(k, asc = true, longScore = true)(pq(cellFiltered = false))),
-      ("pq_scan_topk with cell", k => expressions.pq_scan_topk(spark, pqBc, k, 4,
+      ("pq_scan_topk with cell", k => expressions.pq_scan_topk(pqBc, k, 4,
           $"vec_id", $"codes", $"cell"),
         k => brute(k, asc = true, longScore = true)(pq(cellFiltered = true))),
-      ("bm25_scan_topk", k => expressions.bm25_scan_topk(spark, bm25Bc, k,
+      ("bm25_scan_topk", k => expressions.bm25_scan_topk(bm25Bc, k,
           $"vec_id", $"hs", $"ws"),
         k => brute(k, asc = false, longScore = true)(bm25((d, t) => d._7(t)))),
-      ("bm25_raw_scan_topk", k => expressions.bm25_raw_scan_topk(spark, rawBc, k,
+      ("bm25_raw_scan_topk", k => expressions.bm25_raw_scan_topk(rawBc, k,
           $"vec_id", $"hs", $"tfs", $"len"),
         k => brute(k, asc = false, longScore = true)(bm25(rawWeight))),
-      ("lsh_scan_topk", k => expressions.lsh_scan_topk(spark, lshBc, k, nPlanes,
+      ("lsh_scan_topk", k => expressions.lsh_scan_topk(lshBc, k, nPlanes,
           $"vec_id", $"embedding", $"sigs"),
         k => brute(k, asc = false, longScore = false)((i, d) =>
           if (lshCandidate(i, d)) cosine(i, d) else None)),
-      ("cosine_scan_topk", k => expressions.cosine_scan_topk(spark, cosBc, k,
+      ("cosine_scan_topk", k => expressions.cosine_scan_topk(cosBc, k,
           $"vec_id", $"embedding"),
         k => brute(k, asc = false, longScore = false)(cosine)),
-      ("ivf_scan_topk", k => expressions.ivf_scan_topk(spark, ivfBc, k,
+      ("ivf_scan_topk", k => expressions.ivf_scan_topk(ivfBc, k,
           $"vec_id", $"cell", $"embedding"),
         k => brute(k, asc = false, longScore = false)((i, d) =>
           if (cells(i).contains(d._4)) cosine(i, d) else None)))
@@ -839,10 +840,7 @@ class ExpressionsSpec extends SparkSpec {
         assert(expected.map(_._1).distinct.size >= 3, s"$name: fixture too sparse")
         assert(got == expected, s"$name, k = $k")
       }
-    } finally Seq(pqBc, bm25Bc, rawBc, lshBc, cosBc, ivfBc).foreach { bc =>
-      expressions.dropPerCall(spark, bc)
-      bc.destroy()
-    }
+    } finally Seq(pqBc, bm25Bc, rawBc, lshBc, cosBc, ivfBc).foreach(_.destroy())
   }
 
   test("one top-k scan aggregate: its scaffold and the per-call release live once") {
@@ -866,7 +864,7 @@ class ExpressionsSpec extends SparkSpec {
     val all = main + source("src/test")
     Seq("ScanTopK", "MatchScan", "bloomProbe").map(_ + "Name").foreach { helper =>
       assert(!all.contains(helper),
-        s"`$helper` is gone: release per-call entries with expressions.dropPerCall")
+        s"`$helper` is gone: a broadcast kernel's Column carries its own expression")
     }
   }
 }

@@ -3096,8 +3096,7 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("kmeansFit releases every round's centroid_argmin registration") {
-    def registered: Int = spark.sessionState.functionRegistry.listFunction()
-      .count(_.funcName.startsWith("centroid_argmin_b"))
+    def registered = spark.sessionState.functionRegistry.listFunction().toSet
     val before = registered
     val (assign, cents) = VectorOps.kmeansFit(
       graft.sources.Tables.embeddings(spark, sf0001), k = 4, rounds = 2)
