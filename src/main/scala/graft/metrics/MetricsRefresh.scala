@@ -111,6 +111,11 @@ object MetricsRefresh {
   /** One dashboard tick: recompute every available metric frame as of
     * `tickTime`, overwrite the CSV snapshots, append melted rows to
     * `self_driving_metrics`. Returns the served frame names.
+    *
+    * Every melted row carries the tick's `time_bucket`, so rebalancing
+    * on it gives the append one write task, which AQE splits by bytes
+    * only past the advisory partition size: one file per date touched,
+    * not one per partition of every cached frame.
     */
   def refreshOnce(s: SparkSession, storeDir: String, resultsDir: String,
       tickTime: Column = current_timestamp()): Seq[String] = {
@@ -125,7 +130,8 @@ object MetricsRefresh {
         case (name, df) if !snapshotOnly(name) => toMetricRows(name, df, tickTime)
       }
       if (melted.nonEmpty)
-        Sinks.writePartitioned(melted.reduce(_ unionByName _),
+        Sinks.writePartitioned(
+          melted.reduce(_ unionByName _).hint("rebalance", col("time_bucket")),
           s"$storeDir/self_driving_metrics", timeCol = "time_bucket")
       frames.keys.toSeq.sorted
     } finally frames.values.foreach(_.unpersist())

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sinks.Sinks
 import graft.sources.Tables
 
 /** The COMPOSED ADMISSION PIPELINE — the single wired path a curation
@@ -65,17 +66,6 @@ import graft.sources.Tables
 object Admission {
 
   private def isEval(c: Column): Column = c % 29 === 0 && c < 5300L
-
-  /** Run independent Spark actions concurrently (store writes of one
-    * maintenance step): the wall becomes the slowest job, not the sum
-    * of the launches. Callers sequence only the REAL dependencies. */
-  private def inParallel(work: Seq[() => Unit]): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    Await.result(Future.sequence(work.map(w => Future(w()))), Duration.Inf)
-  }
 
   /** Static screens and models, built/loaded ONCE (stream start or
     * query entry): all eval-bounded or vocabulary-bounded. */
@@ -309,7 +299,7 @@ object Admission {
     val post = TextOps.bm25RawPostings(docs.select($"doc_id", $"text"))
       .localCheckpoint()
     val cs = TextOps.cardStoreOf(docs.select($"source", $"lang", $"text"))
-    inParallel(Seq(
+    Sinks.concurrently(
       () => docs.select($"doc_id", $"source", $"lang", $"text")
         .write.mode("overwrite").parquet(s"$stateDir/corpus/batch=$batchId"),
       () => docs.select($"doc_id", $"source", $"h", $"nw")
@@ -331,7 +321,7 @@ object Admission {
       () => cs.langs.write.mode("overwrite")
         .parquet(s"$stateDir/cards/langs/batch=$batchId"),
       () => cs.hashes.write.mode("overwrite")
-        .parquet(s"$stateDir/cards/hashes/batch=$batchId")))
+        .parquet(s"$stateDir/cards/hashes/batch=$batchId"))
   }
 
   /** Append an ADMITTED batch (doc_id, source, lang, text, embedding)
@@ -346,7 +336,7 @@ object Admission {
       .localCheckpoint()
     val fresh = TextOps.shingleDocs(a.select($"doc_id", $"text"))
       .localCheckpoint()
-    inParallel(Seq(
+    Sinks.concurrently(
       () => writeDocStores(stateDir, batchId.toString, a),
       () => TextOps.bandsOf(fresh).write.mode("overwrite")
         .parquet(s"$stateDir/minhash/bands/batch=$batchId"),
@@ -360,7 +350,7 @@ object Admission {
           s.read.parquet(s"$stateDir/vec/centroids"))
         .select($"vec_id", $"cell", $"embedding")
         .write.mode("overwrite")
-        .parquet(s"$stateDir/vec/vectors/batch=$batchId")))
+        .parquet(s"$stateDir/vec/vectors/batch=$batchId"))
   }
 
   /** The seeded state as a per-JVM IndexCache ARTIFACT: the maintained
@@ -459,7 +449,7 @@ object Admission {
     val post = readPart(s, s"$stateDir/bm25/postings")
       .select($"doc_id", $"hs", $"tfs", $"len")
       .join(vic, Seq("doc_id"), "left_anti").localCheckpoint()
-    inParallel(Seq(
+    Sinks.concurrently(
       () => swap(s"$stateDir/corpus")(
         readPart(s, s"$stateDir/corpus")
           .select($"doc_id", $"source", $"lang", $"text")
@@ -488,15 +478,15 @@ object Admission {
         val (n, sumLen) = TextOps.bm25TotalsOf(post)
         swap(s"$stateDir/bm25/totals")(
           Seq((n, sumLen)).toDF("n", "sum_len").coalesce(1))
-      }))
+      })
     // cards: recomputed from the NEWLY compacted corpus store
     val cs = TextOps.cardStoreOf(
       s.read.parquet(s"$stateDir/corpus/batch=-1")
         .select($"source", $"lang", $"text"))
-    inParallel(Seq(
+    Sinks.concurrently(
       () => swap(s"$stateDir/cards/sums")(cs.sums),
       () => swap(s"$stateDir/cards/langs")(cs.langs),
-      () => swap(s"$stateDir/cards/hashes")(cs.hashes)))
+      () => swap(s"$stateDir/cards/hashes")(cs.hashes))
   }
 
   /** Read a batch-partitioned store, keeping only partitions BEFORE

@@ -15,6 +15,41 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
+  /** Run independent writes as concurrent Spark jobs: the wall becomes
+    * the slowest write, not the sum of each job's fixed launch and
+    * commit cost. Each write runs on a thread started here, so its jobs
+    * inherit the caller's Spark local properties (a stream's job group,
+    * which `query.stop()` cancels, the job description and the SQL
+    * execution id). Every write is joined before anything is thrown:
+    * the first failure in argument order is rethrown with the others
+    * attached as suppressed, so no write is still running when a
+    * failed micro-batch is replayed. Writes passed here must not read
+    * what a sibling writes; callers sequence the real dependencies. */
+  def concurrently(writes: (() => Unit)*): Unit = {
+    val failures = new Array[Throwable](writes.size)
+    val threads = writes.zipWithIndex.map { case (w, i) =>
+      val t = new Thread(() => try w() catch { case e: Throwable => failures(i) = e },
+        s"graft-sink-$i")
+      t.start()
+      t
+    }
+    // joined uninterruptibly: a stopped stream cancels the writes' job
+    // group, so they end; returning before they do would let a replay
+    // race them
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join()
+        catch { case _: InterruptedException => interrupted = true }
+    }
+    val thrown = (Option.when(interrupted)(new InterruptedException("sink writes interrupted")) ++
+      failures.filter(_ != null)).toSeq
+    thrown.headOption.foreach { first =>
+      thrown.tail.foreach(first.addSuppressed)
+      throw first
+    }
+  }
+
   /** Day-partitioned parquet table. Partitioning column is derived, so the
     * data keeps its full-resolution `time`; at 100 TB each day directory
     * splits into many files sized by the writer's task parallelism.

@@ -164,22 +164,30 @@ object Pipeline {
 
   /** The telemetry+alerts sink body shared by [[runAlertPipeline]] and
     * [[runDedupedAlertPipeline]] — one copy, so persist handling, sink
-    * layout and alert derivation cannot drift between the two. */
+    * layout and alert derivation cannot drift between the two. The two
+    * writes read only the persisted batch, so they run as concurrent
+    * jobs ([[graft.sinks.Sinks.concurrently]]): a small trigger pays one
+    * job's fixed cost in wall, not two. Both are joined before the body
+    * returns or throws, so the batch commits only after both landed and
+    * a failed batch replays with neither still running — delivery stays
+    * at-least-once, as with the sequential writes. */
   private def writeTelemetryAndAlerts(batch: DataFrame, outDir: String,
       t: Thresholds): Unit = {
     val b = batch.persist()
-    try {
-      Sinks.writePartitioned(b, s"$outDir/vehicle_telemetry")
-      Sinks.writePartitioned(FleetRules.telemetryAlerts(b, t), s"$outDir/alerts")
-    } finally { b.unpersist(); () }
+    try Sinks.concurrently(
+      () => Sinks.writePartitioned(b, s"$outDir/vehicle_telemetry"),
+      () => Sinks.writePartitioned(FleetRules.telemetryAlerts(b, t), s"$outDir/alerts"))
+    finally { b.unpersist(); () }
   }
 
   /** The E1 pipeline, bounded: drain whatever is in `inDir`, derive alerts
     * with the reference's telemetry rules (speed and battery), write both
     * raw telemetry and alerts as day-partitioned parquet, stop at the end
     * of available data. Each trigger admits one byte-sized wave of files
-    * ([[telemetryFileStream]]). Checkpointing makes re-runs incremental
-    * (only new files process).
+    * ([[telemetryFileStream]]). The two writes of a batch run
+    * concurrently and are both joined before the batch commits
+    * ([[writeTelemetryAndAlerts]]); delivery is at-least-once.
+    * Checkpointing makes re-runs incremental (only new files process).
     */
   def runAlertPipeline(s: SparkSession, inDir: String, outDir: String,
       checkpointDir: String, t: Thresholds = Thresholds()): StreamingQuery =
@@ -1635,7 +1643,11 @@ object Pipeline {
     * store append mutates the state directories the lazy decision plan
     * reads, and the admitted rows re-derive from the immutable source
     * batch semi-joined on the persisted decisions — a replay after any
-    * partial failure reproduces both writes bit-identically.
+    * partial failure reproduces both writes bit-identically. So unlike
+    * the alert runners, this body stays sequential on purpose
+    * ("decisions first"); only the store appends inside
+    * [[graft.queries.Admission.appendAdmitted]], which read none of
+    * each other's output, run concurrently.
     *
     * Scale shape: state reloads per batch are lazy partition-discovered
     * unions (no corpus materialization); each probe broadcasts the

@@ -27,6 +27,9 @@ import org.apache.spark.sql.execution.joins.CartesianProductExec
   */
 class PlanAuditSpec extends SparkSpec {
 
+  private case class Audited(name: String, plan: SparkPlan,
+      functions: Set[String], rdds: Set[Int])
+
   /** One linear pass: every node (subqueries included), plus each AQE
     * node's initialPlan expanded the same way. */
   private def collectAll(p: SparkPlan): Seq[SparkPlan] = {
@@ -56,23 +59,31 @@ class PlanAuditSpec extends SparkSpec {
       "row_number over a limit(24) frame — TakeOrderedAndProject feeds <=24 rows")
 
   /** One executedPlan per query, built ON FIRST USE and shared by the
-    * audits below, with the function-registry entries its construction
-    * added. Constructing a plan runs the query's eager segments
-    * (localCheckpoints, driver collects, index builds) — for the
-    * lifecycle compositions (q180-style two-batch stacks) that is the
-    * full query cost, so paying it once per suite instead of once per
-    * test keeps the audit's cost linear in the catalog (ADVICE r12). */
-  private lazy val plans: Seq[(String, SparkPlan, Set[String])] = {
+    * audits below, with the resources its construction left behind: the
+    * function-registry entries it added and the ids of the persisted
+    * RDDs it left, local checkpoints excepted. Constructing a plan runs
+    * the query's eager segments (localCheckpoints, driver collects,
+    * index builds) — for the lifecycle compositions (q180-style
+    * two-batch stacks) that is the full query cost, so paying it once
+    * per suite instead of once per test keeps the audit's cost linear
+    * in the catalog (ADVICE r12). */
+  private lazy val plans: Seq[Audited] = {
     val registry = spark.sessionState.functionRegistry
+    val sc = spark.sparkContext
+    def persisted: Set[Int] =
+      sc.getPersistentRDDs.collect { case (id, rdd) if !rdd.isCheckpointed => id }.toSet
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val before = registry.listFunction().toSet
+      val rddsBefore = persisted
       val plan = fn(spark, sf0001).queryExecution.executedPlan
-      (name, plan, (registry.listFunction().toSet -- before).map(_.unquotedString))
+      Audited(name, plan,
+        (registry.listFunction().toSet -- before).map(_.unquotedString),
+        persisted -- rddsBefore)
     }
   }
 
   test("every unpartitioned WindowExec input is in the bounded whitelist") {
-    val offenders = plans.flatMap { case (name, plan, _) =>
+    val offenders = plans.flatMap { case Audited(name, plan, _, _) =>
       val unpart = collectAll(plan).collect {
         case w: org.apache.spark.sql.execution.window.WindowExec
             if w.partitionSpec.isEmpty => w
@@ -90,14 +101,25 @@ class PlanAuditSpec extends SparkSpec {
     // A kernel that captured a broadcast through a registry entry would
     // pin that broadcast for the life of a serving session.
     val offenders = plans.collect {
-      case (name, _, added) if added.nonEmpty => s"$name (${added.toSeq.sorted.mkString(", ")})"
+      case Audited(name, _, added, _) if added.nonEmpty =>
+        s"$name (${added.toSeq.sorted.mkString(", ")})"
     }
     assert(offenders.isEmpty,
       s"function registry entries added by: ${offenders.mkString("; ")}")
   }
 
+  test("no declared query leaves a persisted RDD other than a local checkpoint") {
+    // A scoped persist left behind pins its blocks for the life of a
+    // serving session.
+    val offenders = plans.collect {
+      case Audited(name, _, _, rdds) if rdds.nonEmpty => s"$name (rdds ${rdds.toSeq.sorted.mkString(", ")})"
+    }
+    assert(offenders.isEmpty,
+      s"persisted RDDs left by: ${offenders.mkString("; ")}")
+  }
+
   test("no declared query plans a cartesian product at sf0.001") {
-    val offenders = plans.flatMap { case (name, plan, _) =>
+    val offenders = plans.flatMap { case Audited(name, plan, _, _) =>
       val cart = collectAll(plan).collect { case c: CartesianProductExec => c }
       if (cart.nonEmpty) Some(name) else None
     }

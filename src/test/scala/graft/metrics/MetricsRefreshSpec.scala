@@ -95,4 +95,36 @@ class MetricsRefreshSpec extends SparkSpec {
     assert(spark.read.parquet(s"$store/self_driving_metrics")
       .filter(col("metric_name") === "engagement_rate.engagement_pct").count() == 2)
   }
+
+  test("a tick appends no more parquet files than the dates it touches") {
+    val store = tmpDir("mr_files_store")
+    val results = tmpDir("mr_files_results")
+    // three days of fleet data, each table spread over several files per
+    // day, so every metric frame reads (and caches) several partitions
+    val day = 24L * 3600 * 1000
+    val start = 1700000000000L
+    def days[T](f: Long => org.apache.spark.sql.Dataset[T]) =
+      (0 until 3).map(d => f(start + d * day)).reduce(_ union _).toDF().repartition(6)
+    val tel = days(t => Simulation.telemetry(spark, 6, 40, seed = 3, startMillis = t))
+    Sinks.writePartitioned(tel, s"$store/vehicle_telemetry")
+    Sinks.writePartitioned(days(t => Simulation.driving(spark, 6, 40, seed = 3, startMillis = t)),
+      s"$store/driving_events")
+    Sinks.writePartitioned(days(t => Simulation.perception(spark, 6, 40, seed = 3, startMillis = t)),
+      s"$store/perception_events")
+    Sinks.writePartitioned(graft.rules.FleetRules.telemetryAlerts(tel), s"$store/alerts")
+    val asOf = new Timestamp(start + 2 * day + 3600 * 1000)
+    MetricsRefresh.refreshOnce(spark, store, results, lit(asOf))
+
+    val table = new java.io.File(s"$store/self_driving_metrics")
+    val dates = table.listFiles().filter(_.getName.startsWith("p_date="))
+    val files = dates.flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+    assert(dates.map(_.getName).toSeq == Seq("p_date=2023-11-16"))
+    assert(files.length <= dates.length,
+      s"${files.length} files for ${dates.length} date(s)")
+    // every melted frame is in the one file
+    assert(spark.read.parquet(table.toString).select("metric_name")
+      .distinct().collect().map(_.getString(0).takeWhile(_ != '.')).toSet ==
+      Set("engagement_rate", "interventions_per_vehicle", "perception_summary",
+        "km_per_intervention", "intervention_rate", "disengagement_rate", "fleet_summary"))
+  }
 }

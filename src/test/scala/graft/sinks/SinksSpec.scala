@@ -203,4 +203,97 @@ class SinksSpec extends SparkSpec {
     assert(pruned.count() == 20)
     assert(back.filter(col("p_date") === to_date(lit("1999-01-01"))).count() == 0)
   }
+
+  test("concurrently: every write runs") {
+    val dir = tmpDir("conc_all")
+    Sinks.concurrently((1 to 3).map(i =>
+      () => spark.range(i * 10).write.parquet(s"$dir/w$i")): _*)
+    assert((1 to 3).map(i => spark.read.parquet(s"$dir/w$i").count()) == Seq(10, 20, 30))
+  }
+
+  test("concurrently: a failure surfaces only after a slower sibling has finished") {
+    val slow = tmpDir("conc_slow") + "/slow"
+    val e = intercept[IllegalStateException] {
+      Sinks.concurrently(
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(500); spark.range(10).write.parquet(slow) })
+    }
+    assert(e.getMessage == "first")
+    // the sibling committed before the failure was thrown
+    assert(new java.io.File(s"$slow/_SUCCESS").exists())
+    assert(spark.read.parquet(slow).count() == 10)
+  }
+
+  test("concurrently: the first failure in argument order carries the others as suppressed") {
+    val dir = tmpDir("conc_fail")
+    val e = intercept[RuntimeException] {
+      Sinks.concurrently(
+        () => spark.range(5).write.parquet(s"$dir/ok"),
+        () => { Thread.sleep(200); throw new RuntimeException("a") },
+        () => throw new IllegalArgumentException("b"),
+        () => throw new UnsupportedOperationException("c"))
+    }
+    assert(e.getMessage == "a")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("b", "c"))
+    assert(spark.read.parquet(s"$dir/ok").count() == 5)
+  }
+
+  test("concurrently: the jobs of every write carry the caller's job group") {
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir("conc_group")
+    val Tag = "graft.spec.write"
+    // (write tag, job group) of every job a tagged write runs
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(Tag))).foreach { tag =>
+          seen.add(tag -> j.properties.getProperty("spark.jobGroup.id"))
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup("sinks-spec-group", "concurrent writes")
+    try {
+      Sinks.concurrently((1 to 3).map(i => () => {
+        sc.setLocalProperty(Tag, i.toString)
+        spark.range(i * 10).write.parquet(s"$dir/w$i")
+      }): _*)
+      // listener events arrive asynchronously: wait until every write's
+      // jobs have been heard
+      val deadline = System.currentTimeMillis() + 30000L
+      while (seen.asScala.map(_._1).toSet.size < 3 && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val jobs = seen.asScala.toSeq
+    assert(jobs.map(_._1).toSet == Set("1", "2", "3"), s"jobs heard: $jobs")
+    assert(jobs.forall(_._2 == "sinks-spec-group"), s"jobs outside the caller's group: $jobs")
+    // the caller's own properties are untouched by the writes' tags
+    assert(sc.getLocalProperty(Tag) == null)
+  }
+
+  test("one launcher of concurrent Spark jobs: Sinks.concurrently") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the repository root: $root")
+    val walk = java.nio.file.Files.walk(root)
+    val sources = try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> java.nio.file.Files.readString(p)).toMap
+    finally walk.close()
+    def count(text: String, s: String): Int =
+      text.split(java.util.regex.Pattern.quote(s), -1).length - 1
+    Seq("ExecutionContext", "inParallel", "Future(", "Future.sequence", "Executors.",
+        "ForkJoinPool", ".par.").foreach { s =>
+      assert(sources.values.map(count(_, s)).sum == 0, s"`$s` in src/main")
+    }
+    // every thread src/main starts, but the index cache's shutdown hook,
+    // is a concurrent write's
+    val threads = sources.map { case (f, text) =>
+      f -> (count(text, "new Thread(") - count(text, "addShutdownHook(new Thread(")) }
+      .filter(_._2 > 0)
+    assert(threads == Map("scala/graft/sinks/Sinks.scala" -> 1),
+      s"threads started outside Sinks.concurrently: $threads")
+  }
 }

@@ -44,6 +44,45 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$out/alerts").count() == 2, "benign row adds no alert")
   }
 
+  test("alert pipeline: a failed sink write ends the query uncommitted, with none of its jobs left running") {
+    import scala.jdk.CollectionConverters._
+    val in = tmpDir("stream_fail_in")
+    val out = tmpDir("stream_fail_out")
+    val ckpt = tmpDir("stream_fail_ckpt")
+    writeJsonl(in, "batch1.jsonl", row1, row2)
+    // a regular file where the alerts table's directory must go
+    Files.writeString(Paths.get(out, "alerts"), "occupied")
+    // job id -> job group of every job start, job id -> end time of
+    // every job end the session hears
+    val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.put(j.jobId, _))
+      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ends.put(j.jobId, j.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = Pipeline.runAlertPipeline(spark, in, out, ckpt)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.awaitTermination())
+      val terminated = System.currentTimeMillis()
+      assert(!Files.exists(Paths.get(ckpt, "commits", "0")), "a failed batch must not commit")
+      def mine = groups.asScala.collect { case (id, g) if g == q.runId.toString => id }.toSet
+      // listener events arrive asynchronously: wait until every job of
+      // the query's group has been heard ending
+      val deadline = terminated + 30000L
+      while ((mine.isEmpty || !mine.forall(ends.containsKey)) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(mine.nonEmpty, "the telemetry write ran no job in the query's job group")
+      val endTimes = mine.map(id => id -> ends.asScala.get(id)).toMap
+      // end times are stamped when a job finishes, not when it is heard
+      assert(endTimes.values.forall(_.exists(_ <= terminated)),
+        s"jobs still running after awaitTermination ($terminated): $endTimes")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("byte-sized triggers: a small-file backlog drains in one micro-batch, == batch rules") {
     def committed(ckpt: String): Int =
       new java.io.File(s"$ckpt/commits").listFiles().count(_.getName.forall(_.isDigit))
