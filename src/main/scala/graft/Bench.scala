@@ -26,7 +26,7 @@ object Bench {
     catch { case e: Throwable => Left(s"$name: ${e.getClass.getSimpleName}: ${e.getMessage}") }
 
   /** One timed pass of the ingest leg (also the isolated re-measure
-    * surface — graft.dev.IngestBench runs it solo with the sweep-hygiene
+    * surface — `graft.dev.Measure ingest` runs it solo with the sweep-hygiene
     * RDD release, away from the full bench's page-cache/JIT noise).
     * Returns (rows, seconds); the timer covers the streaming run only,
     * not the wire-format staging. */
@@ -83,7 +83,7 @@ object Bench {
     // work): it runs HERE — after warmup, before the query sweeps — so
     // the 163-query × 3-sweep heap/page-cache churn can't land on it,
     // and as best-of-3 with the sweep-hygiene RDD release between reps
-    // (graft.dev.IngestBench's protocol, so the gate number tracks the
+    // (the `graft.dev.Measure ingest` protocol, so the gate number tracks the
     // standalone re-measure within rep noise instead of 3.4x).
     val ingestJson = try {
       val reps = (1 to 3).map { i =>

@@ -15,7 +15,7 @@ import graft.{Sessions, SparkEntry}
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val s = Sessions.local(8)
+    val s = Sessions.local()
     // show the EAGER subtree of ckpt-materializing queries (q86/q114)
     // instead of a one-line checkpoint scan — plan-dump only, see the
     // graft.queries.ckpt scaladoc
