@@ -5,6 +5,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.SparkContext
 import org.apache.spark.executor.TaskMetrics
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
@@ -301,11 +302,15 @@ object Measure {
       .withColumn("embedding", lit(null).cast("array<float>"))
       .localCheckpoint()
 
-  /** A private copy of the per-JVM seeded admission state. */
-  private def seededState(s: SparkSession, d: String): String = {
-    val state = java.nio.file.Files.createTempDirectory("graft_measure").toString + "/state"
-    Admission.cloneSeededState(s, d, state)
-    state
+  /** Runs `body` on a private copy of the per-JVM seeded admission state,
+    * and deletes the copy when `body` ends, however it ends. */
+  private def withSeededState[A](s: SparkSession, d: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_measure")
+    try {
+      val state = s"$dir/state"
+      Admission.cloneSeededState(s, d, state)
+      body(state)
+    } finally JavaUtils.deleteRecursively(dir.toFile)
   }
 
   /** The bench's streaming-ingest leg ([[graft.Bench.measureIngest]]); its
@@ -350,7 +355,8 @@ object Measure {
     *   embprobe — IVF probe against the stored vector index (cell scan). */
   private def decideItemize(s: SparkSession, d: String): Leg => Unit = {
     import s.implicits._
-    val st = Admission.readDedupState(s, seededState(s, d))
+    // the probes only read the state, so they read the cached seed itself
+    val st = Admission.readDedupState(s, Admission.seededStateCached(s, d))
     val b = Admission.normalize(arrivals(s, d))
       .withColumn("h", md5(coalesce($"text", lit(""))))
       .localCheckpoint()
@@ -383,8 +389,7 @@ object Measure {
     val scr = Admission.screens(s, d)
     val batch = arrivals(s, d)
     println(s"[measure] admission $d setup: corpus=$nCorpus batch=1000")
-    leg => {
-      val state = seededState(s, d)
+    leg => withSeededState(s, d) { state =>
       val dec = leg("decide")(Admission.decide(batch,
         Admission.readDedupState(s, state), scr))
       leg("append")(Admission.appendAdmitted(s, state, 0L,
@@ -475,20 +480,27 @@ object Measure {
     // batch b takes the stored ids in [b·1250, (b+1)·1250): exactly 1,000
     // of each 1,250-id stripe are stored under the % 10 < 8 split
     val stripes = CompactionBatches.max * 1250L
-    require(stripes < nCorpus, s"corpus too small for ${CompactionBatches.max} batches")
+    // the largest leg's victims stay at most a fifth of the corpus (their
+    // share at the 500k-doc corpus SCALE.md measured): past that, the fold
+    // rewrites a store that lost most of its rows, and reads less than
+    // the 1-batch fold does
+    val minCorpus = CompactionBatches.max * 1000L * 5
+    require(nCorpus >= minCorpus, s"compaction needs a corpus of at least $minCorpus docs " +
+      s"(${CompactionBatches.max} batches of 1,000 victims at most 20 % of it); $d has $nCorpus")
     val stored = docs.select($"doc_id")
       .filter($"doc_id" % 10 < 8 && $"doc_id" < stripes)
       .localCheckpoint()
     println(s"[measure] compaction $d setup: corpus=$nCorpus")
     leg => CompactionBatches.foreach { n =>
-      val state = seededState(s, d)
-      (0 until n).foreach { b =>
-        stored.filter($"doc_id" >= b * 1250L && $"doc_id" < (b + 1) * 1250L)
-          .write.mode("overwrite").parquet(s"$state/tombstones/batch=${100 + b}")
-      }
-      leg(s"n_batches=$n") {
-        graft.streaming.Pipeline.compactAdmissionState(s, state)
-        s"victims=${n * 1000}"
+      withSeededState(s, d) { state =>
+        (0 until n).foreach { b =>
+          stored.filter($"doc_id" >= b * 1250L && $"doc_id" < (b + 1) * 1250L)
+            .write.mode("overwrite").parquet(s"$state/tombstones/batch=${100 + b}")
+        }
+        leg(s"n_batches=$n") {
+          graft.streaming.Pipeline.compactAdmissionState(s, state)
+          s"victims=${n * 1000}"
+        }
       }
     }
   }

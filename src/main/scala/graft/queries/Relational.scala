@@ -225,33 +225,35 @@ object Relational {
       ORDER BY p.event_id"""))
 
   /** Q105 — two-dimensional box query over a Z-ORDERED store
-    * ([[graft.sinks.ZOrder]], round 8): the events table laid out on the
-    * Morton curve of (user_id, value), queried with a selective box on
-    * BOTH columns. Day partitioning (the store's default layout,
+    * ([[graft.sinks.Sinks.writeZOrdered]]): the events table clustered
+    * along the Morton curve of (user_id, value) into range-disjoint
+    * sorted files, queried with a selective box on BOTH columns. Day
+    * partitioning (the store's default layout,
     * [[graft.sinks.Sinks.writePartitioned]]) prunes only time; the
-    * z-layout makes a two-column box read only the covering cells —
-    * ~box-area fraction of the store instead of a full scan
-    * (ZOrderSpec asserts the partition count read). The layout is an
-    * IndexCache artifact (built once per dataset per JVM, the PQ-index
+    * clustered files carry tight min/max stats on both columns, so the
+    * box's bounds push down to the parquet scan and skip the row groups
+    * outside it (ZOrderSpec asserts both pushed bounds and the skipped
+    * rows). The filter compares the native long `user_id`: a
+    * `CAST(user_id AS DOUBLE)` bound would not push down. The layout is
+    * an IndexCache artifact (built once per dataset per JVM, the PQ-index
     * pattern); the RESULT is layout-independent — the DuckDB oracle is
-    * the plain box predicate on raw events, so the hash match proves
-    * pruning loses nothing. */
+    * the plain box predicate on raw events (integer bounds, so the cast
+    * there selects the same rows), and the hash match proves skipping
+    * loses nothing. */
   private val q105 = Q(
     fn = (s, d) => {
       import s.implicits._
       val p = IndexCache.resolve(
         s"zorder_events|${IndexCache.dataKey(d)}", "zorder") { path =>
-        // bits=4 (256 cells): the scaladoc's sizing rule applied to the
-        // test-scale table — cells should hold executor-batch bytes, and
-        // the default 6 bits (4096 dirs) drowns a 100k-row store in
-        // directory listings (measured 4.4 s vs sub-second here)
-        graft.sinks.ZOrder.writeZOrdered(
+        // 64 files: ~1.5k rows a file at sf0.1, so a box a few percent
+        // of the plane wide still skips most of the store
+        graft.sinks.Sinks.writeZOrdered(
           Tables.events(s, d)
             .select($"event_id", $"user_id", $"event_type", $"value"),
-          "user_id", "value", path, bits = 4)
+          path, Seq("user_id", "value"), nFiles = 64)
       }
-      graft.sinks.ZOrder.boxQuery(s, p, 40, 90, 100.0, 400.0)
-        .select($"event_id", $"user_id", $"event_type", $"value")
+      s.read.parquet(p)
+        .filter($"user_id".between(40, 90) && $"value".between(100.0, 400.0))
         .orderBy($"event_id")
     },
     oracle = Some("""

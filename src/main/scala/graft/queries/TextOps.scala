@@ -453,19 +453,6 @@ object TextOps {
       .filter($"u" =!= $"v").distinct()
   }
 
-  /** Q47 — near-duplicate CLUSTERS: the pairs→groups step real dedup needs
-    * (a pair list alone can't pick survivors when A~B and B~C but A!~C).
-    * Connected components over the verified near-dup pair set (generated
-    * by the LSH pipeline — equal to q18's exact pair set, spec-asserted)
-    * via iterated large-star/small-star; each doc maps to its component's
-    * minimum doc_id, `keep` marks the survivor.
-    *
-    * The driver-side loop holds only per-iteration COUNTS (convergence
-    * check on (|E|, xxhash64-sum) — one cheap action per iteration, the
-    * standard shape for iterative graph algorithms); the edge data itself
-    * never leaves the cluster, and localCheckpoint truncates lineage so
-    * plan depth stays O(1) per iteration.
-    */
   /** Connected components over an undirected (u, v) edge list: every
     * vertex that appears in an edge is labeled with its component's
     * minimum vertex id. Iterated large-star/small-star with a
@@ -486,7 +473,6 @@ object TextOps {
     var converged = false
     var iter = 0
     while (!converged && iter < maxIters) {
-      val t0 = System.nanoTime()
       val prev = edges
       val next = smallStar(largeStar(edges)).localCheckpoint()
       val nfp = fingerprint(next)
@@ -497,10 +483,6 @@ object TextOps {
       // convergence, not per iteration — the && short-circuits.
       converged = nfp == fp && next.join(prev, Seq("u", "v"), "left_anti").isEmpty
       edges = next; fp = nfp; iter += 1
-      // opt-in diagnostics: a library method must not spam stderr on
-      // every clustering query (benches, specs, embedding applications)
-      if (pairs.sparkSession.conf.get("graft.cc.log", "false").toBoolean)
-        System.err.println(f"[cc] alternation $iter: ${(System.nanoTime() - t0) / 1e9}%.2f s edges=${nfp._1}")
     }
     require(converged, s"connected components did not converge in $iter alternations")
     // converged edges are stars (x → component min); add the roots
@@ -818,6 +800,19 @@ object TextOps {
       SELECT u AS doc_id, MIN(r) AS cluster_rep, u = MIN(r) AS keep
       FROM reach GROUP BY u ORDER BY doc_id"""))
 
+  /** Q47 — near-duplicate CLUSTERS: the pairs→groups step real dedup needs
+    * (a pair list alone can't pick survivors when A~B and B~C but A!~C).
+    * Connected components over the verified near-dup pair set (generated
+    * by the LSH pipeline — equal to q18's exact pair set, spec-asserted)
+    * via iterated large-star/small-star; each doc maps to its component's
+    * minimum doc_id, `keep` marks the survivor.
+    *
+    * The driver-side loop holds only per-iteration COUNTS (convergence
+    * check on (|E|, bit_xor of xxhash64) — one cheap action per
+    * iteration, the standard shape for iterative graph algorithms); the
+    * edge data itself never leaves the cluster, and localCheckpoint
+    * truncates lineage so plan depth stays O(1) per iteration.
+    */
   private val q47 = Q(
     fn = (s, d) => {
       import s.implicits._

@@ -88,15 +88,22 @@ object Sinks {
     * leading column. This is the layout lever behind Delta/Iceberg
     * `OPTIMIZE ZORDER`, built from public Spark primitives:
     *
-    *  1. one `approx_percentile` pass computes 2^bits−1 quantile
-    *     boundaries per z column (mergeable sketch, map-side combined —
+    *  1. one `approx_percentile` pass computes 255 quantile boundaries
+    *     (8 bits) per z column (mergeable sketch, map-side combined —
     *     the q54b pattern), broadcast as a single row;
     *  2. each row maps every z column to its quantile bucket by an
     *     in-row boundary count (equal-frequency, so skew can't pile the
-    *     curve into few buckets);
+    *     curve into few buckets; a null counts no boundary and lands
+    *     in bucket 0, a NaN — above every double in Spark's ordering —
+    *     in the top one);
     *  3. bucket bits are interleaved into the Morton z-value, and
-    *     `repartitionByRange(__z)` + `sortWithinPartitions(__z)` produce
-    *     range-disjoint, internally-sorted files.
+    *     `repartitionByRange(nFiles, __z)` + `sortWithinPartitions(__z)`
+    *     produce `nFiles` range-disjoint, internally-sorted files,
+    *     overwriting `path`.
+    *
+    * Readers need nothing special: an ordinary filter on the z columns
+    * pushes down to the parquet scan and skips the row groups whose
+    * stats fall outside it (q105).
     *
     * Cost: one sketch pass + one range shuffle — the same price as a
     * global sort by one column, but the locality benefits all z columns.
@@ -104,17 +111,11 @@ object Sinks {
     * scanning the lake for a `(vehicle, speed-band)` probe.
     */
   def writeZOrdered(df: DataFrame, path: String, zCols: Seq[String],
-      bits: Int = 8, nFiles: Int = 0, mode: String = "overwrite"): Unit = {
+      nFiles: Int): Unit = {
     require(zCols.nonEmpty && zCols.size <= 4, "z-order over 1..4 columns")
-    // Java shifts are mod 64: bits*nCols > 63 would silently wrap the
-    // interleave into a garbled curve rather than fail. bits itself is
-    // additionally capped at 12: the quantile-boundary array is a
-    // 2^bits−1-element LITERAL column, so bits=20 would build a ~1M-entry
-    // plan node (and an Int `1 << 32` wraps to 1, handing
-    // approx_percentile an empty percentage array)
-    require(bits >= 1 && bits <= 12 && bits * zCols.size <= 63,
-      s"bits must be in [1, 12] with bits * zCols.size <= 63, " +
-        s"got $bits * ${zCols.size}")
+    // 8 bits per column: 4 columns fill 32 of the z-value's 63 bits, and
+    // the boundary array stays a 255-element literal
+    val bits = 8
     val nb = 1 << bits
     val fracs = array((1 until nb).map(i => lit(i.toDouble / nb)): _*)
     val bounds = df.select(zCols.map(c =>
@@ -131,12 +132,11 @@ object Sinks {
           i * zCols.size + ci))
       }
     }
-    val zed = withB.withColumn("__z", z)
-    (if (nFiles > 0) zed.repartitionByRange(nFiles, col("__z"))
-     else zed.repartitionByRange(col("__z")))
+    withB.withColumn("__z", z)
+      .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop(zCols.map(c => s"__zb_$c") :+ "__z": _*)
-      .write.mode(mode).parquet(path)
+      .write.mode("overwrite").parquet(path)
   }
 
   /** Small-file compaction for a parquet table: rewrite to

@@ -2,12 +2,13 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.model.Thresholds
 import graft.rules.FleetRules
 import graft.sinks.Sinks
+import graft.streaming.Pipeline
 
 /** Offline replay of captured OpenSky REST payloads as a streaming source —
   * the working form of SURVEY S4 in a zero-egress environment. Each
@@ -79,27 +80,23 @@ object OpenSkyReplay {
   def runReplayPipeline(s: SparkSession, inDir: String, outDir: String,
       checkpointDir: String, t: Thresholds = Thresholds(),
       maxVehicles: Int = 20, filesPerTrigger: Int = 1): StreamingQuery =
-    stateStream(s, inDir, maxVehicles, filesPerTrigger).writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.persist()
-        try {
-          // asOf pinned to the row's own poll_time (not wall clock): a
-          // state with null time_position then stamps the SAME value on
-          // the original attempt and on a crash replay of this
-          // at-least-once foreachBatch — deterministic replay, the
-          // capture's own clock
-          val asOf = org.apache.spark.sql.functions
-            .timestamp_seconds(org.apache.spark.sql.functions.col("poll_time"))
-          Sinks.writePartitioned(OpenSkyMap.toTelemetry(b, asOf = asOf),
-            s"$outDir/vehicle_telemetry")
-          val perception = OpenSkyMap.proximityPerception(b,
-            groupCols = Seq("poll_time"), asOf = asOf)
-          Sinks.writePartitioned(perception, s"$outDir/perception_events")
-          Sinks.writePartitioned(FleetRules.perceptionAlerts(perception, t),
-            s"$outDir/alerts")
-        } finally { b.unpersist(); () }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Pipeline.runBatches(stateStream(s, inDir, maxVehicles, filesPerTrigger),
+        checkpointDir) { (batch, _) =>
+      val b = batch.persist()
+      try {
+        // asOf pinned to the row's own poll_time (not wall clock): a
+        // state with null time_position then stamps the SAME value on
+        // the original attempt and on a crash replay of this
+        // at-least-once foreachBatch — deterministic replay, the
+        // capture's own clock
+        val asOf = timestamp_seconds(col("poll_time"))
+        Sinks.writePartitioned(OpenSkyMap.toTelemetry(b, asOf = asOf),
+          s"$outDir/vehicle_telemetry")
+        val perception = OpenSkyMap.proximityPerception(b,
+          groupCols = Seq("poll_time"), asOf = asOf)
+        Sinks.writePartitioned(perception, s"$outDir/perception_events")
+        Sinks.writePartitioned(FleetRules.perceptionAlerts(perception, t),
+          s"$outDir/alerts")
+      } finally { b.unpersist(); () }
+    }
 }

@@ -76,8 +76,9 @@ object Pipeline {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** The micro-batch runner: `body` receives each batch with its id. */
-  private def runBatches(df: DataFrame, checkpointDir: String,
+  /** The micro-batch runner: `body` receives each batch with its id.
+    * Runners outside this file (the OpenSky replay) start here too. */
+  private[graft] def runBatches(df: DataFrame, checkpointDir: String,
       outputMode: String = "append")(body: (DataFrame, Long) => Unit): StreamingQuery =
     startAvailableNow(df.writeStream.outputMode(outputMode).foreachBatch(body),
       checkpointDir)

@@ -37,6 +37,23 @@ class MeasureSpec extends SparkSpec {
     }
   }
 
+  test("the admission preset deletes the state copy each rep clones") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def clones = tmp.listFiles().count(f => f.isDirectory && f.getName.startsWith("graft_measure"))
+    val before = clones
+    val recs = Measure.run(spark, Measure.resolve("admission"), Seq(sf0001), 1)
+    assert(recs.map(_.leg) == Seq("decide", "append", "compact"))
+    assert(clones == before, s"$before graft_measure dirs before the run, $clones after")
+  }
+
+  test("the compaction preset refuses a corpus its victims would hollow out") {
+    val e = intercept[RuntimeException](
+      Measure.run(spark, Measure.resolve("compaction"), Seq(sf0001), 1))
+    assert(e.getMessage.contains(s"compaction on $sf0001, setup failed"), e.getMessage)
+    assert(e.getMessage.contains("at least 500000 docs"), e.getMessage)
+    assert(e.getMessage.contains(s"$sf0001 has 500"), e.getMessage)
+  }
+
   test("the drain marker is never counted: a leg with no job records none, a one-job leg one") {
     val sc = spark.sparkContext
     val preset: Measure.Preset = (_, _) => leg => {

@@ -279,12 +279,22 @@ class StreamingSpec extends SparkSpec {
   test("runner scaffold lives once in Pipeline.scala") {
     val src = Paths.get("src/main/scala/graft/streaming/Pipeline.scala")
     assert(Files.exists(src), s"run from the repository root: $src")
+    def occurrences(text: String, s: String) =
+      text.split(java.util.regex.Pattern.quote(s), -1).length - 1
     val text = Files.readString(src)
-    Seq("Trigger.AvailableNow()", "RocksDBStateStoreProvider", "batch=$batchId")
-      .foreach { s =>
-        assert(text.split(java.util.regex.Pattern.quote(s), -1).length - 1 == 1,
-          s"`$s` must occur exactly once — new runners go through the shared helpers")
-      }
+    Seq("RocksDBStateStoreProvider", "batch=$batchId").foreach { s =>
+      assert(occurrences(text, s) == 1,
+        s"`$s` must occur exactly once — new runners go through the shared helpers")
+    }
+    // every bounded runner under src/main, not only this file's, starts
+    // through Pipeline's one AvailableNow helper
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(Paths.get("src/main/scala"))
+    val all = try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(Files.readString).mkString("\n")
+    finally files.close()
+    assert(occurrences(all, "Trigger.AvailableNow()") == 1,
+      "`Trigger.AvailableNow()` must occur once in src/main — start runners through Pipeline.runBatches")
   }
 
   test("streaming drift monitor: flooded token alerts in its window only, rates exact") {
