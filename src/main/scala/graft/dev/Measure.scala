@@ -8,7 +8,7 @@ import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
@@ -48,8 +48,9 @@ import graft.sources.Tables
   * execution listener, the broadcast, sort-merge and shuffled-hash joins and
   * the shuffle exchanges of every plan it executed, through AQE stages (the
   * dedup queries end in `localCheckpoint`, whose execution is the one with
-  * the interesting joins). CPU-s is the A/B comparator to trust on a host
-  * whose wall clock carries co-tenant load.
+  * the interesting joins), and on request those plans themselves
+  * ([[Explain]] prints them). CPU-s is the A/B comparator to trust on a
+  * host whose wall clock carries co-tenant load.
   *
   * Both listeners are attached once per run. Before and after each leg a
   * marker job is run and its end awaited: the bus then has delivered every
@@ -63,13 +64,15 @@ import graft.sources.Tables
   */
 object Measure {
 
-  /** One timed leg of one rep; `out` is what the leg reported (`rows=N`). */
+  /** One timed leg of one rep; `out` is what the leg reported (`rows=N`);
+    * `plans`, kept only when [[run]] is asked to, holds the formatted
+    * executed plan of every Dataset action of the leg, in order. */
   final case class Record(target: String, dir: String, rep: Int, leg: String,
       wallS: Double, jobs: Int, tasks: Int, cpuS: Double, taskRunS: Double,
       gcS: Double, shuffleReadMb: Double, shuffleWriteMb: Double,
       spillMb: Double, driverOnlyS: Double, artifactS: Double,
       broadcastJoins: Int, sortMergeJoins: Int, shuffledHashJoins: Int,
-      exchanges: Int, out: String) {
+      exchanges: Int, out: String, plans: Seq[String] = Nil) {
     override def toString: String =
       productElementNames.zip(productIterator).drop(4).collect {
         case (k, v: Double) => f"$k=$v%.3f"
@@ -108,13 +111,14 @@ object Measure {
 
   /** Library entry point: runs every resolved target (see [[resolve]]) on
     * every dir, `reps` times, in `spark`, and returns every record. Conf
-    * overrides hold for the run only. Throws on a failed setup or rep;
-    * never stops the session. */
+    * overrides hold for the run only; `keepPlans` fills each record's
+    * `plans`. Throws on a failed setup or rep; never stops the session. */
   def run(spark: SparkSession, plan: Seq[(String, Preset)], dirs: Seq[String],
-      reps: Int, overrides: Seq[(String, String)] = Nil): Seq[Record] = {
+      reps: Int, overrides: Seq[(String, String)] = Nil,
+      keepPlans: Boolean = false): Seq[Record] = {
     val prev = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
     overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    val meter = new Meter(spark.sparkContext)
+    val meter = new Meter(spark.sparkContext, keepPlans)
     spark.sparkContext.addSparkListener(meter)
     spark.listenerManager.register(meter)
     try for (d <- dirs; (t, p) <- plan; r <- runTarget(spark, meter, t, p, d, reps)) yield r
@@ -182,7 +186,7 @@ object Measure {
   /** The listener side of the record, as one `SparkListener` and one
     * `QueryExecutionListener` that [[run]] attaches. The per-leg totals are
     * written on the bus thread and read under `this` after [[drain]]. */
-  private final class Meter(sc: SparkContext)
+  private final class Meter(sc: SparkContext, keepPlans: Boolean)
       extends SparkListener with QueryExecutionListener with AdaptiveSparkPlanHelper {
     private val MarkerKey = "graft.measure.marker"
     private val planKinds = Seq(classOf[BroadcastHashJoinExec], classOf[SortMergeJoinExec],
@@ -197,6 +201,7 @@ object Measure {
     private val taskSums = new Array[Long](taskMetrics.size)
     private val markerStages = mutable.Set.empty[Int]
     private val taskSpans = mutable.ArrayBuffer.empty[(Long, Long)]
+    private val plans = mutable.ArrayBuffer.empty[String]
 
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       starts += 1
@@ -221,8 +226,11 @@ object Measure {
     override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = {
       // walks into AQE subtrees and query stages, whose `children` are Nil
       val nodes = mapPlans(qe.executedPlan)(identity)
-      synchronized(planKinds.indices.foreach(i =>
-        planCounts(i) += nodes.count(planKinds(i).isInstance)))
+      val plan = if (keepPlans) Some(s"$fn: ${qe.explainString(FormattedMode)}") else None
+      synchronized {
+        planKinds.indices.foreach(i => planCounts(i) += nodes.count(planKinds(i).isInstance))
+        plans ++= plan
+      }
     }
 
     override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
@@ -252,7 +260,7 @@ object Measure {
         synchronized {
           starts = 0; ends = 0; markerTasks = 0; jobs = 0
           java.util.Arrays.fill(planCounts, 0); java.util.Arrays.fill(taskSums, 0L)
-          markerStages.clear(); taskSpans.clear()
+          markerStages.clear(); taskSpans.clear(); plans.clear()
         }
         val arts0 = IndexCache.buildSeconds.values.sum
         val ms0 = System.currentTimeMillis()
@@ -273,7 +281,8 @@ object Measure {
           val Array(cpuNs, runMs, gcMs, readB, writeB, spillB) = taskSums
           into += Record(t, d, rep, name, (ms1 - ms0) / 1e3, jobs, taskSpans.size, cpuNs / 1e9,
             runMs / 1e3, gcMs / 1e3, readB / mb, writeB / mb, spillB / mb,
-            math.max(0L, ms1 - ms0 - busy) / 1e3, artifactS, bhj, smj, shj, exch, out)
+            math.max(0L, ms1 - ms0 - busy) / 1e3, artifactS, bhj, smj, shj, exch, out,
+            plans.toList)
         }
         println(s"[measure] ${into.last}")
         a

@@ -24,15 +24,15 @@ object Multimodal {
     def decode(payload: Array[Byte]): Seq[Array[Byte]]
   }
 
-  /** STUB decoder: fixed-width byte slicing standing in for a real codec.
-    * Deterministic by construction (pure function of the payload), so
-    * tests and verify runs are stable.
-    */
   /** The default frame width, shared by [[FixedWidthFakeDecoder]] and
     * [[mediaMetadata]] so the catalog scan's n_frames and the decode
     * path can never silently disagree. */
   val DefaultFrameBytes = 64
 
+  /** STUB decoder: fixed-width byte slicing standing in for a real codec.
+    * Deterministic by construction (pure function of the payload), so
+    * tests and verify runs are stable.
+    */
   final class FixedWidthFakeDecoder(frameBytes: Int = DefaultFrameBytes)
       extends FrameDecoder {
     def decode(payload: Array[Byte]): Seq[Array[Byte]] =

@@ -80,8 +80,7 @@ object Admission {
     import s.implicits._
     // eval-bounded artifacts persist per JVM (IndexCache): bench reps,
     // the stream and the batch composition share ONE build
-    val p = IndexCache.resolve(
-      s"admeval|${IndexCache.dataKey(corpusDir)}", "admeval") { path =>
+    val p = IndexCache.artifact("admeval", corpusDir) { path =>
       val evalDocs = Tables.documents(s, corpusDir)
         .filter(isEval($"doc_id")).select($"doc_id", $"text")
       val sh = TextOps.shingleDocs(evalDocs).persist()
@@ -113,8 +112,7 @@ object Admission {
   private[graft] def storedHashesCached(s: SparkSession,
       corpusDir: String): DataFrame = {
     import s.implicits._
-    val p = IndexCache.resolve(
-      s"admhash|${IndexCache.dataKey(corpusDir)}", "admhash") { path =>
+    val p = IndexCache.artifact("admhash", corpusDir) { path =>
       Tables.documents(s, corpusDir).filter($"doc_id" % 10 < 8)
         .select($"doc_id", md5(coalesce($"text", lit(""))).as("h"))
         .write.mode("overwrite").parquet(path)
@@ -360,8 +358,7 @@ object Admission {
     * like bm25RawCached for q159; lifecycle queries CLONE it instead of
     * re-materializing six store families per run. */
   private[graft] def seededStateCached(s: SparkSession, d: String): String =
-    IndexCache.resolve(
-      s"admstate|${IndexCache.dataKey(d)}", "admstate") { path =>
+    IndexCache.artifact("admstate", d) { path =>
       seedState(s, d, path)
     }
 

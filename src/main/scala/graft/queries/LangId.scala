@@ -140,10 +140,6 @@ object LangId {
       stats.toDF("lang", "prior_fp", "unseen_fp"))
   }
 
-  /** The model over dataset `d`'s stored split (doc_id % 10 < 8),
-    * trained once per JVM via [[IndexCache]] (bigramLmCached's pattern)
-    * — bench sweeps and the streaming gate share one training run and
-    * pay only the scoring leg. */
   /** Memoized NbModel instances per (Spark application, artifact path),
     * so the lazy [[NbModel.compiled]] broadcast is built once per JVM per
     * artifact (a fresh instance per call would re-collect + re-broadcast
@@ -156,8 +152,7 @@ object LangId {
     s"${s.sparkContext.applicationId}|$path"
 
   private def langIdArtifact(s: SparkSession, d: String): String =
-    IndexCache.resolve(
-      s"langid|${IndexCache.dataKey(d)}", "langid") { path =>
+    IndexCache.artifact("langid", d) { path =>
       import s.implicits._
       val training = Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism)
@@ -201,6 +196,10 @@ object LangId {
       m.stats.write.mode("overwrite").parquet(s"$path/stats")
     }
 
+  /** The model over dataset `d`'s stored split (doc_id % 10 < 8),
+    * trained once per JVM via [[IndexCache]] (bigramLmCached's pattern)
+    * — bench sweeps and the streaming gate share one training run and
+    * pay only the scoring leg. */
   private[graft] def langIdModelCached(s: SparkSession, d: String): NbModel = {
     val p = langIdArtifact(s, d)
     modelInstances.computeIfAbsent(modelKey(s, p), _ =>
@@ -496,8 +495,7 @@ object LangId {
     * battery standing in for the reference corpus as the label source.
     * One training run per JVM (IndexCache). */
   private[graft] def qualityModelCached(s: SparkSession, d: String): NbModel = {
-    val p = IndexCache.resolve(
-      s"qualnb|${IndexCache.dataKey(d)}", "qualnb") { path =>
+    val p = IndexCache.artifact("qualnb", d) { path =>
       import s.implicits._
       val train = Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism)
@@ -514,18 +512,6 @@ object LangId {
       NbModel(s.read.parquet(s"$p/weights"), s.read.parquet(s"$p/stats")))
   }
 
-  /** Q102 — model-based quality scoring (GPT-3 Appendix A / LLaMA's
-    * quality-classifier pass): the [[qualityModelCached]] binary NB,
-    * applied to the held-out split, emitting each document's rule label,
-    * the classifier's verdict and its fixed-point keep-margin
-    * (s_keep − s_drop), most-confidently-quality first — the ranking a
-    * pipeline thresholds or importance-samples over (q90's DSIR is the
-    * unigram-likelihood sibling of the same idea). The margin is exact
-    * long arithmetic end-to-end; prediction is margin > 0 (a zero
-    * margin falls to 'drop', the argmax lang-asc tie-break). Scale
-    * shape: q100's — rule labeling and scoring are scan-local, the
-    * model is vocabulary-bounded and broadcast.
-    */
   /** q102's full weak-supervised NB scoring pipeline as a shared oracle
     * prelude (rule labeling, training, fixed-point scoring, the per-doc
     * keep/drop margin in `piv`, labels in `lbl`) — q102 ranks it, q129
@@ -635,6 +621,18 @@ object LangId {
         ($"s_keep" - $"s_drop").as("margin_fp"))
   }
 
+  /** Q102 — model-based quality scoring (GPT-3 Appendix A / LLaMA's
+    * quality-classifier pass): the [[qualityModelCached]] binary NB,
+    * applied to the held-out split, emitting each document's rule label,
+    * the classifier's verdict and its fixed-point keep-margin
+    * (s_keep − s_drop), most-confidently-quality first — the ranking a
+    * pipeline thresholds or importance-samples over (q90's DSIR is the
+    * unigram-likelihood sibling of the same idea). The margin is exact
+    * long arithmetic end-to-end; prediction is margin > 0 (a zero
+    * margin falls to 'drop', the argmax lang-asc tie-break). Scale
+    * shape: q100's — rule labeling and scoring are scan-local, the
+    * model is vocabulary-bounded and broadcast.
+    */
   private val q102 = Q(
     fn = (s, d) => {
       import s.implicits._
@@ -697,31 +695,6 @@ object LangId {
       GROUP BY logodds_bin
       ORDER BY logodds_bin"""))
 
-  /** Q139 — windowed code-switch detection: document-level language ID
-    * (q100) misses MIXED-language documents — boilerplate in one
-    * language wrapping content in another, quoted passages, machine-
-    * concatenated crawls — which pollute monolingual training splits
-    * with a label that is only majority-true. The standard cheap
-    * detector re-runs the trained classifier per WINDOW: each held-out
-    * document is chunked into fixed 16-word windows (non-overlapping;
-    * word-split then space-rejoin reproduces exact substrings), every
-    * chunk is scored under q100's SHARED NbScore model artifact, and
-    * the per-document summary (chunk count, distinct predicted
-    * languages, dominant language by chunk votes with a deterministic
-    * (votes desc, lang asc) tie-break, adjacent-chunk switch count) is
-    * emitted per doc. n_langs ≥ 2 / n_switches > 0 are the downstream
-    * filter's levers; the full summary ships so the query is a
-    * deterministic, hash-checkable corpus report rather than a
-    * threshold choice.
-    *
-    * Scale shape: chunk scoring is the SAME scan-local kernel pass as
-    * q100 (chunks ride as posexploded pseudo-docs keyed doc_id·2²⁰+ci —
-    * zero joins, zero model shuffles, cost ∝ corpus code units ×
-    * |langs|); the two per-doc aggregations (lag-window switch count,
-    * vote argmax) shuffle one row per CHUNK, map-side combined — no
-    * corpus text moves. Exactness: chunk scores are q100's exact
-    * fixed-point longs; every output column is an integer or a label.
-    */
   /** q139's core, shared verbatim with the streaming ingest gate
     * ([[graft.streaming.Pipeline.runCodeSwitchGateStream]]) so a
     * document summarizes identically in stream and batch: (doc_id,
@@ -776,6 +749,31 @@ object LangId {
         $"n_switches")
   }
 
+  /** Q139 — windowed code-switch detection: document-level language ID
+    * (q100) misses MIXED-language documents — boilerplate in one
+    * language wrapping content in another, quoted passages, machine-
+    * concatenated crawls — which pollute monolingual training splits
+    * with a label that is only majority-true. The standard cheap
+    * detector re-runs the trained classifier per WINDOW: each held-out
+    * document is chunked into fixed 16-word windows (non-overlapping;
+    * word-split then space-rejoin reproduces exact substrings), every
+    * chunk is scored under q100's SHARED NbScore model artifact, and
+    * the per-document summary (chunk count, distinct predicted
+    * languages, dominant language by chunk votes with a deterministic
+    * (votes desc, lang asc) tie-break, adjacent-chunk switch count) is
+    * emitted per doc. n_langs ≥ 2 / n_switches > 0 are the downstream
+    * filter's levers; the full summary ships so the query is a
+    * deterministic, hash-checkable corpus report rather than a
+    * threshold choice.
+    *
+    * Scale shape: chunk scoring is the SAME scan-local kernel pass as
+    * q100 (chunks ride as posexploded pseudo-docs keyed doc_id·2²⁰+ci —
+    * zero joins, zero model shuffles, cost ∝ corpus code units ×
+    * |langs|); the two per-doc aggregations (lag-window switch count,
+    * vote argmax) shuffle one row per CHUNK, map-side combined — no
+    * corpus text moves. Exactness: chunk scores are q100's exact
+    * fixed-point longs; every output column is an integer or a label.
+    */
   private val q139 = Q(
     fn = (s, d) => {
       import s.implicits._

@@ -243,8 +243,7 @@ object Relational {
   private val q105 = Q(
     fn = (s, d) => {
       import s.implicits._
-      val p = IndexCache.resolve(
-        s"zorder_events|${IndexCache.dataKey(d)}", "zorder") { path =>
+      val p = IndexCache.artifact("zorder", d) { path =>
         // 64 files: ~1.5k rows a file at sf0.1, so a box a few percent
         // of the plane wide still skips most of the store
         graft.sinks.Sinks.writeZOrdered(
@@ -320,18 +319,6 @@ object Relational {
              n = 0 AS passed
       FROM v ORDER BY "check", "column""""))
 
-  /** Q109 — ordered funnel analysis over the event stream: how many
-    * users progress view → click → purchase IN ORDER (each stage's
-    * event strictly after the previous stage's first occurrence) — the
-    * classic conversion-funnel workload, absent from the inventory
-    * until now (q35 sessionizes, q41 intersects cohorts; neither is
-    * order-aware). Three stage aggregates, each one shuffle on
-    * user_id: stage k's candidates join stage k−1's first-times and
-    * keep only later events, so the funnel's ORDER constraint is an
-    * equi-join + filter, never a per-user sort or UDF loop. The
-    * summary attaches each stage's conversion vs the previous stage
-    * with one 4-row window.
-    */
   /** The funnel's three stage tables, shared by q109 (counts) and q111
     * (latency distribution): per user, first view; first click after
     * it; first purchase after that. Null users excluded up front:
@@ -430,6 +417,18 @@ object Relational {
                AS pct_of_prev
       FROM stages ORDER BY stage_idx"""))
 
+  /** Q109 — ordered funnel analysis over the event stream: how many
+    * users progress view → click → purchase IN ORDER (each stage's
+    * event strictly after the previous stage's first occurrence) — the
+    * classic conversion-funnel workload, absent from the inventory
+    * until now (q35 sessionizes, q41 intersects cohorts; neither is
+    * order-aware). Three stage aggregates, each one shuffle on
+    * user_id: stage k's candidates join stage k−1's first-times and
+    * keep only later events, so the funnel's ORDER constraint is an
+    * equi-join + filter, never a per-user sort or UDF loop. The
+    * summary attaches each stage's conversion vs the previous stage
+    * with one 4-row window.
+    */
   private val q109 = Q(
     fn = (s, d) => {
       import s.implicits._

@@ -127,11 +127,6 @@ object TextOps {
       .orderBy($"i", $"j")
   }
 
-  /** Near-dup output oracle, shared by q18 (exact) and q19 (MinHash-LSH):
-    * the LSH variant is verified-exact on its candidates and its recall at
-    * the data's jaccard levels (all true pairs >= 0.8) is ~1-1e-4, so both
-    * produce the true pair set; verified equal at sf0.01 via local_verify.
-    */
   /** The word-3-gram shingle explode shared by the near-dup oracles
     * (q18/q19's pair select and q178's threshold sweep — one extracted
     * string, the replays cannot drift). */
@@ -146,6 +141,11 @@ object TextOps {
         SELECT doc_id, unnest(sh) AS s, len(sh) AS n FROM shingled
       )"""
 
+  /** Near-dup output oracle, shared by q18 (exact) and q19 (MinHash-LSH):
+    * the LSH variant is verified-exact on its candidates and its recall at
+    * the data's jaccard levels (all true pairs >= 0.8) is ~1-1e-4, so both
+    * produce the true pair set; verified equal at sf0.01 via local_verify.
+    */
   private val nearDupOracle = s"""$nearDupShingleCtes
       SELECT a.doc_id AS i, b.doc_id AS j,
              any_value(a.n) AS n_i, any_value(b.n) AS n_j,
@@ -176,27 +176,6 @@ object TextOps {
       GROUP BY md5(text)
       ORDER BY keep_id"""))
 
-  /** Q18 — exact near-duplicate pairs by word-3-gram Jaccard >= 0.5,
-    * prefix-filtered (brief's "n-gram Jaccard" dedup).
-    *
-    * Candidate generation: shingles are ranked per document by global
-    * document frequency ascending (rare first); only the first
-    * n - ceil(0.5*n) + 1 shingles (the prefix) join. Any pair with
-    * jaccard >= t shares >= ceil(t*n) shingles, hence shares a prefix
-    * shingle under a common global order — lossless, while hot shingles
-    * (df in the thousands) sit at the end of every ranking and never
-    * generate candidates. A length filter (t*n_i <= n_j) prunes further,
-    * and the PPJoin position filter prunes per shared shingle: a pair at
-    * jaccard >= t needs overlap alpha = ceil(t/(1+t)*(n_i+n_j)); the first
-    * shingle the pair shares under the global order bounds the achievable
-    * overlap by min(n_i - rk_i, n_j - rk_j) + 1 (every later common
-    * shingle sits after it in both rankings), and that first shared
-    * shingle is provably inside both prefixes, so keeping a pair iff ANY
-    * shared prefix shingle passes the bound is lossless. alpha is computed
-    * in integers (t = 0.5 -> floor((n_i+n_j+2)/3)), so no float rounding
-    * can over-prune. The final answer is exact, so the naive all-pairs SQL
-    * is a valid oracle.
-    */
   /** q18's full pipeline as a reusable building block: the verified exact
     * near-duplicate pair set at `t` (also the edge list for q47's cluster
     * construction). Result is materialized (localCheckpoint) with the
@@ -297,6 +276,27 @@ object TextOps {
       }
   }
 
+  /** Q18 — exact near-duplicate pairs by word-3-gram Jaccard >= 0.5,
+    * prefix-filtered (brief's "n-gram Jaccard" dedup).
+    *
+    * Candidate generation: shingles are ranked per document by global
+    * document frequency ascending (rare first); only the first
+    * n - ceil(0.5*n) + 1 shingles (the prefix) join. Any pair with
+    * jaccard >= t shares >= ceil(t*n) shingles, hence shares a prefix
+    * shingle under a common global order — lossless, while hot shingles
+    * (df in the thousands) sit at the end of every ranking and never
+    * generate candidates. A length filter (t*n_i <= n_j) prunes further,
+    * and the PPJoin position filter prunes per shared shingle: a pair at
+    * jaccard >= t needs overlap alpha = ceil(t/(1+t)*(n_i+n_j)); the first
+    * shingle the pair shares under the global order bounds the achievable
+    * overlap by min(n_i - rk_i, n_j - rk_j) + 1 (every later common
+    * shingle sits after it in both rankings), and that first shared
+    * shingle is provably inside both prefixes, so keeping a pair iff ANY
+    * shared prefix shingle passes the bound is lossless. alpha is computed
+    * in integers (t = 0.5 -> floor((n_i+n_j+2)/3)), so no float rounding
+    * can over-prune. The final answer is exact, so the naive all-pairs SQL
+    * is a valid oracle.
+    */
   private val q18 = Q(
     fn = (s, d) => nearDupPairs(s, d),
     oracle = Some(nearDupOracle))
@@ -362,7 +362,7 @@ object TextOps {
           // index leg before the equi-join's exchange (guide §2.3).
           .filter($"e.df" > 1)
           .select($"doc_id", $"n", ($"p0" + 1).as("rk"), $"e.h".as("h"))
-          .transform(ckpt)
+          .localCheckpoint()
         // alpha = ceil(0.8·n) computed EXACTLY in integers as
         // (4n + 4) div 5 — double ceil(n*0.8) could round across an
         // integer for other thresholds and silently over-prune (q18's
@@ -393,7 +393,7 @@ object TextOps {
             $"n_j".cast("long").as("n_j"), $"common".cast("long").as("common"),
             $"containment")
           .orderBy($"i", $"j")
-          .transform(ckpt)
+          .localCheckpoint()
       } finally docs.unpersist()
     },
     oracle = Some("""
@@ -503,8 +503,7 @@ object TextOps {
     * document-frequency shuffle — the right edge generator at 100 TB.
     */
   private def dedupClusterArtifact(s: SparkSession, d: String): String =
-    IndexCache.resolve(
-      s"ccluster|${IndexCache.dataKey(d)}", "ccluster") { p =>
+    IndexCache.artifact("ccluster", d) { p =>
       import s.implicits._
       // the verified pair set persists ALONGSIDE the labeling: star
       // edges are connectivity-equivalent for APPENDS (adding edges
@@ -716,8 +715,7 @@ object TextOps {
     * `doc_id % 10 < 8` split — the same deterministic stored/arriving
     * convention as q82/q95. */
   private[queries] def storedClustersCached(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(IndexCache.resolve(
-      s"cclusterstored|${IndexCache.dataKey(d)}", "cclusterstored") { p =>
+    s.read.parquet(IndexCache.artifact("cclusterstored", d) { p =>
       import s.implicits._
       val stored = shingleDocs(Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism)
@@ -1160,16 +1158,6 @@ object TextOps {
              CAST(floor(sqrt(CAST(n_tokens AS DOUBLE)) / tot_sqrt * 1000000.0) AS BIGINT) AS quota_ppm
       FROM per, tot ORDER BY source"""))
 
-  /** Q94 — Gopher quality rules (Rae et al. 2021, Appendix A — the
-    * published word-level heuristic battery; complements q22's
-    * form-based composite and q48's repetition filter): word-count
-    * bounds, mean-word-length bounds, alphabetic-word fraction,
-    * symbol-to-word ratio, minimum stop-word count. Every intermediate
-    * is an exact integer (word counts, summed word lengths), so the two
-    * derived doubles are single divisions both engines compute
-    * bit-identically. One corpus scan, zero shuffle, codegen'd
-    * higher-order array functions.
-    */
   /** The rule battery itself, shared verbatim by batch q94 and the
     * streaming ingest gate ([[graft.streaming.Pipeline.runGopherGateStream]])
     * so a document is judged identically in stream and batch. */
@@ -1201,6 +1189,16 @@ object TextOps {
         $"n_stop", $"n_symbols", $"keep")
   }
 
+  /** Q94 — Gopher quality rules (Rae et al. 2021, Appendix A — the
+    * published word-level heuristic battery; complements q22's
+    * form-based composite and q48's repetition filter): word-count
+    * bounds, mean-word-length bounds, alphabetic-word fraction,
+    * symbol-to-word ratio, minimum stop-word count. Every intermediate
+    * is an exact integer (word counts, summed word lengths), so the two
+    * derived doubles are single divisions both engines compute
+    * bit-identically. One corpus scan, zero shuffle, codegen'd
+    * higher-order array functions.
+    */
   private val q94 = Q(
     fn = (s, d) => {
       import s.implicits._
@@ -1230,17 +1228,6 @@ object TextOps {
       FROM m
       ORDER BY doc_id"""))
 
-  /** Q19 — MinHash + LSH near-duplicate pairs (brief's scale path for
-    * near-dup at 100 TB: no global df pass, candidates only within LSH
-    * buckets).
-    *
-    * 64 MinHash permutations simulated as min over xxhash64(perm, shingle);
-    * 16 bands x 4 rows; a pair becomes a candidate iff some band hashes
-    * equal. Candidates are then verified with exact Jaccard (>= 0.5), so
-    * precision is 1 and recall at the corpus's near-dup similarity levels
-    * (>= 0.8) is 1 - (1 - 0.8^4)^16 ≈ 0.9998 — the output equals Q18's
-    * exact pair set on the test corpora (asserted in TextOpsSpec).
-    */
   /** 16-band × 4-row MinHash banding of a shingled frame:
     * (doc_id, band, bh). ONE set of expressions shared by q19's
     * within-corpus LSH, the [[buildMinHashIndex]] builder and
@@ -1300,6 +1287,17 @@ object TextOps {
       verifyPairs(cand, docs, 0.5).localCheckpoint()
   }
 
+  /** Q19 — MinHash + LSH near-duplicate pairs (brief's scale path for
+    * near-dup at 100 TB: no global df pass, candidates only within LSH
+    * buckets).
+    *
+    * 64 MinHash permutations simulated as min over xxhash64(perm, shingle);
+    * 16 bands x 4 rows; a pair becomes a candidate iff some band hashes
+    * equal. Candidates are then verified with exact Jaccard (>= 0.5), so
+    * precision is 1 and recall at the corpus's near-dup similarity levels
+    * (>= 0.8) is 1 - (1 - 0.8^4)^16 ≈ 0.9998 — the output equals Q18's
+    * exact pair set on the test corpora (asserted in TextOpsSpec).
+    */
   private val q19 = Q(
     fn = (s, d) => nearDupPairsLsh(s, d),
     oracle = Some(nearDupOracle))
@@ -1448,8 +1446,7 @@ object TextOps {
     * per-snapshot serving cost. Build is deterministic in the dataset
     * dir, so the cache can never serve a wrong index within a JVM. */
   private[graft] def minHashIndexCached(s: SparkSession, d: String): MinHashIndex =
-    loadMinHashIndex(s, IndexCache.resolve(
-      "minhash|" + IndexCache.dataKey(d), "minhash") { p =>
+    loadMinHashIndex(s, IndexCache.artifact("minhash", d) { p =>
       import s.implicits._
       // persist: the stored-side shingles feed both index tables (bands
       // derive from them) — built once, released after the save
@@ -1867,8 +1864,7 @@ object TextOps {
     * oracle) are unchanged. The artifact is vocabulary-sized. */
   private def bpeWordCountsCached(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val p = IndexCache.resolve(
-      s"bpewc|${IndexCache.dataKey(d)}", "bpewc") { path =>
+    val p = IndexCache.artifact("bpewc", d) { path =>
       Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism)
         .select(($"doc_id" % 10 < 8).as("stored"),
@@ -1910,8 +1906,7 @@ object TextOps {
   private def bpeMergesPairPath(s: SparkSession, d: String,
       nMerges: Int): String = {
     import s.implicits._
-    IndexCache.resolve(
-      s"bpemergespair|${IndexCache.dataKey(d)}|$nMerges", "bpemerges") { path =>
+    IndexCache.artifact("bpemerges", d, nMerges) { path =>
       val wc = bpeWordCountsCached(s, d)
       val maxV = s.conf.get("graft.bpe.driverVocabMax", "2000000").toLong
       val (m1, m2) = if (wc.count() <= maxV) {
@@ -2730,19 +2725,6 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       FROM ranked JOIN q USING (lang, source)
       ORDER BY doc_id"""))
 
-  /** Q46 — benchmark decontamination: training documents that share ≥ 8
-    * word-3-gram shingles with ANY held-out (test-split) document, with
-    * the shared-shingle count. The standard pre-training hygiene pass:
-    * eval data leaking into train skews benchmarks, so overlap is flagged
-    * before training. Split assignment is q45's md5-nibble hash.
-    *
-    * Shape at scale: explode the (already distinct) shingle-hash arrays,
-    * inner-join train-side shingles against the distinct test-side shingle
-    * set on the 8-byte hash, count per train doc — one shuffle keyed by
-    * shingle hash (hot shingles spread across reducers), one count-by-doc.
-    * No pairwise work at all: overlap is against the test SET, not per
-    * test doc.
-    */
   /** Shared decontamination core: for every TRAIN document that shares at
     * least one word-3-gram shingle with the held-out test split, its
     * total shingle count `n` and distinct shared count `n_shared`.
@@ -2752,9 +2734,8 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * corpus (and thus the test shingle set) grows, while the fraction
     * measures how much of THIS doc is covered by eval data, which is the
     * scale-stable leakage signal.
-    */
-  /** (doc_id, n, n_shared) per train-split document sharing ≥ 1 distinct
-    * shingle with the test split; `keepZeroOverlap = true` additionally
+    *
+    * `keepZeroOverlap = true` additionally
     * returns every train doc (n > 0) with n_shared = 0 — q46 thresholds
     * the former, q89 grades the latter, and both ride ONE pipeline so
     * the decontamination criterion can never silently diverge between
@@ -2786,6 +2767,19 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       } finally docs.unpersist()
   }
 
+  /** Q46 — benchmark decontamination: training documents that share ≥ 8
+    * word-3-gram shingles with ANY held-out (test-split) document, with
+    * the shared-shingle count. The standard pre-training hygiene pass:
+    * eval data leaking into train skews benchmarks, so overlap is flagged
+    * before training. Split assignment is q45's md5-nibble hash.
+    *
+    * Shape at scale: explode the (already distinct) shingle-hash arrays,
+    * inner-join train-side shingles against the distinct test-side shingle
+    * set on the 8-byte hash, count per train doc — one shuffle keyed by
+    * shingle hash (hot shingles spread across reducers), one count-by-doc.
+    * No pairwise work at all: overlap is against the test SET, not per
+    * test doc.
+    */
   private val q46 = Q(
     fn = (s, d) => {
       import s.implicits._
@@ -3021,21 +3015,6 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       FROM freq f JOIN grams g USING (doc_id)
       ORDER BY f.doc_id"""))
 
-  /** Q49 — stratified deterministic sampling (domain mixing): each
-    * language gets a target retention rate from a mixing table (the
-    * knob a 100 TB pipeline turns to re-weight low-resource languages),
-    * and a document survives iff its content-hash bucket falls under its
-    * language's rate. Sampling is a pure function of doc_id (md5 bucket
-    * in [0, 256)), so the sample is reproducible run-to-run, engine-to-
-    * engine — no rand(), no seed plumbing — and survivors carry the
-    * inverse-probability `weight` for unbiased downstream aggregation.
-    *
-    * Shape for 100 TB: the mixing table joins as a broadcast (5 rows);
-    * the bucket is computed scan-side, so the filter prunes before any
-    * shuffle. Rates are k/256 (two md5 nibbles) — fine-grained enough
-    * for mixing ratios while staying exactly portable SQL (no float
-    * thresholds, no engine hash functions).
-    */
   /** q49's default mixing table: per-language keep_n of 256 buckets. */
   private[graft] val defaultMix: Seq[(String, Int)] =
     Seq(("en", 128), ("fr", 192), ("de", 192), ("es", 224), ("zh", 256))
@@ -3059,6 +3038,21 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       .drop("bucket", "keep_n")
   }
 
+  /** Q49 — stratified deterministic sampling (domain mixing): each
+    * language gets a target retention rate from a mixing table (the
+    * knob a 100 TB pipeline turns to re-weight low-resource languages),
+    * and a document survives iff its content-hash bucket falls under its
+    * language's rate. Sampling is a pure function of doc_id (md5 bucket
+    * in [0, 256)), so the sample is reproducible run-to-run, engine-to-
+    * engine — no rand(), no seed plumbing — and survivors carry the
+    * inverse-probability `weight` for unbiased downstream aggregation.
+    *
+    * Shape for 100 TB: the mixing table joins as a broadcast (5 rows);
+    * the bucket is computed scan-side, so the filter prunes before any
+    * shuffle. Rates are k/256 (two md5 nibbles) — fine-grained enough
+    * for mixing ratios while staying exactly portable SQL (no float
+    * thresholds, no engine hash functions).
+    */
   private val q49 = Q(
     fn = (s, d) => {
       import s.implicits._
@@ -4176,43 +4170,6 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       FROM wide CROSS JOIN tot
       ORDER BY drift DESC, token"""))
 
-  /** Q84 — BM25 top-k retrieval ("more-like-this" search over the
-    * corpus): every query document (doc_id % 37 = 0 under the absolute
-    * [[QuerySetCap]] bound) retrieves its 5 highest-scoring other documents
-    * under BM25 (Robertson–Walker, k1 = 1.2, b = 0.75, Lucene's
-    * ln(1 + (N − df + ½)/(df + ½)) idf). The textual counterpart of the
-    * ANN family (q25/q39): q71 builds the inverted index, this is the
-    * scoring probe over it.
-    *
-    * Exactness under the hash gate: a raw double BM25 sum is
-    * order-dependent (float addition is non-associative, and Spark's
-    * partial aggs + DuckDB's fold would disagree in the last ulps), so
-    * per-(term, doc) weights are quantized ONCE to fixed-point longs —
-    * floor(idf·10⁶) × floor(tf_factor·10⁶) — and the per-candidate sum
-    * is exact long arithmetic, order-free on both engines. The only
-    * libm call (ln) sits inside a floor(·10⁶) on a ~vocabulary-sized
-    * frame, where a cross-engine 1-ulp disagreement flips the result
-    * only if ln lands within an ulp of an integer/10⁶ boundary —
-    * verified empirically at sf0.01 and sf0.1 (q51's argument, made
-    * robust by integerization). Every other step is IEEE arithmetic on
-    * identical operands (avgdl is exact-long-sum / count), so it is
-    * bit-identical across engines by construction.
-    *
-    * Shape for 100 TB: tf / doc-length are map-side-combined scan aggs;
-    * df and idf are vocabulary-sized; the query set (bounded by
-    * contract — a request set, never a second corpus) is collected and
-    * broadcast as an inverted term index into ONE scan-local bounded
-    * aggregate over the per-doc weight store
-    * ([[graft.functions.expressions.Bm25ScanTopK]] — q78's FAISS scan
-    * shape applied to text): each task scores its documents against the
-    * touched queries in a primitive loop and keeps per-query 5-entry
-    * heaps, so the only exchange carries one ≤ nq·5 partial per task.
-    * The first draft's broadcast candidate equi-join materialized
-    * ~nq·n rows through a shuffle hash agg under this corpus's dense
-    * vocabulary and died allocating pages at the x10 synthetic scale
-    * (SCALE.md round 7) — same arithmetic, selection and output, wrong
-    * exchange shape.
-    */
   /** The BM25 "index": per-document aligned (term hash, fixed-point
     * BM25 weight) arrays over `docs` — everything document-side of the
     * scoring (tf, doc length, idf, the k1/b saturation) is precomputed
@@ -4248,8 +4205,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * sweeps and the streaming lookup twin share one build and pay only
     * the scan. */
   private[graft] def bm25StoreCached(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(IndexCache.resolve(
-      "bm25|" + IndexCache.dataKey(d), "bm25") { p =>
+    s.read.parquet(IndexCache.artifact("bm25", d) { p =>
       bm25WeightStore(Tables.documents(s, d)).write.mode("overwrite").parquet(p)
     })
 
@@ -4306,27 +4262,6 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       .sortBy(_._1)
   }
 
-  /** Q163 — MAX-PASSAGE retrieval: BM25 over fixed-size CHUNKS with
-    * document-level max pooling — the long-document retrieval shape
-    * (a 100-page manual should rank by its best passage, not by its
-    * diluted whole-document term statistics; RAG serving retrieves the
-    * passage, attribution needs the document). The corpus is chunked by
-    * q69's exact windowing (stride 24, width 32), each chunk keyed as a
-    * pseudo-document `cid = doc_id·100000 + chunk + 1` (> QuerySetCap,
-    * so the scan kernel's self-exclusion-by-id can never fire on a
-    * chunk; the +1 keeps doc 0's first chunk off id 0), the q84 scoring
-    * machinery runs UNCHANGED over the chunk store (one build via
-    * IndexCache, one Bm25ScanTopK scan per request set), top-20 chunks
-    * per query pool to their parent docs by MAX score, the query's own
-    * document drops, and the top-5 documents emit with their best
-    * chunk's id and score. Every step is deterministic exact/fixed-
-    * point arithmetic — the oracle replays chunking, scoring, pooling
-    * and ranking from scratch.
-    *
-    * Scale shape: the chunk store is ~len/24 rows per document of the
-    * same per-row width as q84's (the tokenize/weight passes are the
-    * same map-side aggs over more, shorter rows); serving is still ONE
-    * scan-local bounded-heap pass + an nq·20-bounded pool/rank. */
   /** q69's exact chunk windowing (stride 24, width 32) with each chunk
     * keyed as a pseudo-document `cid = doc_id·100000 + chunk + 1` —
     * shared by the max-passage family (q163 serve, q166 append). */
@@ -4367,19 +4302,19 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
   /** q163's chunk-keyed weight store over dataset `d`, per-JVM cached —
     * shared with the passage-level hybrid (Retrieval q168). */
   private[graft] def bm25ChunkStoreCached(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(IndexCache.resolve(
-      "bm25chunks|" + IndexCache.dataKey(d), "bm25chunks") { p =>
+    s.read.parquet(IndexCache.artifact("bm25chunks", d) { p =>
       bm25WeightStore(chunkedDocs(Tables.documents(s, d)
         .select(col("doc_id"), col("text"))))
         .write.mode("overwrite").parquet(p)
     })
 
-  private val q163 = Q(
-    fn = (s, d) =>
-      maxPassagePool(bm25TopK(bm25ChunkStoreCached(s, d), bm25QueryRows(s, d), 20)),
-    oracle = Some("""
+  /** The max-passage oracle of q163, q166 and q167: BM25 over the
+    * 32-word chunks, 24 words apart, of the documents `where` keeps; the
+    * request set is every `m`th document below `100 m`, and each request's
+    * top-20 chunks pool to its top-5 other documents. */
+  private def maxPassageOracle(where: String, m: Int): String = s"""
       WITH w0 AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
+        SELECT doc_id, string_split(text, ' ') AS w FROM documents$where
       ), ch AS (
         SELECT doc_id * 100000 + (start - 1) // 24 + 1 AS cid,
                array_to_string(w[start:start+31], ' ') AS ctext
@@ -4409,7 +4344,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       ), q AS (
         SELECT DISTINCT doc_id AS query_id, term FROM (
           SELECT doc_id, unnest(string_split(text, ' ')) AS term
-          FROM documents WHERE doc_id % 37 = 0 AND doc_id < 3700)
+          FROM documents WHERE doc_id % $m = 0 AND doc_id < ${m * 100})
       ), scored AS (
         SELECT q.query_id, wt.cid, CAST(SUM(w_fp) AS BIGINT) AS score_fp
         FROM q JOIN wt USING (term)
@@ -4436,7 +4371,33 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       )
       SELECT query_id, doc_id, best_chunk_cid, score_fp, rank
       FROM ranked WHERE rank <= 5
-      ORDER BY query_id, rank"""))
+      ORDER BY query_id, rank"""
+
+  /** Q163 — MAX-PASSAGE retrieval: BM25 over fixed-size CHUNKS with
+    * document-level max pooling — the long-document retrieval shape
+    * (a 100-page manual should rank by its best passage, not by its
+    * diluted whole-document term statistics; RAG serving retrieves the
+    * passage, attribution needs the document). The corpus is chunked by
+    * q69's exact windowing (stride 24, width 32), each chunk keyed as a
+    * pseudo-document `cid = doc_id·100000 + chunk + 1` (> QuerySetCap,
+    * so the scan kernel's self-exclusion-by-id can never fire on a
+    * chunk; the +1 keeps doc 0's first chunk off id 0), the q84 scoring
+    * machinery runs UNCHANGED over the chunk store (one build via
+    * IndexCache, one Bm25ScanTopK scan per request set), top-20 chunks
+    * per query pool to their parent docs by MAX score, the query's own
+    * document drops, and the top-5 documents emit with their best
+    * chunk's id and score. Every step is deterministic exact/fixed-
+    * point arithmetic — the oracle replays chunking, scoring, pooling
+    * and ranking from scratch.
+    *
+    * Scale shape: the chunk store is ~len/24 rows per document of the
+    * same per-row width as q84's (the tokenize/weight passes are the
+    * same map-side aggs over more, shorter rows); serving is still ONE
+    * scan-local bounded-heap pass + an nq·20-bounded pool/rank. */
+  private val q163 = Q(
+    fn = (s, d) =>
+      maxPassagePool(bm25TopK(bm25ChunkStoreCached(s, d), bm25QueryRows(s, d), 20)),
+    oracle = Some(maxPassageOracle("", 37)))
 
   /** Q166 — max-passage INDEX APPEND: the maintenance story for the
     * newest serving artifact (a RAG passage index absorbs today's
@@ -4459,80 +4420,11 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     fn = (s, d) => {
       import s.implicits._
       val docs = Tables.documents(s, d).select($"doc_id", $"text")
-      val p = IndexCache.resolve(
-        "bm25chunkraw|" + IndexCache.dataKey(d), "bm25chunkraw") { path =>
-        bm25RawPostings(chunkedDocs(docs.filter($"doc_id" % 10 < 8)))
-          .write.mode("overwrite").parquet(s"$path/postings")
-        val post = s.read.parquet(s"$path/postings")
-        bm25DfOf(post).write.mode("overwrite").parquet(s"$path/df")
-        val (n, sumLen) = bm25TotalsOf(post)
-        Seq((n, sumLen)).toDF("n", "sum_len")
-          .write.mode("overwrite").parquet(s"$path/totals")
-      }
-      val merged = appendToBm25Raw(loadBm25Raw(s, p),
+      val merged = appendToBm25Raw(bm25ChunkRawCached(s, d),
         chunkedDocs(docs.filter($"doc_id" % 10 >= 8)))
       maxPassagePool(bm25RawTopK(merged, bm25RawQueryRows(s, d), 20))
     },
-    oracle = Some("""
-      WITH w0 AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-      ), ch AS (
-        SELECT doc_id * 100000 + (start - 1) // 24 + 1 AS cid,
-               array_to_string(w[start:start+31], ' ') AS ctext
-        FROM (SELECT doc_id, w, unnest(generate_series(1, len(w), 24)) AS start
-              FROM w0)
-      ), t AS (
-        SELECT cid, unnest(string_split(ctext, ' ')) AS term FROM ch
-      ), tf AS (
-        SELECT cid, term, COUNT(*) AS tf FROM t GROUP BY cid, term
-      ), dlen AS (
-        SELECT cid, COUNT(*) AS len FROM t GROUP BY cid
-      ), df AS (
-        SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-      ), stats AS (
-        SELECT COUNT(*) AS n, CAST(SUM(len) AS DOUBLE) / COUNT(*) AS avgdl
-        FROM dlen
-      ), idf AS (
-        SELECT term,
-               CAST(FLOOR(LN((n - df + 0.5) / (df + 0.5) + 1.0) * 1e6) AS BIGINT) AS idf_fp,
-               avgdl
-        FROM df CROSS JOIN stats
-      ), wt AS (
-        SELECT tf.cid, tf.term,
-               idf_fp * CAST(FLOOR((tf * 2.2) /
-                 (tf + 1.2 * (0.25 + 0.75 * len / avgdl)) * 1e6) AS BIGINT) AS w_fp
-        FROM tf JOIN dlen USING (cid) JOIN idf USING (term)
-      ), q AS (
-        SELECT DISTINCT doc_id AS query_id, term FROM (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS term
-          FROM documents WHERE doc_id % 41 = 0 AND doc_id < 4100)
-      ), scored AS (
-        SELECT q.query_id, wt.cid, CAST(SUM(w_fp) AS BIGINT) AS score_fp
-        FROM q JOIN wt USING (term)
-        GROUP BY q.query_id, wt.cid
-      ), topch AS (
-        SELECT query_id, cid, score_fp FROM (
-          SELECT query_id, cid, score_fp,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY score_fp DESC, cid) AS rk
-          FROM scored)
-        WHERE rk <= 20
-      ), pooled AS (
-        SELECT query_id, doc_id, cid AS best_chunk_cid, score_fp FROM (
-          SELECT query_id, (cid - 1) // 100000 AS doc_id, cid, score_fp,
-                 ROW_NUMBER() OVER (PARTITION BY query_id, (cid - 1) // 100000
-                   ORDER BY score_fp DESC, cid) AS rn
-          FROM topch WHERE (cid - 1) // 100000 <> query_id)
-        WHERE rn = 1
-      ), ranked AS (
-        SELECT query_id, doc_id, best_chunk_cid, score_fp,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY score_fp DESC, doc_id) AS rank
-        FROM pooled
-      )
-      SELECT query_id, doc_id, best_chunk_cid, score_fp, rank
-      FROM ranked WHERE rank <= 5
-      ORDER BY query_id, rank"""))
+    oracle = Some(maxPassageOracle("", 41)))
 
   /** Q167 — max-passage index TAKEDOWN: q166's removal half, closing
     * the append × remove pair for the passage index. A takedown request
@@ -4551,17 +4443,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     fn = (s, d) => {
       import s.implicits._
       val docs = Tables.documents(s, d).select($"doc_id", $"text")
-      val p = IndexCache.resolve(
-        "bm25chunkraw|" + IndexCache.dataKey(d), "bm25chunkraw") { path =>
-        bm25RawPostings(chunkedDocs(docs.filter($"doc_id" % 10 < 8)))
-          .write.mode("overwrite").parquet(s"$path/postings")
-        val post = s.read.parquet(s"$path/postings")
-        bm25DfOf(post).write.mode("overwrite").parquet(s"$path/df")
-        val (n, sumLen) = bm25TotalsOf(post)
-        Seq((n, sumLen)).toDF("n", "sum_len")
-          .write.mode("overwrite").parquet(s"$path/totals")
-      }
-      val merged = appendToBm25Raw(loadBm25Raw(s, p),
+      val merged = appendToBm25Raw(bm25ChunkRawCached(s, d),
         chunkedDocs(docs.filter($"doc_id" % 10 >= 8)))
       // victim documents -> their chunk ids, read off the store itself
       val victimCids = merged.postings
@@ -4570,68 +4452,45 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       val pruned = removeFromBm25Raw(merged, victimCids)
       maxPassagePool(bm25RawTopK(pruned, bm25RawQueryRows(s, d), 20))
     },
-    oracle = Some("""
-      WITH w0 AS (
-        SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        WHERE doc_id % 7 <> 0
-      ), ch AS (
-        SELECT doc_id * 100000 + (start - 1) // 24 + 1 AS cid,
-               array_to_string(w[start:start+31], ' ') AS ctext
-        FROM (SELECT doc_id, w, unnest(generate_series(1, len(w), 24)) AS start
-              FROM w0)
-      ), t AS (
-        SELECT cid, unnest(string_split(ctext, ' ')) AS term FROM ch
-      ), tf AS (
-        SELECT cid, term, COUNT(*) AS tf FROM t GROUP BY cid, term
-      ), dlen AS (
-        SELECT cid, COUNT(*) AS len FROM t GROUP BY cid
-      ), df AS (
-        SELECT term, COUNT(*) AS df FROM tf GROUP BY term
-      ), stats AS (
-        SELECT COUNT(*) AS n, CAST(SUM(len) AS DOUBLE) / COUNT(*) AS avgdl
-        FROM dlen
-      ), idf AS (
-        SELECT term,
-               CAST(FLOOR(LN((n - df + 0.5) / (df + 0.5) + 1.0) * 1e6) AS BIGINT) AS idf_fp,
-               avgdl
-        FROM df CROSS JOIN stats
-      ), wt AS (
-        SELECT tf.cid, tf.term,
-               idf_fp * CAST(FLOOR((tf * 2.2) /
-                 (tf + 1.2 * (0.25 + 0.75 * len / avgdl)) * 1e6) AS BIGINT) AS w_fp
-        FROM tf JOIN dlen USING (cid) JOIN idf USING (term)
-      ), q AS (
-        SELECT DISTINCT doc_id AS query_id, term FROM (
-          SELECT doc_id, unnest(string_split(text, ' ')) AS term
-          FROM documents WHERE doc_id % 41 = 0 AND doc_id < 4100)
-      ), scored AS (
-        SELECT q.query_id, wt.cid, CAST(SUM(w_fp) AS BIGINT) AS score_fp
-        FROM q JOIN wt USING (term)
-        GROUP BY q.query_id, wt.cid
-      ), topch AS (
-        SELECT query_id, cid, score_fp FROM (
-          SELECT query_id, cid, score_fp,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY score_fp DESC, cid) AS rk
-          FROM scored)
-        WHERE rk <= 20
-      ), pooled AS (
-        SELECT query_id, doc_id, cid AS best_chunk_cid, score_fp FROM (
-          SELECT query_id, (cid - 1) // 100000 AS doc_id, cid, score_fp,
-                 ROW_NUMBER() OVER (PARTITION BY query_id, (cid - 1) // 100000
-                   ORDER BY score_fp DESC, cid) AS rn
-          FROM topch WHERE (cid - 1) // 100000 <> query_id)
-        WHERE rn = 1
-      ), ranked AS (
-        SELECT query_id, doc_id, best_chunk_cid, score_fp,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY score_fp DESC, doc_id) AS rank
-        FROM pooled
-      )
-      SELECT query_id, doc_id, best_chunk_cid, score_fp, rank
-      FROM ranked WHERE rank <= 5
-      ORDER BY query_id, rank"""))
+    oracle = Some(maxPassageOracle(" WHERE doc_id % 7 <> 0", 41)))
 
+  /** Q84 — BM25 top-k retrieval ("more-like-this" search over the
+    * corpus): every query document (doc_id % 37 = 0 under the absolute
+    * [[QuerySetCap]] bound) retrieves its 5 highest-scoring other documents
+    * under BM25 (Robertson–Walker, k1 = 1.2, b = 0.75, Lucene's
+    * ln(1 + (N − df + ½)/(df + ½)) idf). The textual counterpart of the
+    * ANN family (q25/q39): q71 builds the inverted index, this is the
+    * scoring probe over it.
+    *
+    * Exactness under the hash gate: a raw double BM25 sum is
+    * order-dependent (float addition is non-associative, and Spark's
+    * partial aggs + DuckDB's fold would disagree in the last ulps), so
+    * per-(term, doc) weights are quantized ONCE to fixed-point longs —
+    * floor(idf·10⁶) × floor(tf_factor·10⁶) — and the per-candidate sum
+    * is exact long arithmetic, order-free on both engines. The only
+    * libm call (ln) sits inside a floor(·10⁶) on a ~vocabulary-sized
+    * frame, where a cross-engine 1-ulp disagreement flips the result
+    * only if ln lands within an ulp of an integer/10⁶ boundary —
+    * verified empirically at sf0.01 and sf0.1 (q51's argument, made
+    * robust by integerization). Every other step is IEEE arithmetic on
+    * identical operands (avgdl is exact-long-sum / count), so it is
+    * bit-identical across engines by construction.
+    *
+    * Shape for 100 TB: tf / doc-length are map-side-combined scan aggs;
+    * df and idf are vocabulary-sized; the query set (bounded by
+    * contract — a request set, never a second corpus) is collected and
+    * broadcast as an inverted term index into ONE scan-local bounded
+    * aggregate over the per-doc weight store
+    * ([[graft.functions.expressions.Bm25ScanTopK]] — q78's FAISS scan
+    * shape applied to text): each task scores its documents against the
+    * touched queries in a primitive loop and keeps per-query 5-entry
+    * heaps, so the only exchange carries one ≤ nq·5 partial per task.
+    * The first draft's broadcast candidate equi-join materialized
+    * ~nq·n rows through a shuffle hash agg under this corpus's dense
+    * vocabulary and died allocating pages at the x10 synthetic scale
+    * (SCALE.md round 7) — same arithmetic, selection and output, wrong
+    * exchange shape.
+    */
   private val q84 = Q(
     fn = (s, d) => bm25TopK(bm25StoreCached(s, d), bm25QueryRows(s, d), 5),
     oracle = Some("""
@@ -4792,28 +4651,6 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       FROM rr WHERE rank <= 5
       ORDER BY query_id, rank"""))
 
-  /** Q151 — per-source data cards (the "datasheets for datasets"
-    * materialization a pipeline publishes with every corpus release):
-    * one row per source with the statistics a consumer checks before
-    * training on it — volume (docs, whitespace tokens, mean length),
-    * quality red flags (short-doc and exact-duplicate counts), and
-    * language composition (distinct langs, dominant lang, Shannon
-    * entropy of the lang distribution).
-    *
-    * Exactness: every statistic is exact integer arithmetic except two
-    * final divisions. The entropy uses the q85 fixed-point device
-    * applied per LANG SHARE (langs × sources rows, bounded): each share
-    * contributes c·floor(−ln(c/N)·10⁶) in exact longs — the ln is one
-    * IEEE op over the same exact integer operands on both engines — and
-    * the single double division by N·10⁶ happens once per source row.
-    *
-    * Shape at 100 TB: one narrow projection of the corpus scan (source,
-    * lang, md5, token count — text never leaves the scan), two
-    * map-side-combined aggregations over it (per-source; per source ×
-    * lang), and source-bounded joins. The count-distinct(md5) expands
-    * inside the per-source agg — the q17 exact-dedup shuffle key, 16
-    * bytes per doc.
-    */
   /** q151's shared core over any (source, lang, text) frame — also the
     * per-batch leg of the streaming data-card gate
     * ([[graft.streaming.Pipeline.runDataCardGateStream]]), so an
@@ -5005,6 +4842,28 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       .orderBy($"source")
   }
 
+  /** Q151 — per-source data cards (the "datasheets for datasets"
+    * materialization a pipeline publishes with every corpus release):
+    * one row per source with the statistics a consumer checks before
+    * training on it — volume (docs, whitespace tokens, mean length),
+    * quality red flags (short-doc and exact-duplicate counts), and
+    * language composition (distinct langs, dominant lang, Shannon
+    * entropy of the lang distribution).
+    *
+    * Exactness: every statistic is exact integer arithmetic except two
+    * final divisions. The entropy uses the q85 fixed-point device
+    * applied per LANG SHARE (langs × sources rows, bounded): each share
+    * contributes c·floor(−ln(c/N)·10⁶) in exact longs — the ln is one
+    * IEEE op over the same exact integer operands on both engines — and
+    * the single double division by N·10⁶ happens once per source row.
+    *
+    * Shape at 100 TB: one narrow projection of the corpus scan (source,
+    * lang, md5, token count — text never leaves the scan), two
+    * map-side-combined aggregations over it (per-source; per source ×
+    * lang), and source-bounded joins. The count-distinct(md5) expands
+    * inside the per-source agg — the q17 exact-dedup shuffle key, 16
+    * bytes per doc.
+    */
   private val q151 = Q(
     fn = (s, d) => sourceCards(Tables.documents(s, d)
       .select(col("source"), col("lang"), col("text"))),
@@ -5044,28 +4903,6 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       FROM s1 JOIN ent USING (source) JOIN dom USING (source)
       ORDER BY source"""))
 
-  /** Q174 — SNAPSHOT DIFF: the dataset-version audit a pipeline
-    * publishes between releases (the lakeFS/DVC/Delta "what changed"
-    * summary next to the data card q151): per source, how many
-    * documents were added, removed, content-changed, and untouched
-    * between corpus v1 and v2, with the whitespace-token mass entering
-    * and leaving. Content identity is the md5 the exact-dedup path
-    * already materializes (q17/CardStore) — a diff never re-reads
-    * text it can hash.
-    *
-    * Version fixture (the q161/q162 convention): v1 = the doc_id%10<8
-    * split, with the %17==3 docs carrying a simulated PRIOR revision
-    * (text reversed — a pure deterministic function both engines
-    * replay); v2 = the %13≠0 survivor corpus. So all four legs are
-    * non-vacuous at every SF: added = admitted snapshot survivors,
-    * removed = takedown victims, changed = the %17 revision set's
-    * common members, unchanged = the rest.
-    *
-    * Shape at 100 TB: two narrow projections (doc_id, source, md5,
-    * token count) and ONE co-partitioned full-outer sort-merge join on
-    * doc_id — the canonical snapshot-diff plan — then a map-side
-    * combined per-source aggregation. Text never leaves either scan.
-    */
   /** The snapshot-diff classification core shared by q174 and the
     * streaming CDC gate ([[graft.streaming.Pipeline
     * .runSnapshotDiffGateStream]]): both versions as (doc_id, source,
@@ -5102,6 +4939,28 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
         w => length(w) > 0)).cast("long").as("nw"))
   }
 
+  /** Q174 — SNAPSHOT DIFF: the dataset-version audit a pipeline
+    * publishes between releases (the lakeFS/DVC/Delta "what changed"
+    * summary next to the data card q151): per source, how many
+    * documents were added, removed, content-changed, and untouched
+    * between corpus v1 and v2, with the whitespace-token mass entering
+    * and leaving. Content identity is the md5 the exact-dedup path
+    * already materializes (q17/CardStore) — a diff never re-reads
+    * text it can hash.
+    *
+    * Version fixture (the q161/q162 convention): v1 = the doc_id%10<8
+    * split, with the %17==3 docs carrying a simulated PRIOR revision
+    * (text reversed — a pure deterministic function both engines
+    * replay); v2 = the %13≠0 survivor corpus. So all four legs are
+    * non-vacuous at every SF: added = admitted snapshot survivors,
+    * removed = takedown victims, changed = the %17 revision set's
+    * common members, unchanged = the rest.
+    *
+    * Shape at 100 TB: two narrow projections (doc_id, source, md5,
+    * token count) and ONE co-partitioned full-outer sort-merge join on
+    * doc_id — the canonical snapshot-diff plan — then a map-side
+    * combined per-source aggregation. Text never leaves either scan.
+    */
   private val q174 = Q(
     fn = (s, d) => {
       import s.implicits._
@@ -5818,27 +5677,6 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       JOIN lg b ON b.doc_id = p.v
       ORDER BY u, v"""))
 
-  /** Q85 — language-model perplexity filter (the CCNet recipe shape:
-    * score documents under an LM trained on trusted/held data; drop the
-    * worst). Trains an add-one-smoothed bigram LM on the stored split
-    * (doc_id % 10 < 8 — q82's snapshot rule), scores every ARRIVING
-    * document's bigrams under it, and emits the 100 worst documents by
-    * average log-probability (highest perplexity first) — the quality
-    * gate q22's surface heuristics can't express (q22 scores form;
-    * this scores fluency against a reference distribution).
-    *
-    * Exactness: per-bigram log-probs are quantized to fixed-point longs
-    * (floor(ln(p)·10⁶) — q84's device), so the per-document sum is exact
-    * and order-free; the final average is one IEEE long/long→double
-    * division, bit-identical across engines. Bigrams ride as "w1 w2"
-    * strings (tokens are space-split, so the key is unambiguous).
-    *
-    * Shape for 100 TB: the LM tables are vocabulary²-bounded — tiny
-    * relative to the corpus (broadcast or shuffle-join on the bigram
-    * key, AQE picks); scoring is one scan of the arriving split with
-    * map-side-combined per-doc partial aggs; the worst-100 is
-    * TakeOrderedAndProject, never a global sort.
-    */
   /** (doc_id, bg) rows — one per bigram OCCURRENCE, as "w1 w2" strings
     * (tokens are space-split, so the key is unambiguous). */
   private def bigramsOf(df: DataFrame): DataFrame = {
@@ -5913,8 +5751,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * postings lands on exactly the tables a retrain on survivors
     * would ([[removeFromLmRaw]]). */
   private def bigramLmArtifact(s: SparkSession, d: String): String =
-    IndexCache.resolve(
-      s"bigramlm|${IndexCache.dataKey(d)}", "bigramlm") { path =>
+    IndexCache.artifact("bigramlm", d) { path =>
       import s.implicits._
       val training = Tables.documents(s, d).filter($"doc_id" % 10 < 8)
       val bgp = bigramsOf(training).groupBy($"doc_id", $"bg")
@@ -6051,6 +5888,27 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     (BigramLm(c12m, c1m, vocabM.count()), vocabM)
   }
 
+  /** Q85 — language-model perplexity filter (the CCNet recipe shape:
+    * score documents under an LM trained on trusted/held data; drop the
+    * worst). Trains an add-one-smoothed bigram LM on the stored split
+    * (doc_id % 10 < 8 — q82's snapshot rule), scores every ARRIVING
+    * document's bigrams under it, and emits the 100 worst documents by
+    * average log-probability (highest perplexity first) — the quality
+    * gate q22's surface heuristics can't express (q22 scores form;
+    * this scores fluency against a reference distribution).
+    *
+    * Exactness: per-bigram log-probs are quantized to fixed-point longs
+    * (floor(ln(p)·10⁶) — q84's device), so the per-document sum is exact
+    * and order-free; the final average is one IEEE long/long→double
+    * division, bit-identical across engines. Bigrams ride as "w1 w2"
+    * strings (tokens are space-split, so the key is unambiguous).
+    *
+    * Shape for 100 TB: the LM tables are vocabulary²-bounded — tiny
+    * relative to the corpus (broadcast or shuffle-join on the bigram
+    * key, AQE picks); scoring is one scan of the arriving split with
+    * map-side-combined per-doc partial aggs; the worst-100 is
+    * TakeOrderedAndProject, never a global sort.
+    */
   private val q85 = Q(
     fn = (s, d) => {
       import s.implicits._
@@ -6096,42 +5954,6 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       ORDER BY avg_logprob ASC, doc_id
       LIMIT 100"""))
 
-  /** Q137 — BM25 index APPEND + serve (Lucene's segment contract,
-    * completing the incremental-maintenance family: q82 MinHash, q83
-    * IVF, q95 exact-hash, q135 clusters — retrieval was the one serving
-    * artifact still rebuilt from scratch per snapshot). q84's
-    * precomputed weight store CANNOT be appended to: every stored w_fp
-    * bakes in idf(df, N) and avgdl, and one admitted snapshot changes
-    * those for EVERY stored document. The fix is the one search engines
-    * shipped decades ago — store RAW postings (per-doc term hashes +
-    * tfs + length), whose rows never depend on corpus-global stats, and
-    * move idf/avgdl to QUERY TIME:
-    *
-    *  - artifact = postings (doc_id, hs, tfs, len) + df table (h, df) +
-    *    totals (n, Σlen). All three are ADDITIVE: append tokenizes ONLY
-    *    the arriving snapshot, unions its postings (stored rows
-    *    untouched — disjoint doc_ids by the admission contract), merges
-    *    the vocabulary-bounded df table and adds two longs. Cost ∝
-    *    snapshot + vocabulary, never corpus.
-    *  - serving resolves the request set's term idfs from the MERGED df
-    *    table (one vocabulary-table semi-join, ≤ |query terms| rows
-    *    collected) and ships them INSIDE the query broadcast;
-    *    [[graft.functions.expressions.Bm25RawScanTopK]] computes each
-    *    matched term's weight in the scan loop. Stored documents'
-    *    weights are never materialized, so there is nothing
-    *    corpus-sized to refresh — the exact reason Lucene scores with
-    *    query-time weights.
-    *
-    * The query: build the artifact on the stored split (doc_id % 10 <
-    * 8), append the arriving snapshot (% 10 >= 8), serve the % 41
-    * request set against the merged index. The merged stats equal
-    * full-corpus stats by construction (disjoint doc sets: df adds, N
-    * and Σlen add), so the DuckDB oracle is simply full-corpus BM25 —
-    * a hash match proves the composed append+query-time-idf path
-    * bit-equal to a from-scratch rebuild. Arithmetic is q84's exactly:
-    * same IEEE operation order in idf and the length factor, same
-    * floor·10⁶ quantization, exact long score sums.
-    */
   /** The raw BM25 postings artifact: per-doc postings + df + totals.
     * `df`/`n`/`sumLen` are the ONLY corpus-global state, all additive. */
   private[graft] case class Bm25Raw(
@@ -6174,25 +5996,38 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     (r.getLong(0), r.getLong(1))
   }
 
+  /** Build the raw artifact of `docs` (doc_id, text) at `path`, in
+    * [[loadBm25Raw]]'s layout. ONE tokenize pass: the postings parquet
+    * is written first, then df/totals derive from the written postings,
+    * never re-reading the text. */
+  private def buildBm25Raw(docs: DataFrame, path: String): Unit = {
+    val s = docs.sparkSession
+    import s.implicits._
+    bm25RawPostings(docs).write.mode("overwrite").parquet(s"$path/postings")
+    val post = s.read.parquet(s"$path/postings")
+    bm25DfOf(post).write.mode("overwrite").parquet(s"$path/df")
+    val (n, sumLen) = bm25TotalsOf(post)
+    Seq((n, sumLen)).toDF("n", "sum_len")
+      .write.mode("overwrite").parquet(s"$path/totals")
+  }
+
   /** The raw artifact over the STORED split (doc_id % 10 < 8) of `d`,
-    * persisted once per JVM via [[IndexCache]]. ONE tokenize pass: the
-    * postings parquet is written first, then df/totals derive from the
-    * written postings, never re-reading the text. */
+    * built once per JVM via [[IndexCache]]. */
   private[graft] def bm25RawCached(s: SparkSession, d: String): Bm25Raw = {
     import s.implicits._
-    val p = IndexCache.resolve(
-      "bm25raw|" + IndexCache.dataKey(d), "bm25raw") { path =>
-      bm25RawPostings(Tables.documents(s, d).filter($"doc_id" % 10 < 8))
-        .write.mode("overwrite").parquet(s"$path/postings")
-      val post = s.read.parquet(s"$path/postings")
-      bm25DfOf(post).write.mode("overwrite").parquet(s"$path/df")
-      val (n, sumLen) = bm25TotalsOf(post)
-      Seq((n, sumLen)).toDF("n", "sum_len")
-        .write.mode("overwrite").parquet(s"$path/totals")
-    }
-    val t = s.read.parquet(s"$p/totals").head()
-    Bm25Raw(s.read.parquet(s"$p/postings"), s.read.parquet(s"$p/df"),
-      t.getLong(0), t.getLong(1))
+    loadBm25Raw(s, IndexCache.artifact("bm25raw", d) { path =>
+      buildBm25Raw(Tables.documents(s, d).filter($"doc_id" % 10 < 8), path)
+    })
+  }
+
+  /** The raw artifact over the stored split's [[chunkedDocs]] chunks,
+    * built once per JVM via [[IndexCache]]: the passage index q166
+    * appends to and q167 prunes. */
+  private[graft] def bm25ChunkRawCached(s: SparkSession, d: String): Bm25Raw = {
+    import s.implicits._
+    loadBm25Raw(s, IndexCache.artifact("bm25chunkraw", d) { path =>
+      buildBm25Raw(chunkedDocs(Tables.documents(s, d).filter($"doc_id" % 10 < 8)), path)
+    })
   }
 
   /** Append an admitted snapshot to the raw BM25 artifact: tokenize the
@@ -6281,7 +6116,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       dfM, raw.n - nV, raw.sumLen - lenV)
   }
 
-  /** Persist / reload a raw BM25 artifact (bm25RawCached's on-disk
+  /** Persist / reload a raw BM25 artifact ([[buildBm25Raw]]'s on-disk
     * layout) — the compaction fold's materialization surface: the fold
     * must write the pruned store durably before the ledger partitions
     * are cleared, and serving re-reads the columnar store. */
@@ -6314,6 +6149,42 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       .sortBy(_._1)
   }
 
+  /** Q137 — BM25 index APPEND + serve (Lucene's segment contract,
+    * completing the incremental-maintenance family: q82 MinHash, q83
+    * IVF, q95 exact-hash, q135 clusters — retrieval was the one serving
+    * artifact still rebuilt from scratch per snapshot). q84's
+    * precomputed weight store CANNOT be appended to: every stored w_fp
+    * bakes in idf(df, N) and avgdl, and one admitted snapshot changes
+    * those for EVERY stored document. The fix is the one search engines
+    * shipped decades ago — store RAW postings (per-doc term hashes +
+    * tfs + length), whose rows never depend on corpus-global stats, and
+    * move idf/avgdl to QUERY TIME:
+    *
+    *  - artifact = postings (doc_id, hs, tfs, len) + df table (h, df) +
+    *    totals (n, Σlen). All three are ADDITIVE: append tokenizes ONLY
+    *    the arriving snapshot, unions its postings (stored rows
+    *    untouched — disjoint doc_ids by the admission contract), merges
+    *    the vocabulary-bounded df table and adds two longs. Cost ∝
+    *    snapshot + vocabulary, never corpus.
+    *  - serving resolves the request set's term idfs from the MERGED df
+    *    table (one vocabulary-table semi-join, ≤ |query terms| rows
+    *    collected) and ships them INSIDE the query broadcast;
+    *    [[graft.functions.expressions.Bm25RawScanTopK]] computes each
+    *    matched term's weight in the scan loop. Stored documents'
+    *    weights are never materialized, so there is nothing
+    *    corpus-sized to refresh — the exact reason Lucene scores with
+    *    query-time weights.
+    *
+    * The query: build the artifact on the stored split (doc_id % 10 <
+    * 8), append the arriving snapshot (% 10 >= 8), serve the % 41
+    * request set against the merged index. The merged stats equal
+    * full-corpus stats by construction (disjoint doc sets: df adds, N
+    * and Σlen add), so the DuckDB oracle is simply full-corpus BM25 —
+    * a hash match proves the composed append+query-time-idf path
+    * bit-equal to a from-scratch rebuild. Arithmetic is q84's exactly:
+    * same IEEE operation order in idf and the length factor, same
+    * floor·10⁶ quantization, exact long score sums.
+    */
   private val q137 = Q(
     fn = (s, d) => {
       import s.implicits._
@@ -6798,7 +6669,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
         .filter($"d0" =!= $"d1")
         .select($"key")
         .persist()
-      try ckpt {
+      try {
         // exact count sizes the bloom (the key set is already
         // materialized by persist, so this is a K-row pass, not a
         // corpus pass); an empty key set means no duplicated span
@@ -6821,9 +6692,10 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
           size($"kept").cast("long").as("n_kept"),
           concat_ws(" ", transform($"kept", x => x("w"))).as("text_clean"))
         .orderBy($"doc_id")
-        // ckpt (above): materialize while dupKeys is still persisted
-        // (the q114/q68 pattern) — the semi join's build side must not
-        // recompute the corpus agg after the finally-unpersist below
+        // materialize while dupKeys is still persisted (the q114/q68
+        // pattern) — the semi join's build side must not recompute the
+        // corpus agg after the finally-unpersist below
+        .localCheckpoint()
       } finally dupKeys.unpersist()
     },
     oracle = Some("""
@@ -6925,31 +6797,6 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
              CAST(n AS BIGINT) AS n_terms
       FROM fit ORDER BY source"""))
 
-  /** Q98 — vocabulary-growth curve (Heaps' law, 1978): cumulative
-    * distinct-term count against cumulative token count in doc_id order,
-    * sampled every 25 documents. Together with q97's Zipf slope these
-    * are the two classic corpus-statistics diagnostics: a vocabulary
-    * that saturates too fast (or never) flags duplication or synthetic
-    * text before any model sees it.
-    *
-    * "Distinct terms so far" never builds a running set: each term
-    * contributes 1 at its GLOBAL first occurrence (`min(doc_id)` per
-    * term — one map-side-combined aggregation) and the curve is then two
-    * integer prefix sums over per-doc deltas, decomposed exactly like
-    * q70's two-level bucket scheme (per-bucket subtotals → window over
-    * the tiny bucket table → bounded within-bucket windows) — the same
-    * dense-id caveat and range-statistics remedy documented there apply.
-    * All arithmetic is long-integer, so the decomposition is
-    * bit-identical to the oracle's flat windows.
-    *
-    * The coarse level has a FIXED fan-out: bucket width is
-    * max(256, ceil((max doc_id + 1) / 65536)), so the single
-    * unpartitioned window never sees more than ~65536 rows at ANY
-    * corpus size (at 10¹⁰ docs the width is ~153k and the bucket table
-    * is still ≤65536 rows in one task). The width probe is a 1-row
-    * column-pruned max() — the bounded-collect class PlanAuditSpec's
-    * unpartitioned-window whitelist documents.
-    */
   /** Q133 — exact two-sample Kolmogorov–Smirnov test between the stored
     * and held-out splits over document length: D = sup |F_train(x) −
     * F_test(x)| — the distribution-level split-hygiene check (q108 asks
@@ -7035,6 +6882,31 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
                AS splits_differ
       FROM scored"""))
 
+  /** Q98 — vocabulary-growth curve (Heaps' law, 1978): cumulative
+    * distinct-term count against cumulative token count in doc_id order,
+    * sampled every 25 documents. Together with q97's Zipf slope these
+    * are the two classic corpus-statistics diagnostics: a vocabulary
+    * that saturates too fast (or never) flags duplication or synthetic
+    * text before any model sees it.
+    *
+    * "Distinct terms so far" never builds a running set: each term
+    * contributes 1 at its GLOBAL first occurrence (`min(doc_id)` per
+    * term — one map-side-combined aggregation) and the curve is then two
+    * integer prefix sums over per-doc deltas, decomposed exactly like
+    * q70's two-level bucket scheme (per-bucket subtotals → window over
+    * the tiny bucket table → bounded within-bucket windows) — the same
+    * dense-id caveat and range-statistics remedy documented there apply.
+    * All arithmetic is long-integer, so the decomposition is
+    * bit-identical to the oracle's flat windows.
+    *
+    * The coarse level has a FIXED fan-out: bucket width is
+    * max(256, ceil((max doc_id + 1) / 65536)), so the single
+    * unpartitioned window never sees more than ~65536 rows at ANY
+    * corpus size (at 10¹⁰ docs the width is ~153k and the bucket table
+    * is still ≤65536 rows in one task). The width probe is a 1-row
+    * column-pruned max() — the bounded-collect class PlanAuditSpec's
+    * unpartitioned-window whitelist documents.
+    */
   private val q98 = Q(
     fn = (s, d) => {
       import s.implicits._
@@ -7090,28 +6962,6 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
              CAST(cum_vocab AS BIGINT) AS cum_vocab
       FROM c WHERE doc_id % 25 = 0 ORDER BY doc_id"""))
 
-  /** Q99 — PMI collocations (Church & Hanks, CL 1990): the corpus's
-    * top-50 two-word collocations by pointwise mutual information among
-    * bigrams occurring >= 5 times — the classic phrase-mining /
-    * tokenizer-vocabulary-seeding pass (multi-word units worth single
-    * tokens surface here first), and the statistical complement of
-    * q85's bigram LM (q85 scores documents under the bigram model; this
-    * ranks the bigrams themselves).
-    *
-    * PMI = ln(P(xy) / (P(x)·P(y))) is computed as the LOG-SUM
-    * ln(c_xy) + 2·ln(N) − ln(N_bg) − ln(c_x) − ln(c_y) with every term
-    * individually quantized to micro-units (q97's device): the naive
-    * ratio's numerator c_xy·N² overflows long arithmetic at corpus
-    * scale, while the per-term quantized sum stays within ±10⁸ and is
-    * bit-identical across engines. Counts are occurrence counts, so
-    * P(x) estimates share one token denominator N.
-    *
-    * Scale shape: two map-side-combined counts (unigram, bigram — the
-    * latter reuses q85's [[bigramsOf]]), two vocabulary-bounded
-    * equi-joins to attach c_x/c_y, two 1-row broadcast totals, and a
-    * TakeOrderedAndProject top-50. The >= 5 support filter runs BEFORE
-    * the joins, so only repeated bigrams ever join.
-    */
   /** Shared PMI scoring leg for q99/q99b: attach unigram counts and the
     * two 1-row broadcast totals to a support-filtered bigram count
     * table `bgc` (bg, cxy), score, top-50. The unigram table is
@@ -7152,6 +7002,28 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       .limit(50)
   }
 
+  /** Q99 — PMI collocations (Church & Hanks, CL 1990): the corpus's
+    * top-50 two-word collocations by pointwise mutual information among
+    * bigrams occurring >= 5 times — the classic phrase-mining /
+    * tokenizer-vocabulary-seeding pass (multi-word units worth single
+    * tokens surface here first), and the statistical complement of
+    * q85's bigram LM (q85 scores documents under the bigram model; this
+    * ranks the bigrams themselves).
+    *
+    * PMI = ln(P(xy) / (P(x)·P(y))) is computed as the LOG-SUM
+    * ln(c_xy) + 2·ln(N) − ln(N_bg) − ln(c_x) − ln(c_y) with every term
+    * individually quantized to micro-units (q97's device): the naive
+    * ratio's numerator c_xy·N² overflows long arithmetic at corpus
+    * scale, while the per-term quantized sum stays within ±10⁸ and is
+    * bit-identical across engines. Counts are occurrence counts, so
+    * P(x) estimates share one token denominator N.
+    *
+    * Scale shape: two map-side-combined counts (unigram, bigram — the
+    * latter reuses q85's [[bigramsOf]]), two vocabulary-bounded
+    * equi-joins to attach c_x/c_y, two 1-row broadcast totals, and a
+    * TakeOrderedAndProject top-50. The >= 5 support filter runs BEFORE
+    * the joins, so only repeated bigrams ever join.
+    */
   private val q99 = Q(
     fn = (s, d) => {
       import s.implicits._

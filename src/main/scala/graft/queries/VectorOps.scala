@@ -666,8 +666,7 @@ object VectorOps {
     val cells = s.conf.get("graft.vec.ivfCells", "auto")
     val cellKey = if (cells == "auto")
       s"auto@${s.conf.get("graft.vec.cellTarget", "1536")}" else cells
-    loadVecDedupIndex(s, IndexCache.resolve(
-      s"vecdedup|$cellKey|" + IndexCache.dataKey(d), "vecdedup") { p =>
+    loadVecDedupIndex(s, IndexCache.artifact("vecdedup", d, cellKey) { p =>
       val stored = Tables.embeddings(s, d)
         .repartition(s.sparkContext.defaultParallelism)
         .select($"vec_id", $"label", $"embedding")
@@ -676,17 +675,6 @@ object VectorOps {
     })
   }
 
-  /** Q83 — incremental embedding-dedup: index the stored 80% of the
-    * corpus (vec_id % 10 < 8 — q82's snapshot rule on the vector side,
-    * built once per JVM via [[vecDedupIndexCached]]), then screen the
-    * arriving 20% via [[dedupVecAgainstIndex]]. The oracle reproduces
-    * the WHOLE structure — stored-only centroid training, both sides'
-    * argmax assignment, the bipartite in-cell join, exact quantized
-    * cosine ≥ 0.4 — so candidate blocking and scoring are hash-checked,
-    * q38's contract carried to the incremental form. The streaming twin
-    * ([[graft.streaming.Pipeline.runIncrementalVecDedupStream]]) loads
-    * the same artifact and screens micro-batches with the same function.
-    */
   /** The frozen-quantizer IVF cell assignment over ALL embeddings, as
     * oracle CTEs appended after [[kmeansOracleCtes]] — ends with `asg`
     * (vec_id, cell) and `qn` (vec_id, qv, qq). Shared by q83's oracle
@@ -729,6 +717,17 @@ object VectorOps {
         ) WHERE rn = 1
       )"""
 
+  /** Q83 — incremental embedding-dedup: index the stored 80% of the
+    * corpus (vec_id % 10 < 8 — q82's snapshot rule on the vector side,
+    * built once per JVM via [[vecDedupIndexCached]]), then screen the
+    * arriving 20% via [[dedupVecAgainstIndex]]. The oracle reproduces
+    * the WHOLE structure — stored-only centroid training, both sides'
+    * argmax assignment, the bipartite in-cell join, exact quantized
+    * cosine ≥ 0.4 — so candidate blocking and scoring are hash-checked,
+    * q38's contract carried to the incremental form. The streaming twin
+    * ([[graft.streaming.Pipeline.runIncrementalVecDedupStream]]) loads
+    * the same artifact and screens micro-batches with the same function.
+    */
   private val q83 = Q(
     fn = (s, d) => {
       import s.implicits._
@@ -1078,31 +1077,6 @@ object VectorOps {
       FROM a
       ORDER BY mean_shift DESC, pos"""))
 
-  /** Q74 — distributed k-means (Lloyd's algorithm, k=8, two recenter
-    * rounds) over the embeddings — the clustering primitive behind
-    * SemDeDup-style semantic curation (Abbas et al. 2023: cluster, then
-    * dedup within clusters — q38's within-cell near-dup is the second
-    * half; this is the first). Every quantity is EXACT INTEGER math, so
-    * an iterative ML algorithm still gets a bit-exact DuckDB oracle:
-    *
-    *  - components quantized to int64 (the q25/q39 QuantizeVec pattern);
-    *  - distances are Σ(x−c)² in long arithmetic (≤ 2⁴⁴·64 ≪ 2⁶³);
-    *  - argmin by `least(struct(dist, cid))` — ties to the lowest cid,
-    *    mirrored by the oracle's ORDER BY dist, cid;
-    *  - recentered components are TRUNCATED integer means (Java long
-    *    division == DuckDB `//`, both toward zero) — centroids stay
-    *    integer vectors, so no double ever enters the pipeline; the
-    *    ≤1-unit (≈2⁻²⁰) centroid quantization per round is noise
-    *    relative to Lloyd's own convergence;
-    *  - seeds = the k lowest-vec_id vectors (deterministic init).
-    *
-    * Scale shape: each round is one scan with a broadcast centroid
-    * literal (k·64 longs), one posexplode partial-agg shuffle for the
-    * sums, and a k·64-row collect (bounded — the broadcast pattern);
-    * empty clusters keep their previous centroid. The interpreted
-    * zip_with/aggregate lambdas cost k·dims per row; at real scale the
-    * same loop swaps in a QuantizedCosine-style native kernel.
-    */
   /** q38/q75's shared deterministic block sub-split: blocks of `blockCol`
     * over `maxCell` members split into ceil(size/maxCell) sub-blocks by
     * md5(vec_id) — ONE definition of the blocking rule (hash width,
@@ -1216,8 +1190,7 @@ object VectorOps {
     * never a replay-equal-by-determinism second training run. */
   private[queries] def kmeansFitCached(s: SparkSession, d: String,
       k: Int = 8, rounds: Int = 2): (DataFrame, Seq[Array[Long]]) = {
-    val root = IndexCache.resolve(
-      s"kmeans|${IndexCache.dataKey(d)}|$k|$rounds", "kmeans") { p =>
+    val root = IndexCache.artifact("kmeans", d, k, rounds) { p =>
       import s.implicits._
       val (assign, cents) = kmeansFit(
         Tables.embeddings(s, d).select(col("vec_id"), col("embedding")), k, rounds)
@@ -1292,6 +1265,31 @@ object VectorOps {
     } finally emb.unpersist()
   }
 
+  /** Q74 — distributed k-means (Lloyd's algorithm, k=8, two recenter
+    * rounds) over the embeddings — the clustering primitive behind
+    * SemDeDup-style semantic curation (Abbas et al. 2023: cluster, then
+    * dedup within clusters — q38's within-cell near-dup is the second
+    * half; this is the first). Every quantity is EXACT INTEGER math, so
+    * an iterative ML algorithm still gets a bit-exact DuckDB oracle:
+    *
+    *  - components quantized to int64 (the q25/q39 QuantizeVec pattern);
+    *  - distances are Σ(x−c)² in long arithmetic (≤ 2⁴⁴·64 ≪ 2⁶³);
+    *  - argmin by `least(struct(dist, cid))` — ties to the lowest cid,
+    *    mirrored by the oracle's ORDER BY dist, cid;
+    *  - recentered components are TRUNCATED integer means (Java long
+    *    division == DuckDB `//`, both toward zero) — centroids stay
+    *    integer vectors, so no double ever enters the pipeline; the
+    *    ≤1-unit (≈2⁻²⁰) centroid quantization per round is noise
+    *    relative to Lloyd's own convergence;
+    *  - seeds = the k lowest-vec_id vectors (deterministic init).
+    *
+    * Scale shape: each round is one scan with a broadcast centroid
+    * literal (k·64 longs), one posexplode partial-agg shuffle for the
+    * sums, and a k·64-row collect (bounded — the broadcast pattern);
+    * empty clusters keep their previous centroid. The interpreted
+    * zip_with/aggregate lambdas cost k·dims per row; at real scale the
+    * same loop swaps in a QuantizedCosine-style native kernel.
+    */
   private val q74 = Q(
     fn = (s, d) => {
       import s.implicits._
@@ -1410,14 +1408,10 @@ object VectorOps {
     */
   private val pqM = 8; private val pqDsub = 8; private val pqK = 16
 
-  /** The trained PQ index: `codes` (vec_id, m, cid — 8 code ids per
-    * vector, the compressed store) and `cents` (m, cid, c — the M·K
-    * codebook, broadcast-sized). Both materialized, safe to reuse after
-    * the training cache is released.
-    */
-  /** `codes`: (vec_id, codes array<int> — one code id per subspace,
-    * m-ordered: the 8-id compressed vector). `cents`: (m, cid, c) — the
-    * M·K codebook, broadcast-sized. */
+  /** The trained PQ index: `codes` (vec_id, codes array<int> — one code
+    * id per subspace, m-ordered: the 8-id compressed vector) and `cents`
+    * (m, cid, c — the M·K codebook, broadcast-sized). Both materialized,
+    * safe to reuse after the training cache is released. */
   private[graft] case class PqIndex(codes: DataFrame, cents: DataFrame)
 
   /** Split a quantized vector column into the (m, v) long-format
@@ -1529,8 +1523,7 @@ object VectorOps {
     * Training is deterministic in (dataset dir, fixed engine params),
     * so the cache can never serve a wrong index within a JVM. */
   private[graft] def pqTrainCached(s: SparkSession, d: String): PqIndex =
-    loadPqIndex(s, IndexCache.resolve(
-      "pq|" + IndexCache.dataKey(d), "pq") { p =>
+    loadPqIndex(s, IndexCache.artifact("pq", d) { p =>
       savePqIndex(pqTrain(s, d), p)
     })
 
@@ -1578,8 +1571,7 @@ object VectorOps {
   /** The PQ index trained on the STORED split (vec_id % 10 < 8) only —
     * q140's "yesterday's index" artifact, persisted once per JVM. */
   private[graft] def pqStoredCached(s: SparkSession, d: String): PqIndex =
-    loadPqIndex(s, IndexCache.resolve(
-      "pqstored|" + IndexCache.dataKey(d), "pqstored") { p =>
+    loadPqIndex(s, IndexCache.artifact("pqstored", d) { p =>
       import s.implicits._
       savePqIndex(pqTrainOn(Tables.embeddings(s, d)
         .repartition(s.sparkContext.defaultParallelism)
@@ -2097,8 +2089,7 @@ object VectorOps {
     fn = (s, d) => {
       import s.implicits._
       val k = resolveKmeansK(s, Tables.embeddings(s, d).count())
-      val sil = s.read.parquet(IndexCache.resolve(
-        s"ksil|${IndexCache.dataKey(d)}|$k", "ksil") { p =>
+      val sil = s.read.parquet(IndexCache.artifact("ksil", d, k) { p =>
         // the SHARED fit: centroids come from the same kmeans artifact
         // q74/q75/q87 read — one training run per dataset, and only the
         // one scoring pass below is silhouette-specific
@@ -2301,29 +2292,6 @@ object VectorOps {
       FROM fv a JOIN fv b ON b.vec_id = a.vec_id + 1 AND a.vec_id % 31 = 0
       ORDER BY a"""))
 
-  /** Q148 — two-stage compressed-space retrieval: JL PREFILTER + exact
-    * rerank, the composition that makes q146 load-bearing and the
-    * standard shape for dimensionality-reduced serving (FAISS's
-    * coarse-then-refine contract with the projection as the coarse
-    * stage). Stage 1 scores the request set against the 16-dim
-    * projections (4× less arithmetic and 4× fewer bytes per candidate
-    * than full-dim) and keeps the top-100 candidates per query; stage 2
-    * re-scores ONLY those candidates with q25's exact full-dim
-    * quantized cosine and emits the top-5. Both stages are
-    * deterministic exact arithmetic, so the oracle replays the entire
-    * composition — the approximation is purely stage 1's candidate
-    * truncation.
-    *
-    * Measured trade (QueriesSpec, vs q25 on the same request set):
-    * mean recall@5 ≈ 0.74 at a 100-of-500 candidate depth on this
-    * corpus — which is NEAR-RANDOM (q26's note: top-5 cosine ≈ 0.35,
-    * barely above the 1/√64 noise floor), the worst case for any
-    * projection; clustered production embeddings separate far better
-    * and the depth is the caller's recall lever. Scale shape: stage 1
-    * is the q25 broadcast-scan over 4×-smaller vectors; stage 2 joins
-    * the nq·100-bounded candidate set back to the corpus — AQE
-    * broadcasts the candidate side; nothing all-pairs in full
-    * dimension. */
   /** Q156 — SEMANTIC hard-negative mining: q150's contract on the dense
     * leg (dense retrievers train on embedding-space hard negatives; DPR
     * mines them from the dense index, not BM25). Top-20 exact-cosine
@@ -2701,6 +2669,29 @@ object VectorOps {
       FROM sc WHERE cf IS NOT NULL AND cm IS NOT NULL
       GROUP BY dim_budget ORDER BY dim_budget"""))
 
+  /** Q148 — two-stage compressed-space retrieval: JL PREFILTER + exact
+    * rerank, the composition that makes q146 load-bearing and the
+    * standard shape for dimensionality-reduced serving (FAISS's
+    * coarse-then-refine contract with the projection as the coarse
+    * stage). Stage 1 scores the request set against the 16-dim
+    * projections (4× less arithmetic and 4× fewer bytes per candidate
+    * than full-dim) and keeps the top-100 candidates per query; stage 2
+    * re-scores ONLY those candidates with q25's exact full-dim
+    * quantized cosine and emits the top-5. Both stages are
+    * deterministic exact arithmetic, so the oracle replays the entire
+    * composition — the approximation is purely stage 1's candidate
+    * truncation.
+    *
+    * Measured trade (QueriesSpec, vs q25 on the same request set):
+    * mean recall@5 ≈ 0.74 at a 100-of-500 candidate depth on this
+    * corpus — which is NEAR-RANDOM (q26's note: top-5 cosine ≈ 0.35,
+    * barely above the 1/√64 noise floor), the worst case for any
+    * projection; clustered production embeddings separate far better
+    * and the depth is the caller's recall lever. Scale shape: stage 1
+    * is the q25 broadcast-scan over 4×-smaller vectors; stage 2 joins
+    * the nq·100-bounded candidate set back to the corpus — AQE
+    * broadcasts the candidate side; nothing all-pairs in full
+    * dimension. */
   private val q148 = Q(
     fn = (s, d) => {
       import s.implicits._

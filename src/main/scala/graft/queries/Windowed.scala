@@ -528,30 +528,6 @@ object Windowed {
                               AND epoch_us(e.ts) + 14400000000
       ORDER BY e.user_id, err_id, clk_id"""))
 
-  /** Q112 — robust anomaly detection: per-group median/MAD z-score over
-    * `events.value` (Iglewicz–Hoaglin modified z-score; Leys et al., J. Exp.
-    * Soc. Psych. 2013 for why MAD beats mean/stddev on contaminated data —
-    * a single extreme value shifts a mean-based z toward itself and masks
-    * its own outlierness; the median pair is 50%-breakdown robust).
-    *
-    * Two exact interpolated medians (q36's `percentile`/`quantile_cont`
-    * parity device): per-type median of `value`, then per-type median of
-    * the absolute deviations (= MAD). Both 5-row results broadcast back;
-    * the score `adev / (1.4826 · mad)` is one double multiply + divide on
-    * identical operands in both engines, so the filter and ordering agree
-    * bit-for-bit. Groups where MAD = 0 (more than half the values at the
-    * median — no robust scale exists) are excluded by contract.
-    *
-    * Scale shape: three scans of events (the information-theoretic floor
-    * without caching the corpus: one per median pass, one for the output
-    * rows — both 5-row median tables are materialized once so no subtree
-    * replays a pass), two bounded (|event_type|-row) broadcast joins, no
-    * window over the full table. Exact `percentile` buffers per group —
-    * fine for bounded group count with bounded values per group; at
-    * unbounded per-group cardinality swap both medians for
-    * `approx_percentile` (q36b's declared fallback — the score stays
-    * identical in form, the cut line moves within sketch ε).
-    */
   /** q112's fitted robust-location model: (event_type, med, mad), both
     * 5-row median tables materialized once. Shared by the batch query
     * and [[graft.streaming.Pipeline.runAnomalyGateStream]], so a stream
@@ -584,6 +560,30 @@ object Windowed {
       .filter($"score" > threshold)
   }
 
+  /** Q112 — robust anomaly detection: per-group median/MAD z-score over
+    * `events.value` (Iglewicz–Hoaglin modified z-score; Leys et al., J. Exp.
+    * Soc. Psych. 2013 for why MAD beats mean/stddev on contaminated data —
+    * a single extreme value shifts a mean-based z toward itself and masks
+    * its own outlierness; the median pair is 50%-breakdown robust).
+    *
+    * Two exact interpolated medians (q36's `percentile`/`quantile_cont`
+    * parity device): per-type median of `value`, then per-type median of
+    * the absolute deviations (= MAD). Both 5-row results broadcast back;
+    * the score `adev / (1.4826 · mad)` is one double multiply + divide on
+    * identical operands in both engines, so the filter and ordering agree
+    * bit-for-bit. Groups where MAD = 0 (more than half the values at the
+    * median — no robust scale exists) are excluded by contract.
+    *
+    * Scale shape: three scans of events (the information-theoretic floor
+    * without caching the corpus: one per median pass, one for the output
+    * rows — both 5-row median tables are materialized once so no subtree
+    * replays a pass), two bounded (|event_type|-row) broadcast joins, no
+    * window over the full table. Exact `percentile` buffers per group —
+    * fine for bounded group count with bounded values per group; at
+    * unbounded per-group cardinality swap both medians for
+    * `approx_percentile` (q36b's declared fallback — the score stays
+    * identical in form, the cut line moves within sketch ε).
+    */
   private val q112 = Q(
     fn = (s, d) => {
       import s.implicits._

@@ -15,24 +15,6 @@ package object queries {
       oracle: Option[String],
       doc: String = "")
 
-  /** `localCheckpoint()` unless the PLAN-DUMP conf asks for the lazy tree.
-    *
-    * Queries that materialize their result eagerly (q86/q114: the
-    * bounded output is computed while a persisted/broadcast operand is
-    * still alive, then the operand is released) explain as a one-line
-    * checkpoint scan — the committed plan files then show NOTHING of the
-    * exchanges/join strategy the optimization claims (VERDICT r14 #8).
-    * `graft.dev.Explain` sets `graft.explain.noCheckpoint=true` so the
-    * dumped plan is the full eager subtree. The conf is a plan-dump
-    * device only: under it the returned DataFrame may reference
-    * operands the query fn already released (unpersisted frames
-    * recompute; q68-style destroyed broadcasts would fail), so nothing
-    * but Explain should set it — results are unaffected either way.
-    */
-  private[graft] def ckpt(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get("graft.explain.noCheckpoint", "false").toBoolean) df
-    else df.localCheckpoint()
-
   /** Exact, order-independent double aggregation.
     *
     * Double sums are non-associative: Spark's partial/final aggregation over
@@ -113,10 +95,10 @@ package object queries {
     private val paths = new java.util.concurrent.ConcurrentHashMap[
       String, java.util.concurrent.CompletableFuture[String]]()
 
-    /** Cumulative build seconds per artifact family (the resolve
-      * `prefix`), summed over every build this JVM ran — the train/serve
-      * split Bench reports so a fresh deployment's one-time artifact
-      * cost is visible separately from steady per-query cost. */
+    /** Cumulative build seconds per artifact family, summed over every
+      * build this JVM ran — the train/serve split Bench reports so a
+      * fresh deployment's one-time artifact cost is visible separately
+      * from steady per-query cost. */
     private val buildSecs =
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
     private[graft] def buildSeconds: Map[String, Double] = {
@@ -126,13 +108,13 @@ package object queries {
 
     /** Dataset-dir cache-key component: canonical path PLUS a content
       * fingerprint (every file's relative path, length and mtime,
-      * md5-folded). Callers key artifacts on this instead of the bare
-      * path so a rewrite of the data AT THE SAME PATH within a JVM's
+      * md5-folded). [[artifact]] keys on this instead of the bare path
+      * so a rewrite of the data AT THE SAME PATH within a JVM's
       * lifetime (dev loops, test fixtures, re-materialized snapshots)
       * can never be served a stale index — the fingerprint changes, the
       * key changes, the artifact rebuilds. Driver-local directory walk:
       * O(files), no data read. */
-    def dataKey(d: String): String = {
+    private def dataKey(d: String): String = {
       val base = new java.io.File(d).getCanonicalFile
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory)
@@ -147,6 +129,17 @@ package object queries {
       base.getPath + "@" + md.take(6).map("%02x".format(_)).mkString
     }
 
+    /** The one way to a cached artifact: the path of `family`'s artifact
+      * over data dir `dataDir` under `params`, built by `build` into a
+      * fresh directory on first request. The key is the family, the
+      * dir's content fingerprint ([[dataKey]]) and the params, so a
+      * rewrite of the dir or a change of params builds anew; the build
+      * seconds accrue under `family` ([[buildSeconds]]). */
+    def artifact(family: String, dataDir: String, params: Any*)(
+        build: String => Unit): String =
+      resolve((family +: dataKey(dataDir) +: params.map(_.toString)).mkString("|"),
+        family)(build)
+
     /** Resolve `key` to an artifact path, building it on first request
       * (compute runs at most once per key per JVM). The build runs
       * OUTSIDE the map's `computeIfAbsent` — a per-key memoized future
@@ -158,7 +151,7 @@ package object queries {
       * the slot and re-enters the claim race to attempt its own build —
       * matching `computeIfAbsent`'s waiter-retry semantics — instead of
       * replaying the winner's cached exception. */
-    def resolve(key: String, prefix: String)(build: String => Unit): String = {
+    private def resolve(key: String, prefix: String)(build: String => Unit): String = {
       while (true) {
         val mine = new java.util.concurrent.CompletableFuture[String]()
         val won = paths.putIfAbsent(key, mine)

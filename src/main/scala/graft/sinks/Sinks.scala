@@ -91,8 +91,9 @@ object Sinks {
     *  1. one `approx_percentile` pass computes 255 quantile boundaries
     *     (8 bits) per z column (mergeable sketch, map-side combined —
     *     the q54b pattern), broadcast as a single row;
-    *  2. each row maps every z column to its quantile bucket by an
-    *     in-row boundary count (equal-frequency, so skew can't pile the
+    *  2. each row maps every z column to its quantile bucket, the count
+    *     of boundaries below it, by an 8-step binary search
+    *     ([[quantileBucket]]; equal-frequency, so skew can't pile the
     *     curve into few buckets; a null counts no boundary and lands
     *     in bucket 0, a NaN — above every double in Spark's ordering —
     *     in the top one);
@@ -121,22 +122,38 @@ object Sinks {
     val bounds = df.select(zCols.map(c =>
       approx_percentile(col(c).cast("double"), fracs, lit(10000)).as(s"__zb_$c")): _*)
     val withB = df.crossJoin(broadcast(bounds))
-    val buckets = zCols.map { c =>
-      aggregate(col(s"__zb_$c"), lit(0),
-        (acc, b) => acc + when(col(c).cast("double") > b, 1).otherwise(0))
-    }
+    val buckets = zCols.foldLeft(withB)((f, c) => quantileBucket(f, c, s"__zb_$c", bits))
     val z = zCols.indices.foldLeft(lit(0L)) { (acc, ci) =>
       (0 until bits).foldLeft(acc) { (a, i) =>
         a.bitwiseOR(shiftleft(
-          shiftright(buckets(ci), i).bitwiseAND(lit(1)).cast("long"),
+          shiftright(col(s"__zb_${zCols(ci)}"), i).bitwiseAND(lit(1)).cast("long"),
           i * zCols.size + ci))
       }
     }
-    withB.withColumn("__z", z)
+    buckets.withColumn("__z", z)
       .repartitionByRange(nFiles, col("__z"))
       .sortWithinPartitions("__z")
       .drop(zCols.map(c => s"__zb_$c") :+ "__z": _*)
       .write.mode("overwrite").parquet(path)
+  }
+
+  /** Replace the sorted `2^bits - 1`-boundary array column `bounds` of `df`
+    * by the count of its boundaries that `c` (as a double) is greater
+    * than: `bits` steps of a binary search over `element_at`, each step
+    * its own codegen'd projection (a lambda over the whole array would
+    * run interpreted). A null `c` counts no boundary; a NaN, above every
+    * double in Spark's ordering, counts every non-NaN one. */
+  private[sinks] def quantileBucket(df: DataFrame, c: String, bounds: String,
+      bits: Int): DataFrame = {
+    val (x, n) = (col(c).cast("double"), col("__zn"))
+    // each step probes the boundary `step` past the count so far; the
+    // count never passes 2^bits - 1, so every probe is in range
+    (bits - 1 to 0 by -1).map(1 << _)
+      .foldLeft(df.withColumn("__zn", lit(0))) { (f, step) =>
+        f.withColumn("__zn",
+          when(element_at(col(bounds), n + step) < x, n + step).otherwise(n))
+      }
+      .drop(bounds).withColumnRenamed("__zn", bounds)
   }
 
   /** Small-file compaction for a parquet table: rewrite to

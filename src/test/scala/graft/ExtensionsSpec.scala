@@ -166,6 +166,20 @@ class ExtensionsSpec extends AnyFunSuite {
       "a broadcast kernel's Column wrapper builds its expression through KernelColumns")
   }
 
+  test("source guard: no doc comment in src/main is directly followed by another") {
+    val root = java.nio.file.Paths.get("src/main")
+    val files = java.nio.file.Files.walk(root)
+    val orphans = try files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
+      val lines = java.nio.file.Files.readAllLines(p).asScala.map(_.trim)
+      // Scaladoc attaches only the second of two adjacent doc comments
+      lines.indices.init.collect {
+        case i if lines(i).endsWith("*/") && lines(i + 1).startsWith("/**") => s"$p:${i + 1}"
+      }
+    }.toList
+    finally files.close()
+    assert(orphans.isEmpty, s"doc comments with nothing to attach to: ${orphans.mkString(", ")}")
+  }
+
   test("broadcast kernels have no registry lifecycle: one file reaches the sql-private converters") {
     val shim = "org/apache/spark/sql/KernelColumns.scala"
     val rest = mainSource(skip = Some(shim))

@@ -28,6 +28,39 @@ class ZOrderSpec extends SparkSpec {
     assert(got == want && got.nonEmpty)
   }
 
+  test("the binary-search bucket equals the all-boundary count it replaced") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    val fracs = array((1 until 256).map(i => lit(i / 256.0)): _*)
+    // with and without a NaN share large enough to put NaN boundaries on top
+    Seq(0, 2).foreach { nanTenths =>
+      val xs: Seq[Option[Double]] = Seq.fill(4000)(rnd.nextInt(10) match {
+        case 0 => None
+        case k if k <= nanTenths => Some(Double.NaN)
+        case k if k <= nanTenths + 3 => Some(math.floor(rnd.nextGaussian() * 3)) // ties
+        case _ => Some(rnd.nextGaussian() * 100)
+      })
+      val bounds = xs.toDF("x").select(approx_percentile($"x", fracs, lit(10000)).as("b"))
+      val bs = bounds.head().getSeq[Double](0)
+      assert(bs.size == 255 && bs.distinct.size < 255, "the data's ties repeat a boundary")
+      assert(bs.exists(_.isNaN) == (nanTenths > 0), bs)
+      // every boundary itself, both zeros and both infinities probe the edges
+      val probes = xs ++ (bs ++ Seq(-0.0, 0.0, Double.NegativeInfinity,
+        Double.PositiveInfinity, Double.NaN)).map(Option(_)) :+ None
+      val withB = probes.toDF("x").crossJoin(broadcast(bounds))
+      val reference = aggregate($"b", lit(0), (acc, b) => acc + when($"x" > b, 1).otherwise(0))
+      val got = Sinks.quantileBucket(withB.withColumn("want", reference), "x", "b", 8)
+        .select($"x", $"b".as("got"), $"want").collect()
+      val wrong = got.filterNot(r => r.get(1) == r.get(2))
+      assert(wrong.isEmpty, s"nanTenths=$nanTenths: ${wrong.take(5).mkString(", ")}")
+      assert(got.filter(_.isNullAt(0)).forall(_.getInt(1) == 0), "a null lands in bucket 0")
+      val top = bs.count(b => !b.isNaN)
+      assert(got.filter(r => !r.isNullAt(0) && r.getDouble(0).isNaN).forall(_.getInt(1) == top),
+        "a NaN counts every non-NaN boundary")
+      assert(got.map(_.getInt(1)).distinct.length > 100, "the probes span the buckets")
+    }
+  }
+
   test("box queries == direct filters for random boxes; corners included") {
     import spark.implicits._
     val ev = graft.sources.Tables.events(spark, sf0001)
