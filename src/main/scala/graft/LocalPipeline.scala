@@ -1,12 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
 import graft.metrics.MetricsRefresh
 import graft.sinks.Sinks
-import graft.sources.Simulation
+import graft.sources.{Simulation, Tables}
 import graft.streaming.Pipeline
 
 /** One-shot local pipeline — the engine's E3 entry point (reference
@@ -52,15 +52,16 @@ object LocalPipeline {
     Pipeline.runMetricsPipeline(spark, landing, s"$outDir/store", s"$outDir/ckpt_metrics")
       .awaitTermination()
 
-    val storedTel = spark.read.parquet(s"$outDir/store/vehicle_telemetry")
-    val alerts = spark.read.parquet(s"$outDir/store/alerts")
+    val storedTel = Tables.parquet(spark, s"$outDir/store/vehicle_telemetry")
+    // a run that raised no alert leaves the alerts dir with no data file
+    val alerts = Tables.parquetIfPresent(spark, s"$outDir/store/alerts")
     if (storedTel.isEmpty) {
       System.err.println("[pipeline] no telemetry stored (nTicks=0?); nothing to export")
       spark.stop(); sys.exit(2)
     }
-    println(s"[pipeline] stored telemetry=${storedTel.count()} alerts=${alerts.count()}")
-    alerts.groupBy("alert_type").count().orderBy("alert_type").collect()
-      .foreach(r => println(s"[pipeline]   ${r.getString(0)}: ${r.getLong(1)}"))
+    println(s"[pipeline] stored telemetry=${storedTel.count()} alerts=${alerts.fold(0L)(_.count())}")
+    alerts.foreach(_.groupBy("alert_type").count().orderBy("alert_type").collect()
+      .foreach(r => println(s"[pipeline]   ${r.getString(0)}: ${r.getLong(1)}")))
 
     // 3. serve: persist the event tables into the store, then run the
     // dashboard refresh loop (reference dashboard.py:41,191-194 — all nine
@@ -83,16 +84,10 @@ object LocalPipeline {
       .orderBy("vehicle_id")
     Sinks.exportCsv(summary, s"$outDir/results/telemetry_summary")
     // the metrics sink dir exists (with _spark_metadata) even when no
-    // window finalized; reading a data-file-less FileStreamSink dir
-    // throws, so check for actual parquet output first
-    val metricsPath = Paths.get(s"$outDir/store/speed_metrics_windowed")
-    val hasMetricFiles = Files.exists(metricsPath) &&
-      Files.list(metricsPath).anyMatch(p => p.toString.endsWith(".parquet"))
-    if (hasMetricFiles) {
-      val m = spark.read.parquet(metricsPath.toString)
-      println(s"[pipeline] windowed metrics rows=${m.count()}")
-    } else {
-      println("[pipeline] windowed metrics: no finalized windows yet " +
+    // window finalized
+    Tables.parquetIfPresent(spark, s"$outDir/store/speed_metrics_windowed") match {
+      case Some(m) => println(s"[pipeline] windowed metrics rows=${m.count()}")
+      case None => println("[pipeline] windowed metrics: no finalized windows yet " +
         "(needs > window + watermark of event time; increase nTicks)")
     }
     println(s"[pipeline] results -> $outDir/results")

@@ -8,7 +8,7 @@ import org.apache.spark.executor.TaskMetrics
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
@@ -41,7 +41,10 @@ import graft.sources.Tables
   *    first `=` (e.g. `spark.sql.autoBroadcastJoinThreshold=1m` to emulate
   *    a large candidate mass against executor memory).
   *
-  * The record of one leg: wall seconds; from one listener, its jobs, tasks,
+  * The record of one leg: wall seconds; from one listener, its jobs, the
+  * bare jobs among them (`bareJobs`: jobs that ran outside any SQL
+  * execution, i.e. with no `spark.sql.execution.id`, such as the footer job
+  * of a parquet read that infers its schema, or an RDD action), tasks,
   * executor CPU-s, task run-s, GC-s, shuffle read and write MB, spill MB and
   * the seconds in which no task was running (driver-only); the seconds of
   * `IndexCache` artifact builds it paid; and, from one query
@@ -68,7 +71,7 @@ object Measure {
     * `plans` holds the formatted executed plan of every Dataset action of
     * the leg, in order (not printed). */
   final case class Record(target: String, dir: String, rep: Int, leg: String,
-      wallS: Double, jobs: Int, tasks: Int, cpuS: Double, taskRunS: Double,
+      wallS: Double, jobs: Int, bareJobs: Int, tasks: Int, cpuS: Double, taskRunS: Double,
       gcS: Double, shuffleReadMb: Double, shuffleWriteMb: Double,
       spillMb: Double, driverOnlyS: Double, artifactS: Double,
       broadcastJoins: Int, sortMergeJoins: Int, shuffledHashJoins: Int,
@@ -191,7 +194,7 @@ object Measure {
     private val planKinds = Seq(classOf[BroadcastHashJoinExec], classOf[SortMergeJoinExec],
       classOf[ShuffledHashJoinExec], classOf[ShuffleExchangeLike])
     private val planCounts = new Array[Int](planKinds.size)
-    private var starts, ends, markerTasks, jobs = 0
+    private var starts, ends, markerTasks, jobs, bareJobs = 0
     // per-task metrics, summed per leg in Record's order: CPU ns, run ms,
     // GC ms, shuffle read and write bytes, spilled bytes
     private val taskMetrics: Seq[TaskMetrics => Long] = Seq(_.executorCpuTime,
@@ -205,7 +208,11 @@ object Measure {
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       starts += 1
       if (Option(e.properties).exists(_.getProperty(MarkerKey) != null)) markerStages ++= e.stageIds
-      else jobs += 1
+      else {
+        jobs += 1
+        if (Option(e.properties).forall(_.getProperty(SQLExecution.EXECUTION_ID_KEY) == null))
+          bareJobs += 1
+      }
     }
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
@@ -257,7 +264,7 @@ object Measure {
       def apply[A](name: String)(body: => A): A = {
         drain()
         synchronized {
-          starts = 0; ends = 0; markerTasks = 0; jobs = 0
+          starts = 0; ends = 0; markerTasks = 0; jobs = 0; bareJobs = 0
           java.util.Arrays.fill(planCounts, 0); java.util.Arrays.fill(taskSums, 0L)
           markerStages.clear(); taskSpans.clear(); plans.clear()
         }
@@ -278,8 +285,8 @@ object Measure {
             }._1
           val Array(bhj, smj, shj, exch) = planCounts
           val Array(cpuNs, runMs, gcMs, readB, writeB, spillB) = taskSums
-          into += Record(t, d, rep, name, (ms1 - ms0) / 1e3, jobs, taskSpans.size, cpuNs / 1e9,
-            runMs / 1e3, gcMs / 1e3, readB / mb, writeB / mb, spillB / mb,
+          into += Record(t, d, rep, name, (ms1 - ms0) / 1e3, jobs, bareJobs, taskSpans.size,
+            cpuNs / 1e9, runMs / 1e3, gcMs / 1e3, readB / mb, writeB / mb, spillB / mb,
             math.max(0L, ms1 - ms0 - busy) / 1e3, artifactS, bhj, smj, shj, exch, out,
             plans.toList)
         }

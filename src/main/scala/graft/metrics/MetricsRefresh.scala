@@ -1,12 +1,11 @@
 package graft.metrics
 
-import scala.util.Try
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
 import graft.sinks.Sinks
+import graft.sources.Tables
 
 /** The serving surface the reference exposes through its Streamlit
   * dashboard: every `refresh_seconds` (5 s — settings.yaml:20) the
@@ -58,32 +57,20 @@ object MetricsRefresh {
         col("metadata"))
   }
 
-  /** None for an ABSENT table (missing dir, or a dir with nothing to
-    * infer a schema from — a sink that created its directory before its
-    * first commit); any other read failure (permissions, corrupt
-    * footers) PROPAGATES — a monitoring surface must not go quietly
-    * blind on exactly the failures it exists to surface. */
-  private def tableIfExists(s: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Try(s.read.parquet(dir)) match {
-      case scala.util.Success(df) => Some(df)
-      case scala.util.Failure(e: org.apache.spark.sql.AnalysisException)
-          if e.getCondition != null &&
-            e.getCondition.startsWith("UNABLE_TO_INFER_SCHEMA") => None
-      case scala.util.Failure(e) => throw e
-    }
-  }
-
   /** The nine metric frames computable from whatever tables the store has
     * (driving/perception leg optional — a telemetry-only store still
     * serves six). */
   def metricFrames(s: SparkSession, storeDir: String, asOf: Column): Map[String, DataFrame] = {
-    val tel = tableIfExists(s, s"$storeDir/vehicle_telemetry")
-    val alerts = tableIfExists(s, s"$storeDir/alerts")
-    val drv = tableIfExists(s, s"$storeDir/driving_events")
-    val per = tableIfExists(s, s"$storeDir/perception_events")
+    // None for an ABSENT table (missing dir, or a dir with no data file —
+    // a sink that created its directory before its first commit); any
+    // other read failure (permissions, corrupt footers) PROPAGATES — a
+    // monitoring surface must not go quietly blind on exactly the failures
+    // it exists to surface
+    def tableIfExists(table: String) = Tables.parquetIfPresent(s, s"$storeDir/$table")
+    val tel = tableIfExists("vehicle_telemetry")
+    val alerts = tableIfExists("alerts")
+    val drv = tableIfExists("driving_events")
+    val per = tableIfExists("perception_events")
     val m = Map.newBuilder[String, DataFrame]
     tel.foreach { t =>
       m += "distinct_vehicles" -> FleetMetrics.distinctVehicleIds(t)

@@ -97,11 +97,11 @@ object Admission {
         .write.mode("overwrite").parquet(s"$path/emb")
     }
     Screens(
-      evalShingles = s.read.parquet(s"$p/evsh"),
+      evalShingles = Tables.parquet(s, s"$p/evsh"),
       evalIdx = TextOps.MinHashIndex(
-        bands = s.read.parquet(s"$p/bands"),
-        shingles = s.read.parquet(s"$p/shingles")),
-      evalEmb = s.read.parquet(s"$p/emb"),
+        bands = Tables.parquet(s, s"$p/bands"),
+        shingles = Tables.parquet(s, s"$p/shingles")),
+      evalEmb = Tables.parquet(s, s"$p/emb"),
       quality = LangId.qualityModelCached(s, corpusDir),
       langid = LangId.langIdModelCached(s, corpusDir))
   }
@@ -117,7 +117,7 @@ object Admission {
         .select($"doc_id", md5(coalesce($"text", lit(""))).as("h"))
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(p)
+    Tables.parquet(s, p)
   }
 
   /** The mutable serving state a decision needs: the content-hash store
@@ -345,7 +345,7 @@ object Admission {
       () => VectorOps.assignCells(
           a.filter($"embedding".isNotNull)
             .select($"doc_id".as("vec_id"), $"embedding"),
-          s.read.parquet(s"$stateDir/vec/centroids"))
+          Tables.parquet(s, s"$stateDir/vec/centroids"))
         .select($"vec_id", $"cell", $"embedding")
         .write.mode("overwrite")
         .parquet(s"$stateDir/vec/vectors/batch=$batchId"))
@@ -478,7 +478,7 @@ object Admission {
       })
     // cards: recomputed from the NEWLY compacted corpus store
     val cs = TextOps.cardStoreOf(
-      s.read.parquet(s"$stateDir/corpus/batch=-1")
+      Tables.parquet(s, s"$stateDir/corpus/batch=-1")
         .select($"source", $"lang", $"text"))
     Sinks.concurrently(
       () => swap(s"$stateDir/cards/sums")(cs.sums),
@@ -500,7 +500,7 @@ object Admission {
     * by deleting the checkpoint's commit marker). */
   private def readPart(s: SparkSession, dir: String,
       before: Option[Long] = None): DataFrame = {
-    val df = s.read.parquet(dir)
+    val df = Tables.parquet(s, dir)
     before.fold(df)(b => df.filter(col("batch") < b))
   }
 
@@ -884,7 +884,7 @@ object Admission {
           $"status")
       val out = legOf(dec0, "revise")
         .unionByName(legOf(dec1, "readmit"))
-        .unionByName(s.read.parquet(s"$state/hashes")
+        .unionByName(Tables.parquet(s, s"$state/hashes")
           .select(lit("final").as("leg"), $"doc_id", $"source", $"h",
             $"nw", lit("stored").as("status")))
         .orderBy($"leg", $"doc_id")

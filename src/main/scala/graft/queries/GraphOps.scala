@@ -198,7 +198,7 @@ object GraphOps {
     * whole graph family. */
   private def basketsCached(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame =
-    s.read.parquet(IndexCache.artifact("baskets", d) { p =>
+    Tables.parquet(s, IndexCache.artifact("baskets", d) { p =>
       baskets(Tables.lineitem(s, d)).write.mode("overwrite").parquet(p)
     })
 
@@ -248,8 +248,8 @@ object GraphOps {
       o.groupBy($"src").agg(sort_array(collect_list($"dst")).as("adj"))
         .write.mode("overwrite").parquet(s"$p/adj")
     }
-    (s.read.parquet(s"$root/deg"),
-      s.read.parquet(s"$root/o"), s.read.parquet(s"$root/adj"))
+    (Tables.parquet(s, s"$root/deg"),
+      Tables.parquet(s, s"$root/o"), Tables.parquet(s, s"$root/adj"))
   }
 
   /** Q117 — triangle counting + local clustering coefficient over the

@@ -184,7 +184,7 @@ object LangId {
         .write.mode("overwrite").parquet(s"$path/tgpost")
       training.select($"doc_id", $"lang")
         .write.mode("overwrite").parquet(s"$path/dlab")
-      val lg = s.read.parquet(s"$path/tgpost")
+      val lg = Tables.parquet(s, s"$path/tgpost")
         .select($"lang", explode($"gcs").as("gc"))
         .groupBy($"lang", $"gc.g".as("g")).agg(sum($"gc.c").as("c"))
         .localCheckpoint()
@@ -203,7 +203,7 @@ object LangId {
   private[graft] def langIdModelCached(s: SparkSession, d: String): NbModel = {
     val p = langIdArtifact(s, d)
     modelInstances.computeIfAbsent(modelKey(s, p), _ =>
-      NbModel(s.read.parquet(s"$p/weights"), s.read.parquet(s"$p/stats")))
+      NbModel(Tables.parquet(s, s"$p/weights"), Tables.parquet(s, s"$p/stats")))
   }
 
   /** The langid model's raw, mutable store: per-doc labeled trigram
@@ -225,8 +225,8 @@ object LangId {
   private[graft] def nbRawCached(s: SparkSession, d: String): NbRaw = {
     val p = langIdArtifact(s, d)
     rawInstances.computeIfAbsent(modelKey(s, p), _ =>
-      NbRaw(s.read.parquet(s"$p/tgpost"), s.read.parquet(s"$p/dlab"),
-        s.read.parquet(s"$p/lg")))
+      NbRaw(Tables.parquet(s, s"$p/tgpost"), Tables.parquet(s, s"$p/dlab"),
+        Tables.parquet(s, s"$p/lg")))
   }
 
   /** Refit from the (possibly mutated) raw store — [[nbFit]] on the
@@ -509,7 +509,7 @@ object LangId {
       m.stats.write.mode("overwrite").parquet(s"$path/stats")
     }
     modelInstances.computeIfAbsent(modelKey(s, p), _ =>
-      NbModel(s.read.parquet(s"$p/weights"), s.read.parquet(s"$p/stats")))
+      NbModel(Tables.parquet(s, s"$p/weights"), Tables.parquet(s, s"$p/stats")))
   }
 
   /** q102's full weak-supervised NB scoring pipeline as a shared oracle

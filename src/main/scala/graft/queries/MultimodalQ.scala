@@ -421,7 +421,7 @@ object MultimodalQ {
   private[graft] def framePhashIndexCached(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    s.read.parquet(IndexCache.artifact("phashidx", d) { p =>
+    Tables.parquet(s, IndexCache.artifact("phashidx", d) { p =>
       val stored = Multimodal.asMedia(Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism)
         .filter($"doc_id" % 10 < 8))

@@ -251,7 +251,7 @@ object Relational {
             .select($"event_id", $"user_id", $"event_type", $"value"),
           path, Seq("user_id", "value"), nFiles = 64)
       }
-      s.read.parquet(p)
+      Tables.parquet(s, p)
         .filter($"user_id".between(40, 90) && $"value".between(100.0, 400.0))
         .orderBy($"event_id")
     },

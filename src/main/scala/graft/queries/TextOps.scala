@@ -525,7 +525,7 @@ object TextOps {
     }
 
   private[graft] def dedupClustersCached(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${dedupClusterArtifact(s, d)}/labels")
+    Tables.parquet(s, s"${dedupClusterArtifact(s, d)}/labels")
 
   /** The verified near-dup pair set underlying [[dedupClustersCached]]
     * — the removal path's source of truth. The 3-column store schema
@@ -534,7 +534,7 @@ object TextOps {
     * a future writer that narrows the store fails HERE, loudly, not
     * inside a downstream consumer's analysis error. */
   private[graft] def dedupEdgesCached(s: SparkSession, d: String): DataFrame = {
-    val df = s.read.parquet(s"${dedupClusterArtifact(s, d)}/edges")
+    val df = Tables.parquet(s, s"${dedupClusterArtifact(s, d)}/edges")
     val expected = Seq("u", "v", "jaccard")
     require(expected.forall(df.columns.contains),
       s"dedup edges store at ${dedupClusterArtifact(s, d)}/edges must carry " +
@@ -715,7 +715,7 @@ object TextOps {
     * `doc_id % 10 < 8` split — the same deterministic stored/arriving
     * convention as q82/q95. */
   private[queries] def storedClustersCached(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(IndexCache.artifact("cclusterstored", d) { p =>
+    Tables.parquet(s, IndexCache.artifact("cclusterstored", d) { p =>
       import s.implicits._
       val stored = shingleDocs(Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism)
@@ -1342,8 +1342,8 @@ object TextOps {
     * built index is pinned in QueriesSpec. */
   private[graft] def loadMinHashIndex(s: SparkSession, path: String): MinHashIndex =
     MinHashIndex(
-      bands = s.read.parquet(s"$path/bands"),
-      shingles = s.read.parquet(s"$path/shingles"))
+      bands = Tables.parquet(s, s"$path/bands"),
+      shingles = Tables.parquet(s, s"$path/shingles"))
 
   /** Index MAINTENANCE — the other half of the incremental story: after
     * [[dedupAgainstIndex]] screens an arriving snapshot, the ACCEPTED
@@ -1875,7 +1875,7 @@ object TextOps {
           count(lit(1)).as("c_all"))
         .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(p)
+    Tables.parquet(s, p)
   }
 
   /** One trainer build behind both cached tokenizers ([[bpeMergesCached]]
@@ -1932,7 +1932,7 @@ object TextOps {
 
   private def readMerges(s: SparkSession, p: String): Seq[(String, String)] = {
     import s.implicits._
-    s.read.parquet(p).orderBy($"rank").collect()
+    Tables.parquet(s, p).orderBy($"rank").collect()
       .map(r => (r.getString(1), r.getString(2))).toSeq
   }
 
@@ -4205,7 +4205,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * sweeps and the streaming lookup twin share one build and pay only
     * the scan. */
   private[graft] def bm25StoreCached(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(IndexCache.artifact("bm25", d) { p =>
+    Tables.parquet(s, IndexCache.artifact("bm25", d) { p =>
       bm25WeightStore(Tables.documents(s, d)).write.mode("overwrite").parquet(p)
     })
 
@@ -4302,7 +4302,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
   /** q163's chunk-keyed weight store over dataset `d`, per-JVM cached —
     * shared with the passage-level hybrid (Retrieval q168). */
   private[graft] def bm25ChunkStoreCached(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(IndexCache.artifact("bm25chunks", d) { p =>
+    Tables.parquet(s, IndexCache.artifact("bm25chunks", d) { p =>
       bm25WeightStore(chunkedDocs(Tables.documents(s, d)
         .select(col("doc_id"), col("text"))))
         .write.mode("overwrite").parquet(p)
@@ -5735,8 +5735,8 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * artifact read of the vocabulary²-bounded tables. */
   private[graft] def bigramLmCached(s: SparkSession, d: String): BigramLm = {
     val p = bigramLmArtifact(s, d)
-    BigramLm(s.read.parquet(s"$p/c12"), s.read.parquet(s"$p/c1"),
-      s.read.parquet(s"$p/v").head().getLong(0))
+    BigramLm(Tables.parquet(s, s"$p/c12"), Tables.parquet(s, s"$p/c1"),
+      Tables.parquet(s, s"$p/v").head().getLong(0))
   }
 
   /** The persisted LM artifact directory for `d` — the serving tables
@@ -5792,9 +5792,9 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
 
   private[graft] def lmRawCached(s: SparkSession, d: String): LmRaw = {
     val p = bigramLmArtifact(s, d)
-    LmRaw(s.read.parquet(s"$p/bgpost"), s.read.parquet(s"$p/wpost"),
-      s.read.parquet(s"$p/wc"), s.read.parquet(s"$p/c12"),
-      s.read.parquet(s"$p/v").head().getLong(0))
+    LmRaw(Tables.parquet(s, s"$p/bgpost"), Tables.parquet(s, s"$p/wpost"),
+      Tables.parquet(s, s"$p/wc"), Tables.parquet(s, s"$p/c12"),
+      Tables.parquet(s, s"$p/v").head().getLong(0))
   }
 
   /** The smoothed-LM view of a raw store: c12 is maintained in the
@@ -5859,7 +5859,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
 
   /** The persisted training-vocabulary table of q85's LM artifact. */
   private[graft] def bigramLmVocab(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${bigramLmArtifact(s, d)}/vocab")
+    Tables.parquet(s, s"${bigramLmArtifact(s, d)}/vocab")
 
   /** Append an admitted snapshot to a trained bigram LM: snapshot
     * bigram counts merged into c12, c1 re-derived (it is a projection
@@ -6004,7 +6004,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     val s = docs.sparkSession
     import s.implicits._
     bm25RawPostings(docs).write.mode("overwrite").parquet(s"$path/postings")
-    val post = s.read.parquet(s"$path/postings")
+    val post = Tables.parquet(s, s"$path/postings")
     bm25DfOf(post).write.mode("overwrite").parquet(s"$path/df")
     val (n, sumLen) = bm25TotalsOf(post)
     Seq((n, sumLen)).toDF("n", "sum_len")
@@ -6129,8 +6129,8 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
   }
 
   private[graft] def loadBm25Raw(s: SparkSession, path: String): Bm25Raw = {
-    val t = s.read.parquet(s"$path/totals").head()
-    Bm25Raw(s.read.parquet(s"$path/postings"), s.read.parquet(s"$path/df"),
+    val t = Tables.parquet(s, s"$path/totals").head()
+    Bm25Raw(Tables.parquet(s, s"$path/postings"), Tables.parquet(s, s"$path/df"),
       t.getLong(0), t.getLong(1))
   }
 
@@ -7099,9 +7099,9 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * same IEEE ceil both sides) and the query hash-matches at every SF
     * — sketch-then-recount with a guarantee, q67b's pattern carried to
     * the corpus-statistics family. `graft.text.pmiSupportFrac`
-    * (default 1e-4) is oracle-pinned like maxCell; ScaleBench overrides
-    * it for the sweep. Equivalence with q99 at matched thresholds is
-    * spec-pinned (QueriesSpec).
+    * (default 1e-4) is oracle-pinned like maxCell; nothing in the engine
+    * sets it. Equivalence with q99 at matched thresholds is spec-pinned
+    * (QueriesSpec sets the conf to q99's support floor).
     */
   private val q99b = Q(
     fn = (s, d) => {

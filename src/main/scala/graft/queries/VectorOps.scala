@@ -592,8 +592,8 @@ object VectorOps {
 
   private[graft] def loadVecDedupIndex(s: SparkSession, path: String): VecDedupIndex =
     VecDedupIndex(
-      centroids = s.read.parquet(s"$path/centroids"),
-      vectors = s.read.parquet(s"$path/vectors"))
+      centroids = Tables.parquet(s, s"$path/centroids"),
+      vectors = Tables.parquet(s, s"$path/vectors"))
 
   /** Index maintenance (q82's admission loop, vector side): append
     * ACCEPTED arriving vectors to the persisted artifact — they are
@@ -1199,9 +1199,9 @@ object VectorOps {
         .toDF("cid", "c").coalesce(1)
         .write.mode("overwrite").parquet(s"$p/cents")
     }
-    val cents = s.read.parquet(s"$root/cents").collect()
+    val cents = Tables.parquet(s, s"$root/cents").collect()
       .sortBy(_.getLong(0)).map(_.getSeq[Long](1).toArray).toSeq
-    (s.read.parquet(s"$root/assign"), cents)
+    (Tables.parquet(s, s"$root/assign"), cents)
   }
 
   /** [[kmeansAssign]]'s core over an arbitrary (vec_id, embedding) frame
@@ -1511,8 +1511,8 @@ object VectorOps {
     * in-memory index is pinned in QueriesSpec. */
   private[graft] def loadPqIndex(s: SparkSession, path: String): PqIndex =
     PqIndex(
-      codes = s.read.parquet(s"$path/codes"),
-      cents = s.read.parquet(s"$path/cents"))
+      codes = Tables.parquet(s, s"$path/codes"),
+      cents = Tables.parquet(s, s"$path/cents"))
 
   /** [[pqTrain]] through the per-JVM [[IndexCache]]: the first caller
     * for a dataset trains and persists, every later caller loads the
@@ -2089,7 +2089,7 @@ object VectorOps {
     fn = (s, d) => {
       import s.implicits._
       val k = resolveKmeansK(s, Tables.embeddings(s, d).count())
-      val sil = s.read.parquet(IndexCache.artifact("ksil", d, k) { p =>
+      val sil = Tables.parquet(s, IndexCache.artifact("ksil", d, k) { p =>
         // the SHARED fit: centroids come from the same kmeans artifact
         // q74/q75/q87 read — one training run per dataset, and only the
         // one scoring pass below is silhouette-specific

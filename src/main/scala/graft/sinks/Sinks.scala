@@ -5,6 +5,8 @@ import java.util.Properties
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Batch sinks — the write side of the pipeline (SURVEY §2.1 S7–S9).
   *
   * The engine's canonical store is time-partitioned parquet (the Spark
@@ -211,28 +213,12 @@ object Sinks {
     // column name instead of an opaque NPE at the toString below
     require(!touched.contains(null),
       s"upsert: `$timeCol` is null on some update rows — every row needs a partition day")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // "table exists" must mean "holds data files": a bare directory left
-    // by a crashed first write would otherwise fail schema inference on
-    // every subsequent upsert instead of taking the first-write branch
-    def hasDataFiles: Boolean = {
-      val it = fs.listFiles(root, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next()
-        val n = f.getPath.getName
-        found = f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      found
-    }
-    val existing =
-      if (!fs.exists(root) || !hasDataFiles) null
-      else spark.read.parquet(path).filter(col("p_date").isin(touched.map(_.toString): _*))
+    // "table exists" means "holds a data file": a bare directory left by
+    // a crashed first write takes the first-write branch
+    val existing = Tables.parquetIfPresent(spark, path)
+      .map(_.filter(col("p_date").isin(touched.map(_.toString): _*)))
     val tagged = up.withColumn("__is_update", lit(1))
-    val merged =
-      if (existing == null) tagged
-      else existing.withColumn("__is_update", lit(0)).unionByName(tagged)
+    val merged = existing.fold(tagged)(_.withColumn("__is_update", lit(0)).unionByName(tagged))
     // final content-hash tiebreak: two DISTINCT update rows sharing the
     // same key and timeCol would otherwise tie completely and row_number
     // would pick a shuffle-order-dependent winner (identical rows still

@@ -1,8 +1,16 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.FileNotFoundException
 
-/** Loaders for the driver-generated testdata tables (TESTDATA.md).
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+
+/** Loaders for the driver-generated testdata tables (TESTDATA.md), and the
+  * engine's one parquet reader, [[parquet]].
   *
   * One parquet file per table under `sfDir`. These are the engine's batch
   * scan path: columnar parquet with Catalyst predicate pushdown and column
@@ -10,8 +18,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * sql/01_schema.sql:22,35 — see SURVEY.md §4).
   *
   * At 100 TB each "file" becomes a partitioned directory; nothing here
-  * changes — `spark.read.parquet` handles directory trees, partition
-  * discovery and pruning natively.
+  * changes — the reader handles directory trees, and Spark's partition
+  * discovery and pruning apply as before.
+  *
+  * Schema resolution. A bare `spark.read.parquet(path)` infers its schema
+  * in a one-task Spark job that reads one footer: without `mergeSchema`,
+  * Spark reads only the first data file in path order. [[parquet]] reads
+  * that same footer on the driver and converts it with the code that job
+  * runs (`ParquetFileFormat.readSchemaFromFooter` with the session's
+  * converter), then hands the schema to the reader. The result is the
+  * frame inference gives, with no job. Partition columns are not in the
+  * footer, so Spark still discovers them from the `k=v` directory names.
+  * Nothing is cached: each call reads the footer again, so a rewritten
+  * directory never serves a stale schema.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -19,7 +38,49 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** The parquet file or directory at `path` (no glob), read with the
+    * schema of its first data file. With no data file under it, or no
+    * such path, this is Spark's own read and its own error
+    * (`UNABLE_TO_INFER_SCHEMA`, `PATH_NOT_FOUND`). A streaming file
+    * sink's dir is still served from its `_spark_metadata` log; its
+    * schema comes from the first file listed, which that sink's one query
+    * wrote like every other. */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    parquetIfPresent(s, path).getOrElse(s.read.parquet(path))
+
+  /** [[parquet]], or None when `path` is missing or holds no data file
+    * (a sink that made its directory before its first commit). A footer
+    * that cannot be read throws. */
+  def parquetIfPresent(s: SparkSession, path: String): Option[DataFrame] = {
+    val conf = s.sessionState.newHadoopConf()
+    val root = new Path(path)
+    firstDataFile(root.getFileSystem(conf), root).map { f =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+        new ParquetToSparkSchemaConverter(s.sessionState.conf))
+      s.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** The data file Spark's inference reads: the first, by path string, of
+    * the files it lists, which skip `_*` and `.*` names (but keep `k=v`
+    * partition dirs) and in-flight `._COPYING_` files. A dir sorts as
+    * `name/`, so the walk visits files in path order and stops at the
+    * first. */
+  private def firstDataFile(fs: FileSystem, p: Path): Option[FileStatus] = {
+    def visible(n: String) = !((n.startsWith("_") && !n.contains("=")) ||
+      n.startsWith(".") || n.endsWith("._COPYING_"))
+    def under(dir: Path): Option[FileStatus] =
+      fs.listStatus(dir).filter(st => visible(st.getPath.getName))
+        .sortBy(st => st.getPath.getName + (if (st.isDirectory) "/" else ""))
+        .iterator.flatMap(st => if (st.isDirectory) under(st.getPath) else Some(st))
+        .nextOption()
+    val root = try Some(fs.getFileStatus(p)) catch { case _: FileNotFoundException => None }
+    root.flatMap(st => if (st.isDirectory) under(p) else Some(st))
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")
@@ -66,8 +127,8 @@ object Tables {
     * with `spark.sql.extensions=graft.GraftExtensions`.
     *
     * Stock sessions lack `spark.sql.legacy.parquet.nanosAsLong`, without
-    * which the `events.parquet` TIMESTAMP(NANOS) footer is rejected at
-    * schema inference (ILLEGAL_PARQUET_TYPE) — it is a runtime SQL conf,
+    * which the `events.parquet` TIMESTAMP(NANOS) footer is rejected when
+    * its schema is resolved (ILLEGAL_PARQUET_TYPE) — it is a runtime SQL conf,
     * so set it here rather than require every caller to know about it.
     */
   def registerViews(s: SparkSession, sfDir: String): Unit = {

@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, ListS
 import graft.model.{Schemas, Telemetry, Thresholds}
 import graft.rules.FleetRules
 import graft.sinks.Sinks
-import graft.sources.FileReplay
+import graft.sources.{FileReplay, Tables}
 
 
 /** Structured-Streaming ingest path — the Spark re-expression of the
@@ -1684,7 +1684,7 @@ object Pipeline {
         val st = Admission.readDedupState(s, stateDir, Some(batchId))
         // decisions FIRST (materializes the verdicts before appends
         // mutate the state dirs the lazy plan reads)
-        val decided = s.read.parquet(writeBatch(Admission.decide(wire, st, scr),
+        val decided = Tables.parquet(s, writeBatch(Admission.decide(wire, st, scr),
           s"$stateDir/decisions", batchId))
         // advisory card-flag gate vs the MAINTAINED card aggregate
         writeBatch(TextOps.dataCardFlags(

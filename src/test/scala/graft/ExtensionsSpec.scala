@@ -185,6 +185,12 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(occurrences(rest, "IndexCache.resolve(") + occurrences(rest, "IndexCache.dataKey(") == 0)
   }
 
+  test("one parquet reader: read.parquet( nowhere in src/main outside Tables") {
+    // a bare read infers its schema in a Spark job; Tables.parquet reads
+    // the footer on the driver
+    assert(occurrences(mainSource(skip = Some("graft/sources/Tables.scala")), "read.parquet(") == 0)
+  }
+
   test("broadcast kernels have no registry lifecycle: one file reaches the sql-private converters") {
     val shim = "org/apache/spark/sql/KernelColumns.scala"
     val rest = mainSource(skip = Some(shim))

@@ -23,6 +23,9 @@ class MeasureSpec extends SparkSpec {
     // the query is deterministic, so a job or task of rep 1 delivered late
     // would show up as a difference here
     assert(recs(1).jobs == recs(0).jobs, recs)
+    // its table read resolves the schema on the driver: every job runs
+    // inside the noop write's SQL execution
+    assert(recs(1).bareJobs == 0, recs(1))
     assert(recs(1).tasks == recs(0).tasks, recs)
   }
 
@@ -68,6 +71,17 @@ class MeasureSpec extends SparkSpec {
       assert(r.jobs == 1 && r.tasks == 2 && r.out == "rows=4", r)
     }
     assert(recs.size == 4)
+  }
+
+  test("bareJobs counts the jobs that ran outside any SQL execution") {
+    val sc = spark.sparkContext
+    val preset: Measure.Preset = (s, _) => leg => {
+      leg("rdd")(sc.parallelize(1 to 2).count())
+      leg("sql")(s.range(4).count())
+    }
+    val recs = Measure.run(spark, Seq("bare" -> preset), Seq("d"), 1)
+    assert(recs.map(r => (r.leg, r.bareJobs)) == Seq("rdd" -> 1, "sql" -> 0), recs)
+    assert(recs.forall(_.jobs >= 1), recs)
   }
 
   test("an unknown target fails before any work and lists the valid names") {

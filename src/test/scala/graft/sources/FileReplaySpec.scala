@@ -54,4 +54,28 @@ class FileReplaySpec extends SparkSpec {
     assert(rows(1).getInt(1) == 10 && !rows(1).getBoolean(3) &&
       rows(1).getTimestamp(0) != null)
   }
+
+  test("readTelemetryFile dispatches on the extension, ignoring its case") {
+    val dir = tmpDir("replay_ext")
+    val jsonl = Paths.get(dir, "t.jsonl")
+    Files.writeString(jsonl,
+      """{"vehicle_id":"9","timestamp":"2026-03-01 10:00:00","odometer_km":"12.5"}
+        |{"vehicle_id":"10","autopilot_engaged":"no"}
+        |""".stripMargin)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("time", "vehicle_id").collect().toSeq
+    val csvRows = rows(FileReplay.readTelemetryCsv(spark, fixture, asOf))
+    val jsonRows = rows(FileReplay.readTelemetryJsonl(spark, jsonl.toString, asOf))
+    assert(csvRows.size == 6 && jsonRows.size == 2)
+    val copies = Seq("t.csv" -> fixture, "t.Csv" -> fixture, "t.NDJSON" -> jsonl.toString,
+      "u.JsonL" -> jsonl.toString, "t.ndjson" -> jsonl.toString)
+    copies.foreach { case (name, src) =>
+      val p = Files.copy(Paths.get(src), Paths.get(dir, name)).toString
+      val want = if (src == fixture) csvRows else jsonRows
+      assert(rows(FileReplay.readTelemetryFile(spark, p, asOf)) == want, name)
+    }
+    assert(rows(FileReplay.readTelemetryFile(spark, jsonl.toString, asOf)) == jsonRows)
+    val txt = Files.copy(jsonl, Paths.get(dir, "t.txt")).toString
+    val e = intercept[IllegalArgumentException](FileReplay.readTelemetryFile(spark, txt, asOf))
+    assert(e.getMessage.contains(txt), e.getMessage)
+  }
 }
