@@ -73,8 +73,8 @@ object GenCorpus {
     * word-level mutation of one of 10 fixed templates (ids −1…−10) — the
     * boilerplate/spam regime where near-dup CANDIDATE pairs grow
     * quadratically inside template clusters instead of staying ~linear.
-    * Used by [[DupMassProbe]] to show the un-hinted verification join
-    * degrades to a shuffle join instead of OOMing (the default corpus
+    * A [[Measure]] run over such a corpus shows the un-hinted verification
+    * join degrades to a shuffle join instead of OOMing (the default corpus
     * statistics are untouched: spamPct = 0 is bit-identical to
     * [[docText]]).
     */

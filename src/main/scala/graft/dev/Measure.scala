@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{Bench, Sessions, SparkEntry}
-import graft.queries.{Admission, IndexCache, LangId, TextOps, VectorOps}
+import graft.queries.{Additive, Admission, IndexCache, LangId, TextOps, VectorOps}
 import graft.sources.Tables
 
 /** The measurement CLI (dev tool; `graft.Bench` stays the driver-facing
@@ -342,10 +342,10 @@ object Measure {
     import s.implicits._
     val docs = Tables.documents(s, d).repartition(s.sparkContext.defaultParallelism)
     val raw = leg("raw(cached)")(LangId.nbRawCached(s, d))
-    val appended = leg("append")(LangId.appendToNbRaw(raw,
-      docs.filter($"doc_id" % 10 === 8).select($"doc_id", $"lang", $"text")))
-    val pruned = leg("remove")(LangId.removeFromNbRaw(appended,
-      docs.filter($"doc_id" % 7 === 0).select($"doc_id")))
+    val appended = leg("append")(Additive.merge(raw, LangId.NbRaw.deltaOf(
+      docs.filter($"doc_id" % 10 === 8).select($"doc_id", $"lang", $"text"))))
+    val pruned = leg("remove")(Additive.remove(appended,
+      docs.filter($"doc_id" % 7 === 0).select($"doc_id").distinct().localCheckpoint()))
     val m = leg("refit")(LangId.nbModelOf(pruned))
     leg("compile")(m.compiled)
     val test = leg("test-ckpt")(docs.filter($"doc_id" % 10 === 9)
@@ -425,29 +425,24 @@ object Measure {
     * BM25 postings store and serving a bounded request set costs
     * ∝ snapshot + vocabulary + one postings scan, not corpus
     * re-tokenization. The stored artifact is built untimed.
-    *  - `append+serve`: appendToBm25Raw (snapshot tokenize + vocab-bounded
-    *    df merge) + bm25RawTopK over the merged postings;
-    *  - `rebuild+serve`: bm25RawStats over the full union corpus + the
+    *  - `append+serve`: the merge of the snapshot's delta (snapshot
+    *    tokenize + vocab-bounded df merge) + bm25RawTopK over the merged
+    *    postings;
+    *  - `rebuild+serve`: the store of the full union corpus + the
     *    same serve — what a deployment without the append path re-pays
     *    every snapshot. */
   private def bm25Append(s: SparkSession, d: String): Leg => Unit = {
     val docs = Tables.documents(s, d).repartition(s.sparkContext.defaultParallelism)
     val nCorpus = docs.count()
-    val p0 = TextOps.bm25RawPostings(docs).localCheckpoint()
-    val (n0, l0) = TextOps.bm25TotalsOf(p0)
-    val stored = TextOps.Bm25Raw(p0, TextOps.bm25DfOf(p0).localCheckpoint(), n0, l0)
+    val stored = TextOps.Bm25Raw.deltaOf(docs).checkpoint("df")
     val snapshot = freshCopies(docs, "text").localCheckpoint()
     val qrows = TextOps.bm25RawQueryRows(s, d)
     println(s"[measure] bm25append $d setup: corpus=$nCorpus snapshot=1000 queries=${qrows.length}")
     leg => {
-      leg("append+serve")(TextOps.bm25RawTopK(
-        TextOps.appendToBm25Raw(stored, snapshot), qrows, 5).count())
-      leg("rebuild+serve") {
-        val pu = TextOps.bm25RawPostings(
-          docs.select("doc_id", "text").unionByName(snapshot)).localCheckpoint()
-        val (nu, lu) = TextOps.bm25TotalsOf(pu)
-        TextOps.bm25RawTopK(TextOps.Bm25Raw(pu, TextOps.bm25DfOf(pu), nu, lu), qrows, 5).count()
-      }
+      leg("append+serve")(TextOps.bm25RawTopK(Additive.merge(stored,
+        TextOps.Bm25Raw.deltaOf(snapshot)).checkpoint("df"), qrows, 5).count())
+      leg("rebuild+serve")(TextOps.bm25RawTopK(TextOps.Bm25Raw.deltaOf(
+        docs.select("doc_id", "text").unionByName(snapshot)), qrows, 5).count())
     }
   }
 

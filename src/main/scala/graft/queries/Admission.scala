@@ -246,10 +246,11 @@ object Admission {
   // mode("overwrite") into the batch's OWN directory — a replayed
   // micro-batch rewrites its own partition, so every store is
   // idempotent under crash-replay (the family-wide batchId rule).
-  // Serving reads the partition-discovered union lazily; additive
-  // artifacts (BM25 df/totals, card store) aggregate their per-batch
-  // deltas at read time — row-identical to the appendTo* chain because
-  // every store is count-additive over disjoint doc sets.
+  // Serving reads the partition-discovered union lazily; the additive
+  // stores (raw BM25, cards) are each batch's delta, saved with
+  // Additive.save under its batch=<id> part, and serve as the merge of
+  // their load — row-identical to merging batch by batch because every
+  // store is count-additive over disjoint doc sets.
   // ------------------------------------------------------------------
 
   private[graft] def seedMarker(stateDir: String) =
@@ -292,34 +293,16 @@ object Admission {
       docs: DataFrame): Unit = {
     import docs.sparkSession.implicits._
     // batch-bounded independent writes, launched concurrently (the
-    // compactState rule): the only real ordering is the bm25 legs'
-    // shared postings checkpoint
-    val post = TextOps.bm25RawPostings(docs.select($"doc_id", $"text"))
-      .localCheckpoint()
-    val cs = TextOps.cardStoreOf(docs.select($"source", $"lang", $"text"))
+    // compactState rule)
     Sinks.concurrently(
       () => docs.select($"doc_id", $"source", $"lang", $"text")
         .write.mode("overwrite").parquet(s"$stateDir/corpus/batch=$batchId"),
       () => docs.select($"doc_id", $"source", $"h", $"nw")
         .write.mode("overwrite").parquet(s"$stateDir/hashes/batch=$batchId"),
-      // BM25 raw (q137's append law): snapshot postings, derived df/totals
-      () => post.write.mode("overwrite")
-        .parquet(s"$stateDir/bm25/postings/batch=$batchId"),
-      () => TextOps.bm25DfOf(post).write.mode("overwrite")
-        .parquet(s"$stateDir/bm25/df/batch=$batchId"),
-      () => {
-        val (n, sumLen) = TextOps.bm25TotalsOf(post)
-        Seq((n, sumLen)).toDF("n", "sum_len").coalesce(1)
-          .write.mode("overwrite")
-          .parquet(s"$stateDir/bm25/totals/batch=$batchId")
-      },
-      // card store deltas (q161's counted-multiset law)
-      () => cs.sums.write.mode("overwrite")
-        .parquet(s"$stateDir/cards/sums/batch=$batchId"),
-      () => cs.langs.write.mode("overwrite")
-        .parquet(s"$stateDir/cards/langs/batch=$batchId"),
-      () => cs.hashes.write.mode("overwrite")
-        .parquet(s"$stateDir/cards/hashes/batch=$batchId"))
+      () => Additive.save(TextOps.Bm25Raw.deltaOf(docs.select($"doc_id", $"text")),
+        s"$stateDir/bm25", s"batch=$batchId"),
+      () => Additive.save(TextOps.cardStoreOf(docs.select($"source", $"lang", $"text")),
+        s"$stateDir/cards", s"batch=$batchId"))
   }
 
   /** Append an ADMITTED batch (doc_id, source, lang, text, embedding)
@@ -427,25 +410,32 @@ object Admission {
     // and the fold RENAMES in as the consolidated batch=-1 — one
     // materialization instead of localCheckpoint + write, and the store
     // is never in a state where a crash loses both copies
-    def swap(dir: String)(masked: DataFrame): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/_compact_tmp")
-      masked.write.mode("overwrite").parquet(tmp.toString)
+    val tmp = "_compact_tmp"
+    def commit(dir: String): Unit = {
       val p = new org.apache.hadoop.fs.Path(dir)
       if (fs.exists(p))
         fs.listStatus(p)
           .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
           .foreach(st => fs.delete(st.getPath, true))
-      fs.rename(tmp, new org.apache.hadoop.fs.Path(s"$dir/batch=-1"))
+      fs.rename(new org.apache.hadoop.fs.Path(s"$dir/$tmp"),
+        new org.apache.hadoop.fs.Path(s"$dir/batch=-1"))
+    }
+    def swap(dir: String)(masked: DataFrame): Unit = {
+      masked.write.mode("overwrite").parquet(s"$dir/$tmp")
+      commit(dir)
+    }
+    // an additive store is REBUILT from its survivors (the rebuild each
+    // serve must equal), saved under the tmp part, then swapped table by
+    // table
+    def rebuild(dir: String)(st: Additive.Store): Unit = {
+      Additive.save(st, dir, tmp)
+      st.family.dirs.foreach(n => commit(s"$dir/$n"))
     }
     // the per-family folds are INDEPENDENT Spark jobs over small frames
     // (each swap is one anti-join + one partition write) — run them
     // concurrently so the compaction wall is the slowest family, not
-    // the sum of nine job launches. Only two orderings are real:
-    // cards read the NEWLY compacted corpus, and the bm25 legs share
-    // the masked-postings checkpoint.
-    val post = readPart(s, s"$stateDir/bm25/postings")
-      .select($"doc_id", $"hs", $"tfs", $"len")
-      .join(vic, Seq("doc_id"), "left_anti").localCheckpoint()
+    // the sum of their job launches. Only one ordering is real: cards
+    // read the NEWLY compacted corpus.
     Sinks.concurrently(
       () => swap(s"$stateDir/corpus")(
         readPart(s, s"$stateDir/corpus")
@@ -467,23 +457,14 @@ object Admission {
         readPart(s, s"$stateDir/vec/vectors")
           .select($"vec_id", $"cell", $"embedding")
           .join(vicVec, Seq("vec_id"), "left_anti")),
-      // BM25: postings mask, df/totals RECOMPUTED from the masked
-      // postings (the rebuild each serve must equal)
-      () => swap(s"$stateDir/bm25/postings")(post),
-      () => swap(s"$stateDir/bm25/df")(TextOps.bm25DfOf(post)),
-      () => {
-        val (n, sumLen) = TextOps.bm25TotalsOf(post)
-        swap(s"$stateDir/bm25/totals")(
-          Seq((n, sumLen)).toDF("n", "sum_len").coalesce(1))
-      })
+      // BM25: df/totals RECOMPUTED from the masked postings
+      () => rebuild(s"$stateDir/bm25")(TextOps.Bm25Raw.project(Map(
+        "postings" -> readPart(s, s"$stateDir/bm25/postings")
+          .join(vic, Seq("doc_id"), "left_anti")))))
     // cards: recomputed from the NEWLY compacted corpus store
-    val cs = TextOps.cardStoreOf(
+    rebuild(s"$stateDir/cards")(TextOps.cardStoreOf(
       Tables.parquet(s, s"$stateDir/corpus/batch=-1")
-        .select($"source", $"lang", $"text"))
-    Sinks.concurrently(
-      () => swap(s"$stateDir/cards/sums")(cs.sums),
-      () => swap(s"$stateDir/cards/langs")(cs.langs),
-      () => swap(s"$stateDir/cards/hashes")(cs.hashes))
+        .select($"source", $"lang", $"text")))
   }
 
   /** Read a batch-partitioned store, keeping only partitions BEFORE
@@ -501,7 +482,7 @@ object Admission {
   private def readPart(s: SparkSession, dir: String,
       before: Option[Long] = None): DataFrame = {
     val df = Tables.parquet(s, dir)
-    before.fold(df)(b => df.filter(col("batch") < b))
+    before.fold(df)(b => df.filter(col("batch") < b)).drop("batch")
   }
 
   /** The decision-serving state over the partition-discovered union —
@@ -525,36 +506,16 @@ object Admission {
           .select($"vec_id", $"cell", $"embedding")))
   }
 
-  /** Serve the maintained card store (q161's aggregation of the
-    * per-batch deltas — exact because every store is count-additive). */
+  /** Serve a maintained additive store: the merge of the per-batch
+    * deltas [[writeDocStores]] saved (q161's and q137's append laws),
+    * before `before` when given ([[readPart]]). */
   private[graft] def servedCardStore(s: SparkSession, stateDir: String,
-      before: Option[Long] = None): TextOps.CardStore = {
-    import s.implicits._
-    TextOps.CardStore(
-      sums = readPart(s, s"$stateDir/cards/sums", before)
-        .groupBy($"source").agg(
-          sum($"n_docs").as("n_docs"), sum($"ws_tokens").as("ws_tokens"),
-          sum($"n_short_docs").as("n_short_docs")),
-      langs = readPart(s, s"$stateDir/cards/langs", before)
-        .groupBy($"source", $"lang").agg(sum($"c").as("c")),
-      hashes = readPart(s, s"$stateDir/cards/hashes", before)
-        .groupBy($"source", $"h").agg(sum($"c").as("c")))
-  }
+      before: Option[Long] = None): TextOps.CardStore =
+    Additive.merge(Additive.load(TextOps.CardStore, s"$stateDir/cards",
+      readPart(s, _, before)))
 
-  /** Serve the maintained BM25 raw artifact (q137's append law over the
-    * per-batch partitions). */
-  private[graft] def servedBm25(s: SparkSession,
-      stateDir: String): TextOps.Bm25Raw = {
-    import s.implicits._
-    val t = readPart(s, s"$stateDir/bm25/totals")
-      .agg(sum($"n").as("n"), sum($"sum_len").as("sum_len")).head()
-    TextOps.Bm25Raw(
-      postings = readPart(s, s"$stateDir/bm25/postings")
-        .select($"doc_id", $"hs", $"tfs", $"len"),
-      df = readPart(s, s"$stateDir/bm25/df")
-        .groupBy($"h").agg(sum($"df").as("df")),
-      n = t.getLong(0), sumLen = t.getLong(1))
-  }
+  private[graft] def servedBm25(s: SparkSession, stateDir: String): TextOps.Bm25Raw =
+    Additive.merge(Additive.load(TextOps.Bm25Raw, s"$stateDir/bm25", readPart(s, _)))
 
   // ------------------------------------------------------------------
   // Q180 — the composed lifecycle as ONE driver-gated row set (the

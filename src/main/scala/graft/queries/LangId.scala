@@ -161,7 +161,7 @@ object LangId {
       // classifier): per-doc labeled trigram counts + doc labels; the
       // model's count table is a PROJECTION of the per-doc postings,
       // built that way so exact unlearning (subtract a victim's own
-      // stored counts — [[removeFromNbRaw]]) lands on precisely the
+      // stored counts — [[Additive.remove]]) lands on precisely the
       // counts a retrain on survivors would see. Docs too short for a
       // trigram have no postings but still count in dlab (priors and
       // the prior denominator include them, exactly as trainLangIdNb's
@@ -184,9 +184,7 @@ object LangId {
         .write.mode("overwrite").parquet(s"$path/tgpost")
       training.select($"doc_id", $"lang")
         .write.mode("overwrite").parquet(s"$path/dlab")
-      val lg = Tables.parquet(s, s"$path/tgpost")
-        .select($"lang", explode($"gcs").as("gc"))
-        .groupBy($"lang", $"gc.g".as("g")).agg(sum($"gc.c").as("c"))
+      val lg = NbRaw.project(Map("tgpost" -> Tables.parquet(s, s"$path/tgpost")))("lg")
         .localCheckpoint()
       lg.write.mode("overwrite").parquet(s"$path/lg")
       val m = nbFit(lg,
@@ -206,15 +204,39 @@ object LangId {
       NbModel(Tables.parquet(s, s"$p/weights"), Tables.parquet(s, s"$p/stats")))
   }
 
-  /** The langid model's raw, mutable store: per-doc labeled trigram
-    * counts (`tgpost`: doc_id, lang, gcs array<struct<g,c>> — ONE row
-    * per doc, so doc-keyed mutations join doc-level rows), doc labels
-    * (`dlab`: doc_id, lang — includes trigram-less short docs), and the
-    * maintained count-table projection (`lg`: lang, g, c). Every fitted
+  /** The langid model's raw, mutable [[Additive]] store: per-doc
+    * labeled trigram counts (`tgpost`: doc_id, lang, gcs
+    * array<struct<g,c>> — ONE row per doc, so doc-keyed mutations join
+    * doc-level rows and only the victims' arrays ever explode), doc
+    * labels (`dlab`: doc_id, lang — includes trigram-less short docs),
+    * and the maintained count table (`lg`: lang, g, c). Every fitted
     * quantity is a closed form of these ([[nbFit]]), so append and
-    * removal are count arithmetic and the refit is vocabulary-bounded. */
-  private[graft] case class NbRaw(tgpost: DataFrame, dlab: DataFrame,
-      lg: DataFrame)
+    * removal are count arithmetic and the refit is vocabulary-bounded.
+    * The merged count table is best left LAZY: its one consumer per
+    * lifecycle is nbFit's single collect (or the next mutation's join),
+    * and an eager vocab×langs materialization was a whole cluster job of
+    * pure overhead in the q149 gate. */
+  private[graft] type NbRaw = Additive.Store
+  private[graft] object NbRaw extends Additive.Family(
+      counts = Seq("lg" -> Additive.Counts(Seq("lang", "g"), "c")),
+      postings = Seq("tgpost", "dlab")) {
+    override def project(own: Map[String, DataFrame]): NbRaw =
+      Additive.Store(this, own + ("lg" -> own("tgpost")
+        .select(col("lang"), explode(col("gcs")).as("gc"))
+        .groupBy(col("lang"), col("gc.g").as("g")).agg(sum(col("gc.c")).as("c"))))
+
+    /** The store of a labeled snapshot (doc_id, lang, text): the
+      * scan-local per-doc count fold in the store's doc-level array shape
+      * (the langIdArtifact tgpost rule), materialized once because the
+      * postings and the counts both read it. */
+    def deltaOf(snap: DataFrame): NbRaw = {
+      val sg = snap
+        .select(col("doc_id"), col("lang"),
+          graft.functions.expressions.char_gram_counts(col("text")).as("gcs"))
+        .localCheckpoint()
+      project(Map("tgpost" -> sg, "dlab" -> sg.select(col("doc_id"), col("lang"))))
+    }
+  }
 
   /** Memoized like [[modelInstances]] (same app-scoped key rule): the
     * three parquet handles re-read footers for schema on every
@@ -225,8 +247,7 @@ object LangId {
   private[graft] def nbRawCached(s: SparkSession, d: String): NbRaw = {
     val p = langIdArtifact(s, d)
     rawInstances.computeIfAbsent(modelKey(s, p), _ =>
-      NbRaw(Tables.parquet(s, s"$p/tgpost"), Tables.parquet(s, s"$p/dlab"),
-        Tables.parquet(s, s"$p/lg")))
+      Additive.load(NbRaw, p, Tables.parquet(s, _)))
   }
 
   /** Refit from the (possibly mutated) raw store — [[nbFit]] on the
@@ -238,62 +259,11 @@ object LangId {
     * union ∘ anti-join chain (q149: parquet ∪ snapshot, minus victims)
     * pays that chain once, not once per aggregate (VERDICT r11 #6). */
   private[graft] def nbModelOf(raw: NbRaw): NbModel = {
-    val s = raw.dlab.sparkSession
+    val s = raw("dlab").sparkSession
     import s.implicits._
-    val ndRows = raw.dlab.groupBy($"lang").agg(count(lit(1)).as("nd"))
+    val ndRows = raw("dlab").groupBy($"lang").agg(count(lit(1)).as("nd"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    nbFit(raw.lg, ndRows.toDF("lang", "nd"), ndRows.map(_._2).sum)
-  }
-
-  /** Admit a labeled snapshot (doc_id, lang, text; ids DISJOINT from
-    * the stored ids — the family's admission contract) into the raw
-    * store: snapshot postings union in, the count table merges by
-    * addition (vocab×langs-bounded). */
-  private[graft] def appendToNbRaw(raw: NbRaw, snap: DataFrame): NbRaw = {
-    import snap.sparkSession.implicits._
-    // scan-local per-doc count fold, kept in the store's doc-level
-    // array shape (the langIdArtifact tgpost rule); checkpointed once
-    // because both the postings union and the count merge consume it
-    val sg = snap
-      .select($"doc_id", $"lang",
-        graft.functions.expressions.char_gram_counts($"text").as("gcs"))
-      .localCheckpoint()
-    // the merged count table stays LAZY: its one consumer per lifecycle
-    // is nbFit's single collect (or the next mutation's join), and an
-    // eager vocab×langs materialization here was a whole cluster job of
-    // pure overhead in the q149 gate
-    val lgM = raw.lg
-      .unionByName(sg.select(explode($"gcs").as("gc"), $"lang")
-        .groupBy($"lang", $"gc.g".as("g")).agg(sum($"gc.c").as("c")))
-      .groupBy($"lang", $"g").agg(sum($"c").as("c"))
-    NbRaw(raw.tgpost.unionByName(sg),
-      raw.dlab.unionByName(snap.select($"doc_id", $"lang")), lgM)
-  }
-
-  /** Exact machine UNLEARNING for the NB classifier (right-to-be-
-    * forgotten applied to a trained model, not just an index): each
-    * victim's OWN stored per-doc counts subtract from the count table
-    * (zero rows drop — a trigram unique to victims leaves the
-    * vocabulary, shifting v in every smoothed weight), labels
-    * anti-join, and the refit ([[nbModelOf]]) is a closed form of the
-    * updated counts — equal to retraining on the survivors EXACTLY,
-    * with no victim text ever re-read. Mutation cost: victim postings
-    * + vocab×langs-bounded merges; no broadcast hints on the victim
-    * joins (the q95/q103 AQE rule). */
-  private[graft] def removeFromNbRaw(raw: NbRaw, removeIds: DataFrame): NbRaw = {
-    import removeIds.sparkSession.implicits._
-    val vic = removeIds.select($"doc_id").distinct().localCheckpoint()
-    // doc-level semi-join (one row per DOC in the array-shaped store),
-    // then only the VICTIMS' gram arrays explode into the count merge
-    val dec = raw.tgpost.join(vic, Seq("doc_id"), "left_semi")
-      .select($"lang", explode($"gcs").as("gc"))
-      .groupBy($"lang", $"gc.g".as("g")).agg(sum($"gc.c").as("dec"))
-    // lazy like appendToNbRaw's merge — one consumer per lifecycle
-    val lgM = raw.lg.join(dec, Seq("lang", "g"), "left")
-      .select($"lang", $"g", ($"c" - coalesce($"dec", lit(0L))).as("c"))
-      .filter($"c" > 0)
-    NbRaw(raw.tgpost.join(vic, Seq("doc_id"), "left_anti"),
-      raw.dlab.join(vic, Seq("doc_id"), "left_anti"), lgM)
+    nbFit(raw("lg"), ndRows.toDF("lang", "nd"), ndRows.map(_._2).sum)
   }
 
   /** The scoring core: (doc_id, text) → one (doc_id, lang, score_fp)
@@ -448,8 +418,8 @@ object LangId {
   /** Q149 — exact NB machine unlearning, full lifecycle (q144's shape
     * on a TRAINED CLASSIFIER rather than an index or LM): the stored
     * raw model store ([[nbRawCached]], %10<8) admits the labeled
-    * %10=8 snapshot ([[appendToNbRaw]]), processes the %7=0 takedown
-    * batch ([[removeFromNbRaw]] — victims' counts subtracted from
+    * %10=8 snapshot ([[Additive.merge]]), processes the %7=0 takedown
+    * batch ([[Additive.remove]] — victims' counts subtracted from
     * their own stored postings, a victim-only trigram leaves the
     * vocabulary and shifts the smoothing denominator in EVERY weight),
     * refits the closed form ([[nbModelOf]]) and classifies the %10=9
@@ -466,11 +436,12 @@ object LangId {
       // per-char kernel work (snapshot tokenize, held-out scoring) — the
       // old whole-table repartition exchanged the full corpus text once
       // per consuming job; the victim leg needs doc_id only (pruned scan)
-      val appended = appendToNbRaw(nbRawCached(s, d),
+      val appended = Additive.merge(nbRawCached(s, d), NbRaw.deltaOf(
         docs.filter($"doc_id" % 10 === 8)
-          .select($"doc_id", $"lang", $"text").repartition(par))
-      val pruned = removeFromNbRaw(appended,
-        docs.filter($"doc_id" % 7 === 0).select($"doc_id"))
+          .select($"doc_id", $"lang", $"text").repartition(par)))
+      // the victim ids feed three doc-level joins: materialized once
+      val pruned = Additive.remove(appended,
+        docs.filter($"doc_id" % 7 === 0).select($"doc_id").distinct().localCheckpoint())
       val m = nbModelOf(pruned)
       // one scan of the held-out split feeds BOTH the scorer and the
       // label join (it was read from parquet twice)

@@ -1367,7 +1367,7 @@ object TextOps {
   }
 
   /** Remove documents from a [[MinHashIndex]] — the takedown half of
-    * index maintenance ([[removeFromBm25Raw]]'s rule on the dedup
+    * index maintenance (raw BM25's [[Additive.remove]] rule on the dedup
     * artifact): banding and shingling are pure per-document functions,
     * so removal is two anti-joins on doc_id — no neighbor's rows change,
     * and the pruned index is row-identical to rebuilding over the
@@ -4408,8 +4408,8 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * argument, chunk-granular): per-chunk (term-hash, tf, len)
     * postings + the vocabulary-bounded df table + totals, all additive
     * over disjoint chunk sets. The stored split's chunk-raw artifact
-    * absorbs the arriving snapshot's CHUNKS ([[appendToBm25Raw]]
-    * unchanged — chunks are just short documents to it), serves the
+    * absorbs the arriving snapshot's CHUNKS ([[Additive.merge]] of their
+    * [[Bm25Raw.deltaOf]] — chunks are just short documents to it), serves the
     * % 41 request set with query-time idf over the merged statistics,
     * and pools to documents ([[maxPassagePool]], shared with q163).
     * The oracle chunks the FULL corpus and rebuilds from scratch — a
@@ -4420,8 +4420,8 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     fn = (s, d) => {
       import s.implicits._
       val docs = Tables.documents(s, d).select($"doc_id", $"text")
-      val merged = appendToBm25Raw(bm25ChunkRawCached(s, d),
-        chunkedDocs(docs.filter($"doc_id" % 10 >= 8)))
+      val merged = Additive.merge(bm25ChunkRawCached(s, d),
+        Bm25Raw.deltaOf(chunkedDocs(docs.filter($"doc_id" % 10 >= 8)))).checkpoint("df")
       maxPassagePool(bm25RawTopK(merged, bm25RawQueryRows(s, d), 20))
     },
     oracle = Some(maxPassageOracle("", 41)))
@@ -4431,7 +4431,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * names DOCUMENTS (doc_id % 7 = 0); the victims' CHUNK ids are
     * looked up IN THE STORE (one postings projection filtered on the
     * decoded parent — no victim text is re-read, it may already be
-    * gone) and fed to the UNCHANGED [[removeFromBm25Raw]]: postings
+    * gone) and fed to the UNCHANGED [[Additive.remove]]: postings
     * anti-join, vocabulary-bounded df subtraction, totals decrement.
     * Serving the % 41 request set over what remains and pooling to
     * documents must equal the from-scratch chunk index over the
@@ -4443,13 +4443,13 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     fn = (s, d) => {
       import s.implicits._
       val docs = Tables.documents(s, d).select($"doc_id", $"text")
-      val merged = appendToBm25Raw(bm25ChunkRawCached(s, d),
-        chunkedDocs(docs.filter($"doc_id" % 10 >= 8)))
+      val merged = Additive.merge(bm25ChunkRawCached(s, d),
+        Bm25Raw.deltaOf(chunkedDocs(docs.filter($"doc_id" % 10 >= 8)))).checkpoint("df")
       // victim documents -> their chunk ids, read off the store itself
-      val victimCids = merged.postings
+      val victimCids = merged("postings")
         .filter(expr("(doc_id - 1) div 100000 % 7 = 0"))
         .select($"doc_id")
-      val pruned = removeFromBm25Raw(merged, victimCids)
+      val pruned = Additive.remove(merged, victimCids).checkpoint("df")
       maxPassagePool(bm25RawTopK(pruned, bm25RawQueryRows(s, d), 20))
     },
     oracle = Some(maxPassageOracle(" WHERE doc_id % 7 <> 0", 41)))
@@ -4701,9 +4701,17 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * At 100 TB the hashes table is the big leg (~24 bytes/distinct doc)
     * and is the same store an exact-dedup admission path already
     * maintains; sums/langs are sources- and sources×langs-bounded. */
-  private[graft] case class CardStore(sums: DataFrame, langs: DataFrame,
-      hashes: DataFrame)
+  private[graft] type CardStore = Additive.Store
+  private[graft] object CardStore extends Additive.Family(counts = Seq(
+    "sums" -> Additive.Counts(Seq("source"), "n_docs"),
+    "langs" -> Additive.Counts(Seq("source", "lang"), "c"),
+    "hashes" -> Additive.Counts(Seq("source", "h"), "c")))
 
+  /** The card store of `docs` (source, lang, text). It keeps no
+    * postings, so a takedown subtracts the victims' own store, built from
+    * their rows on the way out (q162); append merges the batch's (q161).
+    * Both are exact because every table is count-additive over disjoint
+    * doc sets. */
   private[graft] def cardStoreOf(docs: DataFrame): CardStore = {
     import docs.sparkSession.implicits._
     val base = docs
@@ -4711,64 +4719,13 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
         md5(coalesce($"text", lit(""))).as("h"),
         size(filter(words(coalesce($"text", lit(""))),
           w => length(w) > 0)).cast("long").as("nw"))
-    CardStore(
-      sums = base.groupBy($"source").agg(
+    Additive.Store(CardStore, Map(
+      "sums" -> base.groupBy($"source").agg(
         count(lit(1)).as("n_docs"),
         sum($"nw").as("ws_tokens"),
         sum(when($"nw" < 50, 1L).otherwise(0L)).as("n_short_docs")),
-      langs = base.groupBy($"source", $"lang").agg(count(lit(1)).as("c")),
-      hashes = base.groupBy($"source", $"h").agg(count(lit(1)).as("c")))
-  }
-
-  /** Append a batch into the card store — three exact merges, cost
-    * ∝ batch (+ the hash-multiset shuffle); the stored corpus text is
-    * never re-read. Append == rebuild over the union by construction
-    * (every store is count-additive over disjoint doc sets), pinned by
-    * q161's oracle which computes the full-corpus card from scratch. */
-  private[graft] def appendToCardStore(st: CardStore, batch: DataFrame): CardStore = {
-    import batch.sparkSession.implicits._
-    val b = cardStoreOf(batch)
-    CardStore(
-      sums = st.sums.unionByName(b.sums).groupBy($"source").agg(
-        sum($"n_docs").as("n_docs"), sum($"ws_tokens").as("ws_tokens"),
-        sum($"n_short_docs").as("n_short_docs")),
-      langs = st.langs.unionByName(b.langs).groupBy($"source", $"lang")
-        .agg(sum($"c").as("c")),
-      hashes = st.hashes.unionByName(b.hashes).groupBy($"source", $"h")
-        .agg(sum($"c").as("c")))
-  }
-
-  /** TAKEDOWN on the card store — the removal half of the curation
-    * maintenance matrix (q142's contract on the datasheet layer): the
-    * victims' own rows (the corpus rows being deleted, read once on
-    * their way out) subtract from every table, zero-count groups drop.
-    * Exact inverse of [[appendToCardStore]] because every store is
-    * count-additive over disjoint doc sets; the counted hash multiset
-    * is what makes the dup statistic survive removal (dropping one
-    * copy of a twice-held hash keeps the row, c 2→1, and the rendered
-    * n_dup falls by exactly one). remove ∘ append ≡ rebuild-on-
-    * survivors is q162's oracle. */
-  private[graft] def removeFromCardStore(st: CardStore,
-      victimDocs: DataFrame): CardStore = {
-    import victimDocs.sparkSession.implicits._
-    val v = cardStoreOf(victimDocs)
-    CardStore(
-      sums = st.sums
-        .join(v.sums.select($"source", $"n_docs".as("dn"),
-          $"ws_tokens".as("dw"), $"n_short_docs".as("ds")), Seq("source"), "left")
-        .select($"source",
-          ($"n_docs" - coalesce($"dn", lit(0L))).as("n_docs"),
-          ($"ws_tokens" - coalesce($"dw", lit(0L))).as("ws_tokens"),
-          ($"n_short_docs" - coalesce($"ds", lit(0L))).as("n_short_docs"))
-        .filter($"n_docs" > 0),
-      langs = st.langs
-        .join(v.langs.withColumnRenamed("c", "dc"), Seq("source", "lang"), "left")
-        .select($"source", $"lang", ($"c" - coalesce($"dc", lit(0L))).as("c"))
-        .filter($"c" > 0),
-      hashes = st.hashes
-        .join(v.hashes.withColumnRenamed("c", "dc"), Seq("source", "h"), "left")
-        .select($"source", $"h", ($"c" - coalesce($"dc", lit(0L))).as("c"))
-        .filter($"c" > 0))
+      "langs" -> base.groupBy($"source", $"lang").agg(count(lit(1)).as("c")),
+      "hashes" -> base.groupBy($"source", $"h").agg(count(lit(1)).as("c"))))
   }
 
   /** Render a [[CardStore]] as q151's card rows — the same statistics
@@ -4777,17 +4734,18 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * stores instead of the corpus scan. sourceCards(docs) ==
     * cardsOfStore(cardStoreOf(docs)) is pinned in QueriesSpec. */
   private[graft] def cardsOfStore(st: CardStore): DataFrame = {
-    import st.sums.sparkSession.implicits._
-    val distinctH = st.hashes.groupBy($"source").agg(count(lit(1)).as("n_distinct"))
-    val s1 = st.sums.join(distinctH, Seq("source"))
+    val sums = st("sums")
+    import sums.sparkSession.implicits._
+    val distinctH = st("hashes").groupBy($"source").agg(count(lit(1)).as("n_distinct"))
+    val s1 = sums.join(distinctH, Seq("source"))
       .select($"source", $"n_docs", $"ws_tokens", $"n_short_docs",
         ($"n_docs" - $"n_distinct").as("n_dup_docs"))
-    val ent = st.langs.join(s1.select($"source", $"n_docs"), Seq("source"))
+    val ent = st("langs").join(s1.select($"source", $"n_docs"), Seq("source"))
       .groupBy($"source").agg(
         count(lit(1)).as("n_langs"),
         sum($"c" * floor(-log($"c".cast("double") / $"n_docs") * 1e6)
           .cast("long")).as("ent_fp"))
-    val dom = st.langs.withColumn("rn", row_number().over(
+    val dom = st("langs").withColumn("rn", row_number().over(
         Window.partitionBy($"source").orderBy($"c".desc, $"lang")))
       .filter($"rn" === 1).select($"source", $"lang".as("dominant_lang"))
     s1.join(ent, Seq("source")).join(dom, Seq("source"))
@@ -5316,7 +5274,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * append in q161, this is the removal half). The stored split's
     * [[CardStore]] absorbs the arriving snapshot, then processes a
     * takedown batch (% 13 = 0, the victims' rows read once on their
-    * way out — [[removeFromCardStore]]); the oracle computes the
+    * way out, their [[cardStoreOf]] subtracted); the oracle computes the
     * SURVIVOR-corpus card from scratch. A hash match proves
     * remove ∘ append ≡ rebuild-on-survivors exactly — including n_dup
     * through the COUNTED hash multiset (a set-valued store would
@@ -5328,11 +5286,11 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       import s.implicits._
       val docs = Tables.documents(s, d)
         .select($"doc_id", $"source", $"lang", $"text")
-      val appended = appendToCardStore(
+      val appended = Additive.merge(
         cardStoreOf(docs.filter($"doc_id" % 10 < 8)),
-        docs.filter($"doc_id" % 10 >= 8))
-      cardsOfStore(removeFromCardStore(appended,
-        docs.filter($"doc_id" % 13 === 0)))
+        cardStoreOf(docs.filter($"doc_id" % 10 >= 8)))
+      cardsOfStore(Additive.subtract(appended,
+        cardStoreOf(docs.filter($"doc_id" % 13 === 0))))
     },
     oracle = Some("""
       WITH d AS (
@@ -5375,7 +5333,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * maintenance argument applied to the curation layer — a release
     * card over a 100 TB corpus cannot re-scan history every admission).
     * The stored split's [[CardStore]] absorbs the arriving snapshot
-    * ([[appendToCardStore]] — three exact merges, cost ∝ batch) and the
+    * (its [[cardStoreOf]] merged — three exact merges, cost ∝ batch) and the
     * merged store renders as card rows ([[cardsOfStore]]). The oracle
     * computes the FULL-corpus card from scratch (q151's SQL verbatim) —
     * a hash match proves append ∘ render ≡ rebuild exactly, including
@@ -5390,7 +5348,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       val docs = Tables.documents(s, d)
         .select($"doc_id", $"source", $"lang", $"text")
       val stored = cardStoreOf(docs.filter($"doc_id" % 10 < 8))
-      cardsOfStore(appendToCardStore(stored, docs.filter($"doc_id" % 10 >= 8)))
+      cardsOfStore(Additive.merge(stored, cardStoreOf(docs.filter($"doc_id" % 10 >= 8))))
     },
     oracle = Some("""
       WITH d AS (
@@ -5739,17 +5697,14 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       Tables.parquet(s, s"$p/v").head().getLong(0))
   }
 
-  /** The persisted LM artifact directory for `d` — the serving tables
-    * (c12/c1/v) plus the training VOCABULARY table (the word set, not
-    * just its count: v is not additive across overlapping snapshots,
-    * the set is — [[appendToBigramLm]] needs it) plus the RAW per-doc
-    * store q137's takedown argument demands (bgpost/wpost/wc —
-    * [[LmRaw]]): every serving table is a PROJECTION of the raw store
-    * (c12 = Σ_doc bgpost, c1 = Σ_w2 c12, vocab = wc's key set,
-    * v = |wc|), built that way here so the projection law holds by
-    * construction and a removal that subtracts victims' stored
-    * postings lands on exactly the tables a retrain on survivors
-    * would ([[removeFromLmRaw]]). */
+  /** The persisted LM artifact directory for `d`: the serving tables
+    * (c12/c1/v) and the RAW per-doc store q137's takedown argument
+    * demands ([[LmRaw]]: bgpost/wpost and their projections c12/wc).
+    * Every serving table is a projection of the raw store (c12 = Σ_doc
+    * bgpost, c1 = Σ_w2 c12, v = |wc|), built that way here so the
+    * projection law holds by construction and a removal that subtracts
+    * victims' stored postings lands on exactly the tables a retrain on
+    * survivors would. */
   private def bigramLmArtifact(s: SparkSession, d: String): String =
     IndexCache.artifact("bigramlm", d) { path =>
       import s.implicits._
@@ -5757,135 +5712,60 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       val bgp = bigramsOf(training).groupBy($"doc_id", $"bg")
         .agg(count(lit(1)).as("c")).localCheckpoint()
       bgp.write.mode("overwrite").parquet(s"$path/bgpost")
+      val wp = training.select($"doc_id", explode(words($"text")).as("word"))
+        .distinct().localCheckpoint()
       // groupBy(bg).count over occurrences == Σ_doc of per-doc counts:
       // trainBigramLm's c12 values, derived through the raw store
-      val c12 = bgp.groupBy($"bg").agg(sum($"c").as("c12")).localCheckpoint()
+      val raw = LmRaw.project(Map("bgpost" -> bgp, "wpost" -> wp))
+      val c12 = raw("c12").localCheckpoint()
       c12.write.mode("overwrite").parquet(s"$path/c12")
       c12.groupBy(split($"bg", " ").getItem(0).as("w1"))
         .agg(sum($"c12").as("c1"))
         .write.mode("overwrite").parquet(s"$path/c1")
-      val wp = training.select($"doc_id", explode(words($"text")).as("word"))
-        .distinct().localCheckpoint()
       wp.write.mode("overwrite").parquet(s"$path/wpost")
-      val wc = wp.groupBy($"word").agg(count(lit(1)).as("ndocs"))
-        .localCheckpoint()
+      val wc = raw("wc").localCheckpoint()
       wc.write.mode("overwrite").parquet(s"$path/wc")
-      wc.select($"word").write.mode("overwrite").parquet(s"$path/vocab")
       Seq(wc.count()).toDF("v").write.mode("overwrite").parquet(s"$path/v")
     }
 
-  /** q85's LM as a RAW, REMOVABLE store (q137's Bm25Raw contract
-    * applied to the language model): per-doc bigram counts (`bgpost`:
-    * doc_id, bg, c), per-doc word incidence (`wpost`: doc_id, word —
-    * distinct per doc), vocabulary doc-frequencies (`wc`: word, ndocs)
-    * and the maintained projections `c12` / `v` the scorer serves
-    * from. Counts are additive over disjoint doc sets, so append
-    * unions and re-aggregates ([[appendToLmRaw]]); removal subtracts a
-    * victim's OWN stored postings — never re-tokenizing text that may
-    * already be gone, the right-to-be-forgotten constraint q142
-    * established for BM25 ([[removeFromLmRaw]]). A word leaves the
-    * vocabulary exactly when its ndocs hits zero, which is the one
-    * quantity the old word-SET artifact could not answer — this store
-    * closes the maintenance matrix's last documented asymmetry. */
-  private[graft] case class LmRaw(bgpost: DataFrame, wpost: DataFrame,
-      wc: DataFrame, c12: DataFrame, v: Long)
+  /** q85's LM as a RAW, REMOVABLE [[Additive]] store (q137's Bm25Raw
+    * contract applied to the language model): per-doc bigram counts
+    * (`bgpost`: doc_id, bg, c), per-doc word incidence (`wpost`: doc_id,
+    * word — distinct per doc), and their projections the scorer serves
+    * from, `c12` (bg, c12) and the vocabulary doc-frequencies `wc`
+    * (word, ndocs). A removal subtracts a victim's OWN stored postings —
+    * never re-tokenizing text that may already be gone, the
+    * right-to-be-forgotten constraint q142 established for BM25. A word
+    * leaves the vocabulary exactly when its ndocs hits zero, which is
+    * the one quantity a word-SET artifact could not answer. */
+  private[graft] type LmRaw = Additive.Store
+  private[graft] object LmRaw extends Additive.Family(
+      counts = Seq("c12" -> Additive.Counts(Seq("bg"), "c12"),
+        "wc" -> Additive.Counts(Seq("word"), "ndocs")),
+      postings = Seq("bgpost", "wpost")) {
+    override def project(own: Map[String, DataFrame]): LmRaw =
+      Additive.Store(this, own ++ Map(
+        "c12" -> own("bgpost").groupBy(col("bg")).agg(sum(col("c")).as("c12")),
+        "wc" -> own("wpost").groupBy(col("word")).agg(count(lit(1)).as("ndocs"))))
 
-  private[graft] def lmRawCached(s: SparkSession, d: String): LmRaw = {
-    val p = bigramLmArtifact(s, d)
-    LmRaw(Tables.parquet(s, s"$p/bgpost"), Tables.parquet(s, s"$p/wpost"),
-      Tables.parquet(s, s"$p/wc"), Tables.parquet(s, s"$p/c12"),
-      Tables.parquet(s, s"$p/v").head().getLong(0))
+    /** The store of an admitted snapshot (doc_id, text), lazy. */
+    def deltaOf(snap: DataFrame): LmRaw = project(Map(
+      "bgpost" -> bigramsOf(snap).groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("c")),
+      "wpost" -> snap.select(col("doc_id"), explode(words(col("text"))).as("word")).distinct()))
   }
 
-  /** The smoothed-LM view of a raw store: c12 is maintained in the
-    * store, c1 is its vocabulary-bounded projection, v its wc count. */
+  private[graft] def lmRawCached(s: SparkSession, d: String): LmRaw =
+    Additive.load(LmRaw, bigramLmArtifact(s, d), Tables.parquet(s, _))
+
+  /** The smoothed-LM view of a raw store: c12 as stored, c1 its lazy
+    * vocabulary-bounded projection, v the size of its vocabulary (one
+    * action). */
   private[graft] def lmOf(raw: LmRaw): BigramLm = {
-    import raw.c12.sparkSession.implicits._
-    BigramLm(raw.c12,
-      raw.c12.groupBy(split($"bg", " ").getItem(0).as("w1"))
-        .agg(sum($"c12").as("c1")).localCheckpoint(),
-      raw.v)
-  }
-
-  /** Admit a snapshot into the raw LM store. Contract: `snap`'s doc
-    * ids are DISJOINT from the stored ids (the q82/q95/q137 admission
-    * convention) — wc/c12 merge by addition, which is exact only over
-    * disjoint doc sets. Cost ∝ snapshot tokens + vocabulary-bounded
-    * merges; the stored postings union lazily (no corpus re-read). */
-  private[graft] def appendToLmRaw(raw: LmRaw, snap: DataFrame): LmRaw = {
-    import snap.sparkSession.implicits._
-    val sb = bigramsOf(snap).groupBy($"doc_id", $"bg")
-      .agg(count(lit(1)).as("c")).localCheckpoint()
-    val sw = snap.select($"doc_id", explode(words($"text")).as("word"))
-      .distinct().localCheckpoint()
-    val c12m = raw.c12
-      .unionByName(sb.groupBy($"bg").agg(sum($"c").as("c12")))
-      .groupBy($"bg").agg(sum($"c12").as("c12")).localCheckpoint()
-    val wcM = raw.wc
-      .unionByName(sw.groupBy($"word").agg(count(lit(1)).as("ndocs")))
-      .groupBy($"word").agg(sum($"ndocs").as("ndocs")).localCheckpoint()
-    LmRaw(raw.bgpost.unionByName(sb), raw.wpost.unionByName(sw),
-      wcM, c12m, wcM.count())
-  }
-
-  /** Exact LM takedown: subtract each victim's stored per-doc counts.
-    * Bigram decrements come from `bgpost` (semi-join on the victim
-    * ids), vocabulary decrements from `wpost` → `wc`; rows that reach
-    * zero drop, so the result equals a retrain on the survivors
-    * EXACTLY (QueriesSpec pins table equality; q144's oracle hash-
-    * checks the full append∘remove∘score lifecycle against a DuckDB
-    * from-scratch retrain). Nothing re-tokenizes: mutation cost is the
-    * victims' own postings plus vocabulary-bounded merges; the
-    * postings anti-joins are lazy (q142's shape). No broadcast hint on
-    * the victim joins — a dedup-driven purge is not small (the
-    * q95/q103 AQE rule). */
-  private[graft] def removeFromLmRaw(raw: LmRaw, removeIds: DataFrame): LmRaw = {
-    import removeIds.sparkSession.implicits._
-    val vic = removeIds.select($"doc_id").distinct().localCheckpoint()
-    val decBg = raw.bgpost.join(vic, Seq("doc_id"), "left_semi")
-      .groupBy($"bg").agg(sum($"c").as("dec"))
-    val c12m = raw.c12.join(decBg, Seq("bg"), "left")
-      .select($"bg", ($"c12" - coalesce($"dec", lit(0L))).as("c12"))
-      .filter($"c12" > 0).localCheckpoint()
-    val decW = raw.wpost.join(vic, Seq("doc_id"), "left_semi")
-      .groupBy($"word").agg(count(lit(1)).as("dec"))
-    val wcM = raw.wc.join(decW, Seq("word"), "left")
-      .select($"word", ($"ndocs" - coalesce($"dec", lit(0L))).as("ndocs"))
-      .filter($"ndocs" > 0).localCheckpoint()
-    LmRaw(raw.bgpost.join(vic, Seq("doc_id"), "left_anti"),
-      raw.wpost.join(vic, Seq("doc_id"), "left_anti"),
-      wcM, c12m, wcM.count())
-  }
-
-  /** The persisted training-vocabulary table of q85's LM artifact. */
-  private[graft] def bigramLmVocab(s: SparkSession, d: String): DataFrame =
-    Tables.parquet(s, s"${bigramLmArtifact(s, d)}/vocab")
-
-  /** Append an admitted snapshot to a trained bigram LM: snapshot
-    * bigram counts merged into c12, c1 re-derived (it is a projection
-    * of c12 — [[trainBigramLm]]), vocabulary union-distinct'd for the
-    * exact smoothing denominator. Equal to retraining on the union
-    * (QueriesSpec) because counts are additive over disjoint doc sets.
-    * Returns the updated LM and vocabulary table (for the next
-    * append).
-    *
-    * Removal lives on the RAW store instead ([[removeFromLmRaw]] —
-    * q144): exact LM takedown needs each victim's own per-doc counts
-    * and per-word doc-frequencies, which the raw artifact persists
-    * (bgpost/wpost/wc) and this aggregated view deliberately does
-    * not. */
-  private[graft] def appendToBigramLm(lm: BigramLm, vocab: DataFrame,
-      snap: DataFrame): (BigramLm, DataFrame) = {
-    import snap.sparkSession.implicits._
-    val snapBg = bigramsOf(snap).groupBy($"bg").agg(count(lit(1)).as("c12"))
-    val c12m = lm.c12.unionByName(snapBg).groupBy($"bg")
-      .agg(sum($"c12").as("c12")).localCheckpoint()
-    val c1m = c12m.groupBy(split($"bg", " ").getItem(0).as("w1"))
-      .agg(sum($"c12").as("c1")).localCheckpoint()
-    val vocabM = vocab
-      .unionByName(snap.select(explode(words($"text")).as("word")))
-      .distinct().localCheckpoint()
-    (BigramLm(c12m, c1m, vocabM.count()), vocabM)
+    val c12 = raw("c12")
+    import c12.sparkSession.implicits._
+    BigramLm(c12,
+      c12.groupBy(split($"bg", " ").getItem(0).as("w1")).agg(sum($"c12").as("c1")),
+      raw("wc").count())
   }
 
   /** Q85 — language-model perplexity filter (the CCNet recipe shape:
@@ -5954,10 +5834,26 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
       ORDER BY avg_logprob ASC, doc_id
       LIMIT 100"""))
 
-  /** The raw BM25 postings artifact: per-doc postings + df + totals.
-    * `df`/`n`/`sumLen` are the ONLY corpus-global state, all additive. */
-  private[graft] case class Bm25Raw(
-      postings: DataFrame, df: DataFrame, n: Long, sumLen: Long)
+  /** The raw BM25 postings artifact as an [[Additive]] store: per-doc
+    * `postings` ([[bm25RawPostings]]' rows), the hash-keyed `df` table
+    * and the totals `n` (docs) and `sum_len` (Σlen), the ONLY
+    * corpus-global state, all additive. */
+  private[graft] type Bm25Raw = Additive.Store
+  private[graft] object Bm25Raw extends Additive.Family(
+      counts = Seq("df" -> Additive.Counts(Seq("h"), "df")),
+      postings = Seq("postings"), totals = Seq("n", "sum_len")) {
+    /** Materializes the postings once (the totals are eager), then
+      * derives df and the totals from them. */
+    override def project(own: Map[String, DataFrame]): Bm25Raw = {
+      val p = own("postings").localCheckpoint()
+      val (n, sumLen) = bm25TotalsOf(p)
+      Additive.Store(this, Map("postings" -> p, "df" -> bm25DfOf(p)),
+        Map("n" -> n, "sum_len" -> sumLen))
+    }
+
+    /** The store of `docs` (doc_id, text): ONE tokenize pass. */
+    def deltaOf(docs: DataFrame): Bm25Raw = project(Map("postings" -> bm25RawPostings(docs)))
+  }
 
   /** Raw postings of `docs`: (doc_id, hs, tfs, len) — aligned arrays,
     * len = Σtf. NOTHING here reads corpus-global state — the property
@@ -5997,7 +5893,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
   }
 
   /** Build the raw artifact of `docs` (doc_id, text) at `path`, in
-    * [[loadBm25Raw]]'s layout. ONE tokenize pass: the postings parquet
+    * [[Additive.save]]'s layout. ONE tokenize pass: the postings parquet
     * is written first, then df/totals derive from the written postings,
     * never re-reading the text. */
   private def buildBm25Raw(docs: DataFrame, path: String): Unit = {
@@ -6015,9 +5911,9 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * built once per JVM via [[IndexCache]]. */
   private[graft] def bm25RawCached(s: SparkSession, d: String): Bm25Raw = {
     import s.implicits._
-    loadBm25Raw(s, IndexCache.artifact("bm25raw", d) { path =>
+    Additive.load(Bm25Raw, IndexCache.artifact("bm25raw", d) { path =>
       buildBm25Raw(Tables.documents(s, d).filter($"doc_id" % 10 < 8), path)
-    })
+    }, Tables.parquet(s, _))
   }
 
   /** The raw artifact over the stored split's [[chunkedDocs]] chunks,
@@ -6025,25 +5921,9 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * appends to and q167 prunes. */
   private[graft] def bm25ChunkRawCached(s: SparkSession, d: String): Bm25Raw = {
     import s.implicits._
-    loadBm25Raw(s, IndexCache.artifact("bm25chunkraw", d) { path =>
+    Additive.load(Bm25Raw, IndexCache.artifact("bm25chunkraw", d) { path =>
       buildBm25Raw(chunkedDocs(Tables.documents(s, d).filter($"doc_id" % 10 < 8)), path)
-    })
-  }
-
-  /** Append an admitted snapshot to the raw BM25 artifact: tokenize the
-    * SNAPSHOT ONLY (one pass — df/totals derive from the materialized
-    * snapshot postings), union its postings (stored rows untouched),
-    * merge the vocabulary-bounded df table, add the totals. Exactly
-    * equal to rebuilding over the union (QueriesSpec) because every
-    * stat is additive over disjoint doc sets. */
-  private[graft] def appendToBm25Raw(raw: Bm25Raw, snap: DataFrame): Bm25Raw = {
-    import snap.sparkSession.implicits._
-    val postM = bm25RawPostings(snap).localCheckpoint()
-    val dfM = raw.df.unionByName(bm25DfOf(postM)).groupBy($"h")
-      .agg(sum($"df").as("df")).localCheckpoint()
-    val (n, sumLen) = bm25TotalsOf(postM)
-    Bm25Raw(raw.postings.unionByName(postM), dfM,
-      raw.n + n, raw.sumLen + sumLen)
+    }, Tables.parquet(s, _))
   }
 
   /** Serving leg over the raw artifact: resolve query-term idfs from
@@ -6053,31 +5933,32 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * hygiene (materialize nq·k rows, destroy the broadcast). */
   private[graft] def bm25RawTopK(raw: Bm25Raw,
       qrows: Array[(Long, Array[Long])], k: Int): DataFrame = {
-    val s = raw.postings.sparkSession
+    val s = raw("postings").sparkSession
+    val (n, sumLen) = (raw.totals("n"), raw.totals("sum_len"))
     import s.implicits._
-    require(raw.n > 0,
+    require(n > 0,
       "bm25RawTopK: empty postings store — no corpus stats exist " +
         "(avgdl/idf are undefined over zero documents)")
     val byTerm = qrows.zipWithIndex
       .flatMap { case ((_, hs), qi) => hs.map(_ -> qi) }
       .groupBy(_._1).toArray.sortBy(_._1)
     val offsets = byTerm.scanLeft(0)(_ + _._2.length)
-    val dfMap = raw.df
+    val dfMap = raw("df")
       .join(broadcast(byTerm.map(_._1).toSeq.toDF("h")), Seq("h"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val avgdl = raw.sumLen.toDouble / raw.n
+    val avgdl = sumLen.toDouble / n
     val idfFp = byTerm.map { case (h, _) =>
       dfMap.get(h) match {
         // q84's idf expression verbatim (same IEEE operation order)
         case Some(df) => math.floor(math.log(
-          (raw.n - df + 0.5) / (df + 0.5) + 1.0) * 1e6).toLong
+          (n - df + 0.5) / (df + 0.5) + 1.0) * 1e6).toLong
         case None => 0L // in no stored doc — unreachable in the scan
       }
     }
     val bc = s.sparkContext.broadcast((qrows.map(_._1), byTerm.map(_._1),
       offsets, byTerm.flatMap(_._2.map(_._2)), idfFp, avgdl))
     try {
-      raw.postings.agg(graft.functions.expressions
+      raw("postings").agg(graft.functions.expressions
           .bm25_raw_scan_topk(bc, k, $"doc_id", $"hs", $"tfs", $"len")
           .as("t"))
         .select(explode($"t").as("e"))
@@ -6086,52 +5967,6 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
         .orderBy($"query_id", $"rank")
         .localCheckpoint()
     } finally bc.destroy()
-  }
-
-  /** Remove documents from the raw BM25 artifact — the deletion half of
-    * index maintenance (takedown requests, dedup-survivor pruning,
-    * right-to-be-forgotten): the victims' postings rows are looked up
-    * IN THE STORE (one postings scan, the corpus text is never
-    * re-tokenized), their df contributions subtracted from the
-    * vocabulary-bounded table (zero-count terms dropped), totals
-    * decremented, and the postings anti-joined. Exactly equal to
-    * rebuilding over the remaining corpus (q142's oracle) because every
-    * stat is additive — subtraction is just the inverse append. No
-    * broadcast hint on the victim joins: a takedown batch is usually
-    * tiny, but a dedup-driven purge is not (the q95/q103 AQE rule). */
-  private[graft] def removeFromBm25Raw(raw: Bm25Raw,
-      removeIds: DataFrame): Bm25Raw = {
-    import removeIds.sparkSession.implicits._
-    val victims = raw.postings
-      .join(removeIds.select($"doc_id"), Seq("doc_id"), "left_semi")
-      .localCheckpoint()
-    val dfM = raw.df
-      .join(bm25DfOf(victims).withColumnRenamed("df", "dec"), Seq("h"), "left")
-      .select($"h", ($"df" - coalesce($"dec", lit(0L))).as("df"))
-      .filter($"df" > 0)
-      .localCheckpoint()
-    val (nV, lenV) = bm25TotalsOf(victims)
-    Bm25Raw(
-      raw.postings.join(removeIds.select($"doc_id"), Seq("doc_id"), "left_anti"),
-      dfM, raw.n - nV, raw.sumLen - lenV)
-  }
-
-  /** Persist / reload a raw BM25 artifact ([[buildBm25Raw]]'s on-disk
-    * layout) — the compaction fold's materialization surface: the fold
-    * must write the pruned store durably before the ledger partitions
-    * are cleared, and serving re-reads the columnar store. */
-  private[graft] def saveBm25Raw(raw: Bm25Raw, path: String): Unit = {
-    import raw.postings.sparkSession.implicits._
-    raw.postings.write.mode("overwrite").parquet(s"$path/postings")
-    raw.df.write.mode("overwrite").parquet(s"$path/df")
-    Seq((raw.n, raw.sumLen)).toDF("n", "sum_len")
-      .write.mode("overwrite").parquet(s"$path/totals")
-  }
-
-  private[graft] def loadBm25Raw(s: SparkSession, path: String): Bm25Raw = {
-    val t = Tables.parquet(s, s"$path/totals").head()
-    Bm25Raw(Tables.parquet(s, s"$path/postings"), Tables.parquet(s, s"$path/df"),
-      t.getLong(0), t.getLong(1))
   }
 
   /** q137's request set: every 41st document, absolutely bounded (≤ 100
@@ -6188,8 +6023,8 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
   private val q137 = Q(
     fn = (s, d) => {
       import s.implicits._
-      val merged = appendToBm25Raw(bm25RawCached(s, d),
-        Tables.documents(s, d).filter($"doc_id" % 10 >= 8))
+      val merged = Additive.merge(bm25RawCached(s, d),
+        Bm25Raw.deltaOf(Tables.documents(s, d).filter($"doc_id" % 10 >= 8))).checkpoint("df")
       bm25RawTopK(merged, bm25RawQueryRows(s, d), 5)
     },
     oracle = Some("""
@@ -6234,8 +6069,8 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
 
   /** Q142 — the full index-maintenance LIFECYCLE on the BM25 store:
     * yesterday's stored-split artifact absorbs today's snapshot
-    * ([[appendToBm25Raw]]), processes a takedown batch (doc_id % 7 = 0
-    * — [[removeFromBm25Raw]]), and serves the % 41 request set over
+    * ([[Additive.merge]]), processes a takedown batch (doc_id % 7 = 0
+    * — [[Additive.remove]]), and serves the % 41 request set over
     * what remains. The DuckDB oracle computes full-corpus-minus-removed
     * BM25 from scratch (request terms drawn from the FULL corpus — a
     * removed document may still arrive as a query); a hash match proves
@@ -6248,10 +6083,10 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     fn = (s, d) => {
       import s.implicits._
       val docs = Tables.documents(s, d)
-      val merged = appendToBm25Raw(bm25RawCached(s, d),
-        docs.filter($"doc_id" % 10 >= 8))
-      val pruned = removeFromBm25Raw(merged,
-        docs.filter($"doc_id" % 7 === 0).select($"doc_id"))
+      val merged = Additive.merge(bm25RawCached(s, d),
+        Bm25Raw.deltaOf(docs.filter($"doc_id" % 10 >= 8))).checkpoint("df")
+      val pruned = Additive.remove(merged,
+        docs.filter($"doc_id" % 7 === 0).select($"doc_id")).checkpoint("df")
       bm25RawTopK(pruned, bm25RawQueryRows(s, d), 5)
     },
     oracle = Some("""
@@ -6303,7 +6138,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * `batch=` partitions ([[graft.streaming.Pipeline
     * .runTakedownLedgerStream]]'s on-disk format — the stream→ledger
     * leg itself is spec-pinned), serving MASKS against the accumulated
-    * ledger ([[removeFromBm25Raw]] fed lazily by
+    * ledger ([[Additive.remove]] fed lazily by
     * [[graft.streaming.Pipeline.readTombstoneLedger]] — no artifact row
     * rewritten), [[graft.streaming.Pipeline.compactTombstones]] folds
     * the ledger into a MATERIALIZED pruned store and drains it, and
@@ -6333,14 +6168,14 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
         .write.mode("overwrite").parquet(s"$ledger/batch=1")
       val store = bm25RawCached(s, d)
       val qrows = bm25RawQueryRows(s, d)
-      val masked = bm25RawTopK(removeFromBm25Raw(store,
-        graft.streaming.Pipeline.readTombstoneLedger(s, ledger)), qrows, 5)
+      val masked = bm25RawTopK(Additive.remove(store,
+        graft.streaming.Pipeline.readTombstoneLedger(s, ledger)).checkpoint("df"), qrows, 5)
       graft.streaming.Pipeline.compactTombstones(s, ledger) { vic =>
-        saveBm25Raw(removeFromBm25Raw(store, vic), s"$work/compacted")
+        Additive.save(Additive.remove(store, vic), s"$work/compacted")
       }
       val emptied = graft.streaming.Pipeline.readTombstoneLedger(s, ledger)
-      val served = bm25RawTopK(removeFromBm25Raw(
-        loadBm25Raw(s, s"$work/compacted"), emptied), qrows, 5)
+      val served = bm25RawTopK(Additive.remove(Additive.load(Bm25Raw,
+        s"$work/compacted", Tables.parquet(s, _)), emptied).checkpoint("df"), qrows, 5)
       masked.withColumn("leg", lit("masked"))
         .unionByName(served.withColumn("leg", lit("compacted")))
         .orderBy($"query_id", $"rank", $"leg")
@@ -6493,14 +6328,15 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     * incremental-maintenance step (q137's argument applied to q85's
     * LM). An add-one-smoothed bigram LM is nothing but count tables,
     * and counts are ADDITIVE over disjoint doc sets — so admitting a
-    * snapshot into the training corpus needs: snapshot bigram counts
-    * merged into c12 (vocabulary²-bounded shuffle), c1 RE-DERIVED from
-    * the merged c12 (it is a projection of c12 by construction —
-    * [[trainBigramLm]]), and the vocabulary table union-distinct'd for
-    * the exact smoothing denominator v (the scalar v alone is NOT
-    * additive — overlapping vocabularies — which is why the artifact
-    * persists the word set, not just its count). Append cost ∝ snapshot
-    * tokens + vocabulary; the stored training corpus is never re-read.
+    * snapshot into the training corpus is one [[Additive.merge]] into
+    * the raw LM store ([[LmRaw]]): snapshot bigram counts merged into
+    * c12 (vocabulary²-bounded shuffle) and word doc-frequencies into wc;
+    * [[lmOf]] re-derives c1 from the merged c12 (it is a projection of
+    * c12 by construction — [[trainBigramLm]]) and the exact smoothing
+    * denominator v as wc's size (the scalar v alone is NOT additive —
+    * overlapping vocabularies — which is why the store keeps per-word
+    * counts, not just their number). Append cost ∝ snapshot tokens +
+    * vocabulary; the stored training corpus is never re-read.
     *
     * The query: q85's LM (trained on % 10 < 8) absorbs the % 10 = 8
     * snapshot, then the % 10 = 9 held-out split is scored under the
@@ -6513,8 +6349,9 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     fn = (s, d) => {
       import s.implicits._
       val docs = Tables.documents(s, d)
-      val (lm, _) = appendToBigramLm(bigramLmCached(s, d),
-        bigramLmVocab(s, d), docs.filter($"doc_id" % 10 === 8))
+      // c12 feeds c1 and the scorer: materialized once
+      val lm = lmOf(Additive.merge(lmRawCached(s, d),
+        LmRaw.deltaOf(docs.filter($"doc_id" % 10 === 8))).checkpoint("c12"))
       lmScoreDocs(docs.filter($"doc_id" % 10 === 9), lm)
         .orderBy($"avg_logprob".asc, $"doc_id")
         .limit(100)
@@ -6558,8 +6395,8 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
   /** Q144 — bigram-LM takedown, full lifecycle (q142's shape on the
     * language model): the stored-split raw LM store ([[lmRawCached]],
     * trained on doc_id % 10 < 8) absorbs the % 10 = 8 snapshot
-    * ([[appendToLmRaw]]), processes the % 7 = 0 takedown batch
-    * ([[removeFromLmRaw]] — victims' counts subtracted from their OWN
+    * ([[Additive.merge]]), processes the % 7 = 0 takedown batch
+    * ([[Additive.remove]] — victims' counts subtracted from their OWN
     * stored postings, never re-tokenized), and the % 10 = 9 held-out
     * split is scored under the pruned model, worst 100 by avg
     * log-prob. The oracle retrains from scratch on
@@ -6575,10 +6412,13 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     fn = (s, d) => {
       import s.implicits._
       val docs = Tables.documents(s, d)
-      val appended = appendToLmRaw(lmRawCached(s, d),
-        docs.filter($"doc_id" % 10 === 8))
-      val pruned = removeFromLmRaw(appended,
-        docs.filter($"doc_id" % 7 === 0).select($"doc_id"))
+      val appended = Additive.merge(lmRawCached(s, d),
+        LmRaw.deltaOf(docs.filter($"doc_id" % 10 === 8)))
+      // the merge stays lazy: the subtraction is its one consumer, and
+      // its result feeds the scorer, c1 and v
+      val pruned = Additive.remove(appended,
+          docs.filter($"doc_id" % 7 === 0).select($"doc_id").distinct().localCheckpoint())
+        .checkpoint("c12", "wc")
       lmScoreDocs(docs.filter($"doc_id" % 10 === 9), lmOf(pruned))
         .orderBy($"avg_logprob".asc, $"doc_id")
         .limit(100)

@@ -288,8 +288,8 @@ object Sinks {
     val totalBytes = pinned.map(_._2).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     val rootStr = fs.makeQualified(root).toString.stripSuffix("/")
-    val raw = spark.read.option("basePath", path)
-      .parquet(pinned.map(rootStr + "/" + _._1): _*)
+    val raw = Tables.parquetParts(spark, path,
+      pinned.map(rootStr + "/" + _._1))
     // hash-repartition ON the partition columns PLUS a per-directory salt:
     // a bare round-robin spreads every table partition's rows over all
     // tasks (partitionBy then writes up to nFiles files per directory —

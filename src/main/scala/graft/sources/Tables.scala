@@ -8,6 +8,7 @@ import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md), and the
   * engine's one parquet reader, [[parquet]].
@@ -53,16 +54,29 @@ object Tables {
   /** [[parquet]], or None when `path` is missing or holds no data file
     * (a sink that made its directory before its first commit). A footer
     * that cannot be read throws. */
-  def parquetIfPresent(s: SparkSession, path: String): Option[DataFrame] = {
+  def parquetIfPresent(s: SparkSession, path: String): Option[DataFrame] =
+    footerSchema(s, Seq(path)).map(s.read.schema(_).parquet(path))
+
+  /** [[parquet]] over several `paths` under one `basePath`, which Spark's
+    * partition discovery reads the `k=v` dir names from, with the schema
+    * of the first data file of the first path that holds one. With no
+    * data file at all, this is Spark's own read and its own error. */
+  def parquetParts(s: SparkSession, basePath: String, paths: Seq[String]): DataFrame = {
+    val reader = s.read.option("basePath", basePath)
+    footerSchema(s, paths).fold(reader)(reader.schema).parquet(paths: _*)
+  }
+
+  /** The schema Spark's inference reads from the first data file under
+    * `paths`, read on the driver, or None with no data file. */
+  private def footerSchema(s: SparkSession, paths: Seq[String]): Option[StructType] = {
     val conf = s.sessionState.newHadoopConf()
-    val root = new Path(path)
-    firstDataFile(root.getFileSystem(conf), root).map { f =>
-      val footer = ParquetFooterReader.readFooter(
-        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-        new ParquetToSparkSchemaConverter(s.sessionState.conf))
-      s.read.schema(schema).parquet(path)
-    }
+    paths.iterator.map(new Path(_))
+      .flatMap(p => firstDataFile(p.getFileSystem(conf), p)).nextOption().map { f =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(s.sessionState.conf))
+      }
   }
 
   /** The data file Spark's inference reads: the first, by path string, of

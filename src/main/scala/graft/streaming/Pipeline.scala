@@ -1265,8 +1265,8 @@ object Pipeline {
   }
 
   /** Streaming TAKEDOWN ingestion — the deferred-deletion half of index
-    * maintenance. The eager removal functions (removeFromBm25Raw /
-    * removeFromMinHashIndex / removeFromLmRaw / removeFromClusters,
+    * maintenance. The eager removal functions (Additive.remove on the
+    * raw BM25 and LM stores / removeFromMinHashIndex / removeFromClusters,
     * q142–q145) subtract victims per call; at 100 TB, materializing a
     * pruned postings store per takedown batch is the wrong cost model.
     * Production engines defer instead (Lucene's deleted-docs bitmap,
@@ -1320,7 +1320,7 @@ object Pipeline {
       else Seq.empty
     val victims =
       if (parts.nonEmpty)
-        s.read.option("basePath", ledgerDir).parquet(parts.map(_.toString): _*)
+        Tables.parquetParts(s, ledgerDir, parts.map(_.toString))
           .select(col("doc_id")).distinct()
       else {
         import s.implicits._

@@ -187,8 +187,16 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("one parquet reader: read.parquet( nowhere in src/main outside Tables") {
     // a bare read infers its schema in a Spark job; Tables.parquet reads
-    // the footer on the driver
-    assert(occurrences(mainSource(skip = Some("graft/sources/Tables.scala")), "read.parquet(") == 0)
+    // the footer on the driver, and so does Tables.parquetParts for a
+    // multi-path read under a basePath
+    val rest = mainSource(skip = Some("graft/sources/Tables.scala"))
+    assert(occurrences(rest, "read.parquet(") == 0)
+    assert(occurrences(rest, "option(\"basePath\"") == 0)
+  }
+
+  test("one count-store algebra: the hand-written subtraction `- coalesce(` only in Additive") {
+    // every maintained count store subtracts through Additive.subtract
+    assert(occurrences(mainSource(skip = Some("graft/queries/Additive.scala")), "- coalesce(") == 0)
   }
 
   test("broadcast kernels have no registry lifecycle: one file reaches the sql-private converters") {

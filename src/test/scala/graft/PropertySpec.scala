@@ -406,4 +406,78 @@ class PropertySpec extends SparkSpec {
         pushes.filter(_._1 == qi).map(p => (p._2, p._3)).sorted.take(k)))
     }
   }
+
+  test("property: additive store laws == rebuild for every family (merge, subtract, remove, save/load, per-batch fold)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.types.ArrayType
+    import graft.queries.{Additive, Admission, LangId, TextOps}
+    import graft.sources.Tables
+    import spark.implicits._
+    // a family's store of (doc_id, source, lang, text) docs, by name
+    val families = Seq[(String, DataFrame => Additive.Store)](
+      "bm25" -> (d => TextOps.Bm25Raw.deltaOf(d.select("doc_id", "text"))),
+      "nb" -> (d => LangId.NbRaw.deltaOf(d.select("doc_id", "lang", "text"))),
+      "lm" -> (d => TextOps.LmRaw.deltaOf(d.select("doc_id", "text"))),
+      "cards" -> (d => TextOps.cardStoreOf(d.select("source", "lang", "text"))))
+    val build = families.toMap
+    // a frame as a row multiset; array columns compare as the sorted
+    // multiset of their zipped elements (collect_list order is free)
+    def rows(df: DataFrame): Seq[String] = {
+      val arrays = df.schema.fields.collect { case f if f.dataType.isInstanceOf[ArrayType] => f.name }
+      val norm = if (arrays.isEmpty) df else df.select(
+        df.columns.filterNot(arrays.contains).map(col) :+
+          sort_array(arrays_zip(arrays.map(col): _*)).as("arrays"): _*)
+      norm.collect().map(_.toString).sorted.toSeq
+    }
+    def same(what: String, a: Additive.Store, b: Additive.Store): Unit = {
+      a.family.names.foreach(n => assert(rows(a(n)) == rows(b(n)), s"$what: $n"))
+      assert(a.totals == b.totals, s"$what: totals")
+    }
+    // a small vocabulary, so counts collide across docs and some words,
+    // grams and hashes are unique to one side; empty texts included.
+    // lang is never null: the stores key on it (cards coalesce it to '')
+    type Doc = (String, String, String)
+    val doc: Gen[Doc] = for {
+      source <- Gen.oneOf("s1", "s2", "s3")
+      lang <- Gen.oneOf("en", "fr", "")
+      n <- Gen.choose(0, 7)
+      ws <- Gen.listOfN(n, Gen.oneOf("a", "b", "ab", "ba", "zebra", "abc"))
+    } yield (source, lang, ws.mkString(" "))
+    val docsA = Gen.choose(1, 10).flatMap(Gen.listOfN(_, doc))
+    val docsB = Gen.choose(1, 6).flatMap(Gen.listOfN(_, doc))
+    def laws(a: Seq[Doc], b: Seq[Doc]): Unit = {
+      def docs(xs: Seq[Doc], from: Long) =
+        xs.zipWithIndex.map { case ((src, l, t), i) => (from + i, src, l, t) }
+          .toDF("doc_id", "source", "lang", "text")
+      val (dA, dB) = (docs(a, 0L), docs(b, 100L))
+      val dAB = dA.unionByName(dB)
+      val state = tmpDir("additive_laws")
+      families.foreach { case (name, of) =>
+        val union = of(dAB)
+        same(s"$name merge", Additive.merge(of(dA), of(dB)), union)
+        same(s"$name subtract", Additive.subtract(union, of(dB)), of(dA))
+        if (union.family.postings.nonEmpty)
+          same(s"$name remove", Additive.remove(union, dB.select("doc_id")), of(dA))
+        Additive.save(union, s"$state/whole/$name")
+        same(s"$name load(save)", Additive.load(union.family, s"$state/whole/$name",
+          Tables.parquet(spark, _)), union)
+        // admission's layout: each batch's delta under its batch=<id> part
+        Additive.save(of(dA), s"$state/$name", "batch=-1")
+        Additive.save(of(dB), s"$state/$name", "batch=0")
+        same(s"$name fold", Additive.merge(Additive.load(union.family, s"$state/$name",
+          Tables.parquet(spark, _).drop("batch"))), union)
+      }
+      same("admission bm25", Admission.servedBm25(spark, state), build("bm25")(dAB))
+      same("admission cards", Admission.servedCardStore(spark, state), build("cards")(dAB))
+    }
+    forAll2(docsA, docsB, n = 3)(laws)
+    // B = ∅: admitting or removing nothing is each law's identity case
+    forAll(docsA, n = 1)(laws(_, Nil))
+    // the cached artifacts are the build over the stored split
+    val stored = Tables.documents(spark, sf0001).filter($"doc_id" % 10 < 8)
+      .select($"doc_id", $"source", $"lang", $"text")
+    same("bm25 artifact", TextOps.bm25RawCached(spark, sf0001), build("bm25")(stored))
+    same("nb artifact", LangId.nbRawCached(spark, sf0001), build("nb")(stored))
+    same("lm artifact", TextOps.lmRawCached(spark, sf0001), build("lm")(stored))
+  }
 }

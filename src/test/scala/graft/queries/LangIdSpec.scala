@@ -194,7 +194,7 @@ class LangIdSpec extends SparkSpec {
     // exact unlearning: subtracting victims' stored counts == retrain
     val vics = docs.filter($"doc_id" % 10 < 8 && $"doc_id" % 7 === 0)
       .select($"doc_id")
-    val pruned = LangId.removeFromNbRaw(raw, vics)
+    val pruned = Additive.remove(raw, vics)
     val retrained = LangId.trainLangIdNb(
       docs.filter($"doc_id" % 10 < 8 && $"doc_id" % 7 =!= 0)
         .select($"lang", $"text"))
@@ -202,14 +202,12 @@ class LangIdSpec extends SparkSpec {
     // append == retrain on the union; append-then-remove is the identity
     val snap = docs.filter($"doc_id" % 10 === 8)
       .select($"doc_id", $"lang", $"text")
-    val appended = LangId.appendToNbRaw(raw, snap)
+    val appended = Additive.merge(raw, LangId.NbRaw.deltaOf(snap))
     val unionTrained = LangId.trainLangIdNb(
       docs.filter($"doc_id" % 10 < 9).select($"lang", $"text"))
     assert(modelTabs(LangId.nbModelOf(appended)) == modelTabs(unionTrained))
-    val back = LangId.removeFromNbRaw(appended, snap.select($"doc_id"))
-    assert(tab(back.lg) == tab(raw.lg))
-    assert(tab(back.dlab) == tab(raw.dlab))
-    assert(tab(back.tgpost) == tab(raw.tgpost))
+    val back = Additive.remove(appended, snap.select($"doc_id"))
+    Seq("lg", "dlab", "tgpost").foreach(n => assert(tab(back(n)) == tab(raw(n)), n))
   }
 
   test("langIdScoreDocs in-row argmax == windowed argmax over the score surface") {
@@ -239,21 +237,14 @@ class LangIdSpec extends SparkSpec {
     // here the raw-count mechanics are pinned directly)
     val snap = Seq((1L, "en", "abcab"), (2L, "fr", "zzzab"))
       .toDF("doc_id", "lang", "text")
-    val empty = LangId.NbRaw(
-      Seq.empty[(Long, String, Seq[(String, Long)])]
-        .toDF("doc_id", "lang", "gcs")
-        .select($"doc_id", $"lang",
-          $"gcs".cast("array<struct<g:string,c:bigint>>").as("gcs")),
-      Seq.empty[(Long, String)].toDF("doc_id", "lang"),
-      Seq.empty[(String, String, Long)].toDF("lang", "g", "c"))
-    val raw = LangId.appendToNbRaw(empty, snap)
-    val grams0 = raw.lg.select($"g").distinct()
+    val raw = LangId.NbRaw.deltaOf(snap)
+    val grams0 = raw("lg").select($"g").distinct()
       .collect().map(_.getString(0)).toSet
     assert(grams0.contains("zzz"))
-    val pruned = LangId.removeFromNbRaw(raw, Seq(2L).toDF("doc_id"))
-    val grams1 = pruned.lg.select($"g").distinct()
+    val pruned = Additive.remove(raw, Seq(2L).toDF("doc_id"))
+    val grams1 = pruned("lg").select($"g").distinct()
       .collect().map(_.getString(0)).toSet
     assert(!grams1.contains("zzz") && grams1 == Set("abc", "bca", "cab"))
-    assert(pruned.dlab.collect().map(_.getLong(0)).toSeq == Seq(1L))
+    assert(pruned("dlab").collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 }

@@ -2111,79 +2111,13 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
-  test("BM25 raw artifact: append == from-scratch raw stats over the union") {
-    import spark.implicits._
-    val docs = graft.sources.Tables.documents(spark, sf0001)
-    // postings rows carry collect_list arrays whose in-row order is
-    // nondeterministic — normalize to per-doc sorted (h, tf) pairs
-    def norm(p: org.apache.spark.sql.DataFrame) = p.collect().map { r =>
-      (r.getLong(0),
-        r.getSeq[Long](1).zip(r.getSeq[Long](2)).sortBy(_._1).toSeq,
-        r.getLong(3))
-    }.sortBy(_._1).toSeq
-    val p0 = TextOps.bm25RawPostings(docs.filter($"doc_id" % 10 < 8))
-    val (n0, l0) = TextOps.bm25TotalsOf(p0)
-    val raw = TextOps.Bm25Raw(p0, TextOps.bm25DfOf(p0), n0, l0)
-    val merged = TextOps.appendToBm25Raw(raw, docs.filter($"doc_id" % 10 >= 8))
-    val pf = TextOps.bm25RawPostings(docs)
-    val dff = TextOps.bm25DfOf(pf)
-    val (nf, lf) = TextOps.bm25TotalsOf(pf)
-    assert(merged.n == nf && merged.sumLen == lf)
-    assert(merged.df.collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._1).toSeq ==
-      dff.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq)
-    assert(norm(merged.postings) == norm(pf))
-  }
-
-  test("BM25 raw append of an empty snapshot is the identity") {
-    import spark.implicits._
-    // a quiet admission day: zero arriving docs must leave every
-    // artifact table untouched (the empty sum used to NPE in totals)
-    val docs = graft.sources.Tables.documents(spark, sf0001)
-    val p0 = TextOps.bm25RawPostings(docs)
-    val (n0, l0) = TextOps.bm25TotalsOf(p0)
-    val raw = TextOps.Bm25Raw(p0, TextOps.bm25DfOf(p0), n0, l0)
-    val merged = TextOps.appendToBm25Raw(raw, docs.filter($"doc_id" < 0))
-    assert(merged.n == n0 && merged.sumLen == l0)
-    assert(merged.postings.count() == p0.count())
-    assert(merged.df.collect().map(_.toString).sorted.toSeq ==
-      raw.df.collect().map(_.toString).sorted.toSeq)
-  }
-
-  test("BM25 raw removal == from-scratch raw stats over the survivors") {
-    import spark.implicits._
-    val docs = graft.sources.Tables.documents(spark, sf0001)
-    val p0 = TextOps.bm25RawPostings(docs)
-    val (n0, l0) = TextOps.bm25TotalsOf(p0)
-    val raw = TextOps.Bm25Raw(p0, TextOps.bm25DfOf(p0), n0, l0)
-    val pruned = TextOps.removeFromBm25Raw(raw,
-      docs.filter($"doc_id" % 7 === 0).select($"doc_id"))
-    val survivors = docs.filter($"doc_id" % 7 =!= 0)
-    val ps = TextOps.bm25RawPostings(survivors)
-    val (ns, ls) = TextOps.bm25TotalsOf(ps)
-    assert(pruned.n == ns && pruned.sumLen == ls)
-    assert(pruned.df.collect().map(r => (r.getLong(0), r.getLong(1)))
-      .sortBy(_._1).toSeq ==
-      TextOps.bm25DfOf(ps).collect().map(r => (r.getLong(0), r.getLong(1)))
-        .sortBy(_._1).toSeq)
-    def ids(p: org.apache.spark.sql.DataFrame) =
-      p.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(ids(pruned.postings) == ids(ps))
-    // removing nothing is the identity
-    val same = TextOps.removeFromBm25Raw(raw, docs.filter($"doc_id" < 0).select($"doc_id"))
-    assert(same.n == n0 && same.sumLen == l0 &&
-      same.df.count() == raw.df.count())
-  }
-
   test("BM25 raw-postings serving == precomputed-weight-store serving") {
     import spark.implicits._
     // the query-time-idf scan kernel against the established build-time-
     // weight path, same corpus, same request set — bit-identical output
     // is the Bm25RawScanTopK arithmetic contract
     val docs = graft.sources.Tables.documents(spark, sf0001)
-    val p = TextOps.bm25RawPostings(docs)
-    val (n, l) = TextOps.bm25TotalsOf(p)
-    val raw = TextOps.Bm25Raw(p, TextOps.bm25DfOf(p), n, l)
+    val raw = TextOps.Bm25Raw.deltaOf(docs)
     val qrows = TextOps.bm25RawQueryRows(spark, sf0001)
     val a = TextOps.bm25RawTopK(raw, qrows, 5)
       .collect().map(_.toString).toSeq
@@ -2222,25 +2156,28 @@ class QueriesSpec extends SparkSpec {
   test("bigram LM append == retrain on the union; chained appends compose") {
     import spark.implicits._
     val docs = graft.sources.Tables.documents(spark, sf0001)
-    def vocabOf(df: org.apache.spark.sql.DataFrame) =
-      df.select(explode(split($"text", " ")).as("word")).distinct()
-    val lm0 = TextOps.trainBigramLm(docs.filter($"doc_id" % 10 < 8))
-    val (lm1, vocab1) = TextOps.appendToBigramLm(lm0,
-      vocabOf(docs.filter($"doc_id" % 10 < 8)), docs.filter($"doc_id" % 10 === 8))
-    val lmU = TextOps.trainBigramLm(docs.filter($"doc_id" % 10 < 9))
     def tab(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
-    assert(lm1.v == lmU.v)
-    assert(tab(lm1.c12) == tab(lmU.c12))
-    assert(tab(lm1.c1) == tab(lmU.c1))
+    def same(lm: TextOps.BigramLm, trained: TextOps.BigramLm) = {
+      assert(lm.v == trained.v)
+      assert(tab(lm.c12) == tab(trained.c12))
+      assert(tab(lm.c1) == tab(trained.c1))
+    }
+    // the raw LM store of the stored split absorbs the % 10 = 8
+    // snapshot: its served view equals a retrain on the union (q138)
+    val raw1 = Additive.merge(TextOps.lmRawCached(spark, sf0001),
+      TextOps.LmRaw.deltaOf(docs.filter($"doc_id" % 10 === 8)))
+    val lmU = TextOps.trainBigramLm(docs.filter($"doc_id" % 10 < 9))
+    same(TextOps.lmOf(raw1), lmU)
     val held = docs.filter($"doc_id" % 10 === 9)
-    val a = tab(TextOps.lmScoreDocs(held, lm1))
-    val b = tab(TextOps.lmScoreDocs(held, lmU))
-    assert(a.nonEmpty && a == b)
-    // second append (the returned vocabulary feeds the next snapshot):
-    // v must equal the full-corpus distinct word count
-    val (lm2, _) = TextOps.appendToBigramLm(lm1, vocab1, held)
-    assert(lm2.v == vocabOf(docs).count())
+    val a = tab(TextOps.lmScoreDocs(held, TextOps.lmOf(raw1)))
+    assert(a.nonEmpty && a == tab(TextOps.lmScoreDocs(held, lmU)))
+    // a second append onto the merged store: v must equal the
+    // full-corpus distinct word count
+    val raw2 = Additive.merge(raw1, TextOps.LmRaw.deltaOf(held))
+    same(TextOps.lmOf(raw2), TextOps.trainBigramLm(docs))
+    assert(TextOps.lmOf(raw2).v ==
+      docs.select(explode(split($"text", " "))).distinct().count())
   }
 
   test("LM raw store: projection law, removal == retrain on survivors") {
@@ -2260,7 +2197,7 @@ class QueriesSpec extends SparkSpec {
     // word's last surviving doc goes)
     val vics = docs.filter($"doc_id" % 10 < 8 && $"doc_id" % 7 === 0)
       .select($"doc_id")
-    val pruned = TextOps.removeFromLmRaw(raw, vics)
+    val pruned = Additive.remove(raw, vics)
     val retrained = TextOps.trainBigramLm(
       docs.filter($"doc_id" % 10 < 8 && $"doc_id" % 7 =!= 0))
     val prunedLm = TextOps.lmOf(pruned)
@@ -2272,9 +2209,8 @@ class QueriesSpec extends SparkSpec {
     assert(tab(prunedLm.c12) == tab(retrained.c12))
     assert(tab(prunedLm.c1) == tab(retrained.c1))
     // removing nothing is the identity
-    val same = TextOps.removeFromLmRaw(raw, docs.filter($"doc_id" < 0).select($"doc_id"))
-    assert(same.v == raw.v && tab(same.c12) == tab(raw.c12) &&
-      tab(same.wc) == tab(raw.wc))
+    val same = Additive.remove(raw, docs.filter($"doc_id" < 0).select($"doc_id"))
+    assert(tab(same("c12")) == tab(raw("c12")) && tab(same("wc")) == tab(raw("wc")))
   }
 
   test("LM raw store: append then remove the same snapshot is the identity") {
@@ -2284,19 +2220,15 @@ class QueriesSpec extends SparkSpec {
       df.collect().map(_.toString).sorted.toSeq
     val raw = TextOps.lmRawCached(spark, sf0001)
     val snap = docs.filter($"doc_id" % 10 === 8)
-    val appended = TextOps.appendToLmRaw(raw, snap)
-    // the append alone must equal a retrain on the union (raw-store leg
-    // of the appendToBigramLm law)
+    val appended = Additive.merge(raw, TextOps.LmRaw.deltaOf(snap))
+    // the append alone must equal a retrain on the union
     val lmU = TextOps.trainBigramLm(docs.filter($"doc_id" % 10 < 9))
-    assert(appended.v == lmU.v)
-    assert(tab(appended.c12) == tab(lmU.c12))
+    assert(TextOps.lmOf(appended).v == lmU.v)
+    assert(tab(appended("c12")) == tab(lmU.c12))
     // roundtrip: removing exactly the appended ids restores every table
-    val back = TextOps.removeFromLmRaw(appended, snap.select($"doc_id"))
-    assert(back.v == raw.v)
-    assert(tab(back.c12) == tab(raw.c12))
-    assert(tab(back.wc) == tab(raw.wc))
-    assert(tab(back.bgpost) == tab(raw.bgpost))
-    assert(tab(back.wpost) == tab(raw.wpost))
+    val back = Additive.remove(appended, snap.select($"doc_id"))
+    Seq("c12", "wc", "bgpost", "wpost").foreach(n =>
+      assert(tab(back(n)) == tab(raw(n)), n))
   }
 
   test("LM raw store: a word unique to the victim leaves the vocabulary") {
@@ -2305,19 +2237,13 @@ class QueriesSpec extends SparkSpec {
     // the word from wc (v: 3 → 2) and its bigrams from c12, while the
     // shared words' counts only decrement (ndocs 2 → 1)
     val docs = Seq((1L, "a b a"), (2L, "a zebra b")).toDF("doc_id", "text")
-    val raw = TextOps.appendToLmRaw(
-      TextOps.LmRaw(
-        Seq.empty[(Long, String, Long)].toDF("doc_id", "bg", "c"),
-        Seq.empty[(Long, String)].toDF("doc_id", "word"),
-        Seq.empty[(String, Long)].toDF("word", "ndocs"),
-        Seq.empty[(String, Long)].toDF("bg", "c12"), 0L),
-      docs)
-    assert(raw.v == 3L) // a, b, zebra
-    val pruned = TextOps.removeFromLmRaw(raw, Seq(2L).toDF("doc_id"))
-    assert(pruned.v == 2L)
-    val words = pruned.wc.collect().map(_.getString(0)).sorted.toSeq
+    val raw = TextOps.LmRaw.deltaOf(docs)
+    assert(TextOps.lmOf(raw).v == 3L) // a, b, zebra
+    val pruned = Additive.remove(raw, Seq(2L).toDF("doc_id"))
+    assert(TextOps.lmOf(pruned).v == 2L)
+    val words = pruned("wc").collect().map(_.getString(0)).sorted.toSeq
     assert(words == Seq("a", "b"))
-    val bgs = pruned.c12.collect()
+    val bgs = pruned("c12").collect()
       .map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
     assert(bgs == Seq(("a b", 1L), ("b a", 1L)))
   }

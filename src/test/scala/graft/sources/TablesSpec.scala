@@ -113,6 +113,21 @@ class TablesSpec extends SparkSpec {
     recs.filter(_.leg == "inferred").foreach(r => assert(r.jobs == 1 && r.bareJobs == 1, r))
   }
 
+  test("a multi-path read under a basePath: Spark's inferred frame, and no job") {
+    val ledger = tmpDir("tables_parts")
+    Seq(0L, 1L).foreach(b => spark.range(b * 10, b * 10 + 3).select(col("id").as("doc_id"))
+      .write.parquet(s"$ledger/batch=$b"))
+    val parts = Seq(0L, 1L).map(b => s"$ledger/batch=$b")
+    val want = spark.read.option("basePath", ledger).parquet(parts: _*)
+    val got = Tables.parquetParts(spark, ledger, parts)
+    assert(got.schema == want.schema && got.schema.fieldNames.toSeq == Seq("doc_id", "batch"))
+    assert(got.collect().map(_.toString).sorted.toSeq == want.collect().map(_.toString).sorted.toSeq)
+    val read: Measure.Preset = (s, _) => leg =>
+      leg("parts")(Tables.parquetParts(s, ledger, parts).schema.size.toLong)
+    Measure.run(spark, Seq("read" -> read), Seq(sf0001), 2)
+      .foreach(r => assert(r.jobs == 0 && r.bareJobs == 0, r))
+  }
+
   test("a dir holding only _SUCCESS and .crc files has no table: None, or Spark's UNABLE_TO_INFER_SCHEMA") {
     val dir = tmpDir("tables_empty")
     Seq("_SUCCESS", ".part-00000.parquet.crc", "._SUCCESS.crc")

@@ -725,10 +725,10 @@ class StreamingSpec extends SparkSpec {
       .select($"doc_id", $"len", $"z.hs", $"z.tfs"))
     val freshPost = TextOps.bm25RawPostings(allDocs.select($"doc_id", $"text"))
       .localCheckpoint()
-    assert(postRows(served.postings) == postRows(freshPost), "bm25 postings")
-    assert(tab(served.df) == tab(TextOps.bm25DfOf(freshPost)), "bm25 df")
+    assert(postRows(served("postings")) == postRows(freshPost), "bm25 postings")
+    assert(tab(served("df")) == tab(TextOps.bm25DfOf(freshPost)), "bm25 df")
     val (n, sumLen) = TextOps.bm25TotalsOf(freshPost)
-    assert(served.n == n && served.sumLen == sumLen, "bm25 totals")
+    assert(served.totals == Map("n" -> n, "sum_len" -> sumLen), "bm25 totals")
     // 6. card store serving == rebuild over the union
     assert(tab(TextOps.cardsOfStore(Admission.servedCardStore(spark, state))) ==
       tab(TextOps.cardsOfStore(TextOps.cardStoreOf(
@@ -1765,7 +1765,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("tombstone ledger: streamed takedowns accumulate, mask serving == eager removal") {
-    import graft.queries.TextOps
+    import graft.queries.{Additive, TextOps}
     val in = tmpDir("tb_in")
     val ledger = tmpDir("tb_ledger")
     val ckpt = tmpDir("tb_ckpt")
@@ -1781,14 +1781,13 @@ class StreamingSpec extends SparkSpec {
     // masked serving (store rows untouched) == eager removal: the mask
     // IS the eager function applied lazily to the ledger frame
     val raw = TextOps.bm25RawCached(spark, sf0001)
-    val masked = TextOps.removeFromBm25Raw(raw, t1)
+    val masked = Additive.remove(raw, t1)
     import spark.implicits._
-    val eager = TextOps.removeFromBm25Raw(raw,
-      Seq(0L, 7L, 14L).toDF("doc_id"))
-    assert(masked.n == eager.n && masked.sumLen == eager.sumLen)
+    val eager = Additive.remove(raw, Seq(0L, 7L, 14L).toDF("doc_id"))
+    assert(masked.totals == eager.totals)
     def tab(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
-    assert(tab(masked.df) == tab(eager.df))
+    assert(tab(masked("df")) == tab(eager("df")))
     val qrows = TextOps.bm25RawQueryRows(spark, sf0001)
     assert(tab(TextOps.bm25RawTopK(masked, qrows, 5)) ==
       tab(TextOps.bm25RawTopK(eager, qrows, 5)))
@@ -1809,12 +1808,12 @@ class StreamingSpec extends SparkSpec {
     // the already-asserted masked serve
     val none = Pipeline.readTombstoneLedger(spark, tmpDir("tb_empty"))
     assert(none.isEmpty)
-    val unmasked = TextOps.removeFromBm25Raw(raw, none)
-    assert(unmasked.n == raw.n && tab(unmasked.df) == tab(raw.df))
+    val unmasked = Additive.remove(raw, none)
+    assert(unmasked.totals == raw.totals && tab(unmasked("df")) == tab(raw("df")))
   }
 
   test("tombstone ledger generalizes: mask == eager for MinHash, cluster, PQ, NB; compactTombstones round-trip") {
-    import graft.queries.{LangId, TextOps, VectorOps}
+    import graft.queries.{Additive, LangId, TextOps, VectorOps}
     import graft.sources.Tables
     import spark.implicits._
     val in = tmpDir("tbg_in")
@@ -1866,9 +1865,9 @@ class StreamingSpec extends SparkSpec {
     val held = Tables.documents(spark, sf0001)
       .filter($"doc_id" % 10 >= 8).select($"doc_id", $"text")
     assert(tab(LangId.langIdScoreDocs(held,
-        LangId.nbModelOf(LangId.removeFromNbRaw(nbRaw, t)))) ==
+        LangId.nbModelOf(Additive.remove(nbRaw, t)))) ==
       tab(LangId.langIdScoreDocs(held,
-        LangId.nbModelOf(LangId.removeFromNbRaw(nbRaw, eager)))))
+        LangId.nbModelOf(Additive.remove(nbRaw, eager)))))
 
     // compactTombstones round-trip: fold the ledger into a materialized
     // pruned store (MinHash — it has a persist/load pair), ledger
