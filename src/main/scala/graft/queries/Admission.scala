@@ -128,10 +128,6 @@ object Admission {
       idx: TextOps.MinHashIndex,
       vecIdx: VectorOps.VecDedupIndex)
 
-  private[graft] def nwOf(text: Column): Column =
-    size(filter(TextOps.words(coalesce(text, lit(""))), w => length(w) > 0))
-      .cast("long")
-
   /** Normalize an arriving frame to the admission wire shape
     * (doc_id, source, lang, text, embedding). Text coalesces to '' HERE —
     * the single entry point — so a null-text wire record gets a decision
@@ -158,7 +154,7 @@ object Admission {
     import s.implicits._
     val b = normalize(batch0)
       .withColumn("h", md5(coalesce($"text", lit(""))))
-      .withColumn("nw", nwOf($"text"))
+      .withColumn("nw", TextOps.nwOf($"text"))
       .localCheckpoint()
     // annotation: langid verdict for EVERY arriving doc (q100's scorer)
     val lp = LangId.langIdScoreDocs(b.select($"doc_id", $"text"), sc.langid)
@@ -270,7 +266,7 @@ object Admission {
       .select($"doc_id", coalesce($"source", lit("")).as("source"),
         $"lang", $"text")
       .withColumn("h", md5(coalesce($"text", lit(""))))
-      .withColumn("nw", nwOf($"text"))
+      .withColumn("nw", TextOps.nwOf($"text"))
     writeDocStores(stateDir, "-1", stored)
     val mh = TextOps.minHashIndexCached(s, corpusDir)
     mh.bands.write.mode("overwrite")
@@ -313,7 +309,7 @@ object Admission {
     import s.implicits._
     val a = admitted
       .withColumn("h", md5(coalesce($"text", lit(""))))
-      .withColumn("nw", nwOf($"text"))
+      .withColumn("nw", TextOps.nwOf($"text"))
       .localCheckpoint()
     val fresh = TextOps.shingleDocs(a.select($"doc_id", $"text"))
       .localCheckpoint()

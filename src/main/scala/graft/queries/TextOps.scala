@@ -28,6 +28,14 @@ object TextOps {
   /** Whitespace word tokens. */
   private[queries] def words(text: Column): Column = split(text, " ")
 
+  /** Non-empty whitespace word count of `text` (null counts 0), as a
+    * long. No lambda: Spark evaluates a projection over local rows on
+    * the driver, where every plan built from one column shares its
+    * lambda variable, so concurrent writes of such plans (an
+    * [[Additive.save]]) would race on it. */
+  private[graft] def nwOf(text: Column): Column =
+    size(array_remove(words(coalesce(text, lit(""))), "")).cast("long")
+
   /** Pathological-bucket guard for candidate generation (q18/q19/q20): a
     * bucket (shared prefix shingle / LSH band / SimHash byte) larger than
     * `maxBucket` would explode quadratically at pair time. Cap it to the
@@ -4716,9 +4724,7 @@ ${x}wn AS (SELECT w, len(seq) AS n_sub FROM ${x}seg$n)"""
     import docs.sparkSession.implicits._
     val base = docs
       .select($"source", coalesce($"lang", lit("")).as("lang"),
-        md5(coalesce($"text", lit(""))).as("h"),
-        size(filter(words(coalesce($"text", lit(""))),
-          w => length(w) > 0)).cast("long").as("nw"))
+        md5(coalesce($"text", lit(""))).as("h"), nwOf($"text").as("nw"))
     Additive.Store(CardStore, Map(
       "sums" -> base.groupBy($"source").agg(
         count(lit(1)).as("n_docs"),

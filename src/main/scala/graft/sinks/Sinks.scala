@@ -26,7 +26,12 @@ object Sinks {
     * the first failure in argument order is rethrown with the others
     * attached as suppressed, so no write is still running when a
     * failed micro-batch is replayed. Writes passed here must not read
-    * what a sibling writes; callers sequence the real dependencies. */
+    * what a sibling writes; callers sequence the real dependencies.
+    * Nor may writes over local rows share a higher-order function's
+    * lambda (`filter(c, w => ...)`): Spark evaluates such a projection
+    * on the driver, and the plans built from one column share its
+    * lambda variable, so the writes race on it (wrong values, no error).
+    * Checkpoint the shared lineage first, or keep lambdas out of it. */
   def concurrently(writes: (() => Unit)*): Unit = {
     val failures = new Array[Throwable](writes.size)
     val threads = writes.zipWithIndex.map { case (w, i) =>

@@ -117,7 +117,7 @@ class AdmissionSpec extends SparkSpec {
     assert(tab(spark.read.parquet(s"$state/hashes").drop("batch")) ==
       tab(surv.select($"doc_id", $"source",
         md5(coalesce($"text", lit(""))).as("h"),
-        Admission.nwOf($"text").as("nw"))), "compacted hashes")
+        TextOps.nwOf($"text").as("nw"))), "compacted hashes")
     // minhash == fresh build over survivors
     val freshSh = TextOps.shingleDocs(surv.select($"doc_id", $"text"))
       .localCheckpoint()
@@ -181,7 +181,7 @@ class AdmissionSpec extends SparkSpec {
     // end state: hashes store == survivors(original) ∪ admitted(modified)
     val survRows = docs.filter($"doc_id" % 10 < 8 && $"doc_id" % 50 =!= 1)
       .select($"doc_id", coalesce($"source", lit("")).as("source"),
-        md5(coalesce($"text", lit(""))).as("h"), Admission.nwOf($"text").as("nw"))
+        md5(coalesce($"text", lit(""))).as("h"), TextOps.nwOf($"text").as("nw"))
     val admRows = dec1.filter($"status" === "admitted")
       .select($"doc_id", $"source", $"h", $"nw")
     assert(tab(spark.read.parquet(s"$state/hashes").drop("batch")) ==

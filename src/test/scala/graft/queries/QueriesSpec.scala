@@ -2111,6 +2111,65 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  test("BM25 raw artifact: append == from-scratch raw stats over the union") {
+    import spark.implicits._
+    val docs = graft.sources.Tables.documents(spark, sf0001)
+    // postings rows carry collect_list arrays whose in-row order is
+    // nondeterministic — normalize to per-doc sorted (h, tf) pairs
+    def norm(p: org.apache.spark.sql.DataFrame) = p.collect().map { r =>
+      (r.getLong(0),
+        r.getSeq[Long](1).zip(r.getSeq[Long](2)).sortBy(_._1).toSeq,
+        r.getLong(3))
+    }.sortBy(_._1).toSeq
+    val raw = TextOps.Bm25Raw.deltaOf(docs.filter($"doc_id" % 10 < 8))
+    val merged = Additive.merge(raw,
+      TextOps.Bm25Raw.deltaOf(docs.filter($"doc_id" % 10 >= 8))).checkpoint("df")
+    val pf = TextOps.bm25RawPostings(docs)
+    val dff = TextOps.bm25DfOf(pf)
+    val (nf, lf) = TextOps.bm25TotalsOf(pf)
+    assert(merged.totals("n") == nf && merged.totals("sum_len") == lf)
+    assert(merged("df").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .sortBy(_._1).toSeq ==
+      dff.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq)
+    assert(norm(merged("postings")) == norm(pf))
+  }
+
+  test("BM25 raw append of an empty snapshot is the identity") {
+    import spark.implicits._
+    // a quiet admission day: zero arriving docs must leave every
+    // artifact table untouched (the empty sum used to NPE in totals)
+    val docs = graft.sources.Tables.documents(spark, sf0001)
+    val raw = TextOps.Bm25Raw.deltaOf(docs)
+    val merged = Additive.merge(raw,
+      TextOps.Bm25Raw.deltaOf(docs.filter($"doc_id" < 0))).checkpoint("df")
+    assert(merged.totals == raw.totals)
+    assert(merged("postings").count() == raw("postings").count())
+    assert(merged("df").collect().map(_.toString).sorted.toSeq ==
+      raw("df").collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("BM25 raw removal == from-scratch raw stats over the survivors") {
+    import spark.implicits._
+    val docs = graft.sources.Tables.documents(spark, sf0001)
+    val raw = TextOps.Bm25Raw.deltaOf(docs)
+    val pruned = Additive.remove(raw,
+      docs.filter($"doc_id" % 7 === 0).select($"doc_id")).checkpoint("df")
+    val survivors = docs.filter($"doc_id" % 7 =!= 0)
+    val ps = TextOps.bm25RawPostings(survivors)
+    val (ns, ls) = TextOps.bm25TotalsOf(ps)
+    assert(pruned.totals("n") == ns && pruned.totals("sum_len") == ls)
+    assert(pruned("df").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .sortBy(_._1).toSeq ==
+      TextOps.bm25DfOf(ps).collect().map(r => (r.getLong(0), r.getLong(1)))
+        .sortBy(_._1).toSeq)
+    def ids(p: org.apache.spark.sql.DataFrame) =
+      p.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(pruned("postings")) == ids(ps))
+    // removing nothing is the identity
+    val same = Additive.remove(raw, docs.filter($"doc_id" < 0).select($"doc_id"))
+    assert(same.totals == raw.totals && same("df").count() == raw("df").count())
+  }
+
   test("BM25 raw-postings serving == precomputed-weight-store serving") {
     import spark.implicits._
     // the query-time-idf scan kernel against the established build-time-

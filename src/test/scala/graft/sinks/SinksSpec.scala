@@ -274,6 +274,27 @@ class SinksSpec extends SparkSpec {
     assert(sc.getLocalProperty(Tag) == null)
   }
 
+  test("concurrently: card-store saves over local rows == a naive count, save after save") {
+    import graft.queries.{Additive, TextOps}
+    import spark.implicits._
+    // local rows are projected on the driver, once per concurrent write:
+    // a lambda shared by the three tables' plans raced there and
+    // miscounted ws_tokens now and then
+    val texts = Seq("", "a", "a b", " a  b ", "abc def ghi", "  ", "b")
+    val docs = (0 until 42).map(i => (s"s${i % 4}", "en", texts(i % texts.size)))
+    val want = docs.groupBy(_._1).map { case (src, ds) =>
+      val nw = ds.map(_._3.split(" ").count(_.nonEmpty).toLong)
+      s"[$src,${ds.size},${nw.sum},${nw.count(_ < 50)}]"
+    }.toSeq.sorted
+    val dir = tmpDir("conc_cards")
+    (1 to 25).foreach { round =>
+      Additive.save(TextOps.cardStoreOf(docs.toDF("source", "lang", "text")), s"$dir/$round")
+      val sums = spark.read.parquet(s"$dir/$round/sums")
+        .select("source", "n_docs", "ws_tokens", "n_short_docs")
+      assert(sums.collect().map(_.toString).sorted.toSeq == want, s"save $round")
+    }
+  }
+
   test("one launcher of concurrent Spark jobs: Sinks.concurrently") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main")

@@ -695,7 +695,7 @@ class StreamingSpec extends SparkSpec {
     assert(tab(spark.read.parquet(s"$state/hashes").drop("batch")) ==
       tab(allDocs.select($"doc_id", $"source",
         md5(coalesce($"text", lit(""))).as("h"),
-        Admission.nwOf($"text").as("nw"))), "hash store")
+        TextOps.nwOf($"text").as("nw"))), "hash store")
     // 3. MinHash index == fresh build over the union (the append law)
     val freshSh = TextOps.shingleDocs(allDocs.select($"doc_id", $"text"))
       .localCheckpoint()
